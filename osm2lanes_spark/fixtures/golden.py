@@ -1,9 +1,12 @@
-"""Golden corpus: load the reference's tests.yml into engine-native cases.
+"""Golden corpus: the reference's 46 enabled test cases as engine-native cases.
 
 Mirrors the ``TestCase`` record (`/root/reference/osm2lanes/src/test.rs:19-83`)
-including the enable / expect_warnings / separator flags, and normalizes the
-expected lane dicts into the engine's internal shape (speeds as
-``(unit, value)`` tuples, widths as floats).
+including the expect_warnings / separator flags, with the expected lane
+dicts in the engine's internal shape (speeds as ``(unit, value)`` tuples,
+widths as floats). The cases are read from the in-repo parquet fixture
+(``golden_fixture/``), converted once from the reference's ``tests.yml``:
+``documents.parquet`` carries each case's tags as spans plus its locale,
+``golden.parquet`` its expected road.
 
 Also generates the **interleaved documents** fixture mandated by the
 input-hint: one document per case whose ``kind='tag'`` spans reassemble to
@@ -17,75 +20,51 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-from typing import Optional
 
-TESTS_YML = "/root/reference/data/tests.yml"
-
-
-def _norm_speed(v) -> Optional[tuple]:
-    if v is None:
-        return None
-    if isinstance(v, (int, float)):
-        return ("kph", float(v))
-    return (v["unit"], float(v["value"]))
+FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                           "golden_fixture")
 
 
 def _norm_lane(lane: dict) -> dict:
-    out = dict(lane)
-    if "width" in out and out["width"] is not None:
-        out["width"] = float(out["width"])
-    if "max_speed" in out:
-        out["max_speed"] = _norm_speed(out["max_speed"])
-    if "markings" in out and out["markings"] is not None:
-        ms = []
-        for m in out["markings"]:
-            m2 = dict(m)
-            if m2.get("width") is not None:
-                m2["width"] = float(m2["width"])
-            ms.append(m2)
-        out["markings"] = ms
-    return out
+    """JSON lane → internal lane: ``max_speed`` back to a tuple."""
+    if lane.get("max_speed") is not None:
+        lane["max_speed"] = tuple(lane["max_speed"])
+    return lane
 
 
-def load_cases(path: str = TESTS_YML,
+def load_cases(fixture_dir: str = FIXTURE_DIR,
                include_disabled: bool = False) -> list[dict]:
-    """All *enabled* cases (test.rs:46-53,110-115).
+    """All *enabled* cases (test.rs:46-53,110-115), in corpus order.
 
-    ``include_disabled=True`` also yields the 16 ``rust: false`` cases the
-    reference's own runner skips, each flagged ``enabled=False`` — used to
-    probe whether the engine exceeds reference coverage (COVERAGE.md §X).
+    Tags come from each document's ``kind='tag'`` spans (split on the first
+    ``=``, as span assembly does). The 16 ``rust: false`` cases the
+    reference's own runner skips are not in the fixture, so
+    ``include_disabled=True`` raises ``FileNotFoundError``.
     """
-    import yaml
+    import pyarrow.parquet as pq
 
-    with open(path) as f:
-        raw = yaml.safe_load(f)
-
+    if include_disabled:
+        raise FileNotFoundError(
+            "the reference-disabled cases are not in the in-repo fixture")
+    docs = {d["case_id"]: d for d in pq.read_table(
+        os.path.join(fixture_dir, "documents.parquet")).to_pylist()}
     cases = []
-    for i, case in enumerate(raw):
-        rust = case.get("rust")
-        if rust is False and not include_disabled:
-            continue  # rust: false disables the case
-        if isinstance(rust, dict):
-            expect_warnings = bool(rust.get("expect_warnings", False))
-            separator = rust.get("separator")
-            include_separators = True if separator is None else bool(separator)
-        else:
-            expect_warnings = False
-            include_separators = True if rust is None else bool(rust)
-        tags = {str(k): str(v) for k, v in (case.get("tags") or {}).items()}
-        expected_lanes = [_norm_lane(l) for l in case["road"]["lanes"]]
+    for g in pq.read_table(os.path.join(fixture_dir, "golden.parquet")).to_pylist():
+        doc = docs[g["case_id"]]
+        tags = dict(s["text"].split("=", 1) for s in doc["spans"]
+                    if s["kind"] == "tag")
         cases.append({
-            "enabled": rust is not False,
-            "case_id": f"case/{i:04d}",
-            "way_id": case.get("way_id"),
-            "description": case.get("description"),
-            "driving_side": case["driving_side"],
-            "iso_3166_2": case.get("ISO 3166-2"),
+            "enabled": True,
+            "case_id": g["case_id"],
+            "way_id": None,
+            "description": None,
+            "driving_side": doc["driving_side"],
+            "iso_3166_2": doc["iso_3166_2"],
             "tags": tags,
-            "expected_highway": case["road"]["highway"],
-            "expected_lanes": expected_lanes,
-            "expect_warnings": expect_warnings,
-            "include_separators": include_separators,
+            "expected_highway": g["expected_highway"],
+            "expected_lanes": [_norm_lane(l) for l in json.loads(g["expected_json"])],
+            "expect_warnings": g["expect_warnings"],
+            "include_separators": g["include_separators"],
         })
     return cases
 

@@ -73,9 +73,13 @@ def cell_expr(lon, lat, level: int):
     the JVM. The numpy kernel in :mod:`cells` is the batch-side twin used
     inside Arrow UDFs (e.g. multi-vertex way geometries); both produce
     identical ids (asserted in tests).
+
+    A null or NaN coordinate gives a null cell (the clamp would send it to
+    the south-west corner: ``greatest`` skips nulls, NaN floors to 0).
     """
     x, y = _grid_xy(lon, lat, level)
-    return _cell_from_xy(x, y, level)
+    valid = ~(lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat))
+    return F.when(valid, _cell_from_xy(x, y, level))
 
 
 def with_cell(df: DataFrame, level: int = DEFAULT_LEVEL,
@@ -238,11 +242,15 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
     points: DataFrame with ``point_id``, ``lon``, ``lat``.
     Returns points columns + ``key`` (nullable — no containing polygon).
 
-    strategy='map':       ZERO-shuffle narrow map — the covering-cell
-    index (a broadcast-sized dict) and the PIP refinement run in one Arrow
-    stage. The optimal shape while the polygon dim fits in worker memory
-    (countries/admin areas always do); the plan stays a pure pipeline with
-    the scan and downstream stages.
+    Every strategy gives the same keys: a point inside several polygons
+    gets the smallest key, and a point with a null or NaN coordinate (a
+    null cell) or inside no polygon gets ``None``.
+
+    strategy='map':       ZERO-shuffle narrow map — the locale kernel
+    (:class:`LocaleResolver`: sorted cell array + PIP refinement) runs in
+    one Arrow stage. The optimal shape while the polygon dim fits in worker
+    memory (countries/admin areas always do); the plan stays a pure
+    pipeline with the scan and downstream stages.
     strategy='broadcast': dim as broadcast hash join; one groupBy shuffle
     to resolve multi-cell candidates.
     strategy='salted':    explicit replicate-by-salt hash join — the
@@ -266,7 +274,17 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
                 "strategy='map' fuses the morton covering into the Arrow "
                 "stage; use strategy='broadcast'/'salted' with "
                 f"cell_backend={cell_backend!r}")
-        return _containment_map(points, polygons, level, point_id)
+        resolver = LocaleResolver(polygons, level)
+
+        @F.pandas_udf(T.StringType())
+        def resolve_udf(cell_s: pd.Series, lon_s: pd.Series,
+                        lat_s: pd.Series) -> pd.Series:
+            return pd.Series(resolver(cell_s.to_numpy(), lon_s.to_numpy(),
+                                      lat_s.to_numpy())[0])
+
+        return (with_cell(points, level)
+                .withColumn("key", resolve_udf("cell", "lon", "lat"))
+                .drop("cell"))
     if cell_backend == "s2":
         dim_pdf = polygon_cells_pdf_s2(polygons, level)
         pts = with_cell_s2(points, level)
@@ -288,21 +306,18 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         joined = pts.join(dim, "cell", "left")
 
     # PIP refinement only for boundary cells (full=false)
-    rings_items = sorted(polygons.items())
-    ring_keys = [k for k, _ in rings_items]
-    ring_arrays = [np.asarray(r, np.float64) for _, r in rings_items]
+    ring_keys = np.array(sorted(polygons), dtype=object)
+    rings = [np.asarray(polygons[k], np.float64) for k in ring_keys]
 
     @F.pandas_udf(T.BooleanType())
     def pip_udf(lon_s: pd.Series, lat_s: pd.Series, key_s: pd.Series) -> pd.Series:
-        lon = lon_s.to_numpy()
-        lat = lat_s.to_numpy()
-        out = np.zeros(len(lon), dtype=bool)
-        keys = key_s.to_numpy()
-        for k, ring in zip(ring_keys, ring_arrays):
-            mask = keys == k
-            if mask.any():
-                out[mask] = P.point_in_polygon(lon[mask], lat[mask], ring)
-        return pd.Series(out)
+        keys = key_s.to_numpy(object)
+        has = pd.notna(keys)
+        hit = np.zeros(len(keys), dtype=bool)
+        hit[has] = refine(np.searchsorted(ring_keys, keys[has]),
+                          lon_s.to_numpy(np.float64)[has],
+                          lat_s.to_numpy(np.float64)[has], rings)
+        return pd.Series(hit)
 
     # Match flag: covering-cell hit refined by PIP only on boundary cells.
     matched_key = F.when(
@@ -322,44 +337,6 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
             .select(point_id, *other_cols, "key"))
 
 
-def _containment_map(points: DataFrame, polygons: dict[str, np.ndarray],
-                     level: int, point_id: str) -> DataFrame:
-    """Shuffle-free containment: cell→candidates dict + PIP in one kernel."""
-    dim_pdf = polygon_cells_pdf(polygons, level)
-    cell_index: dict[int, list[tuple[str, bool]]] = {}
-    for cell, key, full in dim_pdf.itertuples(index=False):
-        cell_index.setdefault(int(cell), []).append((key, bool(full)))
-    rings = {k: np.asarray(r, np.float64) for k, r in polygons.items()}
-
-    @F.pandas_udf(T.StringType())
-    def resolve_udf(cell_s: pd.Series, lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        cells_arr = cell_s.to_numpy()
-        lon = lon_s.to_numpy(np.float64)
-        lat = lat_s.to_numpy(np.float64)
-        out = np.full(len(cells_arr), None, dtype=object)
-        pending: dict[str, list[int]] = {}
-        for i, c in enumerate(cells_arr):
-            for key, full in cell_index.get(int(c), ()):  # few candidates
-                if full:
-                    if out[i] is None or key < out[i]:
-                        out[i] = key
-                else:
-                    pending.setdefault(key, []).append(i)
-        # vectorized PIP per polygon over its boundary-cell points
-        for key in sorted(pending):
-            idx = np.array(pending[key])
-            hit = P.point_in_polygon(lon[idx], lat[idx], rings[key])
-            for i in idx[hit]:
-                if out[i] is None or key < out[i]:
-                    out[i] = key
-        return pd.Series(out)
-
-    pts = with_cell(points, level)
-    return (pts.withColumn(
-        "key", resolve_udf(F.col("cell"), F.col("lon"), F.col("lat")))
-        .drop("cell"))
-
-
 def repartition_by_cell_range(df: DataFrame, num_partitions: int,
                               cell_col: str = "cell") -> DataFrame:
     """Range-partition facts by raw cell id = spatial co-location.
@@ -374,44 +351,65 @@ def repartition_by_cell_range(df: DataFrame, num_partitions: int,
     return df.repartitionByRange(num_partitions, F.col(cell_col))
 
 
-class LocaleResolver:
-    """Batch kernel: (cell, lon, lat) arrays → (alpha2, driving_side).
+def refine(codes: np.ndarray, lon: np.ndarray, lat: np.ndarray,
+           rings: list[np.ndarray]) -> np.ndarray:
+    """The PIP refinement: is point i inside ``rings[codes[i]]``? Points
+    are grouped by code, so each ring is cast once per batch."""
+    hit = np.zeros(len(codes), dtype=bool)
+    for code in np.unique(codes):
+        grp = np.flatnonzero(codes == code)
+        hit[grp] = P.point_in_polygon(lon[grp], lat[grp], rings[code])
+    return hit
 
-    Built driver-side once (covering index + rings + driving-side dim) and
-    shipped in the UDF closure; used by the fused lane-transform stage so
-    spatial locale resolution costs zero extra Python stages.
+
+class LocaleResolver:
+    """The locale kernel: (cell, lon, lat) arrays → (key, driving_side).
+
+    Index: the covering as flat arrays sorted by (cell, code) — int64
+    ``cells``, small-int ``codes`` (a code is the key's index in sorted key
+    order) and bool ``full`` (cell wholly inside that polygon). Lookup: two
+    ``np.searchsorted`` calls give each point its run of candidate rows; a
+    ``full`` candidate matches at once, the rest go through :func:`refine`.
+    A point inside several polygons gets the smallest key (= smallest
+    code). A null or NaN cell has no candidates; it, and a point inside no
+    polygon, resolves to ``(None, None)``.
     """
 
     def __init__(self, polygons: dict[str, np.ndarray], level: int):
         from ..core.locale import COUNTRIES
 
         self.level = level
-        dim_pdf = polygon_cells_pdf(polygons, level)
-        self.cell_index: dict[int, list[tuple[str, bool]]] = {}
-        for cell, key, full in dim_pdf.itertuples(index=False):
-            self.cell_index.setdefault(int(cell), []).append((key, bool(full)))
-        self.rings = {k: np.asarray(r, np.float64) for k, r in polygons.items()}
-        self.side = {a2: side for a2, (_, _, side) in COUNTRIES.items()}
+        keys = sorted(polygons)
+        self.rings = [np.asarray(polygons[k], np.float64) for k in keys]
+        # a trailing None, so code -1 (unresolved) indexes to None
+        self.keys = np.array(keys + [None], dtype=object)
+        self.sides = np.array([COUNTRIES[k][2] if k in COUNTRIES else None
+                               for k in keys] + [None], dtype=object)
+        dim = polygon_cells_pdf(polygons, level)
+        codes = np.searchsorted(self.keys[:-1], dim["key"].to_numpy(object))
+        cells = dim["cell"].to_numpy(np.int64)
+        order = np.lexsort((codes, cells))
+        self.cells = cells[order]
+        self.codes = codes[order].astype(np.min_scalar_type(len(keys)))
+        self.full = dim["full"].to_numpy(bool)[order]
 
     def __call__(self, cells_arr, lon, lat):
-        out = np.full(len(cells_arr), None, dtype=object)
-        pending: dict[str, list[int]] = {}
-        for i, c in enumerate(cells_arr):
-            for key, full in self.cell_index.get(int(c), ()):
-                if full:
-                    if out[i] is None or key < out[i]:
-                        out[i] = key
-                else:
-                    pending.setdefault(key, []).append(i)
-        for key in sorted(pending):
-            idx = np.array(pending[key])
-            hit = P.point_in_polygon(lon[idx], lat[idx], self.rings[key])
-            for i in idx[hit]:
-                if out[i] is None or key < out[i]:
-                    out[i] = key
-        sides = np.array([self.side.get(k) if k else None for k in out],
-                         dtype=object)
-        return out, sides
+        valid = pd.notna(cells_arr)
+        cells_arr = np.where(valid, cells_arr, 0).astype(np.int64)
+        lo = np.searchsorted(self.cells, cells_arr, "left")
+        n = np.where(valid, np.searchsorted(self.cells, cells_arr, "right") - lo, 0)
+        # candidate pairs: point ``pt`` against covering row ``row``
+        pt = np.repeat(np.arange(len(n)), n)
+        row = np.arange(len(pt)) + np.repeat(lo - (np.cumsum(n) - n), n)
+        codes, match = self.codes[row], self.full[row]
+        edge = ~match
+        match[edge] = refine(codes[edge], lon[pt[edge]], lat[pt[edge]], self.rings)
+        # a point's rows run in code order: its first match is the min
+        pt, codes = pt[match], codes[match]
+        _, first = np.unique(pt, return_index=True)
+        code = np.full(len(n), -1, dtype=np.int64)
+        code[pt[first]] = codes[first]
+        return self.keys[code], self.sides[code]
 
 
 def make_locale_resolver(polygons: dict[str, np.ndarray],

@@ -2,7 +2,7 @@
 
 Replicates the reference test runner `osm2lanes/src/test.rs:450-535`
 (forward) and `test.rs:537-590` (roundtrip) against
-/root/reference/data/tests.yml.
+the in-repo golden fixture (``fixtures/golden_fixture``).
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ CASES = load_cases()
 
 
 def _id(case):
-    return case["description"] or str(case["way_id"])
+    return case["description"] or case["case_id"]
 
 
 @pytest.mark.parametrize("case", CASES, ids=[_id(c) for c in CASES])
