@@ -6,7 +6,7 @@ drives the stages; counts.rs:30-203 infers lane counts; modes/* apply
 per-mode rules in fixed order; road.rs:448-608 interleaves separators).
 
 This function is *row-local* — in the engine it runs inside Arrow batches
-via ``mapInPandas`` (see ``operators.lane_transform``); nothing here touches
+via ``mapInArrow`` (see ``operators.lane_transform``); nothing here touches
 Spark. Warnings are collected as ``(kind, detail)`` records, matching the
 reference's issue taxonomy (transform/tags_to_lanes/error.rs:22-57).
 """

@@ -2,24 +2,31 @@
 
 The reference's public API is three pure functions
 (`tags_to_lanes`, `lanes_to_tags`, locale builder — SURVEY.md §2.10);
-here each becomes ONE ``mapInPandas`` stage over Arrow record batches:
-the batch arrives as pandas columns, a plain-Python loop runs the row
-kernel per way (allowed: the no-per-row-Python mandate bans per-row
-*Spark* UDFs, not loops inside an Arrow batch), and the result leaves as
-nested Arrow structs. No shuffle is introduced — the stage is a pure
-narrow map, so it pipelines with the scan and with downstream writes.
+here each transform becomes ONE ``mapInArrow`` stage over Arrow record
+batches, and the result leaves as nested Arrow structs built by pyarrow
+straight from the kernel's dicts. No shuffle is introduced — each stage
+is a pure narrow map, so it pipelines with the scan and with downstream
+writes.
+
+The forward stage never runs Python per row: the JVM reduces each row's
+tag map to one exact key string, and per batch Python dictionary-encodes
+(key, locale, config), runs the kernel once per distinct combination and
+emits the distinct output rows with ``take`` back in batch order.
 """
 
 from __future__ import annotations
 
+import json
 from typing import Iterator, Optional
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..core.compare import road_eq_expected
 from ..core.lanes_to_tags import lanes_to_tags
 from ..core.locale import Locale
 from ..core.model import RoadError
@@ -28,87 +35,46 @@ from ..schemas import ROAD_SCHEMA, TAGS_SCHEMA
 from .span_assembly import with_tags
 
 _ACCESS_MODES = ("foot", "bicycle", "taxi", "bus", "motor")
+_ROAD_FIELDS = ("name", "ref", "highway", "lifecycle", "lit", "tracktype",
+                "smoothness")
+_ROAD_ARROW = to_arrow_schema(ROAD_SCHEMA)
+_ROAD_VALUES = pa.schema([f for f in _ROAD_ARROW if f.name != "doc_id"])
+_TAGS_ARROW = to_arrow_schema(TAGS_SCHEMA)
+# a tags_error key starts with a character no JSON object starts with
+_ERROR_PREFIX = "!"
+# OSM repeats tag sets heavily, so a task memoises rows across batches;
+# FIFO-bounded so skew cannot grow worker memory
+_MEMO_SIZE = 65536
 
 
-def _norm_lane(lane: dict) -> dict:
-    """Internal lane dict → full-key dict matching LANE_TYPE."""
-    ms = lane.get("max_speed")
-    access = lane.get("access")
-    if access is not None:
-        access = {
-            m: (None if access.get(m) is None else
-                {"access": access[m].get("access"),
-                 "direction": access[m].get("direction")})
-            for m in _ACCESS_MODES
-        }
-    markings = lane.get("markings")
-    if markings is not None:
-        markings = [{"style": m.get("style"), "width": m.get("width"),
-                     "color": m.get("color")} for m in markings]
-    return {
-        "type": lane.get("type"),
-        "direction": lane.get("direction"),
-        "designated": lane.get("designated"),
-        "width": lane.get("width"),
-        "max_speed": None if ms is None else {"unit": ms[0], "value": ms[1]},
-        "access": access,
-        "semantic": lane.get("semantic"),
-        "markings": markings,
-    }
+def _tags_key(tags: Column, tags_error: Column) -> Column:
+    """Exact canonical key of one row's tags, computed JVM-side.
 
-
-class _TransformCache:
-    """Bounded memo of (tags, locale, config) → output row.
-
-    OSM corpora are dominated by repeated tag-sets (a plain residential
-    road tags identically millions of times), so the per-way transform is
-    dictionary-encodable: compute once per distinct input per worker,
-    share the (read-only, immediately Arrow-serialized) result dict.
-    FIFO-bounded so skew can't grow worker memory.
+    The JSON of the tag map with its entries sorted by key, or
+    ``"!" + tags_error`` for a rejected row. Never a hash, never null.
     """
-
-    __slots__ = ("cache", "max_size")
-
-    def __init__(self, max_size: int = 65536):
-        self.cache: dict = {}
-        self.max_size = max_size
-
-    def get(self, key):
-        return self.cache.get(key)
-
-    def put(self, key, value) -> None:
-        if len(self.cache) >= self.max_size:
-            self.cache.pop(next(iter(self.cache)))
-        self.cache[key] = value
+    ordered = F.map_from_entries(F.array_sort(F.map_entries(tags)))
+    return (F.when(tags_error.isNull(), F.to_json(ordered))
+            .otherwise(F.concat(F.lit(_ERROR_PREFIX), tags_error)))
 
 
-def _transform_row(tags: Optional[dict], iso: Optional[str],
-                   driving_side: Optional[str], include_separators: bool,
-                   tags_error: Optional[str] = None) -> dict:
-    out = {"name": None, "ref": None, "highway": None, "lifecycle": None,
-           "lit": None, "tracktype": None, "smoothness": None,
-           "lanes": None, "warnings": None, "error": None}
-    if tags is None:
-        out["error"] = tags_error or "duplicate_key"
-        return out
+def _transform_row(key: str, iso: Optional[str], driving_side: Optional[str],
+                   include_separators: bool) -> dict:
+    """One ROAD_SCHEMA row (without ``doc_id``); absent fields are null."""
+    if key.startswith(_ERROR_PREFIX):
+        return {"error": key[len(_ERROR_PREFIX):]}
     locale = Locale.build(iso, driving_side)
     try:
-        res = tags_to_lanes(dict(tags), locale,
+        res = tags_to_lanes(json.loads(key), locale,
                             include_separators=include_separators)
     except RoadError as e:
-        out["error"] = e.kind
-        return out
+        return {"error": e.kind}
     except Exception as e:  # defensive: never kill the batch
-        out["error"] = f"internal:{type(e).__name__}"
-        return out
+        return {"error": f"internal:{type(e).__name__}"}
     road = res["road"]
-    out.update(
-        name=road["name"], ref=road["ref"], highway=road["highway"],
-        lifecycle=road["lifecycle"], lit=road["lit"],
-        tracktype=road["tracktype"], smoothness=road["smoothness"],
-        lanes=[_norm_lane(l) for l in road["lanes"]],
-        warnings=[f"{w['kind']}:{w['detail']}" for w in res["warnings"]],
-    )
+    out = {f: road[f] for f in _ROAD_FIELDS}
+    out["lanes"] = road["lanes"]
+    out["warnings"] = [f"{w['kind']}:{w['detail']}" for w in res["warnings"]]
     return out
 
 
@@ -118,7 +84,14 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
 
     Expects columns: ``doc_id``, ``spans`` and optionally ``iso_3166_2`` /
     ``driving_side`` (produced upstream by the spatial locale join or
-    carried on the fixture). Narrow map stage — no shuffle.
+    carried on the fixture) and a per-row ``include_separators``. Narrow
+    map stage — no shuffle.
+
+    Only ``doc_id``, the tag key (:func:`_tags_key`: the sorted tag map as
+    JSON, or ``"!" + tags_error``), the locale inputs and the optional
+    ``include_separators`` cross to Python. Per batch the stage runs the
+    kernel once per distinct exact ``(key, iso, side, include_separators)``,
+    memoised per task in a FIFO dict bounded at 65 536 entries.
 
     ``locale_resolver``: optional fused spatial-locale resolution — a
     callable ``(cell:int64 ndarray, lon, lat ndarray) → (iso, side) object
@@ -127,63 +100,61 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
     stage, so the whole pipeline is one Python stage per task (two stacked
     Python runners per core measurably degrade throughput).
     """
-    cols = ["doc_id", "tags", "tags_error"]
-    has_iso = "iso_3166_2" in df.columns and locale_resolver is None
-    has_side = "driving_side" in df.columns and locale_resolver is None
-    has_inc = "include_separators" in df.columns  # per-row config override
-    if has_iso:
-        cols.append("iso_3166_2")
-    if has_side:
-        cols.append("driving_side")
-    if has_inc:
-        cols.append("include_separators")
     prepared = with_tags(df)
+    cols = ["doc_id", _tags_key(F.col("tags"), F.col("tags_error")).alias("key")]
     if locale_resolver is not None:
         from ..spatial.joins import cell_expr
-        prepared = prepared.withColumn(
-            "cell", cell_expr(F.col("lon"), F.col("lat"),
-                              locale_resolver.level))
-        cols += ["cell", "lon", "lat"]
+        cols += [cell_expr(F.col("lon"), F.col("lat"),
+                           locale_resolver.level).alias("cell"), "lon", "lat"]
+        locale_cols = ()
+    else:
+        locale_cols = [c for c in ("iso_3166_2", "driving_side")
+                       if c in df.columns]
+        cols += locale_cols
+    has_inc = "include_separators" in df.columns  # per-row config override
+    if has_inc:
+        cols.append("include_separators")
     prepared = prepared.select(*cols)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def locale(batch: pa.RecordBatch) -> list:
+        if locale_resolver is not None:
+            return [pa.array(a, pa.string()) for a in locale_resolver(
+                *(batch.column(c).to_numpy(zero_copy_only=False)
+                  for c in ("cell", "lon", "lat")))]
+        return [batch.column(c) if c in locale_cols
+                else pa.nulls(batch.num_rows, pa.string())
+                for c in ("iso_3166_2", "driving_side")]
 
-        memo = _TransformCache()
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        memo: dict = {}
+        for batch in batches:
+            inc = (batch.column("include_separators").fill_null(False) if has_inc
+                   else pa.repeat(bool(include_separators), batch.num_rows))
+            encoded = [pc.dictionary_encode(c, null_encoding="encode")
+                       for c in (batch.column("key"), *locale(batch), inc)]
+            codes = np.column_stack([e.indices.to_numpy() for e in encoded])
+            _, first, inverse = np.unique(codes, axis=0, return_index=True,
+                                          return_inverse=True)
+            values = [e.dictionary.to_pylist() for e in encoded]
             rows = []
-            if locale_resolver is not None:
-                iso_np, side_np = locale_resolver(
-                    pdf["cell"].to_numpy(), pdf["lon"].to_numpy(np.float64),
-                    pdf["lat"].to_numpy(np.float64))
-            else:
-                iso_np = pdf["iso_3166_2"].to_numpy() if has_iso else None
-                side_np = pdf["driving_side"].to_numpy() if has_side else None
-            inc_np = pdf["include_separators"].to_numpy() if has_inc else None
-            doc_ids = pdf["doc_id"].to_numpy()
-            tags_np = pdf["tags"].to_numpy()
-            err_np = pdf["tags_error"].to_numpy()
-            for i in range(len(pdf)):
-                tags = tags_np[i] if err_np[i] is None else None
-                inc = bool(inc_np[i]) if inc_np is not None else include_separators
-                iso = iso_np[i] if iso_np is not None else None
-                side = side_np[i] if side_np is not None else None
-                key = (err_np[i] if tags is None else tuple(sorted(tags.items())),
-                       iso, side, inc)
-                cached = memo.get(key)
-                if cached is None:
-                    cached = _transform_row(tags, iso, side, inc, err_np[i])
-                    memo.put(key, cached)
-                row = dict(cached)  # shallow: nested values shared read-only
-                row["doc_id"] = doc_ids[i]
+            for i in first:
+                key = tuple(v[c] for v, c in zip(values, codes[i]))
+                row = memo.get(key)
+                if row is None:
+                    if len(memo) >= _MEMO_SIZE:
+                        memo.pop(next(iter(memo)))
+                    row = memo[key] = _transform_row(*key)
                 rows.append(row)
-            yield pd.DataFrame(rows, columns=[f.name for f in ROAD_SCHEMA.fields])
+            out = pa.RecordBatch.from_pylist(rows, schema=_ROAD_VALUES)
+            out = out.take(pa.array(inverse.reshape(-1)))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), *out.columns], schema=_ROAD_ARROW)
 
-    return prepared.mapInPandas(run, schema=ROAD_SCHEMA)
+    return prepared.mapInArrow(run, schema=ROAD_SCHEMA)
 
 
 def _denorm_lane(lane: dict) -> dict:
-    """Arrow row dict → internal sparse lane dict (inverse of _norm_lane)."""
+    """Arrow row dict → the kernel's sparse lane dict."""
     out = {"type": lane["type"]}
     for k in ("direction", "designated", "width", "semantic"):
         if lane.get(k) is not None:
@@ -210,46 +181,31 @@ def _denorm_lane(lane: dict) -> dict:
     return out
 
 
+def _reverse_row(row: dict, check_roundtrip: bool) -> dict:
+    out = {"doc_id": row["doc_id"], "tags": None, "error": None}
+    try:
+        road = {"highway": row["highway"], "lifecycle": row["lifecycle"],
+                "lanes": [_denorm_lane(l) for l in row["lanes"] or ()]}
+        locale = Locale.build(row.get("iso_3166_2"), row.get("driving_side"))
+        out["tags"] = lanes_to_tags(road, locale, check_roundtrip=check_roundtrip)
+    except Exception as e:
+        out["error"] = f"{type(e).__name__}: {e}"
+    return out
+
+
 def lanes_to_tags_stage(df: DataFrame, check_roundtrip: bool = True) -> DataFrame:
     """ROAD_SCHEMA rows → tag maps (the reverse transform, L1-L10)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # numpy column access instead of pdf.iloc[i] row Series
-            # construction — same conversion the forward stage got in
-            # commit 8d17860 (measured faster); VERDICT r01 #4
-            doc_np = pdf["doc_id"].to_numpy()
-            hw_np = pdf["highway"].to_numpy()
-            lc_np = pdf["lifecycle"].to_numpy()
-            lanes_np = pdf["lanes"].to_numpy()
-            iso_np = pdf["iso_3166_2"].to_numpy() if "iso_3166_2" in pdf else None
-            side_np = pdf["driving_side"].to_numpy() if "driving_side" in pdf else None
-            for i in range(len(pdf)):
-                out = {"doc_id": doc_np[i], "tags": None, "error": None}
-                try:
-                    lanes = lanes_np[i]
-                    lanes = [] if lanes is None else list(lanes)
-                    road = {
-                        "highway": hw_np[i],
-                        "lifecycle": lc_np[i],
-                        "lanes": [_denorm_lane(l) for l in lanes],
-                    }
-                    locale = Locale.build(
-                        iso_np[i] if iso_np is not None else None,
-                        side_np[i] if side_np is not None else None)
-                    out["tags"] = lanes_to_tags(road, locale,
-                                                check_roundtrip=check_roundtrip)
-                except Exception as e:
-                    out["error"] = f"{type(e).__name__}: {e}"
-                rows.append(out)
-            yield pd.DataFrame(rows, columns=[f.name for f in TAGS_SCHEMA.fields])
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [_reverse_row(r, check_roundtrip) for r in batch.to_pylist()]
+            yield pa.RecordBatch.from_pylist(rows, schema=_TAGS_ARROW)
 
     cols = ["doc_id", "highway", "lifecycle", "lanes"]
     for extra in ("iso_3166_2", "driving_side"):
         if extra in df.columns:
             cols.append(extra)
-    return df.select(*cols).mapInPandas(run, schema=TAGS_SCHEMA)
+    return df.select(*cols).mapInArrow(run, schema=TAGS_SCHEMA)
 
 
 def arrow_lanes_to_internal(lanes) -> list[dict]:
@@ -262,4 +218,4 @@ def arrow_lanes_to_internal(lanes) -> list[dict]:
 
 
 __all__ = ["tags_to_lanes_stage", "lanes_to_tags_stage",
-           "arrow_lanes_to_internal", "road_eq_expected"]
+           "arrow_lanes_to_internal"]

@@ -45,16 +45,19 @@ def with_tags(df: DataFrame, spans_col: str = "spans",
 
     Malformed rows are rejected Spark-side, mirroring the reference's
     parse errors: duplicate keys (lib.rs:96-113) and tag text without an
-    ``=`` separator (lib.rs:274 ``split_once`` returns Err). Offending
-    rows get a NULL map plus ``tags_error`` = 'duplicate_key' | 'bad_tag'.
+    ``=`` separator (lib.rs:274 ``split_once`` returns Err; null text has
+    none either). Offending rows get a NULL map plus ``tags_error`` =
+    'duplicate_key' | 'bad_tag'. Null ``spans`` assemble like no spans: an
+    empty map.
     """
-    spans = F.col(spans_col)
+    spans = F.coalesce(F.col(spans_col),
+                       F.array().cast(df.schema[spans_col].dataType))
     entries = tag_entries(spans)
     keys = F.transform(entries, lambda e: e["key"])
     dup = F.size(keys) != F.size(F.array_distinct(keys))
     bad = F.exists(
         F.filter(spans, lambda s: s["kind"] == F.lit("tag")),
-        lambda s: ~s["text"].contains("="))
+        lambda s: s["text"].isNull() | ~s["text"].contains("="))
     return (
         df.withColumn("_tag_entries", entries)
         .withColumn("tags_error",

@@ -17,11 +17,9 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .core.locale import COUNTRIES
 from .operators.lane_transform import tags_to_lanes_stage

@@ -6,7 +6,7 @@ add the streaming expression of the same operators for continuously
 arriving documents:
 
 - :func:`stream_lanes`: the tags→lanes Arrow stage is stateless, so it
-  lifts onto a file-source stream unchanged (readStream → mapInPandas →
+  lifts onto a file-source stream unchanged (readStream → mapInArrow →
   writeStream with exactly-once file sink + checkpoint).
 - :func:`stream_event_window_counts`: watermarked event-time windowed
   aggregation (late data dropped past the watermark) — the canonical

@@ -1,7 +1,7 @@
 """End-to-end golden parity through the Spark pipeline.
 
 documents(parquet, interleaved spans) → span assembly (Catalyst HOFs) →
-tags_to_lanes mapInPandas stage → compare against expected lanes, plus the
+tags_to_lanes mapInArrow stage → compare against expected lanes, plus the
 span-sequence equality invariant across the stage.
 """
 
@@ -12,6 +12,10 @@ import json
 from pyspark.sql import functions as F
 
 from osm2lanes_spark.core.compare import diff_road, road_eq_expected
+from osm2lanes_spark.core.lanes_to_tags import lanes_to_tags
+from osm2lanes_spark.core.locale import Locale
+from osm2lanes_spark.core.model import RoadError
+from osm2lanes_spark.core.tags_to_lanes import tags_to_lanes
 from osm2lanes_spark.fixtures.golden import (expected_has_separators,
                                              filter_enabled_lanes, load_cases)
 from osm2lanes_spark.operators.lane_transform import (arrow_lanes_to_internal,
@@ -69,6 +73,16 @@ def test_golden_through_spark(spark, fixture_dir):
             assert not row["warnings"], f"{cid}: unexpected {row['warnings']}"
 
 
+def _reverse_in_process(case: dict) -> tuple:
+    """(tags, error) of the reverse kernel on the forward kernel's road."""
+    locale = Locale.build(case["iso_3166_2"], case["driving_side"])
+    road = tags_to_lanes(dict(case["tags"]), locale)["road"]
+    try:
+        return lanes_to_tags(road, locale, check_roundtrip=False), None
+    except Exception as e:
+        return None, f"{type(e).__name__}: {e}"
+
+
 def test_reverse_through_spark(spark, fixture_dir):
     """lanes_to_tags stage inverts the forward stage (roundtrip property)."""
     docs = spark.read.parquet(fixture_dir["documents"])
@@ -76,6 +90,14 @@ def test_reverse_through_spark(spark, fixture_dir):
     locales = docs.select("doc_id", "iso_3166_2", "driving_side")
     tags_back = lanes_to_tags_stage(
         roads.join(locales, "doc_id"), check_roundtrip=False)
+    # every row, error rows included, equals the in-process kernels
+    rows = {r["doc_id"]: r for r in tags_back.collect()}
+    cases = load_cases()
+    assert len(rows) == len(cases)
+    for case in cases:
+        row = rows[case["case_id"]]
+        tags, error = _reverse_in_process(case)
+        assert (row["tags"], row["error"]) == (tags, error), case["case_id"]
     # construction-lifecycle roads are rejected by the reverse transform in
     # the reference too (lanes_to_tags/mod.rs:156-161) — that error is parity
     errs = tags_back.where(F.col("error").isNotNull()).collect()
@@ -95,6 +117,12 @@ def test_malformed_spans_rejected(spark):
                  {"kind": "tag", "text": "highway=primary", "media_ref": None, "offset": 1}]),
         ("bad", [{"kind": "tag", "text": "no separator here", "media_ref": None, "offset": 0}]),
         ("ok", [{"kind": "tag", "text": "highway=trunk", "media_ref": None, "offset": 0}]),
+        # null spans assemble like no spans: an empty map, not a road
+        ("null_spans", None),
+        ("empty_spans", []),
+        # null tag text has no '=' either; the row fails, not the job
+        ("null_text", [{"kind": "tag", "text": "highway=trunk", "media_ref": None, "offset": 0},
+                       {"kind": "tag", "text": None, "media_ref": None, "offset": 1}]),
     ]
     df = spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
@@ -102,8 +130,94 @@ def test_malformed_spans_rejected(spark):
     assert out["dup"]["tags_error"] == "duplicate_key" and out["dup"]["tags"] is None
     assert out["bad"]["tags_error"] == "bad_tag" and out["bad"]["tags"] is None
     assert out["ok"]["tags_error"] is None and out["ok"]["tags"] == {"highway": "trunk"}
+    for doc in ("null_spans", "empty_spans"):
+        assert out[doc]["tags_error"] is None and out[doc]["tags"] == {}, doc
+    assert out["null_text"]["tags_error"] == "bad_tag" and out["null_text"]["tags"] is None
     # and the transform stage surfaces these as error rows, not crashes
     roads = {r["doc_id"]: r for r in tags_to_lanes_stage(df).collect()}
     assert roads["dup"]["error"] == "duplicate_key"
-    assert roads["bad"]["error"] == "duplicate_key" or roads["bad"]["error"] is not None
+    assert roads["bad"]["error"] == "bad_tag"
     assert roads["ok"]["error"] is None
+    assert roads["null_spans"]["error"] == "way_not_road"
+    assert roads["empty_spans"]["error"] == "way_not_road"
+    assert roads["null_text"]["error"] == "bad_tag"
+
+
+def _tag_spans(texts) -> list:
+    return [{"kind": "tag", "text": t, "media_ref": None, "offset": i}
+            for i, t in enumerate(texts)]
+
+
+def _forward_in_process(texts, iso, side, include_separators) -> dict:
+    """The expected row fields, from ``core.tags_to_lanes`` in-process."""
+    if texts is None:
+        texts = []
+    if any(t is None or "=" not in t for t in texts):
+        return {"error": "bad_tag"}
+    tags = dict(t.split("=", 1) for t in texts)
+    if len(tags) != len(texts):
+        return {"error": "duplicate_key"}
+    try:
+        res = tags_to_lanes(tags, Locale.build(iso, side),
+                            include_separators=include_separators)
+    except RoadError as e:
+        return {"error": e.kind}
+    road = res["road"]
+    return {"error": None, "name": road["name"], "ref": road["ref"],
+            "highway": road["highway"], "lanes": road["lanes"],
+            "warnings": [f"{w['kind']}:{w['detail']}" for w in res["warnings"]]}
+
+
+def test_tags_key_exact(spark):
+    """The stage runs the kernel once per distinct key on each batch, so a
+    key that merged two different inputs would hand one row's output to
+    the other. On one partition (one memo, one batch) every row must equal
+    the in-process kernel, and equal inputs must give equal rows."""
+    base = ["highway=primary", "lanes=3", "oneway=yes", "cycleway=lane"]
+    odd = ['name=say "hi"', "ref=a\\b", "destination=x=y",
+           "name:fr=ligne 1\nligne 2", "name:ja=道路", "note="]
+    docs = [
+        ("base", base, "DE", "right", True),
+        ("base_reordered", base[::-1], "DE", "right", True),
+        ("one_value", ["highway=primary", "lanes=2", "oneway=yes",
+                       "cycleway=lane"], "DE", "right", True),
+        ("odd", base + odd, "DE", "right", True),
+        ("odd_reordered", odd[::-1] + base, "DE", "right", True),
+        # a naive "k=v" join of these two would collide; JSON cannot
+        ("joined", base + ['name=x","ref":"y'], "DE", "right", True),
+        ("split", base + ["name=x", "ref=y"], "DE", "right", True),
+        ("no_separators", base, "DE", "right", False),
+        ("gb", base, "GB", "left", True),
+        ("no_iso", base, None, "right", True),
+        ("no_locale", base, None, None, True),
+        ("duplicate", ["highway=primary", "highway=trunk"], "DE", "right", True),
+        ("bad", ["highway"], "DE", "right", True),
+        ("null_text", base + [None], "DE", "right", True),
+        ("not_road", ["building=yes"], "DE", "right", True),
+        ("null_spans", None, "DE", "right", True),
+    ]
+    rows = [(d, None if texts is None else _tag_spans(texts), iso, side, inc)
+            for d, texts, iso, side, inc in docs]
+    df = spark.createDataFrame(
+        rows, "doc_id string, spans array<struct<kind:string,text:string,"
+              "media_ref:string,offset:int>>, iso_3166_2 string, "
+              "driving_side string, include_separators boolean").coalesce(1)
+    out = {r["doc_id"]: r.asDict(recursive=True)
+           for r in tags_to_lanes_stage(df).collect()}
+    assert len(out) == len(docs)
+    for doc_id, texts, iso, side, inc in docs:
+        want = _forward_in_process(texts, iso, side, inc)
+        got = dict(out[doc_id], lanes=arrow_lanes_to_internal(out[doc_id]["lanes"] or []))
+        for field, value in want.items():
+            assert got[field] == value, (doc_id, field)
+        if want["error"] is not None:
+            assert got["lanes"] == [] and got["warnings"] is None, doc_id
+
+    def same(a, b):
+        return {**out[a], "doc_id": None} == {**out[b], "doc_id": None}
+
+    assert same("base", "base_reordered") and same("odd", "odd_reordered")
+    for a, b in [("base", "one_value"), ("base", "no_separators"),
+                 ("base", "gb"), ("joined", "split")]:
+        assert not same(a, b), (a, b)
+    assert out["odd"]["name"] == 'say "hi"' and out["odd"]["ref"] == "a\\b"

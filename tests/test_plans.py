@@ -36,7 +36,8 @@ def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
     result = lanes_pipeline(docs, G.all_country_polygons(), level=8)
     plan = _plan(result)
     assert "Exchange" not in plan, plan  # pure narrow map end-to-end
-    assert plan.count("MapInPandas") == 1  # exactly one Python stage
+    assert plan.count("MapInArrow") == 1  # exactly one Python stage
+    assert "MapInPandas" not in plan
 
 
 def test_span_assembly_jvm_side(spark, fixture_dir):
@@ -47,7 +48,8 @@ def test_span_assembly_jvm_side(spark, fixture_dir):
     docs = spark.read.parquet(fixture_dir["documents"])
     plan = _plan(with_tags(docs).select("doc_id", "tags"))
     assert "Exchange" not in plan
-    for py_marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+    for py_marker in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
+                      "BatchEvalPython"):
         assert py_marker not in plan
 
 
@@ -303,7 +305,8 @@ def test_gopher_rules_plan_pure_narrow(spark, sf_dir):
     q = E.queries()["gopher_rules"]
     plan = _plan(q(spark, sf_dir))
     assert "Exchange" not in plan.split("Union")[0], plan  # doc branch
-    for py_marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+    for py_marker in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
+                      "BatchEvalPython"):
         assert py_marker not in plan
 
 
@@ -459,7 +462,8 @@ def test_fuzzy_names_plan_no_cartesian_codegen_levenshtein(spark, sf_dir):
     plan = _plan(E.queries()["fuzzy_names"](spark, sf_dir))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
-    for py_marker in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+    for py_marker in ("MapInPandas", "MapInArrow", "ArrowEvalPython",
+                      "BatchEvalPython"):
         assert py_marker not in plan, plan
 
 
