@@ -260,8 +260,7 @@ def _q_geohash_binning(spark, sf_dir):
 
     docs = _read(spark, sf_dir, "documents")
     return (docs
-            .withColumn("geohash", geohash_expr(
-                F.expr(_LON), F.expr(_LAT), 3))
+            .withColumn("geohash", geohash_expr(_LON, _LAT, 3))
             .groupBy("geohash")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.min("doc_id").alias("min_doc")))

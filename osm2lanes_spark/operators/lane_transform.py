@@ -23,8 +23,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.lanes_to_tags import lanes_to_tags
@@ -47,15 +46,12 @@ _ERROR_PREFIX = "!"
 _MEMO_SIZE = 65536
 
 
-def _tags_key(tags: Column, tags_error: Column) -> Column:
-    """Exact canonical key of one row's tags, computed JVM-side.
-
-    The JSON of the tag map with its entries sorted by key, or
-    ``"!" + tags_error`` for a rejected row. Never a hash, never null.
-    """
-    ordered = F.map_from_entries(F.array_sort(F.map_entries(tags)))
-    return (F.when(tags_error.isNull(), F.to_json(ordered))
-            .otherwise(F.concat(F.lit(_ERROR_PREFIX), tags_error)))
+# Exact canonical key of one row's tags, as SQL (computed JVM-side): the
+# JSON of the tag map with its entries sorted by key, or "!" + tags_error
+# for a rejected row. Never a hash, never null.
+_TAGS_KEY = ("CASE WHEN tags_error IS NULL"
+             " THEN to_json(map_from_entries(array_sort(map_entries(tags))))"
+             f" ELSE concat('{_ERROR_PREFIX}', tags_error) END")
 
 
 def _transform_row(key: str, iso: Optional[str], driving_side: Optional[str],
@@ -87,38 +83,46 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
     carried on the fixture) and a per-row ``include_separators``. Narrow
     map stage — no shuffle.
 
-    Only ``doc_id``, the tag key (:func:`_tags_key`: the sorted tag map as
+    Only ``doc_id``, the tag key (``_TAGS_KEY``: the sorted tag map as
     JSON, or ``"!" + tags_error``), the locale inputs and the optional
     ``include_separators`` cross to Python. Per batch the stage runs the
     kernel once per distinct exact ``(key, iso, side, include_separators)``,
     memoised per task in a FIFO dict bounded at 65 536 entries.
 
     ``locale_resolver``: optional fused spatial-locale resolution — a
-    callable ``(cell:int64 ndarray, lon, lat ndarray) → (iso, side) object
-    arrays`` (see ``spatial.joins.make_locale_resolver``). When given, the
-    ``cell`` is computed JVM-side and locale resolves inside THIS Arrow
-    stage, so the whole pipeline is one Python stage per task (two stacked
-    Python runners per core measurably degrade throughput).
+    ``spatial.joins.LocaleResolver`` (from the memoised
+    ``make_locale_resolver``). When given, the ``cell`` is computed
+    JVM-side and locale resolves inside THIS Arrow stage, so the whole
+    pipeline is one Python stage per task (two stacked Python runners per
+    core measurably degrade throughput). The index ships once per
+    SparkContext as a broadcast; the task closure holds only its handle.
+
+    The JVM side of the plan (span assembly, the key, the cell encode) is
+    Spark SQL text built by cached pure-Python functions, so each
+    expression reaches the JVM in one py4j call, not one per Column
+    operator.
     """
-    prepared = with_tags(df)
-    cols = ["doc_id", _tags_key(F.col("tags"), F.col("tags_error")).alias("key")]
+    columns = df.columns
+    cols = ["doc_id", f"{_TAGS_KEY} AS key"]
     if locale_resolver is not None:
-        from ..spatial.joins import cell_expr
-        cols += [cell_expr(F.col("lon"), F.col("lat"),
-                           locale_resolver.level).alias("cell"), "lon", "lat"]
+        from ..spatial.joins import cell_sql
+        shipped = locale_resolver.broadcast(df.sparkSession.sparkContext)
+        cols += [f"{cell_sql('lon', 'lat', locale_resolver.level)} AS cell",
+                 "lon", "lat"]
         locale_cols = ()
     else:
+        shipped = None
         locale_cols = [c for c in ("iso_3166_2", "driving_side")
-                       if c in df.columns]
+                       if c in columns]
         cols += locale_cols
-    has_inc = "include_separators" in df.columns  # per-row config override
+    has_inc = "include_separators" in columns  # per-row config override
     if has_inc:
         cols.append("include_separators")
-    prepared = prepared.select(*cols)
+    prepared = with_tags(df).selectExpr(*cols)
 
     def locale(batch: pa.RecordBatch) -> list:
-        if locale_resolver is not None:
-            return [pa.array(a, pa.string()) for a in locale_resolver(
+        if shipped is not None:
+            return [pa.array(a, pa.string()) for a in shipped.value(
                 *(batch.column(c).to_numpy(zero_copy_only=False)
                   for c in ("cell", "lon", "lat")))]
         return [batch.column(c) if c in locale_cols

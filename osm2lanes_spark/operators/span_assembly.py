@@ -5,38 +5,54 @@ The reference parses newline-separated ``k=v`` text into an ordered map
 duplicate keys are an error — lib.rs:96-113). Here the tag text arrives as
 ``kind='tag'`` spans interleaved with media spans; assembly is expressed
 entirely with Catalyst higher-order functions (filter / array_sort /
-transform / map_from_entries) — JVM-side single projection, no shuffle,
-no Python anywhere in this stage (HOFs are interpreted-eval, not
+transform / map_from_entries) — JVM-side projections, no shuffle, no
+Python anywhere in this stage (HOFs are interpreted-eval, not
 whole-stage codegen, but never leave the JVM).
+
+The assembly is written as Spark SQL text built by cached pure-Python
+functions and applied with ``F.expr``: building it as Columns cost one
+py4j round trip per lambda, literal and operator on every plan.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def tag_entries(spans: Column) -> Column:
-    """``spans`` → sorted ``array<struct<key,value>>`` of tag pairs.
+def tag_entries(spans: str) -> str:
+    """SQL text: ``spans`` → sorted ``array<struct<key,value>>`` of tag pairs.
 
     Ordering by ``offset`` preserves the document's span sequence; the
     split on the *first* '=' mirrors Tags::from_str (osm-tags lib.rs:274).
     """
     # natural struct ordering (offset leads) instead of a lambda comparator:
     # comparator lambdas defeat codegen; field-order sort stays compiled
-    tags = F.array_sort(F.transform(
-        F.filter(spans, lambda s: s["kind"] == F.lit("tag")),
-        lambda s: F.struct(s["offset"].alias("offset"), s["text"].alias("text"))))
-    return F.transform(
-        tags,
-        lambda s: F.struct(
-            F.substring_index(s["text"], "=", 1).alias("key"),
-            # everything after the first '=' (value may itself contain '=')
-            s["text"].substr(
-                F.length(F.substring_index(s["text"], "=", 1)) + 2,
-                F.length(s["text"])).alias("value"),
-        ),
-    )
+    tags = (f"array_sort(transform(filter({spans}, s -> s.kind = 'tag'),"
+            " s -> named_struct('offset', s.`offset`, 'text', s.text)))")
+    key = "substring_index(s.text, '=', 1)"
+    # everything after the first '=' (value may itself contain '=')
+    value = f"substr(s.text, length({key}) + 2, length(s.text))"
+    return (f"transform({tags},"
+            f" s -> named_struct('key', {key}, 'value', {value}))")
+
+
+@functools.lru_cache(maxsize=256)
+def _with_tags_sql(spans_col: str) -> tuple[str, str, str]:
+    """SQL text of (tag entries, tags_error, tags) over ``spans_col``,
+    cached per process; the last two read the entries from a
+    ``_tag_entries`` column."""
+    # null spans assemble like no spans
+    spans = f"coalesce({spans_col}, array())"
+    bad = (f"exists(filter({spans}, s -> s.kind = 'tag'),"
+           " s -> s.text IS NULL OR NOT contains(s.text, '='))")
+    dup = "size(_tag_entries.key) != size(array_distinct(_tag_entries.key))"
+    error = (f"CASE WHEN {bad} THEN 'bad_tag'"
+             f" WHEN {dup} THEN 'duplicate_key' END")
+    tags = "CASE WHEN tags_error IS NULL THEN map_from_entries(_tag_entries) END"
+    return tag_entries(spans), error, tags
 
 
 def with_tags(df: DataFrame, spans_col: str = "spans",
@@ -50,23 +66,11 @@ def with_tags(df: DataFrame, spans_col: str = "spans",
     'duplicate_key' | 'bad_tag'. Null ``spans`` assemble like no spans: an
     empty map.
     """
-    spans = F.coalesce(F.col(spans_col),
-                       F.array().cast(df.schema[spans_col].dataType))
-    entries = tag_entries(spans)
-    keys = F.transform(entries, lambda e: e["key"])
-    dup = F.size(keys) != F.size(F.array_distinct(keys))
-    bad = F.exists(
-        F.filter(spans, lambda s: s["kind"] == F.lit("tag")),
-        lambda s: s["text"].isNull() | ~s["text"].contains("="))
-    return (
-        df.withColumn("_tag_entries", entries)
-        .withColumn("tags_error",
-                    F.when(bad, F.lit("bad_tag"))
-                    .when(dup, F.lit("duplicate_key")))
-        .withColumn(out_col, F.when(F.col("tags_error").isNull(),
-                                    F.map_from_entries(F.col("_tag_entries"))))
-        .drop("_tag_entries")
-    )
+    entries, error, tags = _with_tags_sql(spans_col)
+    return (df.withColumn("_tag_entries", F.expr(entries))
+            .withColumn("tags_error", F.expr(error))
+            .withColumn(out_col, F.expr(tags))
+            .drop("_tag_entries"))
 
 
 def media_refs(spans: Column) -> Column:

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from .core.locale import COUNTRIES
 from .operators.lane_transform import tags_to_lanes_stage
-from .spatial.joins import containment_join
+from .spatial.joins import containment_join, make_locale_resolver
 
 
 def locale_dim(spark: SparkSession) -> DataFrame:
@@ -65,10 +65,13 @@ def lanes_pipeline(docs: DataFrame,
     task; two stacked Python runners per core measurably degrade
     throughput. ``fused=False`` keeps a separate locale stage (needed when
     the caller wants the located DataFrame itself).
+
+    The per-call floor is kept small: the locale index is built once per
+    (polygon content, level) by the memoised ``make_locale_resolver`` and
+    shipped once per SparkContext as a broadcast, and the JVM plan is
+    built from cached Spark SQL text, one py4j call per expression.
     """
     if polygons is not None and fused:
-        from .spatial.joins import make_locale_resolver
-
         return tags_to_lanes_stage(
             docs, include_separators=include_separators,
             locale_resolver=make_locale_resolver(polygons, level))

@@ -55,11 +55,21 @@ def _morton_to_xy(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def encode(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
-    """Vectorized point → int64 cell id at ``level``."""
+    """Vectorized point → int64 cell id at ``level``.
+
+    Floor and clamp run in float before the int64 cast (whose result is
+    undefined beyond the int64 range), so every finite coordinate gets the
+    JVM encoder's cell (``joins.cell_sql``); ±inf clamps to an edge and
+    NaN to the west/south edge (the JVM encoder gives those a null cell).
+    """
     n = 1 << level
-    x = np.clip(((np.asarray(lon, np.float64) + 180.0) / 360.0 * n).astype(np.int64), 0, n - 1)
-    y = np.clip(((np.asarray(lat, np.float64) + 90.0) / 180.0 * n).astype(np.int64), 0, n - 1)
-    morton = _xy_to_morton(x.astype(np.uint64), y.astype(np.uint64))
+
+    def grid(v, lo, span):
+        with np.errstate(over="ignore"):  # a huge finite value scales to inf
+            g = np.floor((np.asarray(v, np.float64) + lo) / span * n)
+        return np.fmin(np.fmax(g, 0.0), n - 1).astype(np.uint64)
+
+    morton = _xy_to_morton(grid(lon, 180.0, 360.0), grid(lat, 90.0, 180.0))
     return ((morton << np.uint64(6)) | np.uint64(level)).astype(np.int64)
 
 

@@ -1,16 +1,18 @@
-"""Geohash encoding as pure-Catalyst column arithmetic + a SQL replay twin.
+"""Geohash encoding as pure-Catalyst SQL arithmetic + a DuckDB replay twin.
 
 Geohash (public domain, Niemeyer 2008) interleaves quantized lon/lat bits
 MSB-first starting with longitude and base32-encodes 5 bits per character
 with the alphabet ``0123456789bcdefghjkmnpqrstuvwxyz``. The interleave is
-exactly a Morton spread — the same bit-twiddling chain the grid cell
-encoder uses (`joins._spread_bits`), so the hot path stays inside
-whole-stage codegen: at 10^12 rows the encode must never leave the JVM.
+exactly a Morton interleave over the grid cell encoder's quantization
+(`joins.grid_sql`), written as Spark SQL text, so the hot path stays
+inside whole-stage codegen: at 10^12 rows the encode must never leave the
+JVM.
 
 Engine parity: :func:`geohash_oracle_cte` emits a DuckDB CTE chain that
-replays the identical integer arithmetic (same decimal mask literals, same
-shift order), so the oracle hash-verifies the encoder itself — the same
-strategy the S2 oracle uses for its Hilbert tables (`spatial/s2.py`).
+reaches the same integers by another route (the mask-cascade Morton
+spread, decimal mask literals), so the oracle hash-verifies the encoder
+itself — the same strategy the S2 oracle uses for its Hilbert tables
+(`spatial/s2.py`).
 
 Reference scope note: the reference has no tiling of its own (it delegates
 spatial lookup to Overpass — overpass.rs:147-242); geohash joins the grid
@@ -19,10 +21,12 @@ and S2 backends as the third cell index per SURVEY §2.4 J3.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .joins import _spread_bits
+from .joins import grid_sql
 
 ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -40,49 +44,39 @@ def _indices(precision: int) -> tuple[int, int]:
     return (nbits + 1) // 2, nbits // 2  # lon gets the extra odd bit
 
 
-def geohash_expr(lon: Column, lat: Column, precision: int = 5) -> Column:
-    """Geohash string of (lon, lat) at ``precision`` chars — JVM-side.
+@functools.lru_cache(maxsize=256)
+def geohash_sql(lon: str, lat: str, precision: int = 5) -> str:
+    """Spark SQL text of the geohash of SQL doubles (lon, lat).
 
-    Quantize each axis to its bit budget, Morton-spread, OR the two
-    planes (which plane lands on even bit positions depends on whether
-    the total bit count is odd — longitude leads MSB-first either way),
-    then emit base32 characters via an array lookup.
+    Quantize each axis to its bit budget, then read the Morton interleave
+    of the two planes 5 bits per character, MSB-first, straight from the
+    planes: which plane lands on even bit positions depends on whether the
+    total bit count is odd — longitude leads MSB-first either way.
     """
     nlon, nlat = _indices(precision)
-    nbits = nlon + nlat
-    lon_i = F.least(F.greatest(
-        F.floor((lon + F.lit(180.0)) / F.lit(360.0) * (1 << nlon))
-        .cast("long"), F.lit(0)), F.lit((1 << nlon) - 1))
-    lat_i = F.least(F.greatest(
-        F.floor((lat + F.lit(90.0)) / F.lit(180.0) * (1 << nlat))
-        .cast("long"), F.lit(0)), F.lit((1 << nlat) - 1))
-    if nbits % 2:  # odd total: lon occupies even bit positions
-        combined = _spread_bits(lon_i).bitwiseOR(
-            F.shiftleft(_spread_bits(lat_i), 1))
-    else:          # even total: lon leads again, now on odd positions
-        combined = _spread_bits(lat_i).bitwiseOR(
-            F.shiftleft(_spread_bits(lon_i), 1))
-    chars_arr = F.array(*[F.lit(c) for c in ALPHABET])
-    out = [F.element_at(
-        chars_arr,
-        (F.shiftrightunsigned(combined, 5 * (precision - 1 - k))
-         .bitwiseAND(F.lit(31)).cast("int") + F.lit(1)))
-        for k in range(precision)]
-    return F.concat(*out)
+    lon_i = grid_sql(lon, 180.0, 360.0, nlon)
+    lat_i = grid_sql(lat, 90.0, 180.0, nlat)
+    # plane of the even interleave positions, then of the odd ones
+    planes = (lon_i, lat_i) if (nlon + nlat) % 2 else (lat_i, lon_i)
+    chars = []
+    for k in range(precision):
+        low = 5 * (precision - 1 - k)  # interleave position of the char's LSB
+        index = " | ".join(
+            f"shiftleft(shiftright({planes[p % 2]}, {p // 2}) & 1L, {p - low})"
+            for p in range(low, low + 5))
+        chars.append(f"substr('{ALPHABET}', CAST({index} AS INT) + 1, 1)")
+    return f"concat({', '.join(chars)})"
 
 
-def _spread_sql(col: str) -> list[str]:
-    """The spread chain as successive SQL expressions over ``col``."""
-    steps = [f"({col} & 4294967295)"]
-    for shift, mask in _SPREAD_STEPS:
-        prev = steps[-1]
-        steps.append(f"(({prev} | ({prev} << {shift})) & {mask})")
-    return steps
+def geohash_expr(lon: str, lat: str, precision: int = 5) -> Column:
+    """Geohash string of (lon, lat) at ``precision`` chars — JVM-side.
+    ``lon``/``lat`` are SQL expressions (see :func:`geohash_sql`)."""
+    return F.expr(geohash_sql(lon, lat, precision))
 
 
 def geohash_oracle_cte(source: str, lon_sql: str, lat_sql: str,
                        precision: int, keep: str) -> str:
-    """DuckDB CTE chain replaying :func:`geohash_expr` bit-for-bit.
+    """DuckDB CTE chain giving :func:`geohash_expr`'s strings bit-for-bit.
 
     ``source`` is a FROM-able relation, ``keep`` a comma list of columns
     to carry through. Exposes those columns plus ``geohash``. Each spread

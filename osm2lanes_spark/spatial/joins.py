@@ -18,12 +18,16 @@ Scale design (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import threading
 from typing import Optional
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark import Broadcast, SparkContext
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,95 +38,105 @@ DEFAULT_LEVEL = 12
 
 
 # ---------------------------------------------------------------------------
-# Encode kernel (Arrow-batched)
+# Encode kernel: Spark SQL text (JVM-side, whole-stage-codegen'd)
 # ---------------------------------------------------------------------------
+#
+# The builders below return Spark SQL text, not Columns: a Column builder
+# pays one py4j round trip per ``F.lit``/``bitwiseAND``/``shiftleft``, and
+# the cell encode alone is a few hundred of them per plan. The text is
+# pure Python, cached per process, and reaches the JVM in one ``F.expr``.
+# Literals are doubles (``180.0D``; a bare ``180.0`` is a decimal), so the
+# arithmetic is the numpy encoder's IEEE arithmetic and the ids stay
+# bit-identical to :func:`cells.encode`.
 
-def _spread_bits(col):
-    """Morton bit-spread, pure JVM column arithmetic (mirrors
-    cells._part1by1 so JVM and numpy encoders agree bit-for-bit)."""
-    masks = [(16, 0x0000FFFF0000FFFF), (8, 0x00FF00FF00FF00FF),
-             (4, 0x0F0F0F0F0F0F0F0F), (2, 0x3333333333333333),
-             (1, 0x5555555555555555)]
-    out = col.bitwiseAND(F.lit(0xFFFFFFFF).cast("long"))
-    for shift, mask in masks:
-        out = (out.bitwiseOR(F.shiftleft(out, shift))
-               .bitwiseAND(F.lit(mask).cast("long")))
-    return out
+_INF = "CAST('Infinity' AS DOUBLE)"
 
 
-def _grid_xy(lon, lat, level: int):
-    """Clamped integer grid coordinates of (lon, lat) at ``level``."""
+def grid_sql(v: str, lo: float, span: float, level: int) -> str:
+    """Integer grid coordinate of the SQL double ``v`` on an axis starting
+    at ``-lo`` and ``span`` wide: floored, then clamped to
+    ``[0, 2^level - 1]`` (as :func:`cells.encode`)."""
     n = 1 << level
-    x = F.least(F.greatest(F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n)
-                           .cast("long"), F.lit(0)), F.lit(n - 1))
-    y = F.least(F.greatest(F.floor((lat + F.lit(90.0)) / F.lit(180.0) * n)
-                           .cast("long"), F.lit(0)), F.lit(n - 1))
-    return x, y
+    return (f"least(greatest(floor((({v}) + {lo!r}D) / {span!r}D"
+            f" * {float(n)!r}D), 0L), {n - 1}L)")
 
 
-def _cell_from_xy(x, y, level: int):
-    """Morton-compose grid coordinates into the packed int64 cell id."""
-    morton = _spread_bits(x).bitwiseOR(F.shiftleft(_spread_bits(y), 1))
-    return F.shiftleft(morton, 6).bitwiseOR(F.lit(level)).cast("long")
+def xy_cell_sql(x: str, y: str, level: int) -> str:
+    """Packed int64 cell id ``(morton << 6) | level`` of SQL grid
+    coordinates ``x``, ``y`` in ``[0, 2^level - 1]``: bit i of x lands on
+    bit 2i + 6, bit i of y on bit 2i + 7 (the twin of
+    ``cells._xy_to_morton``; one term per bit, so the text stays linear in
+    ``level``, unlike a mask cascade whose text doubles per step)."""
+    bits = " | ".join(f"shiftleft(({v}) & {1 << i}L, {i + j + 6})"
+                      for i in range(level) for j, v in ((0, x), (1, y)))
+    return f"({bits} | {level}L)"
 
 
-def cell_expr(lon, lat, level: int):
+@functools.lru_cache(maxsize=256)
+def cell_sql(lon: str, lat: str, level: int) -> str:
+    """SQL text of the int64 cell id of SQL doubles (lon, lat) at ``level``.
+
+    A null, NaN or infinite coordinate gives a null cell, so the point
+    resolves to no polygon (the clamp would put NaN on the west edge —
+    ``floor`` casts it to 0 — and ±inf on an edge).
+    """
+    x = grid_sql(lon, 180.0, 360.0, level)
+    y = grid_sql(lat, 90.0, 180.0, level)
+    # false for ±inf and for NaN (Spark orders NaN above +inf), null for null
+    finite = f"abs({lon}) < {_INF} AND abs({lat}) < {_INF}"
+    return f"CASE WHEN {finite} THEN {xy_cell_sql(x, y, level)} END"
+
+
+def cell_expr(lon: str, lat: str, level: int) -> Column:
     """int64 cell id of (lon, lat) at ``level`` — whole-stage-codegen'd.
 
-    This is the hot-path encoder: at 10^12 rows the encode must not leave
-    the JVM. The numpy kernel in :mod:`cells` is the batch-side twin used
-    inside Arrow UDFs (e.g. multi-vertex way geometries); both produce
-    identical ids (asserted in tests).
-
-    A null or NaN coordinate gives a null cell (the clamp would send it to
-    the south-west corner: ``greatest`` skips nulls, NaN floors to 0).
+    ``lon``/``lat`` are SQL expressions (a column name, or any double
+    valued SQL). This is the hot-path encoder: at 10^12 rows the encode
+    must not leave the JVM. The numpy kernel in :mod:`cells` is the
+    batch-side twin used inside Arrow UDFs; both give identical ids on
+    every finite input (asserted in tests).
     """
-    x, y = _grid_xy(lon, lat, level)
-    valid = ~(lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat))
-    return F.when(valid, _cell_from_xy(x, y, level))
+    return F.expr(cell_sql(lon, lat, level))
 
 
 def with_cell(df: DataFrame, level: int = DEFAULT_LEVEL,
               lon: str = "lon", lat: str = "lat",
               out: str = "cell") -> DataFrame:
     """Add the int64 index cell of (lon, lat) at ``level`` (JVM-side)."""
-    return df.withColumn(out, cell_expr(F.col(lon), F.col(lat), level))
+    return df.withColumn(out, cell_expr(lon, lat, level))
 
 
-def explode_ring_cells(df: DataFrame, lon, lat, level: int, ring_k: int,
-                       out: str = "cell") -> DataFrame:
+def explode_ring_cells(df: DataFrame, lon: str, lat: str, level: int,
+                       ring_k: int, out: str = "cell") -> DataFrame:
     """JVM k-ring: one row per cell within Chebyshev distance ``ring_k``
     of the point's cell — the hot path of the kNN loop (the Python k-ring
-    UDF costs an Arrow round-trip per ring).
+    UDF costs an Arrow round-trip per ring). ``lon``/``lat`` are SQL
+    expressions.
 
     Shape matters: the integer grid coordinates are projected ONCE before
     a literal (dx, dy) offset array is exploded — Generate is a barrier
-    CollapseProject cannot cross, so the post-explode bit-spread
+    CollapseProject cannot cross, so the post-explode interleave
     duplicates only a leaf attribute. Building the ring as a
     (2k+1)²-element array of full encode expressions instead overflows
     janino's method limit (interpreted fallback, 5× slower), and
-    re-deriving x/y from the packed cell after the explode duplicates the
-    decode chain exponentially (every bit-twiddling step references its
-    input twice), drowning the optimizer in a megabyte expression tree —
-    both measured, both rejected. Integer-domain offsets (never lon/lat
-    plus multiples of the cell width, where float rounding at a boundary
-    could skip a neighbor) keep the set exactly ``cells.k_ring``'s:
-    out-of-world offsets clamp to the edge and the downstream dedup
-    collapses them."""
+    re-deriving x/y from the packed cell after the explode drowns the
+    optimizer in a huge expression tree — both measured, both rejected.
+    Integer-domain offsets (never lon/lat plus multiples of the cell
+    width, where float rounding at a boundary could skip a neighbor) keep
+    the set exactly ``cells.k_ring``'s: out-of-world offsets clamp to the
+    edge and the downstream dedup collapses them."""
     n = 1 << level
-    offsets = F.array(*[
-        F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
+    offsets = ", ".join(
+        f"named_struct('dx', {dx}, 'dy', {dy})"
         for dx in range(-ring_k, ring_k + 1)
-        for dy in range(-ring_k, ring_k + 1)])
-    x, y = _grid_xy(lon, lat, level)
-    base = (df.withColumn("_x", x).withColumn("_y", y)
-            .select("*", F.explode(offsets).alias("_o")))
-    xx = F.least(F.greatest(F.col("_x") + F.col("_o.dx"), F.lit(0)),
-                 F.lit(n - 1))
-    yy = F.least(F.greatest(F.col("_y") + F.col("_o.dy"), F.lit(0)),
-                 F.lit(n - 1))
-    cell = _cell_from_xy(xx, yy, level)
-    return base.withColumn(out, cell).drop("_x", "_y", "_o")
+        for dy in range(-ring_k, ring_k + 1))
+    x = f"least(greatest(_x + _o.dx, 0L), {n - 1}L)"
+    y = f"least(greatest(_y + _o.dy, 0L), {n - 1}L)"
+    return (df.selectExpr("*", f"{grid_sql(lon, 180.0, 360.0, level)} AS _x",
+                          f"{grid_sql(lat, 90.0, 180.0, level)} AS _y")
+            .selectExpr("*", f"explode(array({offsets})) AS _o")
+            .withColumn(out, F.expr(xy_cell_sql(x, y, level)))
+            .drop("_x", "_y", "_o"))
 
 
 # ---------------------------------------------------------------------------
@@ -274,13 +288,14 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
                 "strategy='map' fuses the morton covering into the Arrow "
                 "stage; use strategy='broadcast'/'salted' with "
                 f"cell_backend={cell_backend!r}")
-        resolver = LocaleResolver(polygons, level)
+        shipped = make_locale_resolver(polygons, level).broadcast(
+            spark.sparkContext)
 
         @F.pandas_udf(T.StringType())
         def resolve_udf(cell_s: pd.Series, lon_s: pd.Series,
                         lat_s: pd.Series) -> pd.Series:
-            return pd.Series(resolver(cell_s.to_numpy(), lon_s.to_numpy(),
-                                      lat_s.to_numpy())[0])
+            return pd.Series(shipped.value(
+                cell_s.to_numpy(), lon_s.to_numpy(), lat_s.to_numpy())[0])
 
         return (with_cell(points, level)
                 .withColumn("key", resolve_udf("cell", "lon", "lat"))
@@ -292,7 +307,10 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         dim_pdf = polygon_cells_pdf_h3(polygons, level)
         pts = with_cell_h3(points, level)
     else:
-        dim_pdf = polygon_cells_pdf(polygons, level)
+        index = make_locale_resolver(polygons, level)
+        dim_pdf = pd.DataFrame({"cell": index.cells,
+                                "key": index.keys[index.codes],
+                                "full": index.full})
         pts = with_cell(points, level)
 
     if strategy == "salted":
@@ -373,6 +391,9 @@ class LocaleResolver:
     A point inside several polygons gets the smallest key (= smallest
     code). A null or NaN cell has no candidates; it, and a point inside no
     polygon, resolves to ``(None, None)``.
+
+    Build one with :func:`make_locale_resolver` (memoised) and ship it with
+    :meth:`broadcast`.
     """
 
     def __init__(self, polygons: dict[str, np.ndarray], level: int):
@@ -380,7 +401,9 @@ class LocaleResolver:
 
         self.level = level
         keys = sorted(polygons)
-        self.rings = [np.asarray(polygons[k], np.float64) for k in keys]
+        # copies: a later in-place edit of the caller's rings must not
+        # reach a memoised index
+        self.rings = [np.array(polygons[k], np.float64) for k in keys]
         # a trailing None, so code -1 (unresolved) indexes to None
         self.keys = np.array(keys + [None], dtype=object)
         self.sides = np.array([COUNTRIES[k][2] if k in COUNTRIES else None
@@ -392,6 +415,31 @@ class LocaleResolver:
         self.cells = cells[order]
         self.codes = codes[order].astype(np.min_scalar_type(len(keys)))
         self.full = dim["full"].to_numpy(bool)[order]
+        self._shipped = None  # (SparkContext, Broadcast) — driver-side only
+
+    def __getstate__(self):
+        return dict(self.__dict__, _shipped=None)
+
+    def broadcast(self, sc) -> Broadcast:
+        """This index as a broadcast of ``sc``, made once per live context.
+
+        A task closure captures only the handle; each worker unpickles the
+        index on its first ``.value`` and keeps it for its lifetime. A
+        broadcast of a stopped context is never reused.
+        """
+        with _MEMO_LOCK:
+            if self._shipped is None or self._shipped[0] is not sc:
+                self._shipped = (sc, sc.broadcast(self))
+            return self._shipped[1]
+
+    def unpersist(self) -> None:
+        """Drop this index's broadcast (if its context is still live)."""
+        with _MEMO_LOCK:
+            if self._shipped is not None:
+                sc, shipped = self._shipped
+                if SparkContext._active_spark_context is sc:
+                    shipped.unpersist()
+            self._shipped = None
 
     def __call__(self, cells_arr, lon, lat):
         valid = pd.notna(cells_arr)
@@ -412,9 +460,38 @@ class LocaleResolver:
         return self.keys[code], self.sides[code]
 
 
+def _polygons_digest(polygons: dict[str, np.ndarray]) -> bytes:
+    """Content digest of a polygon dict: sorted keys, each ring's shape and
+    float64 bytes."""
+    h = hashlib.blake2b(digest_size=16)
+    for key in sorted(polygons):
+        ring = np.ascontiguousarray(polygons[key], np.float64)
+        h.update(repr((key, ring.shape)).encode())
+        h.update(ring.tobytes())
+    return h.digest()
+
+
+# (content digest, level) → LocaleResolver, FIFO over a few entries
+_RESOLVERS: dict[tuple[bytes, int], LocaleResolver] = {}
+_RESOLVER_MEMO = 4
+# guards the memo and each index's broadcast (driver threads may share them)
+_MEMO_LOCK = threading.RLock()
+
+
 def make_locale_resolver(polygons: dict[str, np.ndarray],
                          level: int = DEFAULT_LEVEL) -> LocaleResolver:
-    return LocaleResolver(polygons, level)
+    """The locale index of ``polygons`` at ``level``, built once per
+    content: an equal dict built anew hits the memo, an in-place ring edit
+    or another level builds afresh. An evicted index's broadcast is
+    unpersisted."""
+    key = (_polygons_digest(polygons), level)
+    with _MEMO_LOCK:
+        resolver = _RESOLVERS.get(key)
+        if resolver is None:
+            if len(_RESOLVERS) >= _RESOLVER_MEMO:
+                _RESOLVERS.pop(next(iter(_RESOLVERS))).unpersist()
+            resolver = _RESOLVERS[key] = LocaleResolver(polygons, level)
+        return resolver
 
 
 # ---------------------------------------------------------------------------
@@ -477,9 +554,10 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
         F.count(F.lit(1)).alias("n"),
         F.sum((F.size("geometry") > 1).cast("int")).alias("nm")).first()
     n_ways, n_multi = stats["n"], stats["nm"] or 0
-    g1 = F.element_at("geometry", 1)
     single = (spread_ways.where(F.size("geometry") <= 1)
-              .withColumn("cell", cell_expr(g1["lon"], g1["lat"], level)))
+              .withColumn("cell", cell_expr("element_at(geometry, 1).lon",
+                                            "element_at(geometry, 1).lat",
+                                            level)))
     if n_multi == 0:
         way_index = single.select("cell", way_id, "geometry").persist()
     else:
@@ -672,7 +750,6 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
     dy = int(r_deg / cell_h) + 1
 
     from ..util import spread as _spread
-    rx, ry = _grid_xy(F.col(lon), F.col(lat), level)
     # spread the right side as well: when the planner broadcasts the
     # exploded LEFT (BuildLeft — observed on the idw shape), the right
     # side is the streamed one, and a single-row-group scan would run
@@ -681,9 +758,7 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
     right_idx = (_spread(right, lon)
                  .withColumnRenamed(lon, "__rlon")
                  .withColumnRenamed(lat, "__rlat")
-                 .withColumn("__cell", _cell_from_xy(
-                     *_grid_xy(F.col("__rlon"), F.col("__rlat"), level),
-                     level=level)))
+                 .withColumn("__cell", cell_expr("__rlon", "__rlat", level)))
 
     # per-row lon ring width: the partner's latitude is at most r_deg
     # further poleward, so bound cos by the worst latitude in reach
@@ -692,26 +767,22 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
         F.floor(F.lit(r_deg) / (F.cos(phi_w * F.lit(_DEG2RAD))
                                 * F.lit(cell_w))).cast("int") + F.lit(1),
         F.lit(n // 2))
-    lx, ly = _grid_xy(F.col(lon), F.col(lat), level)
     # spread the left side before the ring explode: a single-row-group
     # parquet scan is ONE task, and everything from the explode through
     # the cell join and haversine filter inherits that parallelism
     # (guide §2.5/§6.1). No-op once input partitions ≥ the session's
     # default parallelism (the 100 TB case).
     base = (_spread(left, lon)
-            .withColumn("__x", lx).withColumn("__y", ly)
+            .withColumn("__x", F.expr(grid_sql(lon, 180.0, 360.0, level)))
+            .withColumn("__y", F.expr(grid_sql(lat, 90.0, 180.0, level)))
             .withColumn("__dx", dx))
     # x wraps (antimeridian), y clamps (poles); array_distinct collapses
     # the duplicates both produce at the caps
-    xs = F.transform(F.sequence(-F.col("__dx"), F.col("__dx")),
-                     lambda d: F.pmod(F.col("__x") + d, F.lit(n)))
-    ys = F.transform(F.sequence(F.lit(-dy), F.lit(dy)),
-                     lambda d: F.least(F.greatest(F.col("__y") + d,
-                                                  F.lit(0)),
-                                       F.lit(n - 1)))
-    cells = F.array_distinct(F.flatten(F.transform(
-        xs, lambda xx: F.transform(ys,
-                                   lambda yy: _cell_from_xy(xx, yy, level)))))
+    xs = f"transform(sequence(-__dx, __dx), d -> pmod(__x + d, {n}L))"
+    ys = (f"transform(sequence({-dy}, {dy}),"
+          f" d -> least(greatest(__y + d, 0L), {n - 1}L))")
+    cells = F.expr(f"array_distinct(flatten(transform({xs}, xx -> "
+                   f"transform({ys}, yy -> {xy_cell_sql('xx', 'yy', level)}))))")
     cand = (base.withColumn("__cell", F.explode(cells))
             .drop("__x", "__y", "__dx")
             .join(right_idx, "__cell")

@@ -250,8 +250,7 @@ def stream_geofence_counts(spark: SparkSession, input_dir: str,
     ])
     events = (spark.readStream.schema(schema).parquet(input_dir)
               .withWatermark("ts", watermark)
-              .withColumn("cell", cell_expr(F.col("lon"), F.col("lat"),
-                                            level)))
+              .withColumn("cell", cell_expr("lon", "lat", level)))
     hits = events.join(geofence_cells, "cell")
     counts = (hits
               .groupBy(F.window("ts", window).alias("w"), "fence_id")

@@ -154,3 +154,158 @@ def test_cell_expr_null_nan(spark, null_docs):
     for d, x, y in COORDS:
         bad = x is None or y is None or math.isnan(x) or math.isnan(y)
         assert (got[d] is None) == bad, d
+
+
+# --- index memo and broadcast ----------------------------------------------
+
+def _copy(polygons):
+    return {k: np.array(v) for k, v in polygons.items()}
+
+
+def test_resolver_memo_hits_equal_content():
+    """An equal dict built anew (fresh arrays, another insertion order)
+    gets the same index."""
+    first = make_locale_resolver(_copy(OVERLAP), LEVEL)
+    again = dict(reversed(list(_copy(OVERLAP).items())))
+    assert make_locale_resolver(again, LEVEL) is first
+
+
+@pytest.mark.parametrize("change", ["ring_edit", "level"])
+def test_resolver_memo_rebuilds(overlap_points, change):
+    """An in-place ring edit, or another level, gives a fresh index whose
+    keys match brute-force PIP; the old index keeps its own rings."""
+    polygons = _copy(OVERLAP)
+    first = make_locale_resolver(polygons, LEVEL)
+    level = LEVEL
+    if change == "ring_edit":
+        polygons["FR"][2] = [5.0, 5.0]  # FR now reaches into DE and GB
+    else:
+        level = LEVEL + 2
+    fresh = make_locale_resolver(polygons, level)
+    assert fresh is not first and fresh.level == level
+    lon, lat = overlap_points
+    iso, _ = fresh(C.encode(lon, lat, level), lon, lat)
+    assert list(iso) == _brute(lon, lat, polygons)[0]
+    old_iso, _ = first(C.encode(lon, lat, LEVEL), lon, lat)
+    assert list(old_iso) == _brute(lon, lat, OVERLAP)[0]
+
+
+def test_resolver_memo_threads():
+    """Driver threads sharing the memo — more threads than cores, a short
+    switch interval, more contents than memo slots, so entries are evicted
+    while others look them up — each get the index of their own content,
+    and the memo never outgrows its bound."""
+    import sys
+    import threading
+
+    from osm2lanes_spark.spatial import joins
+
+    contents = [{"FR": OVERLAP["FR"] + i} for i in range(7)]
+    errors, finished = [], []
+
+    def work(t):
+        try:
+            for j in range(20):
+                i = (t + j) % len(contents)
+                index = make_locale_resolver(contents[i], LEVEL)
+                if (not np.array_equal(index.rings[0], contents[i]["FR"])
+                        or len(joins._RESOLVERS) > joins._RESOLVER_MEMO):
+                    errors.append((t, j))
+            finished.append(t)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and sorted(finished) == list(range(16))
+
+
+def test_fused_call_reuses_broadcast(spark, null_docs, monkeypatch):
+    """A second fused call on the same context ships no new broadcast."""
+    first = lanes_pipeline(null_docs, CORNER, level=LEVEL).collect()
+    made = []
+    sc_type = type(spark.sparkContext)
+    original = sc_type.broadcast
+    monkeypatch.setattr(sc_type, "broadcast",
+                        lambda sc, value: made.append(value) or original(sc, value))
+    second = lanes_pipeline(null_docs, CORNER, level=LEVEL).collect()
+    # the index already travels as this context's broadcast
+    make_locale_resolver(CORNER, LEVEL).broadcast(spark.sparkContext)
+    assert made == []
+    assert sorted(map(tuple, second)) == sorted(map(tuple, first))
+
+
+# A fused call, spark.stop(), a new session, the same fused call: the index
+# is memoised across the restart, its broadcast is not. Both calls must
+# equal the stage run on explicit locale columns (GB drives on the left).
+RESTART_SCRIPT = r"""
+import json
+import numpy as np
+from osm2lanes_spark.fixtures.golden import tags_to_spans
+from osm2lanes_spark.operators.lane_transform import tags_to_lanes_stage
+from osm2lanes_spark.pipeline import lanes_pipeline
+from osm2lanes_spark.session import get_spark
+from osm2lanes_spark.spatial.joins import make_locale_resolver
+
+POLYGONS = {
+    "FR": np.array([[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]]),
+    "GB": np.array([[4.0, 0.0], [8.0, 0.0], [4.0, 3.0]]),
+}
+TAGS = {"highway": "secondary", "lanes": "3", "lanes:forward": "2"}
+POINTS = [("fr", 1.0, 1.0, "FR", "right"), ("gb", 5.0, 0.5, "GB", "left"),
+          ("none", 20.0, 20.0, None, None)]
+SCHEMA = ("doc_id string, "
+          "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
+          "lon double, lat double, iso_3166_2 string, driving_side string")
+
+
+def call():
+    spark = get_spark("restart-probe", cpus=2)
+    docs = spark.createDataFrame(
+        [(d, tags_to_spans(d, TAGS), x, y, iso, side)
+         for d, x, y, iso, side in POINTS], SCHEMA)
+    fused = lanes_pipeline(docs.drop("iso_3166_2", "driving_side"), POLYGONS,
+                           level=8)
+    rows = {r["doc_id"]: r for r in fused.collect()}
+    want = {r["doc_id"]: r for r in tags_to_lanes_stage(docs).collect()}
+    shipped = make_locale_resolver(POLYGONS, 8)._shipped
+    live = shipped[0] is spark.sparkContext
+    spark.stop()
+    return rows, want, live
+
+
+rows_a, want_a, live_a = call()
+rows_b, want_b, live_b = call()
+print(json.dumps({"first": rows_a == want_a, "second": rows_b == want_b,
+                  "live": [live_a, live_b],
+                  "side_matters": want_b["fr"]["lanes"] != want_b["gb"]["lanes"]}))
+"""
+
+
+def test_fused_call_after_context_restart(tmp_path):
+    """Run in a subprocess, so the session's ``spark`` fixture stays up."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (repo, os.environ.get("PYTHONPATH")) if p))
+    proc = subprocess.run([sys.executable, "-c", RESTART_SCRIPT],
+                          capture_output=True, text=True, timeout=600,
+                          cwd=str(tmp_path), env=env)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert result == {"first": True, "second": True, "live": [True, True],
+                      "side_matters": True}

@@ -130,11 +130,51 @@ def test_knn_join(spark):
     assert got == {"q1": "B", "q2": "C", "q3": "A"}
 
 
+# every level a cell_expr caller uses: distance_join's bounds (1, 14), the
+# locale tests (8), the fused pipeline and streaming (10), the default (12)
+ENCODER_LEVELS = (1, 8, 10, 12, 14)
+INF, NAN, BIG = float("inf"), float("nan"), float(np.finfo(np.float64).max)
+
+
+def _encoder_points():
+    """Seeded points inside and beyond the world box, every tested level's
+    cell boundaries and their float neighbours, the world corners, huge
+    finite values and non-finite ones."""
+    rng = np.random.default_rng(31)
+    lon = list(rng.uniform(-200.0, 200.0, 400))
+    lat = list(rng.uniform(-100.0, 100.0, 400))
+    for level in ENCODER_LEVELS:
+        n = 1 << level
+        for k in sorted({0, 1, n // 3, n // 2, n - 1, n}):
+            x, y = -180.0 + 360.0 * k / n, -90.0 + 180.0 * k / n
+            for step in (-INF, 0.0, INF):
+                lon.append(float(np.nextafter(x, step)) if step else x)
+                lat.append(float(np.nextafter(y, step)) if step else y)
+    edges = [(180.0, 90.0), (-180.0, -90.0), (180.0, -90.0), (-180.0, 90.0),
+             (1e300, 0.0), (-1e300, 0.0), (0.0, 1e300), (0.0, -1e300),
+             (BIG, -BIG), (-BIG, BIG), (1e19, -1e19), (3e18, 7e17)]
+    non_finite = [(INF, 0.0), (-INF, 0.0), (0.0, INF), (0.0, -INF),
+                  (NAN, 0.0), (0.0, NAN), (INF, -INF), (NAN, INF)]
+    for x, y in edges + non_finite:
+        lon.append(x)
+        lat.append(y)
+    return np.array(lon), np.array(lat)
+
+
 def test_with_cell_matches_numpy(spark):
-    df = spark.createDataFrame([(1.5, 2.5), (-170.0, 80.0)], "lon double, lat double")
-    got = [r["cell"] for r in with_cell(df, level=9).collect()]
-    want = C.encode(np.array([1.5, -170.0]), np.array([2.5, 80.0]), 9).tolist()
-    assert got == want
+    """The JVM encoder gives cells.encode's id on every finite point, and
+    a null cell for ±inf and NaN."""
+    lon, lat = _encoder_points()
+    finite = np.isfinite(lon) & np.isfinite(lat)
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))],
+        "i int, lon double, lat double")
+    for level in ENCODER_LEVELS:
+        got = dict(with_cell(df, level=level).select("i", "cell").collect())
+        want = C.encode(lon, lat, level)
+        for i in range(len(lon)):
+            assert got[i] == (int(want[i]) if finite[i] else None), \
+                (level, lon[i], lat[i])
 
 
 def test_repartition_by_cell_range(spark):
@@ -262,7 +302,6 @@ def test_ring_cells_expr_matches_numpy_k_ring(spark):
     numpy ring clips and the JVM ring clamps (duplicates collapse in the
     downstream pair dedup)."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from osm2lanes_spark.spatial import cells as C
     from osm2lanes_spark.spatial.joins import explode_ring_cells
@@ -276,8 +315,7 @@ def test_ring_cells_expr_matches_numpy_k_ring(spark):
     for level in (4, 7, 10):
         for r in (1, 2, 3):
             got = {}
-            rows = explode_ring_cells(df, F.col("lon"), F.col("lat"),
-                                      level, r).collect()
+            rows = explode_ring_cells(df, "lon", "lat", level, r).collect()
             for row in rows:
                 got.setdefault((row["lon"], row["lat"]), set()).add(row["cell"])
             for (lo, la), ring in got.items():
@@ -415,7 +453,7 @@ def test_geohash_expr_matches_interval_halving(spark, precision):
     pdf.loc[1, ["lon", "lat"]] = (13.361389, 38.115556)  # sqc8b49rh...
     got = {r["i"]: r["gh"] for r in
            spark.createDataFrame(pdf)
-           .select("i", geohash_expr(F.col("lon"), F.col("lat"),
+           .select("i", geohash_expr("lon", "lat",
                                      precision).alias("gh"))
            .collect()}
     for _, row in pdf.iterrows():
@@ -430,7 +468,7 @@ def test_geohash_known_anchor(spark):
 
     df = spark.createDataFrame(pd.DataFrame(
         {"lon": [-5.6], "lat": [42.6]}))
-    [row] = df.select(geohash_expr(F.col("lon"), F.col("lat"), 5)
+    [row] = df.select(geohash_expr("lon", "lat", 5)
                       .alias("g")).collect()
     assert row["g"] == "ezs42"
 
@@ -450,7 +488,7 @@ def test_geohash_oracle_cte_matches_spark(spark):
     })
     spark_out = {r["i"]: r["g"] for r in
                  spark.createDataFrame(pdf)
-                 .select("i", geohash_expr(F.col("lon"), F.col("lat"), 6)
+                 .select("i", geohash_expr("lon", "lat", 6)
                          .alias("g")).collect()}
     con = duckdb.connect()
     con.register("pts", pdf)

@@ -243,7 +243,7 @@ def test_stream_geofence_counts(spark, tmp_path):
         pd.DataFrame({"fence_id": ["A", "B"],
                       "lon": [10.0, -70.0], "lat": [50.0, -20.0]}))
     fences = anchors.select(
-        "fence_id", cell_expr(F.col("lon"), F.col("lat"), 10).alias("cell"))
+        "fence_id", cell_expr("lon", "lat", 10).alias("cell"))
 
     q = stream_geofence_counts(spark, str(src) + "/*", str(out), str(ck),
                                fences, level=10)
