@@ -2,14 +2,16 @@
 
 documents (Iceberg/parquet, interleaved spans, way geometry)
   → span assembly (Catalyst HOFs, JVM-side)
-  → spatial locale resolution (cell containment join vs country polygons
-    + broadcast locale dim)                    [replaces Overpass is_in]
+  → spatial locale resolution (one broadcast locale index: morton cell
+    lookup + PIP refinement)                   [replaces Overpass is_in]
   → tags_to_lanes Arrow stage (ROAD_SCHEMA)
   → sinks (parquet/Iceberg) + per-partition lineage metrics
 
-Scale notes: the only shuffles are (a) the optional salted containment
-join (broadcast path has none) and (b) anything the caller adds downstream;
-the transform itself is a narrow map that pipelines with the scan.
+Scale notes: the fused path (and ``strategy='map'``) has no shuffle — locale
+resolution and the transform are one narrow map that pipelines with the
+scan. The only shuffles are (a) the groupBy of the unfused
+``strategy='broadcast'`` containment join and (b) anything the caller adds
+downstream.
 """
 
 from __future__ import annotations

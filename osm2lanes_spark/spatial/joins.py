@@ -1,19 +1,19 @@
-"""Spatial joins: cell-indexed containment (broadcast-or-salted) and kNN.
+"""Spatial joins: cell-indexed containment and kNN.
 
 Replaces the reference's Overpass client queries:
 - way→country containment (``is_in`` — overpass.rs:147-157,201-213) becomes
-  a cell equi-join against a covered polygon dim + ray-casting refinement;
+  a lookup in one locale index (:class:`LocaleResolver`: the morton
+  covering of the polygons as sorted arrays) plus a ray-casting
+  refinement on boundary cells;
 - nearest-way kNN (``get_nearby`` — overpass.rs:193-242) becomes an
   expanding k-ring candidate join + ``row_number() == 1``.
 
-Scale design (100 TB / 10^12 docs):
-- the polygon dim (countries/admin areas) is tiny → **broadcast** join, no
-  shuffle of the fact side at all;
-- if a cell dim ever exceeds the broadcast threshold, the **salted** path
-  replicates the dim S ways and hashes facts into salt buckets, keeping
-  hot city cells from pinning a single reducer;
-- the PIP refinement runs only on boundary cells (``full`` covering cells
-  skip it) and is a vectorized numpy kernel inside Arrow batches.
+Scale design (100 TB / 10^12 docs): the polygon dim (countries/admin
+areas) is small, so the index is built once on the driver, shipped once
+per SparkContext as a broadcast, and looked up inside a narrow Arrow map —
+the fact side is never shuffled, so a hot city cell cannot pin a reducer.
+The PIP refinement runs only on boundary cells (``full`` covering cells
+skip it) and is a vectorized numpy kernel inside Arrow batches.
 """
 
 from __future__ import annotations
@@ -158,183 +158,58 @@ def polygon_cells_pdf(polygons: dict[str, np.ndarray], level: int) -> pd.DataFra
     return pd.DataFrame(rows, columns=["cell", "key", "full"])
 
 
-def polygon_cells_pdf_s2(polygons: dict[str, np.ndarray],
-                         level: int) -> pd.DataFrame:
-    """S2-backend covering dim (same shape as :func:`polygon_cells_pdf`).
-
-    The S2 coverer is conservative and unclassified, so every cell is a
-    boundary cell (``full=False`` → every candidate refines through exact
-    PIP; correctness identical to the morton backend, slightly more PIP
-    work)."""
-    from . import s2 as S2
-
-    rows = []
-    for key, ring in polygons.items():
-        cover = S2.cover_polygon(np.asarray(ring, np.float64), level)
-        for cell in cover.tolist():
-            rows.append((cell, key, False))
-    return pd.DataFrame(rows, columns=["cell", "key", "full"])
-
-
-def with_cell_s2(df: DataFrame, level: int, lon: str = "lon",
-                 lat: str = "lat", out: str = "cell") -> DataFrame:
-    """S2 counterpart of :func:`with_cell` (Arrow-batched numpy kernel)."""
-    from .s2 import s2_encode_udf
-
-    return df.withColumn(out, s2_encode_udf(level)(F.col(lon), F.col(lat)))
-
-
-def polygon_cells_pdf_h3(polygons: dict[str, np.ndarray],
-                         res: int) -> pd.DataFrame:
-    """H3-backend covering dim (the north rule's primary cell system —
-    import-gated on the ``h3`` bindings, v4 API; VERDICT r02 #5a).
-
-    Conservative covering = center-inside fill ∪ densely-sampled boundary
-    cells ∪ a 1-ring dilation of both (``polygon_to_cells`` alone keeps
-    only cells whose CENTER is inside, which under-covers boundaries and
-    can miss a sliver polygon entirely). The boundary is sampled along
-    each edge at half-hex-edge spacing in degrees — NOT via
-    ``grid_path_cells``, whose grid-ij line can deviate from the true
-    lon/lat segment on long edges and raises across icosahedron faces
-    (round-3 review). Degree-based spacing is conservative everywhere: a
-    degree of longitude only shrinks in km toward the poles, so samples
-    get denser in ground distance, never sparser. Every cell is a
-    boundary cell (``full=False``) so downstream exact PIP refines each
-    candidate — identical results to the morton/S2 backends."""
-    import math
-
-    import h3
-
-    edge_km = h3.average_hexagon_edge_length(res, unit="km")
-    step_deg = max(edge_km / 111.0 / 2.0, 1e-5)
-    rows = []
-    for key in sorted(polygons):
-        ring = np.asarray(polygons[key], np.float64)
-        latlng = [(float(la), float(lo)) for lo, la in ring]
-        cells = set(h3.polygon_to_cells(h3.LatLngPoly(latlng), res))
-        boundary = set()
-        for (la0, lo0), (la1, lo1) in zip(latlng, latlng[1:] + latlng[:1]):
-            seg_len = math.hypot(lo1 - lo0, la1 - la0)
-            n = max(1, int(math.ceil(seg_len / step_deg)))
-            for t in np.linspace(0.0, 1.0, n + 1):
-                boundary.add(h3.latlng_to_cell(la0 + (la1 - la0) * t,
-                                               lo0 + (lo1 - lo0) * t, res))
-        for c in list(cells | boundary):
-            cells |= set(h3.grid_disk(c, 1))
-        for c in cells:
-            rows.append((int(np.uint64(h3.str_to_int(c)).astype(np.int64)),
-                         key, False))
-    return pd.DataFrame(rows, columns=["cell", "key", "full"])
-
-
-def with_cell_h3(df: DataFrame, res: int, lon: str = "lon",
-                 lat: str = "lat", out: str = "cell") -> DataFrame:
-    """H3 counterpart of :func:`with_cell` (Arrow-batched; the h3 C calls
-    run per row inside the batch — bindings expose no vector API)."""
-
-    @F.pandas_udf(T.LongType())
-    def _udf(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-        import h3
-
-        return pd.Series([
-            int(np.uint64(h3.str_to_int(
-                h3.latlng_to_cell(float(la), float(lo), res)))
-                .astype(np.int64))
-            for lo, la in zip(lon_s, lat_s)])
-
-    return df.withColumn(out, _udf(F.col(lon), F.col(lat)))
-
-
 def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
                      level: int = DEFAULT_LEVEL,
                      strategy: str = "map",
-                     salt_buckets: int = 16,
-                     point_id: str = "doc_id",
-                     cell_backend: str = "morton") -> DataFrame:
+                     point_id: str = "doc_id") -> DataFrame:
     """Assign each point the key of the polygon containing it.
 
-    points: DataFrame with ``point_id``, ``lon``, ``lat``.
-    Returns points columns + ``key`` (nullable — no containing polygon).
+    points: DataFrame with ``point_id``, ``lon``, ``lat``; ids need not be
+    unique or non-null. Returns every input row, with its columns and
+    ``key`` (nullable — no containing polygon).
 
-    Every strategy gives the same keys: a point inside several polygons
-    gets the smallest key, and a point with a null or NaN coordinate (a
-    null cell) or inside no polygon gets ``None``.
+    Both strategies look points up in the one memoised, broadcast locale
+    index (:func:`make_locale_resolver`) and give the same keys: a point
+    inside several polygons gets the smallest key, and a point with a null
+    or NaN coordinate (a null cell) or inside no polygon gets ``None``.
 
-    strategy='map':       ZERO-shuffle narrow map — the locale kernel
+    strategy='map':       zero-shuffle narrow map — the locale kernel
     (:class:`LocaleResolver`: sorted cell array + PIP refinement) runs in
-    one Arrow stage. The optimal shape while the polygon dim fits in worker
-    memory (countries/admin areas always do); the plan stays a pure
-    pipeline with the scan and downstream stages.
-    strategy='broadcast': dim as broadcast hash join; one groupBy shuffle
-    to resolve multi-cell candidates.
-    strategy='salted':    explicit replicate-by-salt hash join — the
-    fallback shape for dims above the broadcast threshold; the dim is
-    replicated ``salt_buckets`` ways so a hot cell spreads over buckets.
-
-    cell_backend='morton' (default) uses the JVM bit-arithmetic quadtree;
-    's2' uses real S2 cell ids (`spatial/s2.py` — Arrow-batched encode +
-    conservative covering); 'h3' uses real H3 cells via the ``h3``
-    bindings where installed (``level`` is then the H3 resolution). Every
-    non-morton candidate PIP-refines, so results are identical across
-    backends (tests/test_s2.py + test_spatial.py pin the equality); note
-    an S2 level is per cube face, so granularity ≈ the morton level + 2.
+    one Arrow stage that pipelines with the scan and downstream stages.
+    strategy='broadcast': the index's covering as a broadcast hash join
+    dim, PIP on boundary candidates, then one groupBy shuffle on a per-row
+    id to keep each row's smallest matching key; ``point_id`` leads the
+    output columns.
     """
+    if strategy not in ("map", "broadcast"):
+        raise ValueError(f"unknown strategy: {strategy!r}")
     spark: SparkSession = points.sparkSession
-    if cell_backend not in ("morton", "s2", "h3"):
-        raise ValueError(f"unknown cell_backend: {cell_backend}")
+    index = make_locale_resolver(polygons, level)
+    shipped = index.broadcast(spark.sparkContext)
+    pts = with_cell(points, level)
     if strategy == "map":
-        if cell_backend != "morton":
-            raise ValueError(
-                "strategy='map' fuses the morton covering into the Arrow "
-                "stage; use strategy='broadcast'/'salted' with "
-                f"cell_backend={cell_backend!r}")
-        shipped = make_locale_resolver(polygons, level).broadcast(
-            spark.sparkContext)
-
         @F.pandas_udf(T.StringType())
         def resolve_udf(cell_s: pd.Series, lon_s: pd.Series,
                         lat_s: pd.Series) -> pd.Series:
             return pd.Series(shipped.value(
                 cell_s.to_numpy(), lon_s.to_numpy(), lat_s.to_numpy())[0])
 
-        return (with_cell(points, level)
-                .withColumn("key", resolve_udf("cell", "lon", "lat"))
-                .drop("cell"))
-    if cell_backend == "s2":
-        dim_pdf = polygon_cells_pdf_s2(polygons, level)
-        pts = with_cell_s2(points, level)
-    elif cell_backend == "h3":
-        dim_pdf = polygon_cells_pdf_h3(polygons, level)
-        pts = with_cell_h3(points, level)
-    else:
-        index = make_locale_resolver(polygons, level)
-        dim_pdf = pd.DataFrame({"cell": index.cells,
-                                "key": index.keys[index.codes],
-                                "full": index.full})
-        pts = with_cell(points, level)
+        return pts.withColumn("key", resolve_udf("cell", "lon", "lat")).drop("cell")
 
-    if strategy == "salted":
-        salted = dim_pdf.loc[dim_pdf.index.repeat(salt_buckets)].reset_index(drop=True)
-        salted["salt"] = np.tile(np.arange(salt_buckets), len(dim_pdf))
-        dim = spark.createDataFrame(salted)
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(point_id), F.lit(salt_buckets)))
-        joined = pts.join(dim, ["cell", "salt"], "left").drop("salt")
-    else:
-        dim = F.broadcast(spark.createDataFrame(dim_pdf))
-        joined = pts.join(dim, "cell", "left")
+    dim = F.broadcast(spark.createDataFrame(pd.DataFrame(
+        {"cell": index.cells, "key": index.keys[index.codes],
+         "full": index.full})))
 
     # PIP refinement only for boundary cells (full=false)
-    ring_keys = np.array(sorted(polygons), dtype=object)
-    rings = [np.asarray(polygons[k], np.float64) for k in ring_keys]
-
     @F.pandas_udf(T.BooleanType())
     def pip_udf(lon_s: pd.Series, lat_s: pd.Series, key_s: pd.Series) -> pd.Series:
+        resolver = shipped.value
         keys = key_s.to_numpy(object)
         has = pd.notna(keys)
         hit = np.zeros(len(keys), dtype=bool)
-        hit[has] = refine(np.searchsorted(ring_keys, keys[has]),
+        hit[has] = refine(np.searchsorted(resolver.keys[:-1], keys[has]),
                           lon_s.to_numpy(np.float64)[has],
-                          lat_s.to_numpy(np.float64)[has], rings)
+                          lat_s.to_numpy(np.float64)[has], resolver.rings)
         return pd.Series(hit)
 
     # Match flag: covering-cell hit refined by PIP only on boundary cells.
@@ -343,15 +218,17 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         & (F.col("full") | pip_udf(F.col("lon"), F.col("lat"), F.col("key"))),
         F.col("key"))
 
-    # Single-shuffle finalize: per point take the min matching key (border
-    # points in two coverings get a deterministic winner) and carry the
-    # original row along — no join-back to the fact table.
+    # Single-shuffle finalize on a per-row id taken before the join (ids in
+    # ``point_id`` may repeat or be null): per row the min matching key
+    # (border points in two coverings get a deterministic winner), the
+    # original columns carried along — no join-back to the fact table.
     other_cols = [c for c in points.columns if c != point_id]
-    return (joined
+    return (pts.withColumn("_row", F.monotonically_increasing_id())
+            .join(dim, "cell", "left")
             .withColumn("_mkey", matched_key)
-            .groupBy(point_id)
+            .groupBy("_row")
             .agg(F.min("_mkey").alias("key"),
-                 *[F.first(c).alias(c) for c in other_cols])
+                 *[F.first(c).alias(c) for c in points.columns])
             .select(point_id, *other_cols, "key"))
 
 

@@ -1,5 +1,7 @@
-"""S2 cell ids (the real scheme), vectorized in numpy — the north rule's
-"H3 cells (with S2 fallback)" backend.
+"""S2 cell ids (the real scheme), vectorized in numpy — a point encoder
+(the ``s2_binning`` query in ``__spark_entry__.py``), not a containment
+backend: polygon containment runs on the morton covering in
+``spatial/joins.py``.
 
 Implements the public S2 cell-id scheme faithfully (s2geometry.io; the
 reference C++ S2CellId::FromFaceIJ and its published ports):
@@ -19,16 +21,15 @@ is what the engine exploits at scale:
   (``range_min``/``range_max``) → cell-prefix range joins and
   ``repartitionByRange`` co-location on the raw int64,
 - ids sort along a Hilbert curve → consecutive ranges are spatially
-  local (better tail locality than the morton default in
-  ``spatial/cells.py``, which remains the engine default because it also
-  ships polygon covering + k-ring; the S2 backend covers point encode /
+  local (better tail locality than the morton grid in
+  ``spatial/cells.py``, which stays the engine's cell system because it
+  also ships polygon covering + k-ring; this module covers point encode /
   hierarchy / range co-location).
 
-Verification: structure + hierarchy + locality properties are pinned in
-tests/test_s2.py; when the real ``s2sphere`` bindings are importable the
-same test cross-checks ids bit-for-bit (skipped in this container, which
-ships no S2 bindings — the implementation follows the published
-algorithm precisely so the check is a drop-in).
+Verification: structure + hierarchy + locality properties and published
+conformance vectors are pinned in tests/test_s2.py; when the real
+``s2sphere`` bindings are importable the same test also cross-checks
+random ids bit-for-bit.
 """
 
 from __future__ import annotations
@@ -188,9 +189,7 @@ def range_max(ids: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Inverse transform + region covering (S2RegionCoverer's recursive descent —
-# needs only id arithmetic and the inverse Hilbert tables, no cross-face
-# neighbor math)
+# Inverse transform (id arithmetic + the inverse Hilbert tables)
 # ---------------------------------------------------------------------------
 
 def to_face_ij(cell_id: int) -> tuple:
@@ -239,11 +238,6 @@ def _face_uv_to_lonlat(face: int, u: float, v: float) -> tuple:
 def cell_lonlat_corners(cell_id: int) -> list:
     """The 4 (lon, lat) corners of a cell (gnomonic edges — for bbox /
     intersection tests use with a margin at coarse levels)."""
-    return _cell_points(cell_id, ((0, 0), (1, 0), (1, 1), (0, 1)))
-
-
-def _cell_points(cell_id: int, offsets) -> list:
-    """(lon, lat) of fractional (di, dj) offsets on the cell's boundary."""
     face, i, j, level = to_face_ij(cell_id)
     size = 1 << (MAX_LEVEL - level)
     # align to the cell's ij block: the min-ID leaf is not the min-ij
@@ -252,100 +246,9 @@ def _cell_points(cell_id: int, offsets) -> list:
     i &= ~(size - 1)
     j &= ~(size - 1)
     lim = float(1 << MAX_LEVEL)
-    out = []
-    for di, dj in offsets:
-        u = _st_to_uv((i + di * size) / lim)
-        v = _st_to_uv((j + dj * size) / lim)
-        out.append(_face_uv_to_lonlat(face, u, v))
-    return out
-
-
-def _cell_boundary_samples(cell_id: int) -> list:
-    """Corners + edge midpoints of a cell in (lon, lat) — the lon extremum
-    of a gnomonic edge can fall mid-edge at high latitudes, so a
-    corner-only bbox under-covers there (ADVICE r02 #4)."""
-    return _cell_points(cell_id, ((0, 0), (1, 0), (1, 1), (0, 1),
-                                  (0.5, 0), (1, 0.5), (0.5, 1), (0, 0.5)))
-
-
-def children(cell_id: int) -> list:
-    """The 4 Hilbert-ordered children (id arithmetic)."""
-    u = cell_id & ((1 << 64) - 1)
-    lsb = u & (~u + 1) & ((1 << 64) - 1)
-    if lsb == 1:
-        raise ValueError("leaf cell has no children")
-    child_lsb = lsb >> 2
-    base = u - lsb
-    return [np.int64(np.uint64(base + (2 * k + 1) * child_lsb))
-            for k in range(4)]
-
-
-def _face_cell(face: int) -> int:
-    return int(np.uint64(face) << np.uint64(61)) | (1 << 60)
-
-
-def cover_polygon(points: np.ndarray, level: int,
-                  max_cells: int = 65536) -> np.ndarray:
-    """Conservative S2 covering of a lon/lat polygon at ``level``:
-    recursive descent from the 6 face cells (S2RegionCoverer's shape),
-    keeping every cell whose lon/lat bounding box intersects the
-    polygon's — bbox-over-corner-points with a per-level margin, so the
-    covering errs toward inclusion (cells are gnomonic quads, not lon/lat
-    rects). Candidate joins refine with exact point-in-polygon downstream,
-    exactly like the morton backend (`spatial/cells.py`)."""
-    pts = np.asarray(points, np.float64)
-    plo = pts.min(axis=0)
-    phi = pts.max(axis=0)
-    out = []
-
-    def rect_of(cid):
-        # corners + edge midpoints: a gnomonic edge's lon extremum can
-        # fall mid-edge at high latitudes (ADVICE r02 #4)
-        cs = np.array(_cell_boundary_samples(cid), np.float64)
-        lons = cs[:, 0]
-        # antimeridian-crossing cells: treat as full-lon span (conservative)
-        wraps = lons.max() - lons.min() > 180.0
-        _f, _i, _j, lvl = to_face_ij(cid)
-        # with corner+midpoint samples the bbox is exact: within a level>=1
-        # cell u and v never change sign, so lon/lat are monotone along
-        # every uv edge (extrema at corners); the only mid-edge extrema are
-        # on level-0 face cells, where the midpoints sit exactly at
-        # u=0 / v=0. Margin is float-slack only — 1/64 cell, lon widened
-        # by 1/cos(lat) toward the poles.
-        lat_margin = 90.0 / (1 << lvl) / 64.0
-        lo = cs.min(axis=0)
-        hi = cs.max(axis=0)
-        max_abs_lat = min(89.0, max(abs(lo[1]), abs(hi[1])) + lat_margin)
-        lon_margin = lat_margin / max(0.02, np.cos(np.deg2rad(max_abs_lat)))
-        lo -= (lon_margin, lat_margin)
-        hi += (lon_margin, lat_margin)
-        if wraps or lon_margin >= 180.0:
-            lo[0], hi[0] = -180.0, 180.0
-        # faces 2/5 contain the poles: corner lats don't reach them
-        if _f == 2:
-            hi[1] = 90.0
-        if _f == 5:
-            lo[1] = -90.0
-        return lo, hi
-
-    def intersects(lo, hi):
-        return not (hi[0] < plo[0] or lo[0] > phi[0]
-                    or hi[1] < plo[1] or lo[1] > phi[1])
-
-    stack = [_face_cell(f) for f in range(6)]
-    while stack:
-        cid = stack.pop()
-        lo, hi = rect_of(cid)
-        if not intersects(lo, hi):
-            continue
-        _f, _i, _j, lvl = to_face_ij(cid)
-        if lvl >= level:
-            out.append(np.int64(np.uint64(cid & ((1 << 64) - 1))))
-            if len(out) > max_cells:
-                raise ValueError(f"covering exceeds max_cells={max_cells}")
-            continue
-        stack.extend(int(c) for c in children(cid))
-    return np.array(sorted(np.array(out, np.int64).view(np.uint64))).view(np.int64)
+    return [_face_uv_to_lonlat(face, _st_to_uv((i + di * size) / lim),
+                               _st_to_uv((j + dj * size) / lim))
+            for di, dj in ((0, 0), (1, 0), (1, 1), (0, 1))]
 
 
 def s2_encode_udf(level: int):

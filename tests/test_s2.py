@@ -1,4 +1,4 @@
-"""S2 cell-id backend (spatial/s2.py): canonical bit layout, hierarchy,
+"""S2 cell ids (spatial/s2.py): canonical bit layout, hierarchy,
 range co-location, Arrow-kernel parity, and (when bindings exist) a
 bit-for-bit cross-check against the real s2 library.
 """
@@ -22,14 +22,15 @@ def test_canonical_vectors():
     (face 0 center), and each axis direction hits its canonical face."""
     ids = s2.encode(np.array([0.0]), np.array([0.0]), 30)
     assert hex(int(ids.view(np.uint64)[0])) == "0x1000000000000001"
-    for (lon, lat), face in (((0, 0), 0), ((90, 0), 1), ((0, 90), 2),
-                             ((180, 0), 3), ((-90, 0), 4), ((0, -90), 5)):
+    axes = ((0, 0), (90, 0), (0, 90), (180, 0), (-90, 0), (0, -90))
+    for face, ((lon, lat), tok) in enumerate(zip(axes, "13579b")):
         i = s2.encode(np.array([float(lon)]), np.array([float(lat)]), 30)
         assert int(i.view(np.uint64)[0] >> np.uint64(61)) == face, (lon, lat)
-    # the six face cells carry the published tokens 1,3,5,7,9,b
-    # (id = face<<61 | 1<<60; tokens strip trailing zero nibbles)
-    for f, tok in enumerate("13579b"):
-        assert f"{s2._face_cell(f):016x}".rstrip("0") == tok
+        # the six face cells (level 0) carry the published tokens
+        # 1,3,5,7,9,b (id = face<<61 | 1<<60; tokens strip trailing zero
+        # nibbles)
+        f = s2.encode(np.array([float(lon)]), np.array([float(lat)]), 0)
+        assert f"{int(f.view(np.uint64)[0]):016x}".rstrip("0") == tok
 
 
 def test_id_structure_and_hierarchy(rand_points):
@@ -139,87 +140,6 @@ def test_inverse_and_corners(rand_points):
         assert lats.min() - 1e-6 <= lat[k] <= lats.max() + 1e-6
 
 
-def test_children_partition_parent():
-    cid = int(s2.encode(np.array([2.3]), np.array([48.8]), 9)[0])
-    chs = s2.children(cid)
-    assert len(set(int(c) for c in chs)) == 4
-    for ch in chs:
-        assert int(s2.parent(np.array([ch]), 9)[0]) == cid
-    rm = s2.range_min(np.array(chs, np.int64)).view(np.uint64)
-    rx = s2.range_max(np.array(chs, np.int64)).view(np.uint64)
-    assert int(min(rm)) == int(s2.range_min(np.array([cid], np.int64))
-                               .view(np.uint64)[0])
-    assert int(max(rx)) == int(s2.range_max(np.array([cid], np.int64))
-                               .view(np.uint64)[0])
-
-
-def test_cover_polygon_conservative():
-    """Every interior point's cell is in the covering — including polar
-    and antimeridian-adjacent polygons."""
-    rng = np.random.default_rng(5)
-    poly = np.array([[-10, 40], [15, 42], [20, 55], [-5, 58], [-12, 50]],
-                    np.float64)
-
-    def pip(x, y):
-        inside = False
-        n = len(poly)
-        for a in range(n):
-            x0, y0 = poly[a]
-            x1, y1 = poly[(a + 1) % n]
-            if (y0 > y) != (y1 > y) and x < (x1 - x0) * (y - y0) / (y1 - y0) + x0:
-                inside = not inside
-        return inside
-
-    cover = set(int(c) for c in s2.cover_polygon(poly, 8))
-    pl, ph = poly.min(axis=0), poly.max(axis=0)
-    xs = rng.uniform(pl[0], ph[0], 2000)
-    ys = rng.uniform(pl[1], ph[1], 2000)
-    ids = s2.encode(xs, ys, 8)
-    for k in range(2000):
-        if pip(xs[k], ys[k]):
-            assert int(ids[k]) in cover
-    polar = s2.cover_polygon(
-        np.array([[-180, 85], [180, 85], [180, 89.5], [-180, 89.5]],
-                 np.float64), 6)
-    assert int(s2.encode(np.array([30.0]), np.array([87.0]), 6)[0]) \
-        in set(int(c) for c in polar)
-
-
-@pytest.mark.parametrize("lat0", [62.0, 71.0, 78.0, -66.0, -74.0])
-def test_cover_polygon_high_latitude_fuzz(lat0):
-    """Every interior point's cell appears in cover_polygon output at high
-    latitudes, where a gnomonic edge's lon extremum falls mid-edge and lon
-    spread scales as 1/cos(lat) (ADVICE r02 #4: corner-only bboxes with a
-    fixed margin can under-cover there — candidate cells silently lost)."""
-    rng = np.random.default_rng(int(abs(lat0)))
-    # wide, thin band polygons are the worst case for lon under-coverage
-    lon0 = rng.uniform(-150, 100)
-    poly = np.array([[lon0, lat0], [lon0 + 50, lat0 + 0.5],
-                     [lon0 + 52, lat0 + 6], [lon0 - 2, lat0 + 5.5]],
-                    np.float64)
-    for level in (6, 8, 10):
-        # the 52°-wide band legitimately intersects >65536 level-10 cells
-        cover = set(int(c) for c in s2.cover_polygon(poly, level,
-                                                     max_cells=1 << 20))
-        pl, ph = poly.min(axis=0), poly.max(axis=0)
-        xs = rng.uniform(pl[0], ph[0], 1500)
-        ys = rng.uniform(pl[1], ph[1], 1500)
-        keep = np.zeros(1500, bool)
-        for k in range(1500):  # interior points only (ray cast)
-            inside = False
-            n = len(poly)
-            for a in range(n):
-                x0, y0 = poly[a]
-                x1, y1 = poly[(a + 1) % n]
-                if (y0 > ys[k]) != (y1 > ys[k]) and \
-                        xs[k] < (x1 - x0) * (ys[k] - y0) / (y1 - y0) + x0:
-                    inside = not inside
-            keep[k] = inside
-        ids = s2.encode(xs[keep], ys[keep], level)
-        missing = [int(i) for i in ids if int(i) not in cover]
-        assert not missing, (level, len(missing))
-
-
 def test_arrow_kernel_through_spark(spark):
     """s2_encode_udf over Arrow batches == the numpy kernel directly."""
     import pandas as pd
@@ -261,33 +181,6 @@ def test_encode_total_on_edge_coordinates():
         assert lvl == level and 0 <= i < (1 << 30) and 0 <= j < (1 << 30)
 
     check()
-
-
-def test_containment_join_s2_backend_matches_morton(spark):
-    """The core containment join with cell_backend='s2' assigns exactly
-    the same polygon keys as the default morton backend."""
-    import pandas as pd
-    from osm2lanes_spark.fixtures.geography import all_country_polygons
-    from osm2lanes_spark.spatial.joins import containment_join
-
-    polys = all_country_polygons()
-    rng = np.random.default_rng(9)
-    pdf = pd.DataFrame({
-        "doc_id": [str(i) for i in range(600)],
-        "lon": rng.uniform(-180, 180, 600),
-        "lat": rng.uniform(-85, 85, 600),
-    })
-    pts = spark.createDataFrame(pdf)
-    morton = {r["doc_id"]: r["key"]
-              for r in containment_join(pts, polys, level=10,
-                                        strategy="broadcast").collect()}
-    s2b = {r["doc_id"]: r["key"]
-           for r in containment_join(pts, polys, level=8,
-                                     strategy="broadcast",
-                                     cell_backend="s2").collect()}
-    assert morton == s2b
-    with pytest.raises(ValueError):
-        containment_join(pts, polys, strategy="map", cell_backend="s2")
 
 
 def test_range_join_colocation(spark):

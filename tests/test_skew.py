@@ -1,4 +1,4 @@
-"""Skew handling: salted containment join under a hot cell + skew_report."""
+"""Skew handling: containment join under a hot cell + skew_report."""
 
 from __future__ import annotations
 
@@ -11,10 +11,10 @@ from osm2lanes_spark.plans import lineage as L
 from osm2lanes_spark.spatial.joins import containment_join
 
 
-def test_salted_join_under_hot_cell(spark):
-    """90% of points pile into one city-sized spot (hot cell); the salted
-    strategy must still resolve all of them correctly, spreading the hot
-    cell across salt buckets instead of one reducer."""
+def test_map_join_under_hot_cell(spark):
+    """90% of points pile into one city-sized spot (hot cell); the default
+    ``map`` strategy must still resolve all of them correctly, and with no
+    shuffle at all, so no reducer can be pinned by the hot cell."""
     cx, cy = G.country_centroid("NL")
     rows = []
     for i in range(2000):
@@ -24,10 +24,10 @@ def test_salted_join_under_hot_cell(spark):
             x, y = cx + 0.001 + (i % 7) * 1e-5, cy - 0.002 + (i % 5) * 1e-5
         rows.append((f"d{i}", float(x), float(y)))
     pts = spark.createDataFrame(rows, "doc_id string, lon double, lat double")
-    out = containment_join(pts, {"NL": G.country_polygon("NL")},
-                           level=12, strategy="salted", salt_buckets=8)
-    assert out.where(F.col("key") != "NL").count() == 0
-    assert out.where(F.col("key").isNull()).count() == 0
+    out = containment_join(pts, {"NL": G.country_polygon("NL")}, level=12)
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    keys = out.groupBy("key").count().collect()
+    assert [(r["key"], r["count"]) for r in keys] == [("NL", 2000)]
 
 
 def test_skew_report_flags_hot_partition(spark, tmp_path):

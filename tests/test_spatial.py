@@ -82,7 +82,7 @@ def points_df(spark):
     return spark.createDataFrame(rows, "doc_id string, truth string, lon double, lat double")
 
 
-@pytest.mark.parametrize("strategy", ["map", "broadcast", "salted"])
+@pytest.mark.parametrize("strategy", ["map", "broadcast"])
 def test_containment_join(spark, points_df, strategy):
     polys = G.all_country_polygons(["NL", "GB", "US", "DE", "JP", "AU", "CA", "CH", "IT", "FR"])
     out = containment_join(points_df, polys, level=10, strategy=strategy)
@@ -96,6 +96,15 @@ def test_containment_join_outside(spark):
     df = spark.createDataFrame([("x", 179.0, -89.0)], "doc_id string, lon double, lat double")
     out = containment_join(df, G.all_country_polygons(["NL"]), level=8)
     assert out.collect()[0]["key"] is None
+
+
+def test_containment_join_unknown_strategy(spark, points_df):
+    """A strategy other than map/broadcast (a typo, say) is an error, not
+    a silent fallback to another shape."""
+    polys = G.all_country_polygons(["NL"])
+    for strategy in ("salted", "Map", "brodcast"):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            containment_join(points_df, polys, level=8, strategy=strategy)
 
 
 def test_broadcast_plan(spark, points_df):
@@ -368,38 +377,6 @@ def test_knn_single_vertex_jvm_index_matches_udf_covering(spark):
                 best, bid = d, w["way_id"]
         truth.add((q["query_id"], bid))
     assert got == truth
-
-
-def test_containment_join_h3_backend_matches_morton(spark):
-    """cell_backend='h3' (real H3 bindings, import-gated) assigns exactly
-    the same polygon keys as the morton backend. Skips cleanly where the
-    h3 package is absent (this container)."""
-    import pytest
-
-    pytest.importorskip("h3")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from osm2lanes_spark.fixtures.geography import all_country_polygons
-    from osm2lanes_spark.spatial.joins import containment_join
-
-    polys = all_country_polygons()
-    rng = np.random.default_rng(31)
-    pdf = pd.DataFrame({
-        "doc_id": [str(i) for i in range(400)],
-        "lon": rng.uniform(-180, 180, 400),
-        "lat": rng.uniform(-85, 85, 400),
-    })
-    pts = spark.createDataFrame(pdf)
-    morton = {r["doc_id"]: r["key"]
-              for r in containment_join(pts, polys, level=10,
-                                        strategy="broadcast").collect()}
-    h3b = {r["doc_id"]: r["key"]
-           for r in containment_join(pts, polys, level=4,
-                                     strategy="broadcast",
-                                     cell_backend="h3").collect()}
-    assert morton == h3b
 
 
 # --- geohash / distance join / DBSCAN (round-6 wave 7) ----------------------
