@@ -61,6 +61,10 @@ COUNTRIES: dict[str, tuple[str, str, str]] = {
 
 _ALPHA3_TO_ALPHA2 = {a3: a2 for a2, (a3, _, _) in COUNTRIES.items()}
 
+# the countries a kernel compares ``locale.country`` with by name; any other
+# country reaches the kernels only through its region and driving side
+RULE_COUNTRIES = frozenset({"GB", "NL"})
+
 RIGHT = "right"
 LEFT = "left"
 
@@ -91,6 +95,14 @@ class Locale:
                 alpha2, _, subdivision = iso_3166.partition("-")
                 country = alpha2 if alpha2 in COUNTRIES else None
         return cls(country=country, subdivision=subdivision, driving_side=driving_side or RIGHT)
+
+    def rule_key(self) -> tuple:
+        """The locale facts the lane kernels read: the country if it is
+        one of :data:`RULE_COUNTRIES`, whether it is in the Americas, and
+        the driving side. Locales with equal keys give equal kernel output,
+        so a key is the locale's rule class."""
+        return (self.country if self.country in RULE_COUNTRIES else None,
+                self.region() == "Americas", self.driving_side)
 
     # -- country-dependent constants -----------------------------------
     def travel_width(self, designated: str) -> float:

@@ -10,12 +10,17 @@ writes.
 
 The forward stage never runs Python per row: the JVM reduces each row's
 tag map to one exact key string, and per batch Python dictionary-encodes
-(key, locale, config), runs the kernel once per distinct combination and
-emits the distinct output rows with ``take`` back in batch order.
+(key, locale, config) and emits the distinct output rows with ``take``
+back in batch order. The memo has two levels: the batch's distinct exact
+rows, and a per-task memo of kernel rows keyed only by what the kernel
+reads — the tags without the passthrough ``name``/``ref``, the locale's
+rule class (:meth:`Locale.rule_key`) and the config — so the kernel runs
+once per distinct lane-relevant key.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Iterator, Optional
 
@@ -54,15 +59,21 @@ _TAGS_KEY = ("CASE WHEN tags_error IS NULL"
              f" ELSE concat('{_ERROR_PREFIX}', tags_error) END")
 
 
-def _transform_row(key: str, iso: Optional[str], driving_side: Optional[str],
+# the kernel copies these tags to its output and reads them for nothing else
+_PASSTHROUGH = ("name", "ref")
+
+
+@functools.lru_cache(maxsize=4096)
+def _rule_key(iso: Optional[str], driving_side: Optional[str]) -> tuple:
+    return Locale.build(iso, driving_side).rule_key()
+
+
+def _transform_row(tags: dict, iso: Optional[str], driving_side: Optional[str],
                    include_separators: bool) -> dict:
     """One ROAD_SCHEMA row (without ``doc_id``); absent fields are null."""
-    if key.startswith(_ERROR_PREFIX):
-        return {"error": key[len(_ERROR_PREFIX):]}
     locale = Locale.build(iso, driving_side)
     try:
-        res = tags_to_lanes(json.loads(key), locale,
-                            include_separators=include_separators)
+        res = tags_to_lanes(tags, locale, include_separators=include_separators)
     except RoadError as e:
         return {"error": e.kind}
     except Exception as e:  # defensive: never kill the batch
@@ -72,6 +83,26 @@ def _transform_row(key: str, iso: Optional[str], driving_side: Optional[str],
     out["lanes"] = road["lanes"]
     out["warnings"] = [f"{w['kind']}:{w['detail']}" for w in res["warnings"]]
     return out
+
+
+def _memo_row(memo: dict, key: str, iso: Optional[str],
+              driving_side: Optional[str], include_separators: bool) -> dict:
+    """The row of one exact (key, iso, side, include_separators): the
+    kernel row of its lane-relevant key, from ``memo`` or computed into it,
+    with this row's own ``name`` and ``ref``."""
+    if key.startswith(_ERROR_PREFIX):
+        return {"error": key[len(_ERROR_PREFIX):]}
+    tags = json.loads(key)
+    own = {f: tags.pop(f, None) for f in _PASSTHROUGH}
+    lane_key = (tuple(tags.items()), _rule_key(iso, driving_side),
+                include_separators)
+    row = memo.get(lane_key)
+    if row is None:
+        if len(memo) >= _MEMO_SIZE:
+            memo.pop(next(iter(memo)))
+        row = memo[lane_key] = _transform_row(tags, iso, driving_side,
+                                              include_separators)
+    return row if "error" in row else {**row, **own}
 
 
 def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
@@ -85,9 +116,14 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
 
     Only ``doc_id``, the tag key (``_TAGS_KEY``: the sorted tag map as
     JSON, or ``"!" + tags_error``), the locale inputs and the optional
-    ``include_separators`` cross to Python. Per batch the stage runs the
-    kernel once per distinct exact ``(key, iso, side, include_separators)``,
-    memoised per task in a FIFO dict bounded at 65 536 entries.
+    ``include_separators`` cross to Python. The memo has two levels. Per
+    batch, ``np.unique`` finds the distinct exact
+    ``(key, iso, side, include_separators)`` rows. Each of them is looked up
+    in a per-task FIFO dict bounded at 65 536 entries, keyed by (the tags
+    without ``name``/``ref``, the locale's ``rule_key()``,
+    ``include_separators``); the kernel runs only on a miss, with the first
+    locale of that rule class. A hit takes the row's own ``name`` and
+    ``ref``; an error row keeps them null.
 
     ``locale_resolver``: optional fused spatial-locale resolution — a
     ``spatial.joins.LocaleResolver`` (from the memoised
@@ -105,10 +141,11 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
     columns = df.columns
     cols = ["doc_id", f"{_TAGS_KEY} AS key"]
     if locale_resolver is not None:
-        from ..spatial.joins import cell_sql
+        from ..spatial.joins import NO_CELL, cell_sql
         shipped = locale_resolver.broadcast(df.sparkSession.sparkContext)
-        cols += [f"{cell_sql('lon', 'lat', locale_resolver.level)} AS cell",
-                 "lon", "lat"]
+        # null as NO_CELL: the column must reach numpy as int64
+        cell = cell_sql("lon", "lat", locale_resolver.level)
+        cols += [f"coalesce({cell}, {NO_CELL}L) AS cell", "lon", "lat"]
         locale_cols = ()
     else:
         shipped = None
@@ -140,15 +177,8 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
             _, first, inverse = np.unique(codes, axis=0, return_index=True,
                                           return_inverse=True)
             values = [e.dictionary.to_pylist() for e in encoded]
-            rows = []
-            for i in first:
-                key = tuple(v[c] for v, c in zip(values, codes[i]))
-                row = memo.get(key)
-                if row is None:
-                    if len(memo) >= _MEMO_SIZE:
-                        memo.pop(next(iter(memo)))
-                    row = memo[key] = _transform_row(*key)
-                rows.append(row)
+            rows = [_memo_row(memo, *(v[c] for v, c in zip(values, codes[i])))
+                    for i in first]
             out = pa.RecordBatch.from_pylist(rows, schema=_ROAD_VALUES)
             out = out.take(pa.array(inverse.reshape(-1)))
             yield pa.RecordBatch.from_arrays(

@@ -35,6 +35,10 @@ from . import cells as C
 from . import polygons as P
 
 DEFAULT_LEVEL = 12
+# a null cell as an int64 that no cell id (all >= 0) can take. Filling
+# nulls with it keeps a cell column int64 across Arrow: with a null it
+# would turn float64, and from level 24 up an id can need more than 53 bits
+NO_CELL = -1
 
 
 # ---------------------------------------------------------------------------
@@ -194,7 +198,8 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
             return pd.Series(shipped.value(
                 cell_s.to_numpy(), lon_s.to_numpy(), lat_s.to_numpy())[0])
 
-        return pts.withColumn("key", resolve_udf("cell", "lon", "lat")).drop("cell")
+        cell = F.expr(f"coalesce(cell, {NO_CELL}L)")
+        return pts.withColumn("key", resolve_udf(cell, "lon", "lat")).drop("cell")
 
     dim = F.broadcast(spark.createDataFrame(pd.DataFrame(
         {"cell": index.cells, "key": index.keys[index.codes],
@@ -266,8 +271,9 @@ class LocaleResolver:
     ``np.searchsorted`` calls give each point its run of candidate rows; a
     ``full`` candidate matches at once, the rest go through :func:`refine`.
     A point inside several polygons gets the smallest key (= smallest
-    code). A null or NaN cell has no candidates; it, and a point inside no
-    polygon, resolves to ``(None, None)``.
+    code). A null, NaN or :data:`NO_CELL` cell has no candidates; it, and a
+    point inside no polygon, resolves to ``(None, None)``. Pass cells as
+    int64, nulls as :data:`NO_CELL`: a float64 id can have lost bits.
 
     Build one with :func:`make_locale_resolver` (memoised) and ship it with
     :meth:`broadcast`.

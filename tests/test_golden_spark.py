@@ -169,11 +169,14 @@ def _forward_in_process(texts, iso, side, include_separators) -> dict:
 
 
 def test_tags_key_exact(spark):
-    """The stage runs the kernel once per distinct key on each batch, so a
-    key that merged two different inputs would hand one row's output to
-    the other. On one partition (one memo, one batch) every row must equal
-    the in-process kernel, and equal inputs must give equal rows."""
+    """The stage runs the kernel once per distinct lane-relevant key (the
+    tags without name/ref, the locale's rule class, the config), so a key
+    that merged two different inputs would hand one row's output to the
+    other. On one partition (one memo, one batch) every row must equal the
+    in-process kernel, equal inputs must give equal rows, and error rows
+    keep a null name and ref."""
     base = ["highway=primary", "lanes=3", "oneway=yes", "cycleway=lane"]
+    two_way = ["highway=secondary", "lanes=2"]
     odd = ['name=say "hi"', "ref=a\\b", "destination=x=y",
            "name:fr=ligne 1\nligne 2", "name:ja=道路", "note="]
     docs = [
@@ -195,6 +198,23 @@ def test_tags_key_exact(spark):
         ("null_text", base + [None], "DE", "right", True),
         ("not_road", ["building=yes"], "DE", "right", True),
         ("null_spans", None, "DE", "right", True),
+        # rows that differ only in name/ref share one kernel row
+        ("named", base + ["name=Hauptstraße", "ref=B 1"], "DE", "right", True),
+        ("named_other", base + ["name=Ringstraße"], "DE", "right", True),
+        ("ref_only", base + ["ref=B 2"], "DE", "right", True),
+        # FR shares DE's rule class; NL (lane width) and US (centre line
+        # colour) have classes of their own
+        ("de", two_way, "DE", "right", True),
+        ("fr", two_way, "FR", "right", True),
+        ("nl", two_way, "NL", "right", True),
+        ("us", two_way, "US", "right", True),
+        ("deu", two_way, "DEU", "right", True),
+        ("us_ca", two_way, "US-CA", "right", True),
+        # error rows with a name keep name/ref null
+        ("not_road_named", ["building=yes", "name=Rathaus", "ref=R1"],
+         "DE", "right", True),
+        ("duplicate_named", ["highway=primary", "highway=trunk", "name=X"],
+         "DE", "right", True),
     ]
     rows = [(d, None if texts is None else _tag_spans(texts), iso, side, inc)
             for d, texts, iso, side, inc in docs]
@@ -212,12 +232,23 @@ def test_tags_key_exact(spark):
             assert got[field] == value, (doc_id, field)
         if want["error"] is not None:
             assert got["lanes"] == [] and got["warnings"] is None, doc_id
+            assert got["name"] is None and got["ref"] is None, doc_id
 
     def same(a, b):
         return {**out[a], "doc_id": None} == {**out[b], "doc_id": None}
 
+    def same_lanes(a, b):
+        unnamed = {"doc_id": None, "name": None, "ref": None}
+        return {**out[a], **unnamed} == {**out[b], **unnamed}
+
     assert same("base", "base_reordered") and same("odd", "odd_reordered")
+    for a, b in [("de", "fr"), ("de", "deu"), ("us", "us_ca")]:
+        assert same(a, b), (a, b)
+    for a in ("named", "named_other", "ref_only"):
+        assert same_lanes("base", a) and not same("base", a), a
     for a, b in [("base", "one_value"), ("base", "no_separators"),
-                 ("base", "gb"), ("joined", "split")]:
+                 ("base", "gb"), ("joined", "split"), ("de", "nl"),
+                 ("de", "us"), ("nl", "us")]:
         assert not same(a, b), (a, b)
+    assert (out["named"]["name"], out["named"]["ref"]) == ("Hauptstraße", "B 1")
     assert out["odd"]["name"] == 'say "hi"' and out["odd"]["ref"] == "a\\b"

@@ -168,6 +168,48 @@ def test_cell_expr_null_nan(spark, null_docs):
         assert (got[d] is None) == bad, d
 
 
+# Above level 24 a cell id near the world's north-east corner needs more
+# than 53 bits: a cell column that turns float64 (a null in the batch)
+# loses them, and every row of that batch resolves to no polygon.
+FINE_LEVEL = 26
+TINY = {
+    "GB": np.array([[179.0, 89.0], [179.0002, 89.0], [179.0002, 89.0002],
+                    [179.0, 89.0002]]),
+    "NL": np.array([[179.0003, 89.0], [179.0005, 89.0], [179.0005, 89.0002],
+                    [179.0003, 89.0002]]),
+}
+
+
+def test_containment_join_fine_level_null_row(spark):
+    rng = np.random.default_rng(26)
+    lon = rng.uniform(178.9999, 179.0006, 200)
+    lat = rng.uniform(88.9999, 89.0003, 200)
+    rows = [(f"p{i}", float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    # one partition, so the null row shares its batch with every point
+    df = spark.createDataFrame(rows + [("null", None, None)],
+                               "doc_id string, lon double, lat double").coalesce(1)
+    got = {r["doc_id"]: r["key"] for r in
+           containment_join(df, TINY, level=FINE_LEVEL, strategy="map").collect()}
+    want, _ = _brute(lon, lat, TINY)
+    assert {"GB", "NL"} <= set(want)
+    assert got == {**{d: k for (d, _, _), k in zip(rows, want)}, "null": None}
+
+
+def test_fused_pipeline_fine_level_null_row(spark):
+    spans = tags_to_spans("x", {"highway": "primary", "lanes": "2"})
+    docs = spark.createDataFrame(
+        [("gb1", spans, 179.0001, 89.0001), ("gb2", spans, 179.00005, 89.00015),
+         ("null", spans, None, None)],
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
+        "lon double, lat double").coalesce(1)
+    out = {r["doc_id"]: r for r in
+           lanes_pipeline(docs, TINY, level=FINE_LEVEL).collect()}
+    for doc, width in (("gb1", 3.0), ("gb2", 3.0), ("null", 3.5)):
+        widths = {l["width"] for l in out[doc]["lanes"] if l["width"] is not None}
+        assert widths == {width}, doc
+
+
 # --- index memo and broadcast ----------------------------------------------
 
 def _copy(polygons):
