@@ -35,7 +35,6 @@ SEPARATOR = "separator"
 # Marking styles (road/separator.rs:77-94)
 SOLID = "solid_line"
 BROKEN = "broken_line"
-DASHED = "dashed_line"
 DOTTED = "dotted_line"
 NO_FILL = "no_fill"
 KERB_UP = "kerb_up"
@@ -43,13 +42,11 @@ KERB_DOWN = "kerb_down"
 
 # Colors
 WHITE = "white"
-YELLOW = "yellow"
 RED = "red"
 GREEN = "green"
 
 MARKING_DEFAULT_WIDTH = 0.2  # road/separator.rs:64
 MARKING_DEFAULT_SPACE = 0.1  # road/separator.rs:65
-LANE_DEFAULT_WIDTH = 3.5  # road/lane.rs:46
 
 _STYLE_OPPOSITE = {KERB_UP: KERB_DOWN, KERB_DOWN: KERB_UP}
 

@@ -33,10 +33,6 @@ SMOOTHNESS_VALUES = frozenset(
     ["impassable", "very_horrible", "horrible", "very_bad", "bad",
      "intermediate", "good", "excellent"]
 )
-ACCESS_VALUES = frozenset(
-    ["yes", "no", "private", "permissive", "permit", "destination",
-     "delivery", "customers", "designated"]
-)
 # Lane-dependent access values (access_by_lane.rs:15-21): '' | no | yes | designated
 LANE_ACCESS_VALUES = frozenset(["", "no", "yes", "designated"])
 

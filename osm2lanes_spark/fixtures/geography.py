@@ -57,15 +57,3 @@ def doc_point(doc_id: str, alpha2: str) -> tuple[float, float]:
     r = 0.45 * RADIUS * _hash01(doc_id)
     theta = 2.0 * np.pi * _hash01(doc_id + ":t")
     return cx + r * np.cos(theta), cy + r * np.sin(theta)
-
-
-def doc_linestring(doc_id: str, alpha2: str, n: int = 4) -> list[dict]:
-    """Deterministic short polyline (way geometry) inside the polygon."""
-    x, y = doc_point(doc_id, alpha2)
-    pts = []
-    for i in range(n):
-        dx = 0.02 * (_hash01(f"{doc_id}:{i}:x") - 0.5)
-        dy = 0.02 * (_hash01(f"{doc_id}:{i}:y") - 0.5)
-        x, y = x + dx, y + dy
-        pts.append({"lon": float(x), "lat": float(y)})
-    return pts

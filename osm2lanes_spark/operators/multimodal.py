@@ -1,7 +1,7 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Media (image/audio/video) rides as ``binary`` columns with a metadata
-struct; decode / feature-extract / resize / frame-sample are Arrow-batched
+struct; decode / feature-extract / resize are Arrow-batched
 ``mapInPandas`` stages. The *decode* step is import-gated:
 ``decode_media`` runs real PIL (image) / soundfile (audio) decoding where
 those libraries exist and raises ``NotImplementedError`` where they don't
@@ -154,16 +154,3 @@ def feature_extract_stage(media: DataFrame, dim: int = 8,
 
     return media.select("media_ref", "kind", "payload") \
         .mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_stage(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame sampling plumbing: one output row per sampled frame index.
-
-    Pure Spark (posexplode over the frame-count sequence); the actual frame
-    decode would plug into ``feature_extract_stage`` per sampled frame.
-    """
-    frames = F.sequence(F.lit(0), F.col("meta.n_frames") - 1)
-    sampled = F.filter(frames, lambda i: i % every_n == F.lit(0))
-    return (media
-            .withColumn("frame_idx", F.explode(sampled))
-            .select("media_ref", "kind", "frame_idx", "meta"))

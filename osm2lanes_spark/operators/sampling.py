@@ -261,56 +261,31 @@ def _bucket_counts(df: DataFrame, text_col: str, ns: tuple[int, ...],
             .groupBy("__bkt").agg(F.count(F.lit(1)).alias(cnt)))
 
 
-def with_dsir_logratio(df: DataFrame, target: DataFrame,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       ns: tuple[int, ...] = (1, 2),
-                       n_buckets: int = 1 << 16, seed: int = 0,
-                       alpha: float = 1.0,
-                       out: str = "dsir_logw") -> DataFrame:
-    """Score every document of ``df`` with its DSIR log importance
-    weight against a ``target`` corpus — Data Selection via Importance
-    Resampling (Xie et al. 2023, NeurIPS; the standard "make web data
-    look like the target domain" curation step; no reference
-    counterpart — engine-side operator):
+def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
+                    id_col: str, ns: tuple[int, ...], n_buckets: int,
+                    seed: int, alpha: float) -> DataFrame:
+    """One (``__ds_id``, ``__ds_logw``) row per ``df`` row: its DSIR log
+    importance weight against the ``target`` corpus (Data Selection via
+    Importance Resampling, Xie et al. 2023, NeurIPS)::
 
         logw(doc) = sum over hashed-gram instances g of
                     ln p_target(bucket(g)) - ln q_raw(bucket(g))
 
-    where both distributions are add-``alpha``-smoothed bucket
-    frequencies over ``n_buckets`` hashing-trick features (lowercased
-    word n-grams for each n in ``ns``): ``p(b) = (count_b + alpha) /
-    (total + alpha * n_buckets)``. The raw distribution q is fit on
-    ``df`` itself; buckets unseen in either corpus fall out of the same
-    formula at ``count = 0``. Returns df.* + ``out`` (NULL for NULL
-    text, 0.0 for token-less text).
+    Both distributions are add-``alpha``-smoothed bucket frequencies over
+    ``n_buckets`` hashing-trick features (lowercased word n-grams for each
+    n in ``ns``): ``p(b) = (count_b + alpha) / (total + alpha *
+    n_buckets)``. The raw distribution q is fit on ``df`` itself; buckets
+    unseen in either corpus fall out of the same formula at ``count = 0``.
+    ``__ds_logw`` is NULL for NULL text and 0.0 for token-less text.
 
-    Scale shape at 100 TB: the two fits are ONE map-side-combined
-    bucket-count shuffle each, output bounded by ``n_buckets`` rows (a
-    2^16..2^21-bucket table is KBs-to-MBs — the whole point of hashed
-    features); the log-ratio table (a full outer join of the two counts
-    plus a 1-row totals broadcast) is broadcast to the scoring join, so
-    the only per-row work is the gram explode, a broadcast hash join,
-    and one map-side-combined per-doc sum joined back by id. No
-    all-pairs shape, no per-key window, no driver collect.
-    """
-    if out in df.columns:
-        raise ValueError(f"output column {out!r} already exists in the "
-                         "input — pass a different out=")
-    slim = _dsir_logw_slim(df, target, text_col, id_col, ns, n_buckets,
-                           seed, alpha)
-    return (df.join(slim, df[id_col] == F.col("__ds_id"), "left")
-            .withColumnRenamed("__ds_logw", out)
-            .drop("__ds_id"))
-
-
-def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
-                    id_col: str, ns: tuple[int, ...], n_buckets: int,
-                    seed: int, alpha: float) -> DataFrame:
-    """One (``__ds_id``, ``__ds_logw``) row per ``df`` row — the DSIR
-    score pipeline without the wide join back, so callers needing the
-    score twice (resampling: threshold + flag) checkpoint this slim
-    relation instead of recomputing the fits. ``id_col`` must be
-    unique and non-null."""
+    Scale shape: the two fits are ONE map-side-combined bucket-count
+    shuffle each, bounded by ``n_buckets`` rows; the log-ratio table (a
+    full outer join of the two counts plus a 1-row totals broadcast) is
+    broadcast to the scoring join, so the per-row work is the gram
+    explode, a broadcast hash join and one map-side-combined per-doc sum.
+    The relation is slim (no wide join back), so :func:`dsir_resample`
+    checkpoints it once for both its threshold and its flag. ``id_col``
+    must be unique and non-null."""
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
     if n_buckets < 1:

@@ -34,25 +34,15 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def _unit(a: Column) -> Column:
-    """Unit vector; all-zero input maps to the zero vector (cosine 0 to
-    everything) instead of null/NaN silently dropping the row.
-
-    O(d^2) per vector: the norm aggregate sits inside the transform lambda
-    and interpreted HOF eval recomputes it per element. Fine for one-off
-    column expressions; hot paths use :func:`with_unit`, which hoists the
-    norm into its own column (round-2 profiling)."""
-    n = _norm(a)
-    return F.transform(a, lambda x: F.when(n > 0, x / n).otherwise(F.lit(0.0)))
-
-
 def with_unit(df: DataFrame, vec_col: str, out: str) -> DataFrame:
     """``df`` plus a unit-normalized copy of ``vec_col`` named ``out``.
 
-    The norm is computed ONCE into a temp column, so normalization is O(d)
-    per vector — embedding the `_norm` aggregate inside the transform
-    lambda (as `_unit` does) makes interpreted higher-order-function eval
-    re-run the O(d) aggregate per element, i.e. O(d^2) per vector."""
+    All-zero input maps to the zero vector (cosine 0 to everything)
+    instead of null/NaN silently dropping the row. The norm is computed
+    ONCE into a temp column, so normalization is O(d) per vector —
+    embedding the `_norm` aggregate inside the transform lambda makes
+    interpreted higher-order-function eval re-run the O(d) aggregate per
+    element, i.e. O(d^2) per vector."""
     n = F.col("_vnorm")
     return (df.withColumn("_vnorm", _norm(F.col(vec_col)))
             .withColumn(out, F.transform(
@@ -348,8 +338,7 @@ def pseudo_codebooks(spark, m: int = 4, k: int = 8, dsub: int = 16,
     ``'c:<seed>:<sub>:<code>:<dim>'`` stretched to [-1, 1). Bounded
     driver-side generation (m·k·dsub floats — codebooks must broadcast
     anyway); any engine with md5 replays the exact values, which is
-    what makes the ``ann_pq`` driver query hard-oracle-able. Trained
-    codebooks come from :func:`pq_fit` instead."""
+    what makes the ``ann_pq`` driver query hard-oracle-able."""
     import hashlib
 
     rows = []
@@ -412,115 +401,6 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
                      .alias(out)))
     return (df.join(codes, df[id_col] == F.col("__pq_id"), "left")
             .drop("__pq_id"))
-
-
-def pq_fit(df: DataFrame, vec_col: str = "embedding",
-           id_col: str = "vec_id", m: int = 4, k: int = 16,
-           iterations: int = 5, init: DataFrame | None = None,
-           tol: float = 0.0) -> DataFrame:
-    """Train PQ codebooks: plain-L2 Lloyd's per subspace, ALL subspaces
-    riding the same shuffle each iteration (no per-subspace jobs).
-    Returns ``(sub, code_id, centroid, n_assigned)``, directly
-    pluggable into :func:`pq_encode` / :func:`pq_adc_topk`.
-
-    Default init is the :func:`select_centroids` recipe per subspace —
-    ``pmod(xxhash64('<sub>:<id>'), k)`` buckets, min-hash argmin per
-    (sub, bucket) — deterministic under any partitioning; pass
-    ``init`` (a (sub, code_id, centroid) DataFrame) to start from
-    known codebooks (tests, warm restarts). Each Lloyd
-    iteration: assign every subvector to its nearest centroid (broadcast
-    codebook, argmin on round(dist, 9) + code tie-break), then recompute
-    means via posexplode + partial-aggregated (sub, code, dim) sums —
-    only m·k·dsub rows reach the driver per iteration (bounded metadata;
-    codebooks must broadcast anyway). Empty codes keep their previous
-    centroid. Stops early when every centroid moves less than ``tol``.
-    """
-    import numpy as np
-
-    if k < 1 or m < 1:
-        raise ValueError(f"m and k must be >= 1, got m={m} k={k}")
-    if iterations < 0:
-        raise ValueError(f"iterations must be >= 0, got {iterations}")
-    first = df.select(vec_col).first()
-    if first is None:
-        raise ValueError("no initial centroids (empty corpus?)")
-    dim = len(first[0])
-    if dim % m != 0:
-        raise ValueError(f"vector dim {dim} not divisible by m={m}")
-    dsub = dim // m
-
-    spark = df.sparkSession
-    sub = _sub_rows(_spread(df, id_col), vec_col, id_col, m, dsub)
-
-    if init is None:
-        # deterministic per-subspace init (select_centroids shape)
-        h = F.xxhash64(F.concat_ws(":", F.col("sub").cast("string"),
-                                   F.col(id_col).cast("string")))
-        hashed = sub.select("sub",
-                            F.col(id_col).cast("string").alias("_cid"),
-                            "_sv", h.alias("_h"),
-                            F.pmod(h, F.lit(k)).alias("_bkt"))
-        mins = hashed.groupBy("sub", "_bkt").agg(F.min("_h").alias("_h"))
-        w = Window.partitionBy("sub", "_bkt").orderBy(F.col("_cid").asc())
-        init = (hashed.join(F.broadcast(mins), ["sub", "_bkt", "_h"])
-                .withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .select("sub",
-                        F.col("_bkt").cast("int").alias("code_id"),
-                        F.col("_sv").alias("centroid")))
-    cur = [(int(r["sub"]), int(r["code_id"]), list(r["centroid"]))
-           for r in init.collect()]
-    cb_schema = "sub int, code_id int, centroid array<double>"
-
-    def assign(cb_df):
-        scored = (sub.join(F.broadcast(cb_df), "sub")
-                  .withColumn("_d9", F.round(
-                      _l2sq(F.col("_sv"), F.col("centroid")), 9)))
-        best = F.min(F.struct(F.col("_d9"), F.col("code_id"))).alias("_b")
-        return (scored.groupBy(id_col, "sub")
-                .agg(best, F.first("_sv").alias("_sv"))
-                .select(id_col, "sub", "_sv",
-                        F.col("_b.code_id").alias("code_id")))
-
-    counts: dict[tuple[int, int], int] = {}
-    for _ in range(iterations):
-        cb_df = spark.createDataFrame(cur, cb_schema)
-        assigned = assign(cb_df)
-        sums = (assigned
-                .select("sub", "code_id",
-                        F.posexplode("_sv").alias("_pos", "_v"))
-                .groupBy("sub", "code_id", "_pos")
-                .agg(F.sum("_v").alias("_s"),
-                     F.count(F.lit(1)).alias("_n"))
-                .collect())
-        by_key: dict[tuple[int, int], dict[int, float]] = {}
-        counts = {}
-        for r in sums:
-            key = (int(r["sub"]), int(r["code_id"]))
-            by_key.setdefault(key, {})[int(r["_pos"])] = float(r["_s"])
-            counts[key] = int(r["_n"])
-        nxt, moved = [], 0.0
-        for s, cid, old in cur:
-            key = (s, cid)
-            if key in by_key and counts[key] > 0:
-                n = counts[key]
-                new = [by_key[key].get(p, 0.0) / n for p in range(dsub)]
-            else:
-                new = list(old)
-            moved = max(moved,
-                        float(np.linalg.norm(np.array(new)
-                                             - np.array(old))))
-            nxt.append((s, cid, new))
-        cur = nxt
-        if moved <= tol:
-            break
-
-    cb_df = spark.createDataFrame(cur, cb_schema)
-    final = (assign(cb_df).groupBy("sub", "code_id")
-             .agg(F.count(F.lit(1)).alias("n_assigned")))
-    return (cb_df.join(final, ["sub", "code_id"], "left")
-            .select("sub", "code_id", "centroid",
-                    F.coalesce("n_assigned", F.lit(0)).alias("n_assigned")))
 
 
 def pq_adc_topk(queries: DataFrame, codes: DataFrame,

@@ -1,4 +1,5 @@
-"""Mergeable cardinality sketches: a deterministic HyperLogLog.
+"""Engine-portable sketches as plain tables: a deterministic HyperLogLog,
+a Count-Min sketch and a dyadic quantile sketch.
 
 Spark ships ``approx_count_distinct`` (a JVM HLL++), but its register
 hashing is engine-private: the sketch can't be replayed by another
@@ -13,8 +14,11 @@ with md5 and CASE.
 Why it matters at 100 TB: the sketch is a first-class TABLE of at most
 ``2^p`` rows per group (4096 at the default p=12) that is
 
-* **mergeable** — union two sketches and re-max: day-level sketches
-  roll up to month/all-time without touching raw data;
+* **mergeable by plain SQL** — the union of two sketches regrouped on
+  (by…, register) with ``max(rank)`` is the sketch of the union
+  (Count-Min re-sums ``cnt``; the quantile sketch re-sums ``n`` and
+  re-takes ``vmin``/``vmax``), so day-level sketches roll up to
+  month/all-time without touching raw data;
 * **shuffle-capped** — the register groupBy partial-combines map-side,
   so the exchange carries at most ``2^p × partitions`` rows no matter
   how many billions of input rows;
@@ -79,18 +83,6 @@ def hll_sketch(df: DataFrame, value_col: str, by: list[str] | None = None,
                     _rank_from_hex(F.substring(h, 9, 8)).alias("__rank"))
             .groupBy(*by, "register")
             .agg(F.max("__rank").alias("rank")))
-
-
-def hll_merge(*sketches: DataFrame, by: list[str] | None = None) -> DataFrame:
-    """Merge sketches built with the same (p, seed): union + re-max.
-    max is associative/commutative/idempotent, so merge order never
-    matters and merging a sketch with itself is a no-op — the property
-    that makes day→month→all-time rollups exact."""
-    by = list(by or [])
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*by, "register").agg(F.max("rank").alias("rank"))
 
 
 def hll_estimate(sketch: DataFrame, by: list[str] | None = None,
@@ -163,17 +155,6 @@ def cms_build(df: DataFrame, value_col: str, by: list[str] | None = None,
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
-def cms_merge(*sketches: DataFrame, by: list[str] | None = None) -> DataFrame:
-    """Merge sketches built with the same (width, depth, seed):
-    union + re-sum. Counter addition is associative/commutative, so
-    shard- or day-level sketches roll up exactly."""
-    by = list(by or [])
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy(*by, "row", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_lookup(cms: DataFrame, probes: DataFrame, value_col: str,
                by: list[str] | None = None, width: int = 2048,
                depth: int = 4, seed: int = 0) -> DataFrame:
@@ -237,8 +218,8 @@ def qsketch_build(df: DataFrame, value_col: str,
     Completes the repo's engine-portable sketch family (Bloom /
     HyperLogLog / Count-Min): like them it is
 
-    * **mergeable** — ``qsketch_merge`` re-aggregates (sum, min, max),
-      so day-level sketches roll up to month/all-time exactly;
+    * **mergeable** — a union regrouped on (by…, bin) with sum(n),
+      min(vmin), max(vmax) is exactly the sketch of the union;
     * **shuffle-capped** — the groupBy partial-combines map-side to at
       most 65 rows per group per partition;
     * **replayable** — binning, counting and the quantile estimator are
@@ -255,21 +236,6 @@ def qsketch_build(df: DataFrame, value_col: str,
             .agg(F.count(F.lit(1)).alias("n"),
                  F.min("__v").alias("vmin"),
                  F.max("__v").alias("vmax")))
-
-
-def qsketch_merge(*sketches: DataFrame,
-                  by: list[str] | None = None) -> DataFrame:
-    """Union ``qsketch_build`` outputs and re-aggregate — exact: counts
-    add, extremes take min/max, so merge(build(A), build(B)) equals
-    build(A ∪ B) row for row."""
-    by = list(by or [])
-    out = sketches[0]
-    for sk in sketches[1:]:
-        out = out.unionByName(sk)
-    return (out.groupBy(*by, "bin")
-            .agg(F.sum("n").alias("n"),
-                 F.min("vmin").alias("vmin"),
-                 F.max("vmax").alias("vmax")))
 
 
 def qsketch_quantile(sketch: DataFrame,

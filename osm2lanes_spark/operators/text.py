@@ -47,61 +47,9 @@ def tokens(text: Column) -> Column:
         .otherwise(F.split(trimmed, rf"{WS_CLASS}+"))
 
 
-def with_token_count(df: DataFrame, text_col: str = "text",
-                     out: str = "n_tokens") -> DataFrame:
-    return df.withColumn(out, F.size(tokens(F.col(text_col))))
-
-
-def with_bpe_ish_token_count(df: DataFrame, text_col: str = "text",
-                             out: str = "n_subtokens") -> DataFrame:
-    """BPE-approximating count: word-piece regex splits on case/digit
-    boundaries and punctuation — a deterministic proxy for tokenizer cost."""
-    pieces = F.regexp_extract_all(
-        F.col(text_col), F.lit(rf"[A-Za-z]+|\d+|[^{WS_CHARS}A-Za-z\d]"), F.lit(0))
-    # long words cost extra subtokens: ceil(len/6) pieces each
-    return df.withColumn(
-        out,
-        F.aggregate(pieces, F.lit(0),
-                    lambda acc, p: acc + F.ceil(F.length(p) / F.lit(6.0)).cast("int")))
-
-
 def normalized(text: Column) -> Column:
     """Lowercase + collapsed whitespace — the dedup canonical form."""
     return F.trim(F.regexp_replace(F.lower(text), rf"{WS_CLASS}+", " "))
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text",
-                     out: str = "fingerprint") -> DataFrame:
-    """Document fingerprint: md5 of the normalized text."""
-    return df.withColumn(out, F.md5(normalized(F.col(text_col))))
-
-
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Quality scoring: length/punctuation/stopword/uppercase signals.
-
-    quality_score ∈ [0,1]: penalizes very short docs, high punctuation
-    density and absence of function words (boilerplate/code smells).
-    """
-    text = F.col(text_col)
-    toks = tokens(text)
-    n_chars = F.length(text)
-    n_toks = F.size(toks)
-    n_punct = F.size(F.regexp_extract_all(text, F.lit(rf"[^\w{WS_CHARS}]"), F.lit(0)))
-    stop = F.array(*[F.lit(w) for w in LANG_MARKERS["en"]])
-    n_stop = F.size(F.array_intersect(F.transform(toks, F.lower), stop))
-    n_upper = F.size(F.regexp_extract_all(text, F.lit(r"[A-Z]"), F.lit(0)))
-    mean_len = F.when(n_toks > 0, n_chars / n_toks).otherwise(F.lit(0.0))
-    punct_ratio = F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0))
-    upper_ratio = F.when(n_chars > 0, n_upper / n_chars).otherwise(F.lit(0.0))
-    stop_hit = F.when(n_toks > 0, F.least(F.lit(1.0), n_stop / F.lit(3.0))).otherwise(F.lit(0.0))
-    length_score = F.least(F.lit(1.0), n_toks / F.lit(20.0))
-    score = (F.lit(0.4) * length_score + F.lit(0.3) * (F.lit(1.0) - punct_ratio)
-             + F.lit(0.2) * stop_hit + F.lit(0.1) * (F.lit(1.0) - upper_ratio))
-    return (df.withColumn("n_tokens", n_toks)
-            .withColumn("punct_ratio", F.round(punct_ratio, 6))
-            .withColumn("upper_ratio", F.round(upper_ratio, 6))
-            .withColumn("mean_token_len", F.round(mean_len, 6))
-            .withColumn("quality_score", F.round(score, 6)))
 
 
 def with_langid(df: DataFrame, text_col: str = "text",

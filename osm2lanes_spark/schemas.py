@@ -1,7 +1,9 @@
 """Spark schemas for the engine's tables.
 
-- ``DOCUMENTS_SCHEMA``: the interleaved text+media input mandated by the
-  input hint — ``doc_id`` + ``spans array<struct<kind,text,media_ref,offset>>``.
+The engine's input is interleaved text+media documents: ``doc_id string``
+plus ``spans array<struct<kind:string, text:string, media_ref:string,
+offset:int>>`` (read by :mod:`osm2lanes_spark.operators.span_assembly`).
+
 - ``ROAD_SCHEMA``: the transform output; mirrors the reference's serde JSON
   shape (`/root/reference/osm2lanes/src/road/lane.rs:8-40`,
   ``data/spec-lanes.json``) as nested Spark structs; optional fields are
@@ -11,18 +13,6 @@
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-SPAN_TYPE = T.StructType([
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("offset", T.IntegerType()),
-])
-
-DOCUMENTS_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("spans", T.ArrayType(SPAN_TYPE)),
-])
 
 ACCESS_AND_DIRECTION = T.StructType([
     T.StructField("access", T.StringType()),
@@ -78,11 +68,4 @@ TAGS_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType(), False),
     T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
     T.StructField("error", T.StringType()),
-])
-
-LOCALES_SCHEMA = T.StructType([
-    T.StructField("alpha2", T.StringType(), False),
-    T.StructField("alpha3", T.StringType()),
-    T.StructField("region", T.StringType()),
-    T.StructField("driving_side", T.StringType()),
 ])

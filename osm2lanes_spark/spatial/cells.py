@@ -130,15 +130,6 @@ def k_ring(cell: int, k: int) -> np.ndarray:
     return ((morton << np.uint64(6)) | np.uint64(level)).astype(np.int64)
 
 
-def ring_cells(cell: int, k: int) -> np.ndarray:
-    """Only the hollow ring at exactly distance k (k=0 → the cell)."""
-    if k == 0:
-        return np.array([cell], dtype=np.int64)
-    full = set(k_ring(cell, k).tolist())
-    inner = set(k_ring(cell, k - 1).tolist())
-    return np.array(sorted(full - inner), dtype=np.int64)
-
-
 def cover_segment(lon0: float, lat0: float, lon1: float, lat1: float,
                   level: int) -> np.ndarray:
     """All cells at ``level`` the closed segment (lon0,lat0)-(lon1,lat1)

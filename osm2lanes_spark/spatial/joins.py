@@ -110,39 +110,6 @@ def with_cell(df: DataFrame, level: int = DEFAULT_LEVEL,
     return df.withColumn(out, cell_expr(lon, lat, level))
 
 
-def explode_ring_cells(df: DataFrame, lon: str, lat: str, level: int,
-                       ring_k: int, out: str = "cell") -> DataFrame:
-    """JVM k-ring: one row per cell within Chebyshev distance ``ring_k``
-    of the point's cell — the hot path of the kNN loop (the Python k-ring
-    UDF costs an Arrow round-trip per ring). ``lon``/``lat`` are SQL
-    expressions.
-
-    Shape matters: the integer grid coordinates are projected ONCE before
-    a literal (dx, dy) offset array is exploded — Generate is a barrier
-    CollapseProject cannot cross, so the post-explode interleave
-    duplicates only a leaf attribute. Building the ring as a
-    (2k+1)²-element array of full encode expressions instead overflows
-    janino's method limit (interpreted fallback, 5× slower), and
-    re-deriving x/y from the packed cell after the explode drowns the
-    optimizer in a huge expression tree — both measured, both rejected.
-    Integer-domain offsets (never lon/lat plus multiples of the cell
-    width, where float rounding at a boundary could skip a neighbor) keep
-    the set exactly ``cells.k_ring``'s: out-of-world offsets clamp to the
-    edge and the downstream dedup collapses them."""
-    n = 1 << level
-    offsets = ", ".join(
-        f"named_struct('dx', {dx}, 'dy', {dy})"
-        for dx in range(-ring_k, ring_k + 1)
-        for dy in range(-ring_k, ring_k + 1))
-    x = f"least(greatest(_x + _o.dx, 0L), {n - 1}L)"
-    y = f"least(greatest(_y + _o.dy, 0L), {n - 1}L)"
-    return (df.selectExpr("*", f"{grid_sql(lon, 180.0, 360.0, level)} AS _x",
-                          f"{grid_sql(lat, 90.0, 180.0, level)} AS _y")
-            .selectExpr("*", f"explode(array({offsets})) AS _o")
-            .withColumn(out, F.expr(xy_cell_sql(x, y, level)))
-            .drop("_x", "_y", "_o"))
-
-
 # ---------------------------------------------------------------------------
 # Polygon dim: covering cells
 # ---------------------------------------------------------------------------
@@ -164,11 +131,10 @@ def polygon_cells_pdf(polygons: dict[str, np.ndarray], level: int) -> pd.DataFra
 
 def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
                      level: int = DEFAULT_LEVEL,
-                     strategy: str = "map",
-                     point_id: str = "doc_id") -> DataFrame:
+                     strategy: str = "map") -> DataFrame:
     """Assign each point the key of the polygon containing it.
 
-    points: DataFrame with ``point_id``, ``lon``, ``lat``; ids need not be
+    points: DataFrame with ``doc_id``, ``lon``, ``lat``; ids need not be
     unique or non-null. Returns every input row, with its columns and
     ``key`` (nullable — no containing polygon).
 
@@ -182,7 +148,7 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
     one Arrow stage that pipelines with the scan and downstream stages.
     strategy='broadcast': the index's covering as a broadcast hash join
     dim, PIP on boundary candidates, then one groupBy shuffle on a per-row
-    id to keep each row's smallest matching key; ``point_id`` leads the
+    id to keep each row's smallest matching key; ``doc_id`` leads the
     output columns.
     """
     if strategy not in ("map", "broadcast"):
@@ -224,17 +190,17 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         F.col("key"))
 
     # Single-shuffle finalize on a per-row id taken before the join (ids in
-    # ``point_id`` may repeat or be null): per row the min matching key
+    # ``doc_id`` may repeat or be null): per row the min matching key
     # (border points in two coverings get a deterministic winner), the
     # original columns carried along — no join-back to the fact table.
-    other_cols = [c for c in points.columns if c != point_id]
+    other_cols = [c for c in points.columns if c != "doc_id"]
     return (pts.withColumn("_row", F.monotonically_increasing_id())
             .join(dim, "cell", "left")
             .withColumn("_mkey", matched_key)
             .groupBy("_row")
             .agg(F.min("_mkey").alias("key"),
                  *[F.first(c).alias(c) for c in points.columns])
-            .select(point_id, *other_cols, "key"))
+            .select("doc_id", *other_cols, "key"))
 
 
 def repartition_by_cell_range(df: DataFrame, num_partitions: int,
@@ -453,11 +419,8 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
 
     def query_cells(df: DataFrame, ring_k: int) -> DataFrame:
         # the Arrow k-ring: one batched UDF over the (small) unfinished
-        # remainder. A JVM alternative exists (explode_ring_cells) but
-        # measured at parity here — the candidates it feeds go through the
-        # Python dist kernel regardless, so the ring's Arrow round-trip is
-        # a minor term; it wins only when queries vastly outnumber
-        # candidates (grid co-location joins — its own test covers it).
+        # remainder; the candidates it feeds go through the Python dist
+        # kernel regardless, so the ring's Arrow round-trip is a minor term
         @F.pandas_udf(T.ArrayType(T.LongType()))
         def cells_udf(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
             base = C.encode(lon_s.to_numpy(), lat_s.to_numpy(), level)
@@ -539,9 +502,13 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     # directly, for the brute remainder) — the cached index can go
     way_index.unpersist()
     if not finished_parts:
-        return spark.createDataFrame(
-            [], queries.schema.add(way_id, T.StringType())
-            .add("dist", T.DoubleType()).add("rank", T.IntegerType()))
+        # a fresh field list: ``queries.schema`` is cached on the frame,
+        # and ``StructType.add`` would grow it in place
+        return spark.createDataFrame([], T.StructType(
+            queries.schema.fields
+            + [T.StructField(way_id, T.StringType()),
+               T.StructField("dist", T.DoubleType()),
+               T.StructField("rank", T.IntegerType())]))
     out = finished_parts[0]
     for part in finished_parts[1:]:
         out = out.unionByName(part)

@@ -1,9 +1,9 @@
 """Trajectory (ordered point-sequence) operators.
 
 Per-entity GPS traces — probe vehicles, user check-in streams — as
-(entity, ts, lon, lat) rows. `trajectory_steps` turns them into
-consecutive-step rows (distance + initial bearing); `trajectory_summary`
-rolls a whole trace into path length, net displacement and straightness.
+(entity, ts, lon, lat) rows. `trajectory_summary` rolls a whole trace
+into path length, net displacement and straightness; `trip_segments`
+cuts traces into trips at time gaps and implausible jumps.
 The reference models ways as static geometry (no motion — its geometry
 handling stops at way node lists, overpass.rs:147-242); trajectories are
 engine-side capability for the spatial tier (map-matching precursors,
@@ -16,72 +16,18 @@ device with millions of pings) are the caller's salting decision; the
 window itself is per-entity sequential by definition.
 
 Engine-exact math: step distance reuses the fixed-op-order haversine
-(`joins.HAVERSINE_SQL`); the initial bearing uses one fixed atan2 form,
-degree conversion by literal factor, and ((x % 360) + 360) % 360
-normalization — both replayable in DuckDB to the last printed digit.
+(`joins.HAVERSINE_SQL`), replayable in DuckDB to the last printed digit.
 Summary sums quantize step distances to integers first (order-exact).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .joins import _DEG2RAD, haversine_km
+from .joins import haversine_km
 
-_RAD2DEG = 57.29577951308232  # float64(180/pi) — literal in BOTH engines
 D_SCALE = 1_000_000           # km quantum for order-exact path sums
-
-# Oracle twin of bearing_deg() — interpolate the coordinate SQL exprs.
-BEARING_SQL = (
-    "((atan2("
-    "sin(({lon2} - {lon1}) * 0.017453292519943295)"
-    " * cos({lat2} * 0.017453292519943295),"
-    " cos({lat1} * 0.017453292519943295)"
-    " * sin({lat2} * 0.017453292519943295)"
-    " - sin({lat1} * 0.017453292519943295)"
-    " * cos({lat2} * 0.017453292519943295)"
-    " * cos(({lon2} - {lon1}) * 0.017453292519943295))"
-    " * 57.29577951308232 % 360.0 + 360.0) % 360.0)")
-
-
-def bearing_deg(lon1, lat1, lon2, lat2) -> Column:
-    """Initial great-circle bearing (degrees [0, 360)) — pure Catalyst,
-    op order pinned to match ``BEARING_SQL`` (both engines' `%` on
-    doubles is C fmod: sign of the dividend, hence the +360 renorm)."""
-    dlon = (lon2 - lon1) * F.lit(_DEG2RAD)
-    y = F.sin(dlon) * F.cos(lat2 * F.lit(_DEG2RAD))
-    x = (F.cos(lat1 * F.lit(_DEG2RAD)) * F.sin(lat2 * F.lit(_DEG2RAD))
-         - F.sin(lat1 * F.lit(_DEG2RAD)) * F.cos(lat2 * F.lit(_DEG2RAD))
-         * F.cos(dlon))
-    deg = F.atan2(y, x) * F.lit(_RAD2DEG)
-    return (deg % F.lit(360.0) + F.lit(360.0)) % F.lit(360.0)
-
-
-def trajectory_steps(traces: DataFrame, *, entity: str = "entity",
-                     order: str = "ts",
-                     tiebreak: str | None = None) -> DataFrame:
-    """Consecutive-step rows per entity: previous→current distance and
-    bearing. First point of each trace is dropped (no predecessor).
-
-    Output: entity, order (+tiebreak), step_km, bearing_deg — both
-    rounded to 6 decimals for cross-engine stability.
-    """
-    keys = [order] + ([tiebreak] if tiebreak else [])
-    w = Window.partitionBy(entity).orderBy(*[F.col(k) for k in keys])
-    prev_lon, prev_lat = F.lag("lon").over(w), F.lag("lat").over(w)
-    out = (traces
-           .withColumn("__plon", prev_lon).withColumn("__plat", prev_lat)
-           .where(F.col("__plon").isNotNull())
-           .select(F.col(entity), *[F.col(k) for k in keys],
-                   F.round(haversine_km(
-                       F.col("__plon"), F.col("__plat"),
-                       F.col("lon"), F.col("lat")), 6).alias("step_km"),
-                   F.round(bearing_deg(
-                       F.col("__plon"), F.col("__plat"),
-                       F.col("lon"), F.col("lat")), 6)
-                   .alias("bearing_deg")))
-    return out
 
 
 def trajectory_summary(traces: DataFrame, *, entity: str = "entity",

@@ -1,14 +1,13 @@
 """Unit tests for operators/sketches.py (deterministic HyperLogLog).
 
-Accuracy, merge exactness and rank edge cases on small frames; the
+Accuracy and rank edge cases on small frames; the
 sf0.01 bit-parity vs the DuckDB register replay runs through the
 driver contract (query ``hll_users``).
 """
 
 from pyspark.sql import functions as F
 
-from osm2lanes_spark.operators.sketches import (hll_distinct, hll_estimate,
-                                                hll_merge, hll_sketch)
+from osm2lanes_spark.operators.sketches import hll_distinct, hll_sketch
 
 
 def test_hll_accuracy_linear_counting(spark):
@@ -25,27 +24,6 @@ def test_hll_accuracy_raw_regime(spark):
     df = spark.range(200_000).select(F.col("id").alias("v"))
     est = hll_distinct(df, "v", p=12).collect()[0]["est_distinct"]
     assert abs(est - 200_000) / 200_000 < 0.06, est
-
-
-def test_hll_merge_exact_and_idempotent(spark):
-    """Sketch(A) ⊕ Sketch(B) has exactly the registers of Sketch(A∪B);
-    merging a sketch with itself is the identity (max semantics)."""
-    df = spark.range(3000).select(F.col("id").alias("v"),
-                                  (F.col("id") % 2).alias("half"))
-    a = hll_sketch(df.where("half = 0"), "v")
-    b = hll_sketch(df.where("half = 1"), "v")
-    whole = hll_sketch(df, "v")
-    merged = hll_merge(a, b)
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, whole.collect()))
-    twice = hll_merge(whole, whole)
-    assert sorted(map(tuple, twice.collect())) == \
-        sorted(map(tuple, whole.collect()))
-    # duplicated data never moves the estimate — the property exact
-    # COUNT(DISTINCT) pays a full shuffle for
-    est_m = hll_estimate(merged).collect()[0]["est_distinct"]
-    est_w = hll_estimate(whole).collect()[0]["est_distinct"]
-    assert est_m == est_w
 
 
 def test_hll_grouped_and_nulls(spark):
@@ -113,22 +91,6 @@ def test_cms_narrow_overestimates_only(spark):
     assert got["totally_absent"] >= 0
 
 
-def test_cms_merge_exact(spark):
-    """cms(A) ⊕ cms(B) equals cms(A∪B) counter-for-counter (sum
-    semantics), so shard-level sketches roll up exactly."""
-    from osm2lanes_spark.operators.sketches import cms_build, cms_merge
-
-    df = spark.range(4_000).select(
-        (F.col("id") % 50).cast("string").alias("v"),
-        (F.col("id") % 2).alias("half"))
-    a = cms_build(df.where("half = 0"), "v")
-    b = cms_build(df.where("half = 1"), "v")
-    merged = cms_merge(a, b)
-    whole = cms_build(df, "v")
-    assert sorted(map(tuple, merged.collect())) == \
-        sorted(map(tuple, whole.collect()))
-
-
 # ---------------------------------------------------------------------------
 # Dyadic quantile sketch
 # ---------------------------------------------------------------------------
@@ -141,20 +103,6 @@ def test_qsketch_bins_hard_bounded(spark):
     df = spark.range(100_000).select(
         (F.col("id") * 2654435761 % (2 ** 40)).alias("v"))
     assert qsketch_build(df, "v").count() <= 65
-
-
-def test_qsketch_merge_equals_whole(spark):
-    from osm2lanes_spark.operators.sketches import (qsketch_build,
-                                                    qsketch_merge)
-
-    df = spark.range(10_000).select((F.col("id") * 13 % 9973).alias("v"))
-    a = qsketch_build(df.where(F.col("v") % 2 == 0), "v")
-    b = qsketch_build(df.where(F.col("v") % 2 == 1), "v")
-    merged = {r["bin"]: (r["n"], r["vmin"], r["vmax"])
-              for r in qsketch_merge(a, b).collect()}
-    whole = {r["bin"]: (r["n"], r["vmin"], r["vmax"])
-             for r in qsketch_build(df, "v").collect()}
-    assert merged == whole
 
 
 def test_qsketch_quantile_within_dyadic_bound(spark):

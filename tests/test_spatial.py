@@ -42,8 +42,6 @@ def test_cell_parent_prefix_range():
 
 def test_k_ring():
     cell = C.encode(np.array([10.0]), np.array([20.0]), 10)[0]
-    ring0 = C.ring_cells(int(cell), 0)
-    assert list(ring0) == [cell]
     ring1 = C.k_ring(int(cell), 1)
     assert len(ring1) == 9
     assert cell in set(ring1.tolist())
@@ -139,8 +137,23 @@ def test_knn_join(spark):
     assert got == {"q1": "B", "q2": "C", "q3": "A"}
 
 
+def test_knn_join_empty_result_leaves_queries_schema(spark):
+    """With no ring round and no query left, knn_join builds its empty
+    result schema without growing the caller's (cached) queries schema."""
+    ways_df = spark.createDataFrame(
+        [("A", [{"lon": 0.0, "lat": 0.0}])],
+        "way_id string, geometry array<struct<lon:double,lat:double>>")
+    queries = spark.createDataFrame(
+        [], "query_id string, lon double, lat double")
+    out = knn_join(queries, ways_df, k=1, level=8, max_ring=0)
+    assert queries.columns == ["query_id", "lon", "lat"]
+    assert len(queries.schema.fields) == 3
+    assert out.columns == ["query_id", "lon", "lat", "way_id", "dist", "rank"]
+    assert out.count() == 0
+
+
 # every level a cell_expr caller uses: distance_join's bounds (1, 14), the
-# locale tests (8), the fused pipeline and streaming (10), the default (12)
+# locale tests (8), the fused pipeline (10), the default (12)
 ENCODER_LEVELS = (1, 8, 10, 12, 14)
 INF, NAN, BIG = float("inf"), float("nan"), float(np.finfo(np.float64).max)
 
@@ -303,33 +316,6 @@ def test_classify_cells_concave_notch_not_full():
     px = np.linspace(1.0, 38.0, 100)
     py = np.full_like(px, 10.01)
     assert not P.point_in_polygon(px, py, ring).any()
-
-
-def test_ring_cells_expr_matches_numpy_k_ring(spark):
-    """The JVM exploded k-ring produces exactly cells.k_ring's set for
-    every radius it serves (<=3), including world-edge points where the
-    numpy ring clips and the JVM ring clamps (duplicates collapse in the
-    downstream pair dedup)."""
-    import numpy as np
-
-    from osm2lanes_spark.spatial import cells as C
-    from osm2lanes_spark.spatial.joins import explode_ring_cells
-
-    rng = np.random.default_rng(11)
-    pts = [(float(lo), float(la)) for lo, la in
-           zip(rng.uniform(-180, 180, 40), rng.uniform(-90, 90, 40))]
-    pts += [(-180.0, -90.0), (180.0, 90.0), (-179.999, 45.0),
-            (0.0, 89.999), (179.999, -89.999)]
-    df = spark.createDataFrame(pts, "lon double, lat double")
-    for level in (4, 7, 10):
-        for r in (1, 2, 3):
-            got = {}
-            rows = explode_ring_cells(df, "lon", "lat", level, r).collect()
-            for row in rows:
-                got.setdefault((row["lon"], row["lat"]), set()).add(row["cell"])
-            for (lo, la), ring in got.items():
-                base = int(C.encode(np.array([lo]), np.array([la]), level)[0])
-                assert ring == set(C.k_ring(base, r).tolist()), (level, r, lo, la)
 
 
 def test_knn_single_vertex_jvm_index_matches_udf_covering(spark):

@@ -22,24 +22,10 @@ def docs(spark, sf_dir):
 
 def test_token_count(spark):
     df = spark.createDataFrame([("a b  c",), ("",), ("  ",), ("one",)], "text string")
-    got = [r["n_tokens"] for r in X.with_token_count(df).collect()]
+    got = [r["n_tokens"] for r in
+           df.select(F.size(X.tokens(F.col("text"))).alias("n_tokens"))
+           .collect()]
     assert got == [3, 0, 0, 1]
-
-
-def test_quality_and_fingerprint(spark):
-    df = spark.createDataFrame(
-        [(1, "The quick brown fox jumps over the lazy dog and it is fine today"),
-         (2, "!!! ??? ### $$$"),
-         (3, "the  QUICK brown fox JUMPS over the lazy dog and it is fine today")],
-        "doc_id int, text string")
-    out = {r["doc_id"]: r for r in X.with_quality(X.with_fingerprint(df)).collect()}
-    assert out[1]["quality_score"] > out[2]["quality_score"]
-    # fingerprint is case/whitespace-normalizing: 3 is 1 modulo case
-    assert out[1]["fingerprint"] == out[3]["fingerprint"]
-    df2 = spark.createDataFrame(
-        [(1, "a  b\tc"), (2, "A b C")], "doc_id int, text string")
-    fps = [r["fingerprint"] for r in X.with_fingerprint(df2).collect()]
-    assert fps[0] == fps[1]
 
 
 def test_langid(spark):
@@ -52,13 +38,6 @@ def test_langid(spark):
     ], "doc_id int, text string")
     got = {r["doc_id"]: r["lang_pred"] for r in X.with_langid(df).collect()}
     assert got == {1: "en", 2: "de", 3: "es", 4: "fr", 5: "zh"}
-
-
-def test_bpe_ish_token_count(spark):
-    df = spark.createDataFrame([("hello world, 123 foo",)], "text string")
-    got = X.with_bpe_ish_token_count(df).collect()[0]["n_subtokens"]
-    # hello(1) world(1) ,(1) 123(1) foo(1) = 5
-    assert got == 5
 
 
 # --- dedup -----------------------------------------------------------------
@@ -80,6 +59,12 @@ def test_exact_dedup(spark, dup_docs):
              marked.where("is_duplicate").collect()}
     assert dupes == {2: 1}  # case-normalized duplicate
     assert D.dedup_exact(dup_docs, "doc_id", "text").count() == 5
+    # the fingerprint collapses runs of mixed whitespace (tab, spaces)
+    ws = spark.createDataFrame([(1, "a  b\tc"), (2, "A b C")],
+                               "doc_id int, text string")
+    fps = [r["fingerprint"] for r in
+           D.exact_duplicates(ws, "doc_id", "text").collect()]
+    assert fps[0] == fps[1]
 
 
 def test_exact_dedup_keep_policies(spark):
@@ -356,14 +341,6 @@ def test_multimodal_plumbing(spark):
     again = M.feature_extract_stage(media, dim=8).collect()
     assert {r["media_ref"]: r["feature"] for r in feats} == \
            {r["media_ref"]: r["feature"] for r in again}
-
-
-def test_frame_sampling(spark):
-    media = M.synth_media(spark, [f"media://{i}" for i in range(10)])
-    out = M.frame_sample_stage(media, every_n=2)
-    pdf = out.toPandas()
-    assert (pdf["frame_idx"] % 2 == 0).all()
-    assert set(pdf["media_ref"]) == {f"media://{i}" for i in range(10)}
 
 
 def test_decode_stub_raises():
@@ -1553,8 +1530,9 @@ def test_ivf_trained_centroids_exhaustive_probe_is_exact(spark, embeddings):
 
 def _dsir_python_reference(docs, target_ids, n_buckets=4096, seed=0,
                            alpha=1.0):
-    """Pure-Python replica of with_dsir_logratio: hashed unigram+bigram
-    buckets, add-alpha smoothed target/raw log-ratio, per-doc sum."""
+    """Pure-Python replica of dsir_resample's ``dsir_logw``: hashed
+    unigram+bigram buckets, add-alpha smoothed target/raw log-ratio,
+    per-doc sum."""
     import hashlib
     import math as m
 
@@ -1594,7 +1572,7 @@ def _dsir_python_reference(docs, target_ids, n_buckets=4096, seed=0,
 
 
 def test_dsir_logratio_matches_python_reference(spark):
-    from osm2lanes_spark.operators.sampling import with_dsir_logratio
+    from osm2lanes_spark.operators.sampling import dsir_resample
 
     rows = [(1, "the quick brown fox"), (2, "spark shuffles data"),
             (3, "quick fox quick fox"), (4, ""), (5, None),
@@ -1602,8 +1580,8 @@ def test_dsir_logratio_matches_python_reference(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     target = df.where("doc_id IN (1, 6)")
     got = {r.doc_id: r.dsir_logw
-           for r in with_dsir_logratio(df, target,
-                                       n_buckets=4096).collect()}
+           for r in dsir_resample(df, target, k=1,
+                                  n_buckets=4096).collect()}
     want = _dsir_python_reference(rows, {1, 6})
     assert got[5] is None and want[5] is None
     assert got[4] == 0.0
@@ -1612,7 +1590,7 @@ def test_dsir_logratio_matches_python_reference(spark):
 
 
 def test_dsir_resample_prefers_target_like_docs(spark):
-    from osm2lanes_spark.operators.sampling import with_dsir_logratio
+    from osm2lanes_spark.operators.sampling import dsir_resample
 
     # raw corpus: half "code"-flavored, half "prose"-flavored; target
     # is prose — prose docs must out-score code docs on raw logw
@@ -1624,8 +1602,8 @@ def test_dsir_resample_prefers_target_like_docs(spark):
         [(100, "the river flows through the quiet green meadows")],
         "doc_id long, text string")
     scored = {r.doc_id: r.dsir_logw
-              for r in with_dsir_logratio(df, target,
-                                          n_buckets=4096).collect()}
+              for r in dsir_resample(df, target, k=1,
+                                     n_buckets=4096).collect()}
     worst_prose = min(scored[i] for i in range(10, 20))
     best_code = max(scored[i] for i in range(10))
     assert worst_prose > best_code, scored
@@ -1634,8 +1612,7 @@ def test_dsir_resample_prefers_target_like_docs(spark):
 def test_dsir_resample_edges_and_validation(spark):
     import pytest as _pt
 
-    from osm2lanes_spark.operators.sampling import (dsir_resample,
-                                                    with_dsir_logratio)
+    from osm2lanes_spark.operators.sampling import dsir_resample
 
     df = spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma delta"), (3, None)],
@@ -1651,13 +1628,13 @@ def test_dsir_resample_edges_and_validation(spark):
     with _pt.raises(ValueError, match="k must be"):
         dsir_resample(df, target, k=-1)
     with _pt.raises(ValueError, match="alpha"):
-        with_dsir_logratio(df, target, alpha=0.0)
+        dsir_resample(df, target, k=1, alpha=0.0)
     with _pt.raises(ValueError, match="n_buckets"):
-        with_dsir_logratio(df, target, n_buckets=0)
+        dsir_resample(df, target, k=1, n_buckets=0)
     with _pt.raises(ValueError, match="ns"):
-        with_dsir_logratio(df, target, ns=())
+        dsir_resample(df, target, k=1, ns=())
     with _pt.raises(ValueError, match="already exist"):
-        with_dsir_logratio(df.withColumn("dsir_logw", F.lit(0.0)), target)
+        dsir_resample(df.withColumn("dsir_logw", F.lit(0.0)), target, k=1)
     with _pt.raises(ValueError, match="already exist"):
         dsir_resample(df.withColumn("dsir_key", F.lit(0.0)), target, k=1)
 
@@ -1684,49 +1661,6 @@ def test_dsir_plan_shape(spark):
 # ---------------------------------------------------------------------------
 # Product quantization (Jégou et al. 2011)
 # ---------------------------------------------------------------------------
-
-def _np_pq_lloyd(X, init_by_sub, m, iterations):
-    """NumPy replica of pq_fit: per-subspace plain-L2 Lloyd's, argmin
-    on (round(dist, 9), code_id), empty codes keep their centroid."""
-    d = X.shape[1] // m
-    out = {}
-    for s in range(m):
-        sv = X[:, s * d:(s + 1) * d]
-        cents = {cid: np.array(c, dtype=float)
-                 for cid, c in init_by_sub[s].items()}
-        for _ in range(iterations):
-            assign = {}
-            for i in range(len(sv)):
-                best = min(
-                    (round(float(np.sum((sv[i] - c) ** 2)), 9), cid)
-                    for cid, c in cents.items())
-                assign.setdefault(best[1], []).append(i)
-            for cid in cents:
-                if assign.get(cid):
-                    cents[cid] = sv[assign[cid]].mean(axis=0)
-        out[s] = cents
-    return out
-
-
-def test_pq_fit_matches_numpy_reference(spark):
-    rng = np.random.RandomState(7)
-    X = rng.normal(size=(30, 8))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(len(X))],
-        "vec_id long, embedding array<double>")
-    init_by_sub = {s: {c: [float(x) for x in X[c, s * 4:(s + 1) * 4]]
-                       for c in range(3)} for s in range(2)}
-    init = spark.createDataFrame(
-        [(s, c, init_by_sub[s][c]) for s in range(2) for c in range(3)],
-        "sub int, code_id int, centroid array<double>")
-    got = {(r.sub, r.code_id): np.array(r.centroid) for r in
-           S.pq_fit(df, m=2, k=3, iterations=3, init=init).collect()}
-    want = _np_pq_lloyd(X, init_by_sub, 2, 3)
-    for s in range(2):
-        for c in range(3):
-            assert np.allclose(got[(s, c)], want[s][c], atol=1e-9), \
-                (s, c, got[(s, c)], want[s][c])
-
 
 def test_pq_encode_known_values(spark):
     # 4-dim vectors, m=2, dsub=2; codebooks chosen so the nearest code
@@ -1772,10 +1706,6 @@ def test_pq_adc_self_match_and_recall(spark, embeddings):
 def test_pq_validation(spark):
     df = spark.createDataFrame([(1, [1.0, 2.0, 3.0])],
                                "vec_id long, embedding array<double>")
-    with pytest.raises(ValueError, match="not divisible"):
-        S.pq_fit(df, m=2, k=2)
-    with pytest.raises(ValueError, match="m and k"):
-        S.pq_fit(df, m=0, k=2)
     ragged = spark.createDataFrame(
         [(0, 0, [0.0, 0.0]), (1, 0, [0.0])],
         "sub int, code_id int, centroid array<double>")

@@ -1,4 +1,4 @@
-"""Unit tests: trajectory steps/summary, IDW interpolation, cluster stats."""
+"""Unit tests: trajectory summary/segments, IDW interpolation, cluster stats."""
 
 from __future__ import annotations
 
@@ -6,57 +6,12 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pyspark.sql import functions as F
-
 
 def _hav_np(lon1, lat1, lon2, lat2):
     lon1, lat1, lon2, lat2 = map(np.radians, (lon1, lat1, lon2, lat2))
     a = (np.sin((lat2 - lat1) / 2) ** 2
          + np.cos(lat1) * np.cos(lat2) * np.sin((lon2 - lon1) / 2) ** 2)
     return 2 * 6371.0 * np.arcsin(np.sqrt(a))
-
-
-def test_bearing_known_anchors(spark):
-    from osm2lanes_spark.spatial.trajectory import bearing_deg
-
-    pdf = pd.DataFrame({
-        "lon1": [0.0, 0.0, 0.0, 0.0],
-        "lat1": [0.0, 0.0, 0.0, 50.0],
-        "lon2": [1.0, 0.0, 0.0, 50.0],
-        "lat2": [0.0, 1.0, -1.0, 60.0],
-    })
-    got = (spark.createDataFrame(pdf)
-           .select(F.round(bearing_deg(F.col("lon1"), F.col("lat1"),
-                                       F.col("lon2"), F.col("lat2")), 3)
-                   .alias("b")).toPandas()["b"].tolist())
-    # due east, due north, due south on the equator/meridian
-    assert got[0] == pytest.approx(90.0)
-    assert got[1] == pytest.approx(0.0)
-    assert got[2] == pytest.approx(180.0)
-    assert 0.0 < got[3] < 90.0  # northeastward great circle
-
-
-def test_trajectory_steps_match_numpy(spark):
-    from osm2lanes_spark.spatial.trajectory import trajectory_steps
-
-    rng = np.random.default_rng(5)
-    rows = []
-    for ent in range(5):
-        lon, lat = rng.uniform(-30, 30), rng.uniform(-30, 30)
-        for t in range(8):
-            rows.append((ent, t, lon, lat))
-            lon += rng.normal(0, 0.5)
-            lat += rng.normal(0, 0.5)
-    pdf = pd.DataFrame(rows, columns=["entity", "ts", "lon", "lat"])
-    out = trajectory_steps(spark.createDataFrame(pdf)).toPandas()
-    assert len(out) == 5 * 7  # first point of each trace dropped
-    for ent, g in pdf.groupby("entity"):
-        g = g.sort_values("ts")
-        exp = _hav_np(g["lon"].to_numpy()[:-1], g["lat"].to_numpy()[:-1],
-                      g["lon"].to_numpy()[1:], g["lat"].to_numpy()[1:])
-        got = (out[out["entity"] == ent].sort_values("ts")["step_km"]
-               .to_numpy())
-        assert np.allclose(got, exp, atol=1e-5)
 
 
 def test_trajectory_summary_straight_line(spark):
