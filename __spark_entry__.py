@@ -216,11 +216,6 @@ def _q_knn(spark, sf_dir):
     return out.select("query_id", F.col("site_id").alias("neighbor_id"))
 
 
-def _q_knn_self_excluded(spark, sf_dir):
-    # helper variant used by bench; not registered
-    return _q_knn(spark, sf_dir)
-
-
 def _q_knn3(spark, sf_dir):
     """kNN at k>1 under the hard oracle (VERDICT r03 #7): 3 nearest
     sites per query, rank included, deterministic (dist, site_id)

@@ -52,10 +52,11 @@ from pyspark.sql import functions as F
 _SIDE = "__asof_side"
 _MATCH_TS = "__asof_ts"
 
-# Measured plain-vs-skew-safe crossover (BENCH/temporal_skew.py, r05
-# A/Bs at 8M rows / 90% skew): below ~1M rows on the hottest key the
-# plain per-key window wins; above it the distributed formulations pay
-# off. ``auto`` modes default to plain under this estimate.
+# Measured plain-vs-skew-safe crossover (BENCH/BASELINE.md, "Round-5
+# temporal skew A/B", at 8M rows / 90% skew): below ~1M rows on the
+# hottest key the plain per-key window wins; above it the distributed
+# formulations pay off. ``auto`` modes default to plain under this
+# estimate.
 AUTO_HOT_KEY_CROSSOVER = 1_000_000
 
 
@@ -345,7 +346,7 @@ def sessionize(df: DataFrame, key: str = "user_id", ts: str = "ts",
     ``scale_safe="auto"`` decides from a cheap sampled hot-key probe
     (one column-pruned pass over ``key``): the plain path below
     ``auto_threshold_rows`` estimated rows on the hottest key (the
-    measured crossover — BENCH/temporal_skew.py), the distributed path
+    measured crossover — BENCH/BASELINE.md, round 5), the distributed path
     above it.
     """
     gap_us = int(round(gap_seconds * 1_000_000))

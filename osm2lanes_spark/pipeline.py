@@ -65,8 +65,10 @@ def lanes_pipeline(docs: DataFrame,
     ``fused`` (default): spatial locale resolution runs inside the lane
     transform's Arrow stage (cell encode stays JVM) — ONE Python stage per
     task; two stacked Python runners per core measurably degrade
-    throughput. ``fused=False`` keeps a separate locale stage (needed when
-    the caller wants the located DataFrame itself).
+    throughput. ``fused=False`` runs ``resolve_locale`` (with ``strategy``)
+    as a separate stage first; both paths return the same ``ROAD_SCHEMA``
+    rows. A caller that wants the located DataFrame itself calls
+    ``resolve_locale``.
 
     The per-call floor is kept small: the locale index is built once per
     (polygon content, level) by the memoised ``make_locale_resolver`` and

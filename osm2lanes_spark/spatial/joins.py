@@ -76,6 +76,13 @@ def xy_cell_sql(x: str, y: str, level: int) -> str:
     return f"({bits} | {level}L)"
 
 
+def _finite_sql(lon: str, lat: str) -> str:
+    """SQL text that is true only when the doubles (lon, lat) are both
+    finite: false for ±inf and for NaN (Spark orders NaN above +inf), null
+    for null."""
+    return f"abs({lon}) < {_INF} AND abs({lat}) < {_INF}"
+
+
 @functools.lru_cache(maxsize=256)
 def cell_sql(lon: str, lat: str, level: int) -> str:
     """SQL text of the int64 cell id of SQL doubles (lon, lat) at ``level``.
@@ -86,9 +93,7 @@ def cell_sql(lon: str, lat: str, level: int) -> str:
     """
     x = grid_sql(lon, 180.0, 360.0, level)
     y = grid_sql(lat, 90.0, 180.0, level)
-    # false for ±inf and for NaN (Spark orders NaN above +inf), null for null
-    finite = f"abs({lon}) < {_INF} AND abs({lat}) < {_INF}"
-    return f"CASE WHEN {finite} THEN {xy_cell_sql(x, y, level)} END"
+    return f"CASE WHEN {_finite_sql(lon, lat)} THEN {xy_cell_sql(x, y, level)} END"
 
 
 def cell_expr(lon: str, lat: str, level: int) -> Column:
@@ -354,7 +359,11 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     overpass.rs:222-235, expanding-radius Overpass search).
 
     queries: (query_id, lon, lat); ways: (way_id, geometry) where geometry
-    is array<struct<lon,lat>> — the reference's LineString.
+    is array<struct<lon,lat>> — the reference's LineString. ``query_id``
+    must be unique: queries that share an id are ranked as one, so all but
+    k of their answers are lost. A query with a null, NaN or infinite
+    coordinate gets no rows, and a way with no usable geometry (null,
+    empty, or a null or non-finite vertex) is never a candidate.
 
     Shape: queries explode to k-ring candidate cells (the ring doubles each
     round, only for the *unfinished* remainder), ways are indexed by the
@@ -370,6 +379,11 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     cross join is small.
     """
     spark = queries.sparkSession
+    queries = queries.where(_finite_sql("lon", "lat"))
+    # both the cell index and the brute-force remainder read the kept ways
+    ways = ways.where(
+        "size(geometry) > 0 AND "
+        f"forall(geometry, p -> {_finite_sql('p.lon', 'p.lat')})")
 
     # ways → (cell, way_id, geometry) index; a way appears once per distinct
     # vertex cell

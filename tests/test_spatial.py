@@ -152,6 +152,41 @@ def test_knn_join_empty_result_leaves_queries_schema(spark):
     assert out.count() == 0
 
 
+WAY_SCHEMA = "way_id string, geometry array<struct<lon:double,lat:double>>"
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_knn_join_skips_ways_without_usable_geometry(spark, k):
+    """An empty, null or null-vertex geometry is never a candidate: it
+    neither fails the cell index (``element_at`` of an empty array) nor
+    the brute-force remainder's distance kernel (k=2 over one usable way
+    reaches it)."""
+    ways = spark.createDataFrame(
+        [("good", [{"lon": 1.0, "lat": 1.0}, {"lon": 1.1, "lat": 1.0}]),
+         ("empty", []), ("null", None), ("null_vertex", [None]),
+         ("nan_vertex", [{"lon": float("nan"), "lat": 1.0}])], WAY_SCHEMA)
+    queries = spark.createDataFrame(
+        [("q", 1.05, 1.01)], "query_id string, lon double, lat double")
+    out = knn_join(queries, ways, k=k, level=8, max_ring=2).collect()
+    assert [(r["query_id"], r["way_id"], r["rank"]) for r in out] == [("q", "good", 1)]
+    assert abs(out[0]["dist"] - 0.01) < 1e-9
+
+
+def test_knn_join_non_finite_queries_get_no_rows(spark):
+    """A query with a null, NaN or infinite coordinate gets no rows (not an
+    arbitrary rank-1 way with a null or infinite distance)."""
+    ways = spark.createDataFrame(
+        [("a", [{"lon": 0.0, "lat": 0.0}]), ("b", [{"lon": 2.0, "lat": 0.0}])],
+        WAY_SCHEMA)
+    queries = spark.createDataFrame(
+        [("good", 0.1, 0.0), ("null", None, 0.0), ("nan", 0.0, float("nan")),
+         ("pinf", float("inf"), 0.0), ("ninf", 0.0, float("-inf"))],
+        "query_id string, lon double, lat double")
+    out = knn_join(queries, ways, k=1, level=8, max_ring=2).collect()
+    assert [(r["query_id"], r["way_id"]) for r in out] == [("good", "a")]
+    assert abs(out[0]["dist"] - 0.1) < 1e-9
+
+
 # every level a cell_expr caller uses: distance_join's bounds (1, 14), the
 # locale tests (8), the fused pipeline (10), the default (12)
 ENCODER_LEVELS = (1, 8, 10, 12, 14)
