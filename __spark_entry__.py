@@ -207,7 +207,7 @@ def _q_knn(spark, sf_dir):
     # k=2 because each query point coincides with its own site (dist 0);
     # the self-site is dropped after the join
     out = knn_join(queries, sites, k=2, level=4, max_ring=8,
-                   query_id="query_id", way_id="site_id")
+                   way_id="site_id")
     out = out.where(F.col("query_id") != F.col("site_id"))
     from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(),
@@ -234,7 +234,7 @@ def _q_knn3(spark, sf_dir):
     # k=5: self (dist 0) + 3 wanted + 1 slack so a tie at the cutoff
     # can't exclude the oracle's pick; ranked after the self-drop
     out = knn_join(queries, sites, k=5, level=4, max_ring=8,
-                   query_id="query_id", way_id="site_id")
+                   way_id="site_id")
     out = out.where(F.col("query_id") != F.col("site_id"))
     from pyspark.sql import Window
     w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(),

@@ -9,11 +9,11 @@ is a pure narrow map, so it pipelines with the scan and with downstream
 writes.
 
 The forward stage never runs Python per row: the JVM reduces each row's
-tag map to one exact key string, and per batch Python dictionary-encodes
-(key, locale, config) and emits the distinct output rows with ``take``
-back in batch order. The memo has two levels: the batch's distinct exact
-rows, and a per-task memo of kernel rows keyed only by what the kernel
-reads — the tags without the passthrough ``name``/``ref``, the locale's
+tag map to one lane key string (the tags without ``name``/``ref``, which
+pass through as plain columns), and per batch Python dictionary-encodes
+(key, locale, config) and emits the distinct kernel rows with ``take``
+back in batch order. The memo has two levels: the batch's distinct rows,
+and a per-task memo of kernel rows keyed by the lane key, the locale's
 rule class (:meth:`Locale.rule_key`) and the config — so the kernel runs
 once per distinct lane-relevant key.
 """
@@ -39,10 +39,10 @@ from ..schemas import ROAD_SCHEMA, TAGS_SCHEMA
 from .span_assembly import with_tags
 
 _ACCESS_MODES = ("foot", "bicycle", "taxi", "bus", "motor")
-_ROAD_FIELDS = ("name", "ref", "highway", "lifecycle", "lit", "tracktype",
-                "smoothness")
+_ROAD_FIELDS = ("highway", "lifecycle", "lit", "tracktype", "smoothness")
 _ROAD_ARROW = to_arrow_schema(ROAD_SCHEMA)
-_ROAD_VALUES = pa.schema([f for f in _ROAD_ARROW if f.name != "doc_id"])
+# what the kernel decides: ROAD_SCHEMA after doc_id, name and ref
+_KERNEL_VALUES = pa.schema(list(_ROAD_ARROW)[3:])
 _TAGS_ARROW = to_arrow_schema(TAGS_SCHEMA)
 # a tags_error key starts with a character no JSON object starts with
 _ERROR_PREFIX = "!"
@@ -51,16 +51,17 @@ _ERROR_PREFIX = "!"
 _MEMO_SIZE = 65536
 
 
-# Exact canonical key of one row's tags, as SQL (computed JVM-side): the
-# JSON of the tag map with its entries sorted by key, or "!" + tags_error
-# for a rejected row. Never a hash, never null.
+# Exact canonical lane key of one row, as SQL (computed JVM-side): the
+# JSON of the tag map without name and ref, entries sorted by key, or
+# "!" + tags_error for a rejected row; never a hash, never null. The kernel
+# only copies name and ref, so they leave as plain columns (null when
+# absent, and on a rejected row, whose tags are null).
 _TAGS_KEY = ("CASE WHEN tags_error IS NULL"
-             " THEN to_json(map_from_entries(array_sort(map_entries(tags))))"
+             " THEN to_json(map_from_entries(array_sort(map_entries("
+             "map_filter(tags, (k, v) -> k NOT IN ('name', 'ref'))))))"
              f" ELSE concat('{_ERROR_PREFIX}', tags_error) END")
-
-
-# the kernel copies these tags to its output and reads them for nothing else
-_PASSTHROUGH = ("name", "ref")
+_KEY_COLUMNS = (f"{_TAGS_KEY} AS key", "tags['name'] AS name",
+                "tags['ref'] AS ref")
 
 
 @functools.lru_cache(maxsize=4096)
@@ -70,7 +71,7 @@ def _rule_key(iso: Optional[str], driving_side: Optional[str]) -> tuple:
 
 def _transform_row(tags: dict, iso: Optional[str], driving_side: Optional[str],
                    include_separators: bool) -> dict:
-    """One ROAD_SCHEMA row (without ``doc_id``); absent fields are null."""
+    """One kernel row (``_KERNEL_VALUES``); absent fields are null."""
     locale = Locale.build(iso, driving_side)
     try:
         res = tags_to_lanes(tags, locale, include_separators=include_separators)
@@ -87,43 +88,39 @@ def _transform_row(tags: dict, iso: Optional[str], driving_side: Optional[str],
 
 def _memo_row(memo: dict, key: str, iso: Optional[str],
               driving_side: Optional[str], include_separators: bool) -> dict:
-    """The row of one exact (key, iso, side, include_separators): the
-    kernel row of its lane-relevant key, from ``memo`` or computed into it,
-    with this row's own ``name`` and ``ref``."""
+    """The kernel row of one (lane key, iso, side, include_separators),
+    from ``memo`` (keyed by the locale's rule class) or computed into it."""
     if key.startswith(_ERROR_PREFIX):
         return {"error": key[len(_ERROR_PREFIX):]}
-    tags = json.loads(key)
-    own = {f: tags.pop(f, None) for f in _PASSTHROUGH}
-    lane_key = (tuple(tags.items()), _rule_key(iso, driving_side),
-                include_separators)
+    lane_key = (key, _rule_key(iso, driving_side), include_separators)
     row = memo.get(lane_key)
     if row is None:
         if len(memo) >= _MEMO_SIZE:
             memo.pop(next(iter(memo)))
-        row = memo[lane_key] = _transform_row(tags, iso, driving_side,
-                                              include_separators)
-    return row if "error" in row else {**row, **own}
+        row = memo[lane_key] = _transform_row(json.loads(key), iso,
+                                              driving_side, include_separators)
+    return row
 
 
-def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
-                        locale_resolver=None) -> DataFrame:
+def tags_to_lanes_stage(df: DataFrame, locale_resolver=None) -> DataFrame:
     """documents(+locale columns) → ROAD_SCHEMA rows.
 
     Expects columns: ``doc_id``, ``spans`` and optionally ``iso_3166_2`` /
     ``driving_side`` (produced upstream by the spatial locale join or
-    carried on the fixture) and a per-row ``include_separators``. Narrow
-    map stage — no shuffle.
+    carried on the fixture) and a per-row ``include_separators`` (True
+    when the column is absent, False where it is null). Narrow map stage —
+    no shuffle.
 
-    Only ``doc_id``, the tag key (``_TAGS_KEY``: the sorted tag map as
-    JSON, or ``"!" + tags_error``), the locale inputs and the optional
-    ``include_separators`` cross to Python. The memo has two levels. Per
-    batch, ``np.unique`` finds the distinct exact
-    ``(key, iso, side, include_separators)`` rows. Each of them is looked up
-    in a per-task FIFO dict bounded at 65 536 entries, keyed by (the tags
-    without ``name``/``ref``, the locale's ``rule_key()``,
-    ``include_separators``); the kernel runs only on a miss, with the first
-    locale of that rule class. A hit takes the row's own ``name`` and
-    ``ref``; an error row keeps them null.
+    Only ``doc_id``, the lane key (``_TAGS_KEY``: the sorted tag map
+    without ``name``/``ref`` as JSON, or ``"!" + tags_error``), ``name``,
+    ``ref``, the locale inputs and the optional ``include_separators``
+    cross to Python. The memo has two levels. Per batch, ``np.unique``
+    finds the distinct ``(key, iso, side, include_separators)`` rows. Each
+    of them is looked up in a per-task FIFO dict bounded at 65 536 entries,
+    keyed by (key, the locale's ``rule_key()``, ``include_separators``);
+    the kernel runs only on a miss, with the first locale of that rule
+    class. Every row takes its own ``name`` and ``ref`` from its columns;
+    an error row keeps them null.
 
     ``locale_resolver``: optional fused spatial-locale resolution — a
     ``spatial.joins.LocaleResolver`` (from the memoised
@@ -139,7 +136,7 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
     operator.
     """
     columns = df.columns
-    cols = ["doc_id", f"{_TAGS_KEY} AS key"]
+    cols = ["doc_id", *_KEY_COLUMNS]
     if locale_resolver is not None:
         from ..spatial.joins import NO_CELL, cell_sql
         shipped = locale_resolver.broadcast(df.sparkSession.sparkContext)
@@ -170,7 +167,7 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
         memo: dict = {}
         for batch in batches:
             inc = (batch.column("include_separators").fill_null(False) if has_inc
-                   else pa.repeat(bool(include_separators), batch.num_rows))
+                   else pa.repeat(True, batch.num_rows))
             encoded = [pc.dictionary_encode(c, null_encoding="encode")
                        for c in (batch.column("key"), *locale(batch), inc)]
             codes = np.column_stack([e.indices.to_numpy() for e in encoded])
@@ -179,10 +176,14 @@ def tags_to_lanes_stage(df: DataFrame, include_separators: bool = True,
             values = [e.dictionary.to_pylist() for e in encoded]
             rows = [_memo_row(memo, *(v[c] for v, c in zip(values, codes[i])))
                     for i in first]
-            out = pa.RecordBatch.from_pylist(rows, schema=_ROAD_VALUES)
+            out = pa.RecordBatch.from_pylist(rows, schema=_KERNEL_VALUES)
             out = out.take(pa.array(inverse.reshape(-1)))
+            failed = out.column("error").is_valid()
+            own = [pc.if_else(failed, None, batch.column(c))
+                   for c in _ROAD_ARROW.names[1:3]]
             yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), *out.columns], schema=_ROAD_ARROW)
+                [batch.column("doc_id"), *own, *out.columns],
+                schema=_ROAD_ARROW)
 
     return prepared.mapInArrow(run, schema=ROAD_SCHEMA)
 

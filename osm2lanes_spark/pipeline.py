@@ -57,7 +57,6 @@ def lanes_pipeline(docs: DataFrame,
                    polygons: Optional[dict[str, np.ndarray]] = None,
                    level: int = 10,
                    strategy: str = "map",
-                   include_separators: bool = True,
                    fused: bool = True) -> DataFrame:
     """Full pipeline. When ``polygons`` is None the documents must already
     carry locale columns (iso_3166_2 / driving_side).
@@ -77,8 +76,7 @@ def lanes_pipeline(docs: DataFrame,
     """
     if polygons is not None and fused:
         return tags_to_lanes_stage(
-            docs, include_separators=include_separators,
-            locale_resolver=make_locale_resolver(polygons, level))
+            docs, locale_resolver=make_locale_resolver(polygons, level))
     if polygons is not None:
         docs = resolve_locale(docs, polygons, level=level, strategy=strategy)
-    return tags_to_lanes_stage(docs, include_separators=include_separators)
+    return tags_to_lanes_stage(docs)

@@ -202,6 +202,11 @@ def test_tags_key_exact(spark):
         ("named", base + ["name=Hauptstraße", "ref=B 1"], "DE", "right", True),
         ("named_other", base + ["name=Ringstraße"], "DE", "right", True),
         ("ref_only", base + ["ref=B 2"], "DE", "right", True),
+        ("road_ref", ["highway=secondary", "lanes=2", "ref=L 5"],
+         "DE", "right", True),
+        ("empty_name", base + ["name="], "DE", "right", True),
+        # only the exact keys pass through; these stay in the lane key
+        ("name_like", base + ["Name=X", "name:en=X"], "DE", "right", True),
         # FR shares DE's rule class; NL (lane width) and US (centre line
         # colour) have classes of their own
         ("de", two_way, "DE", "right", True),
@@ -215,6 +220,8 @@ def test_tags_key_exact(spark):
          "DE", "right", True),
         ("duplicate_named", ["highway=primary", "highway=trunk", "name=X"],
          "DE", "right", True),
+        ("name_only", ["name=Hauptstraße"], "DE", "right", True),
+        ("not_road_ref", ["building=yes", "ref=R2"], "DE", "right", True),
     ]
     rows = [(d, None if texts is None else _tag_spans(texts), iso, side, inc)
             for d, texts, iso, side, inc in docs]
@@ -252,3 +259,6 @@ def test_tags_key_exact(spark):
         assert not same(a, b), (a, b)
     assert (out["named"]["name"], out["named"]["ref"]) == ("Hauptstraße", "B 1")
     assert out["odd"]["name"] == 'say "hi"' and out["odd"]["ref"] == "a\\b"
+    assert (out["road_ref"]["name"], out["road_ref"]["ref"]) == (None, "L 5")
+    assert out["empty_name"]["name"] == "" and out["name_like"]["name"] is None
+    assert same_lanes("base", "empty_name") and same("base", "name_like")

@@ -187,6 +187,31 @@ def test_knn_join_non_finite_queries_get_no_rows(spark):
     assert abs(out[0]["dist"] - 0.1) < 1e-9
 
 
+def test_knn_join_ranks_each_query_row(spark):
+    """Queries that share an id are ranked apart: each gets its own k
+    rows, none is lost to the other."""
+    ways = spark.createDataFrame(
+        [("a", [{"lon": 0.0, "lat": 0.0}]), ("b", [{"lon": 2.0, "lat": 0.0}])],
+        WAY_SCHEMA)
+    queries = spark.createDataFrame(
+        [("dup", 0.1, 0.0), ("dup", 1.9, 0.0)],
+        "query_id string, lon double, lat double")
+    out = knn_join(queries, ways, k=1, level=8, max_ring=2)
+    assert out.columns == ["query_id", "lon", "lat", "way_id", "dist", "rank"]
+    got = sorted((r["query_id"], r["lon"], r["way_id"], r["rank"])
+                 for r in out.collect())
+    assert got == [("dup", 0.1, "a", 1), ("dup", 1.9, "b", 1)]
+
+
+@pytest.mark.parametrize("k", [0, -1])
+def test_knn_join_rejects_k_below_one(spark, k):
+    ways = spark.createDataFrame([("a", [{"lon": 0.0, "lat": 0.0}])], WAY_SCHEMA)
+    queries = spark.createDataFrame(
+        [("q", 0.1, 0.0)], "query_id string, lon double, lat double")
+    with pytest.raises(ValueError, match="k must be at least 1"):
+        knn_join(queries, ways, k=k)
+
+
 # every level a cell_expr caller uses: distance_join's bounds (1, 14), the
 # locale tests (8), the fused pipeline (10), the default (12)
 ENCODER_LEVELS = (1, 8, 10, 12, 14)
