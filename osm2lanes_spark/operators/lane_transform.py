@@ -16,6 +16,9 @@ back in batch order. The memo has two levels: the batch's distinct rows,
 and a per-task memo of kernel rows keyed by the lane key, the locale's
 rule class (:meth:`Locale.rule_key`) and the config — so the kernel runs
 once per distinct lane-relevant key.
+
+Both stages end each task with :func:`session.drop_zip_finders`, so the
+worker's next task does not re-read ``pyspark.zip``'s directory.
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ from ..core.locale import Locale
 from ..core.model import RoadError
 from ..core.tags_to_lanes import tags_to_lanes
 from ..schemas import ROAD_SCHEMA, TAGS_SCHEMA
+from ..session import drop_zip_finders
 from .span_assembly import with_tags
 
 _ACCESS_MODES = ("foot", "bicycle", "taxi", "bus", "motor")
@@ -165,25 +169,28 @@ def tags_to_lanes_stage(df: DataFrame, locale_resolver=None) -> DataFrame:
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         memo: dict = {}
-        for batch in batches:
-            inc = (batch.column("include_separators").fill_null(False) if has_inc
-                   else pa.repeat(True, batch.num_rows))
-            encoded = [pc.dictionary_encode(c, null_encoding="encode")
-                       for c in (batch.column("key"), *locale(batch), inc)]
-            codes = np.column_stack([e.indices.to_numpy() for e in encoded])
-            _, first, inverse = np.unique(codes, axis=0, return_index=True,
-                                          return_inverse=True)
-            values = [e.dictionary.to_pylist() for e in encoded]
-            rows = [_memo_row(memo, *(v[c] for v, c in zip(values, codes[i])))
-                    for i in first]
-            out = pa.RecordBatch.from_pylist(rows, schema=_KERNEL_VALUES)
-            out = out.take(pa.array(inverse.reshape(-1)))
-            failed = out.column("error").is_valid()
-            own = [pc.if_else(failed, None, batch.column(c))
-                   for c in _ROAD_ARROW.names[1:3]]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), *own, *out.columns],
-                schema=_ROAD_ARROW)
+        try:
+            for batch in batches:
+                inc = (batch.column("include_separators").fill_null(False)
+                       if has_inc else pa.repeat(True, batch.num_rows))
+                encoded = [pc.dictionary_encode(c, null_encoding="encode")
+                           for c in (batch.column("key"), *locale(batch), inc)]
+                codes = np.column_stack([e.indices.to_numpy() for e in encoded])
+                _, first, inverse = np.unique(codes, axis=0, return_index=True,
+                                              return_inverse=True)
+                values = [e.dictionary.to_pylist() for e in encoded]
+                rows = [_memo_row(memo, *(v[c] for v, c in zip(values, codes[i])))
+                        for i in first]
+                out = pa.RecordBatch.from_pylist(rows, schema=_KERNEL_VALUES)
+                out = out.take(pa.array(inverse.reshape(-1)))
+                failed = out.column("error").is_valid()
+                own = [pc.if_else(failed, None, batch.column(c))
+                       for c in _ROAD_ARROW.names[1:3]]
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("doc_id"), *own, *out.columns],
+                    schema=_ROAD_ARROW)
+        finally:
+            drop_zip_finders()
 
     return prepared.mapInArrow(run, schema=ROAD_SCHEMA)
 
@@ -232,9 +239,13 @@ def lanes_to_tags_stage(df: DataFrame, check_roundtrip: bool = True) -> DataFram
     """ROAD_SCHEMA rows → tag maps (the reverse transform, L1-L10)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            rows = [_reverse_row(r, check_roundtrip) for r in batch.to_pylist()]
-            yield pa.RecordBatch.from_pylist(rows, schema=_TAGS_ARROW)
+        try:
+            for batch in batches:
+                rows = [_reverse_row(r, check_roundtrip)
+                        for r in batch.to_pylist()]
+                yield pa.RecordBatch.from_pylist(rows, schema=_TAGS_ARROW)
+        finally:
+            drop_zip_finders()
 
     cols = ["doc_id", "highway", "lifecycle", "lanes"]
     for extra in ("iso_3166_2", "driving_side"):

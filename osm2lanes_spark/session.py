@@ -2,12 +2,15 @@
 
 Settings chosen for the 100 TB design point (AQE + skew-join handling on,
 Arrow batches for the Python stages, partition sizing) but safe on
-``local[*]``; tests override parallelism via ``cpus``.
+``local[*]``; tests override parallelism via ``cpus``. Also the one
+worker-side hook every engine Python stage calls: :func:`drop_zip_finders`.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -40,3 +43,21 @@ def get_spark(app: str = "osm2lanes-spark", cpus: int | None = None,
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def drop_zip_finders() -> None:
+    """Forget the process's cached ``zipimporter`` path finders.
+
+    A PySpark worker calls ``importlib.invalidate_caches()`` at the start of
+    every task, and on CPython 3.11 that makes each cached ``zipimporter``
+    re-read its whole archive directory: 16 finders over ``pyspark.zip`` in
+    a reused worker, 0.15-0.4 s per task. The engine's Python stages call
+    this as a task's Python work ends, so the next task has none to re-read.
+    Loaded modules keep their own loaders, and a later import from the
+    archive builds a new finder from ``zipimport._zip_directory_cache``
+    without reading it again. On 3.12+ the invalidation is lazy and this
+    only drops a few cache entries.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]

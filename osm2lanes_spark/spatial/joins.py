@@ -14,6 +14,9 @@ per SparkContext as a broadcast, and looked up inside a narrow Arrow map —
 the fact side is never shuffled, so a hot city cell cannot pin a reducer.
 The PIP refinement runs only on boundary cells (``full`` covering cells
 skip it) and is a vectorized numpy kernel inside Arrow batches.
+
+Every Python UDF here ends each call with :func:`session.drop_zip_finders`,
+so a reused worker's next task does not re-read ``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
 from . import cells as C
 from . import polygons as P
 
@@ -166,8 +170,10 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         @F.pandas_udf(T.StringType())
         def resolve_udf(cell_s: pd.Series, lon_s: pd.Series,
                         lat_s: pd.Series) -> pd.Series:
-            return pd.Series(shipped.value(
-                cell_s.to_numpy(), lon_s.to_numpy(), lat_s.to_numpy())[0])
+            keys = shipped.value(
+                cell_s.to_numpy(), lon_s.to_numpy(), lat_s.to_numpy())[0]
+            drop_zip_finders()
+            return pd.Series(keys)
 
         cell = F.expr(f"coalesce(cell, {NO_CELL}L)")
         return pts.withColumn("key", resolve_udf(cell, "lon", "lat")).drop("cell")
@@ -186,6 +192,7 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         hit[has] = refine(np.searchsorted(resolver.keys[:-1], keys[has]),
                           lon_s.to_numpy(np.float64)[has],
                           lat_s.to_numpy(np.float64)[has], resolver.rings)
+        drop_zip_finders()
         return pd.Series(hit)
 
     # Match flag: covering-cell hit refined by PIP only on boundary cells.
@@ -397,6 +404,7 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
         for g in geom:
             pts = np.array([[p["lon"], p["lat"]] for p in g], np.float64)
             out.append(C.cover_polyline(pts, level).tolist())
+        drop_zip_finders()
         return pd.Series(out)
 
     from ..util import spread
@@ -442,6 +450,7 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
         @F.pandas_udf(T.ArrayType(T.LongType()))
         def cells_udf(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
             base = C.encode(lon_s.to_numpy(), lat_s.to_numpy(), level)
+            drop_zip_finders()
             return pd.Series([C.k_ring(int(c), ring_k).tolist() for c in base])
 
         return df.withColumn("cell", F.explode(cells_udf(F.col("lon"), F.col("lat"))))
@@ -458,6 +467,7 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
             else:
                 out[i] = float(P.point_to_segment_dist(
                     np.array([lons[i]]), np.array([lats[i]]), ring)[0])
+        drop_zip_finders()
         return pd.Series(out)
 
     min_cell_dim = 180.0 / (1 << level)  # lat extent is the tighter one
