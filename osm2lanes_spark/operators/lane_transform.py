@@ -8,9 +8,10 @@ straight from the kernel's dicts. No shuffle is introduced — each stage
 is a pure narrow map, so it pipelines with the scan and with downstream
 writes.
 
-The forward stage never runs Python per row: the JVM reduces each row's
-tag map to one lane key string (the tags without ``name``/``ref``, which
-pass through as plain columns), and per batch Python dictionary-encodes
+The forward stage never runs Python per row and builds no tag map: the
+JVM reduces each row's tag-span texts to one lane key string (the sorted
+texts without ``name``/``ref``, which pass through as plain columns, as
+a JSON array), and per batch Python dictionary-encodes
 (key, locale, config) and emits the distinct kernel rows with ``take``
 back in batch order. The memo has two levels: the batch's distinct rows,
 and a per-task memo of kernel rows keyed by the lane key, the locale's
@@ -40,7 +41,7 @@ from ..core.model import RoadError
 from ..core.tags_to_lanes import tags_to_lanes
 from ..schemas import ROAD_SCHEMA, TAGS_SCHEMA
 from ..session import drop_zip_finders
-from .span_assembly import with_tags
+from .span_assembly import tag_texts, tags_error
 
 _ACCESS_MODES = ("foot", "bicycle", "taxi", "bus", "motor")
 _ROAD_FIELDS = ("highway", "lifecycle", "lit", "tracktype", "smoothness")
@@ -48,24 +49,38 @@ _ROAD_ARROW = to_arrow_schema(ROAD_SCHEMA)
 # what the kernel decides: ROAD_SCHEMA after doc_id, name and ref
 _KERNEL_VALUES = pa.schema(list(_ROAD_ARROW)[3:])
 _TAGS_ARROW = to_arrow_schema(TAGS_SCHEMA)
-# a tags_error key starts with a character no JSON object starts with
+# a tags_error key starts with a character no JSON array starts with
 _ERROR_PREFIX = "!"
 # OSM repeats tag sets heavily, so a task memoises rows across batches;
 # FIFO-bounded so skew cannot grow worker memory
 _MEMO_SIZE = 65536
 
 
-# Exact canonical lane key of one row, as SQL (computed JVM-side): the
-# JSON of the tag map without name and ref, entries sorted by key, or
-# "!" + tags_error for a rejected row; never a hash, never null. The kernel
-# only copies name and ref, so they leave as plain columns (null when
-# absent, and on a rejected row, whose tags are null).
-_TAGS_KEY = ("CASE WHEN tags_error IS NULL"
-             " THEN to_json(map_from_entries(array_sort(map_entries("
-             "map_filter(tags, (k, v) -> k NOT IN ('name', 'ref'))))))"
-             f" ELSE concat('{_ERROR_PREFIX}', tags_error) END")
-_KEY_COLUMNS = (f"{_TAGS_KEY} AS key", "tags['name'] AS name",
-                "tags['ref'] AS ref")
+# Exact canonical lane key of one row, as SQL over its tag texts
+# (``_texts``) and their parse error (``_err``), computed JVM-side: the
+# JSON array of the sorted "k=v" texts other than name and ref, or
+# "!" + tags_error for a rejected row; never a hash, never null. Keys are
+# unique in an accepted row, so two accepted rows share a key exactly when
+# their tags other than name and ref are equal. The kernel only copies
+# name and ref, so they leave as plain columns (null when absent; the
+# stage nulls them on any error row).
+_KEY_COLUMNS = (
+    "CASE WHEN _err IS NULL THEN to_json(array_sort(filter(_texts,"
+    " t -> NOT (startswith(t, 'name=') OR startswith(t, 'ref=')))))"
+    f" ELSE concat('{_ERROR_PREFIX}', _err) END AS key",
+    "substr(get(filter(_texts, t -> startswith(t, 'name=')), 0), 6) AS name",
+    "substr(get(filter(_texts, t -> startswith(t, 'ref=')), 0), 5) AS ref")
+
+
+def _lane_inputs(df: DataFrame, carried: list) -> DataFrame:
+    """The JVM side of the forward stage: ``doc_id``, the lane key,
+    ``name``, ``ref`` and the ``carried`` columns of ``df``, straight from
+    the tag texts (no tag map is built)."""
+    texts = tag_texts("spans")
+    return (df.selectExpr("doc_id", f"{texts} AS _texts", *carried)
+            .selectExpr("doc_id", "_texts", f"{tags_error('_texts')} AS _err",
+                        *carried)
+            .selectExpr("doc_id", *_KEY_COLUMNS, *carried))
 
 
 @functools.lru_cache(maxsize=4096)
@@ -101,8 +116,9 @@ def _memo_row(memo: dict, key: str, iso: Optional[str],
     if row is None:
         if len(memo) >= _MEMO_SIZE:
             memo.pop(next(iter(memo)))
-        row = memo[lane_key] = _transform_row(json.loads(key), iso,
-                                              driving_side, include_separators)
+        tags = dict(t.split("=", 1) for t in json.loads(key))
+        row = memo[lane_key] = _transform_row(tags, iso, driving_side,
+                                              include_separators)
     return row
 
 
@@ -115,10 +131,14 @@ def tags_to_lanes_stage(df: DataFrame, locale_resolver=None) -> DataFrame:
     when the column is absent, False where it is null). Narrow map stage —
     no shuffle.
 
-    Only ``doc_id``, the lane key (``_TAGS_KEY``: the sorted tag map
-    without ``name``/``ref`` as JSON, or ``"!" + tags_error``), ``name``,
-    ``ref``, the locale inputs and the optional ``include_separators``
-    cross to Python. The memo has two levels. Per batch, ``np.unique``
+    Only ``doc_id``, the lane key (``_KEY_COLUMNS``: the sorted ``k=v``
+    tag texts without ``name``/``ref`` as a JSON array, or
+    ``"!" + tags_error``), ``name``, ``ref``, the locale inputs and the
+    optional ``include_separators`` cross to Python; the JVM builds them
+    from the tag texts (``span_assembly.tag_texts``) under
+    ``span_assembly.tags_error``, the rule ``with_tags`` applies, and
+    builds no tag map. A memo miss splits the key's texts on their first
+    ``=``. The memo has two levels. Per batch, ``np.unique``
     finds the distinct ``(key, iso, side, include_separators)`` rows. Each
     of them is looked up in a per-task FIFO dict bounded at 65 536 entries,
     keyed by (key, the locale's ``rule_key()``, ``include_separators``);
@@ -128,42 +148,37 @@ def tags_to_lanes_stage(df: DataFrame, locale_resolver=None) -> DataFrame:
 
     ``locale_resolver``: optional fused spatial-locale resolution — a
     ``spatial.joins.LocaleResolver`` (from the memoised
-    ``make_locale_resolver``). When given, the ``cell`` is computed
-    JVM-side and locale resolves inside THIS Arrow stage, so the whole
-    pipeline is one Python stage per task (two stacked Python runners per
-    core measurably degrade throughput). The index ships once per
-    SparkContext as a broadcast; the task closure holds only its handle.
+    ``make_locale_resolver``). When given, ``lon``/``lat`` cross to
+    Python instead of the locale columns, and the cell encode (numpy,
+    :meth:`LocaleResolver.locate`) and the locale lookup run inside THIS
+    Arrow stage, so the whole pipeline is one Python stage per task (two
+    stacked Python runners per core measurably degrade throughput). The
+    index ships once per SparkContext as a broadcast; the task closure
+    holds only its handle.
 
-    The JVM side of the plan (span assembly, the key, the cell encode) is
+    The JVM side of the plan (the tag texts, their error, the key) is
     Spark SQL text built by cached pure-Python functions, so each
     expression reaches the JVM in one py4j call, not one per Column
     operator.
     """
     columns = df.columns
-    cols = ["doc_id", *_KEY_COLUMNS]
     if locale_resolver is not None:
-        from ..spatial.joins import NO_CELL, cell_sql
         shipped = locale_resolver.broadcast(df.sparkSession.sparkContext)
-        # null as NO_CELL: the column must reach numpy as int64
-        cell = cell_sql("lon", "lat", locale_resolver.level)
-        cols += [f"coalesce({cell}, {NO_CELL}L) AS cell", "lon", "lat"]
-        locale_cols = ()
+        carried = ["lon", "lat"]
     else:
         shipped = None
-        locale_cols = [c for c in ("iso_3166_2", "driving_side")
-                       if c in columns]
-        cols += locale_cols
+        carried = [c for c in ("iso_3166_2", "driving_side") if c in columns]
     has_inc = "include_separators" in columns  # per-row config override
     if has_inc:
-        cols.append("include_separators")
-    prepared = with_tags(df).selectExpr(*cols)
+        carried.append("include_separators")
+    prepared = _lane_inputs(df, carried)
 
     def locale(batch: pa.RecordBatch) -> list:
         if shipped is not None:
-            return [pa.array(a, pa.string()) for a in shipped.value(
+            return [pa.array(a, pa.string()) for a in shipped.value.locate(
                 *(batch.column(c).to_numpy(zero_copy_only=False)
-                  for c in ("cell", "lon", "lat")))]
-        return [batch.column(c) if c in locale_cols
+                  for c in ("lon", "lat")))]
+        return [batch.column(c) if c in carried
                 else pa.nulls(batch.num_rows, pa.string())
                 for c in ("iso_3166_2", "driving_side")]
 

@@ -11,7 +11,10 @@ whole-stage codegen, but never leave the JVM).
 
 The assembly is written as Spark SQL text built by cached pure-Python
 functions and applied with ``F.expr``: building it as Columns cost one
-py4j round trip per lambda, literal and operator on every plan.
+py4j round trip per lambda, literal and operator on every plan. The tag
+texts (:func:`tag_texts`) and their parse error (:func:`tags_error`) are
+exported, so the lane stage keys its rows on the texts without building
+the map, under the same rejection rule.
 """
 
 from __future__ import annotations
@@ -40,37 +43,46 @@ def tag_entries(spans: str) -> str:
 
 
 @functools.lru_cache(maxsize=256)
-def _with_tags_sql(spans_col: str) -> tuple[str, str, str]:
-    """SQL text of (tag entries, tags_error, tags) over ``spans_col``,
-    cached per process; the last two read the entries from a
-    ``_tag_entries`` column."""
-    # null spans assemble like no spans
-    spans = f"coalesce({spans_col}, array())"
-    bad = (f"exists(filter({spans}, s -> s.kind = 'tag'),"
-           " s -> s.text IS NULL OR NOT contains(s.text, '='))")
-    dup = "size(_tag_entries.key) != size(array_distinct(_tag_entries.key))"
-    error = (f"CASE WHEN {bad} THEN 'bad_tag'"
-             f" WHEN {dup} THEN 'duplicate_key' END")
-    tags = "CASE WHEN tags_error IS NULL THEN map_from_entries(_tag_entries) END"
-    return tag_entries(spans), error, tags
+def tag_texts(spans: str) -> str:
+    """SQL text: ``spans`` → ``array<string>`` of the tag spans' texts, in
+    span order (not offset order); null ``spans`` give an empty array."""
+    return (f"transform(filter(coalesce({spans}, array()),"
+            " s -> s.kind = 'tag'), s -> s.text)")
+
+
+@functools.lru_cache(maxsize=256)
+def tags_error(texts: str) -> str:
+    """SQL text: the parse error of the tag texts ``texts`` (an
+    ``array<string>``), or null.
+
+    'bad_tag' when a text is null or has no '=' (lib.rs:274
+    ``split_once`` returns Err), else 'duplicate_key' when two texts share
+    the key before their first '=' (lib.rs:96-113). The one rule for every
+    consumer of tag spans: :func:`with_tags` and the lane stage both use it.
+    """
+    bad = f"exists({texts}, t -> t IS NULL OR NOT contains(t, '='))"
+    keys = f"transform({texts}, t -> substring_index(t, '=', 1))"
+    dup = f"size({texts}) != size(array_distinct({keys}))"
+    return (f"CASE WHEN {bad} THEN 'bad_tag'"
+            f" WHEN {dup} THEN 'duplicate_key' END")
 
 
 def with_tags(df: DataFrame, spans_col: str = "spans",
               out_col: str = "tags") -> DataFrame:
     """Add a ``map<string,string>`` tags column assembled from spans.
 
-    Malformed rows are rejected Spark-side, mirroring the reference's
-    parse errors: duplicate keys (lib.rs:96-113) and tag text without an
-    ``=`` separator (lib.rs:274 ``split_once`` returns Err; null text has
-    none either). Offending rows get a NULL map plus ``tags_error`` =
-    'duplicate_key' | 'bad_tag'. Null ``spans`` assemble like no spans: an
-    empty map.
+    Malformed rows are rejected Spark-side by :func:`tags_error`, mirroring
+    the reference's parse errors: duplicate keys and tag text without an
+    ``=`` separator (null text has none either). Offending rows get a NULL
+    map plus ``tags_error`` = 'duplicate_key' | 'bad_tag'. Null ``spans``
+    assemble like no spans: an empty map.
     """
-    entries, error, tags = _with_tags_sql(spans_col)
-    return (df.withColumn("_tag_entries", F.expr(entries))
-            .withColumn("tags_error", F.expr(error))
-            .withColumn(out_col, F.expr(tags))
-            .drop("_tag_entries"))
+    entries = tag_entries(f"coalesce({spans_col}, array())")
+    return (df.withColumn("_tag_texts", F.expr(tag_texts(spans_col)))
+            .withColumn("tags_error", F.expr(tags_error("_tag_texts")))
+            .withColumn(out_col, F.expr(
+                f"CASE WHEN tags_error IS NULL THEN map_from_entries({entries}) END"))
+            .drop("_tag_texts"))
 
 
 def media_refs(spans: Column) -> Column:

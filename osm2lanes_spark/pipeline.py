@@ -1,7 +1,7 @@
 """The flagship end-to-end pipeline.
 
 documents (Iceberg/parquet, interleaved spans, way geometry)
-  → span assembly (Catalyst HOFs, JVM-side)
+  → tag texts → lane key, name, ref (Catalyst HOFs, JVM-side)
   → spatial locale resolution (one broadcast locale index: morton cell
     lookup + PIP refinement)                   [replaces Overpass is_in]
   → tags_to_lanes Arrow stage (ROAD_SCHEMA)
@@ -61,10 +61,11 @@ def lanes_pipeline(docs: DataFrame,
     """Full pipeline. When ``polygons`` is None the documents must already
     carry locale columns (iso_3166_2 / driving_side).
 
-    ``fused`` (default): spatial locale resolution runs inside the lane
-    transform's Arrow stage (cell encode stays JVM) — ONE Python stage per
-    task; two stacked Python runners per core measurably degrade
-    throughput. ``fused=False`` runs ``resolve_locale`` (with ``strategy``)
+    ``fused`` (default): spatial locale resolution, the cell encode
+    included, runs inside the lane transform's Arrow stage on the
+    ``lon``/``lat`` it receives — ONE Python stage per task; two stacked
+    Python runners per core measurably degrade throughput.
+    ``fused=False`` runs ``resolve_locale`` (with ``strategy``)
     as a separate stage first; both paths return the same ``ROAD_SCHEMA``
     rows. A caller that wants the located DataFrame itself calls
     ``resolve_locale``.
@@ -73,6 +74,8 @@ def lanes_pipeline(docs: DataFrame,
     (polygon content, level) by the memoised ``make_locale_resolver`` and
     shipped once per SparkContext as a broadcast, and the JVM plan is
     built from cached Spark SQL text, one py4j call per expression.
+    ``fused=False`` encodes cells JVM-side (``containment_join``) and
+    assembles no tag map either; both encoders give the same cell.
     """
     if polygons is not None and fused:
         return tags_to_lanes_stage(

@@ -60,7 +60,8 @@ def encode(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
     Floor and clamp run in float before the int64 cast (whose result is
     undefined beyond the int64 range), so every finite coordinate gets the
     JVM encoder's cell (``joins.cell_sql``); ±inf clamps to an edge and
-    NaN to the west/south edge (the JVM encoder gives those a null cell).
+    NaN to the west/south edge (the JVM encoder gives those a null cell,
+    and ``joins.LocaleResolver.locate`` masks them to ``joins.NO_CELL``).
     """
     n = 1 << level
 

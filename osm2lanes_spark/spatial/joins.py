@@ -104,10 +104,12 @@ def cell_expr(lon: str, lat: str, level: int) -> Column:
     """int64 cell id of (lon, lat) at ``level`` — whole-stage-codegen'd.
 
     ``lon``/``lat`` are SQL expressions (a column name, or any double
-    valued SQL). This is the hot-path encoder: at 10^12 rows the encode
-    must not leave the JVM. The numpy kernel in :mod:`cells` is the
-    batch-side twin used inside Arrow UDFs; both give identical ids on
-    every finite input (asserted in tests).
+    valued SQL). This is the encoder of the JVM-side joins
+    (``containment_join``, the kNN join). The fused lane stage already
+    runs Python on every batch, so it encodes with the numpy twin in
+    :mod:`cells` instead (:meth:`LocaleResolver.locate`); both give
+    identical ids on every finite input, and both leave a null, NaN or
+    infinite point without a cell (asserted in tests).
     """
     return F.expr(cell_sql(lon, lat, level))
 
@@ -301,6 +303,18 @@ class LocaleResolver:
                 if SparkContext._active_spark_context is sc:
                     shipped.unpersist()
             self._shipped = None
+
+    def locate(self, lon, lat):
+        """(key, driving_side) arrays of points given as float64 arrays.
+
+        The cells are encoded here with :func:`cells.encode`, the twin of
+        :func:`cell_sql`; a null (NaN in numpy), NaN or infinite coordinate
+        gets :data:`NO_CELL`, as ``cell_sql`` gives it a null cell.
+        """
+        lon, lat = np.asarray(lon, np.float64), np.asarray(lat, np.float64)
+        cell = np.where(np.isfinite(lon) & np.isfinite(lat),
+                        C.encode(lon, lat, self.level), NO_CELL)
+        return self(cell, lon, lat)
 
     def __call__(self, cells_arr, lon, lat):
         valid = pd.notna(cells_arr)

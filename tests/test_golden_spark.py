@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from osm2lanes_spark.core.compare import diff_road, road_eq_expected
@@ -18,10 +19,13 @@ from osm2lanes_spark.core.model import RoadError
 from osm2lanes_spark.core.tags_to_lanes import tags_to_lanes
 from osm2lanes_spark.fixtures.golden import (expected_has_separators,
                                              filter_enabled_lanes, load_cases)
-from osm2lanes_spark.operators.lane_transform import (arrow_lanes_to_internal,
+from osm2lanes_spark.operators.lane_transform import (_lane_inputs,
+                                                      arrow_lanes_to_internal,
                                                       lanes_to_tags_stage,
                                                       tags_to_lanes_stage)
 from osm2lanes_spark.operators.span_assembly import span_fingerprint, with_tags
+
+pytestmark = pytest.mark.lane_engine
 
 
 def test_span_assembly(spark, fixture_dir):
@@ -123,6 +127,15 @@ def test_malformed_spans_rejected(spark):
         # null tag text has no '=' either; the row fails, not the job
         ("null_text", [{"kind": "tag", "text": "highway=trunk", "media_ref": None, "offset": 0},
                        {"kind": "tag", "text": None, "media_ref": None, "offset": 1}]),
+        # name and ref leave the lane key, not the rule
+        ("dup_name", _tag_spans(["highway=trunk", "name=A", "name=B"])),
+        ("dup_ref", _tag_spans(["ref=1", "highway=trunk", "ref=1"])),
+        ("name_no_eq", _tag_spans(["highway=trunk", "name"])),
+        ("name_empty", _tag_spans(["highway=trunk", "name="])),
+        ("destination", _tag_spans(["highway=trunk", "destination=x=y"])),
+        # ':' sorts before '=', so the texts and the keys sort differently
+        ("order_trap", _tag_spans(["highway=secondary", "lanes=2",
+                                   "lanes:forward=1"])),
     ]
     df = spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
@@ -141,6 +154,14 @@ def test_malformed_spans_rejected(spark):
     assert roads["null_spans"]["error"] == "way_not_road"
     assert roads["empty_spans"]["error"] == "way_not_road"
     assert roads["null_text"]["error"] == "bad_tag"
+    # the stage keys rows on the tag texts, not on the map: on every row its
+    # error is with_tags's tags_error, or the kernel's when the tags parse,
+    # and both agree with the reference rule run in-process
+    for doc, spans in rows:
+        texts = None if spans is None else [s["text"] for s in spans]
+        want = _forward_in_process(texts, None, None, True)["error"]
+        parse = want if want in ("bad_tag", "duplicate_key") else None
+        assert (out[doc]["tags_error"], roads[doc]["error"]) == (parse, want), doc
 
 
 def _tag_spans(texts) -> list:
@@ -207,6 +228,7 @@ def test_tags_key_exact(spark):
         ("empty_name", base + ["name="], "DE", "right", True),
         # only the exact keys pass through; these stay in the lane key
         ("name_like", base + ["Name=X", "name:en=X"], "DE", "right", True),
+        ("name_en", base + ["name:en=Main Street"], "DE", "right", True),
         # FR shares DE's rule class; NL (lane width) and US (centre line
         # colour) have classes of their own
         ("de", two_way, "DE", "right", True),
@@ -262,3 +284,19 @@ def test_tags_key_exact(spark):
     assert (out["road_ref"]["name"], out["road_ref"]["ref"]) == (None, "L 5")
     assert out["empty_name"]["name"] == "" and out["name_like"]["name"] is None
     assert same_lanes("base", "empty_name") and same("base", "name_like")
+
+    # the key itself: two accepted rows share one exactly when their tags
+    # other than name and ref are equal; a rejected row's key is its error
+    keys = {r["doc_id"]: r["key"] for r in _lane_inputs(df, []).collect()}
+    lane_tags = {}
+    for doc_id, texts, iso, side, inc in docs:
+        error = _forward_in_process(texts, iso, side, inc)["error"]
+        if error in ("bad_tag", "duplicate_key"):
+            assert keys[doc_id] == "!" + error, doc_id
+        else:
+            lane_tags[doc_id] = {k: v for k, v in (t.split("=", 1) for t in texts or ())
+                                 if k not in ("name", "ref")}
+    for a in lane_tags:
+        for b in lane_tags:
+            assert (keys[a] == keys[b]) == (lane_tags[a] == lane_tags[b]), (a, b)
+    assert keys["name_en"] != keys["base"]

@@ -12,10 +12,14 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
+import pytest
+
 from osm2lanes_spark.core.locale import COUNTRIES, Locale
 from osm2lanes_spark.core.model import RoadError
 from osm2lanes_spark.core.tags_to_lanes import tags_to_lanes
 from osm2lanes_spark.fixtures.golden import load_cases
+
+pytestmark = pytest.mark.lane_engine
 
 CORE = Path(__file__).resolve().parent.parent / "osm2lanes_spark" / "core"
 SIDES = ("left", "right", None)

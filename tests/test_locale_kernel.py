@@ -17,6 +17,8 @@ from osm2lanes_spark.spatial import polygons as P
 from osm2lanes_spark.spatial.joins import (containment_join,
                                            make_locale_resolver)
 
+pytestmark = pytest.mark.lane_engine
+
 STRATEGIES = ["map", "broadcast"]
 LEVEL = 8  # 1.4° x 0.7° cells: most cells near the polygons are boundary cells
 
@@ -157,6 +159,58 @@ def test_fused_pipeline_null_nan_coordinates(null_docs):
     out = lanes_pipeline(null_docs, CORNER, level=LEVEL, fused=True).collect()
     assert sorted(r["doc_id"] for r in out) == sorted(d for d, _, _ in COORDS)
     assert all(r["error"] is None for r in out)
+
+
+# The fused stage encodes cells in numpy (``LocaleResolver.locate``);
+# ``containment_join(strategy="map")`` encodes them JVM-side (``cell_sql``).
+# NZ reaches past the south-west corner and GB past the north-east one,
+# so a clamped -inf would land in NZ's full corner cell and float64 max
+# lands in GB's; FR's points sit in boundary cells.
+EDGES = {**CORNER, "GB": np.array([[170.0, 80.0], [185.0, 80.0],
+                                   [185.0, 95.0], [170.0, 95.0]])}
+INF, MAX = float("inf"), float(np.finfo(np.float64).max)
+EDGE_COORDS = [
+    ("in_nz", -175.0, -85.0), ("in_gb", 175.0, 85.0),
+    ("inf_both", INF, INF), ("neg_inf_both", -INF, -INF),
+    ("inf_lon", INF, 85.0), ("neg_inf_lat", -175.0, -INF),
+    ("nan_both", NAN, NAN), ("nan_lat", 175.0, NAN),
+    ("max_both", MAX, MAX), ("neg_max_both", -MAX, -MAX),
+    ("max_lon", MAX, 1.0), ("null_both", None, None), ("null_lon", None, -85.0),
+    ("fr_edge", 4.0, 1.0), ("fr_vertex", 0.0, 0.0), ("fr_inside", 3.99, 3.99),
+    ("fr_outside", 4.01, 1.0), ("fr_above", 1.0, 4.1)]
+FR_BOUNDARY = ("fr_edge", "fr_vertex", "fr_inside", "fr_outside", "fr_above")
+# the lane output depends on the locale: GB and NZ drive on the left
+EDGE_TAGS = {"highway": "secondary", "lanes": "3", "lanes:forward": "2"}
+
+
+def test_fused_numpy_cell_matches_jvm_cell(spark):
+    docs = spark.createDataFrame(
+        [(d, tags_to_spans(d, EDGE_TAGS), x, y) for d, x, y in EDGE_COORDS],
+        "doc_id string, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
+        "lon double, lat double").coalesce(1)
+    jvm = {r["doc_id"]: r["key"] for r in containment_join(
+        docs.drop("spans"), EDGES, level=LEVEL, strategy="map").collect()}
+    resolver = make_locale_resolver(EDGES, LEVEL)
+    lon = np.array([np.nan if x is None else x for _, x, _ in EDGE_COORDS])
+    lat = np.array([np.nan if y is None else y for _, _, y in EDGE_COORDS])
+    fused, _ = resolver.locate(lon, lat)
+    assert dict(zip((d for d, _, _ in EDGE_COORDS), fused)) == jvm
+    assert jvm["in_nz"] == "NZ" and jvm["max_both"] == "GB"
+    assert jvm["neg_inf_both"] is None and jvm["null_both"] is None
+    # the FR points are in cells that need the PIP refinement
+    fr = [i for i, (d, _, _) in enumerate(EDGE_COORDS) if d in FR_BOUNDARY]
+    for cell in C.encode(lon[fr], lat[fr], LEVEL):
+        candidates = resolver.cells == cell
+        assert candidates.any() and not resolver.full[candidates].any()
+    assert {jvm[d] for d in FR_BOUNDARY} == {"FR", None}
+    # and through the stage: the fused rows equal the JVM-cell path's
+    rows = {r["doc_id"]: r for r in lanes_pipeline(
+        docs, EDGES, level=LEVEL, fused=True).collect()}
+    want = {r["doc_id"]: r for r in lanes_pipeline(
+        docs, EDGES, level=LEVEL, fused=False, strategy="map").collect()}
+    assert rows == want
+    assert rows["in_nz"]["lanes"] != rows["fr_inside"]["lanes"]
 
 
 def test_cell_expr_null_nan(spark, null_docs):

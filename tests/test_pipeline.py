@@ -23,6 +23,8 @@ from osm2lanes_spark.operators.lane_transform import arrow_lanes_to_internal
 from osm2lanes_spark.pipeline import lanes_pipeline, resolve_locale
 from osm2lanes_spark.spatial.raster import rasterize_points, zonal_join
 
+pytestmark = pytest.mark.lane_engine
+
 
 @pytest.fixture(scope="module")
 def geo_cases():

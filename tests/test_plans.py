@@ -40,6 +40,31 @@ def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
     assert "MapInPandas" not in plan
 
 
+def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
+    """The fused lane stage keys rows on the tag texts: no tag map, no JVM
+    cell encode, one Python stage, no shuffle, and only the key, the
+    passthrough tags and the point cross to Python."""
+    from osm2lanes_spark.operators.lane_transform import tags_to_lanes_stage
+    from osm2lanes_spark.spatial.joins import make_locale_resolver
+
+    docs = (spark.read.parquet(fixture_dir["documents"])
+            .withColumn("lon", F.pmod(F.xxhash64("doc_id"), F.lit(360)) - 180.0)
+            .withColumn("lat", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(170)) - 85.0))
+    stage = tags_to_lanes_stage(docs, locale_resolver=make_locale_resolver(
+        G.all_country_polygons(), 8))
+    qe = stage._jdf.queryExecution()
+    optimized = qe.optimizedPlan()
+    text = optimized.toString()
+    for fn in ("map_from_entries", "map_filter", "shiftleft"):
+        assert fn not in text, fn
+    executed = qe.executedPlan().toString()
+    assert executed.count("MapInArrow") == 1 and "Exchange" not in executed
+    assert optimized.nodeName() == "MapInArrow"
+    crossing = optimized.child().output()
+    assert [crossing.apply(i).name() for i in range(crossing.size())] == [
+        "doc_id", "key", "name", "ref", "lon", "lat"]
+
+
 def test_span_assembly_jvm_side(spark, fixture_dir):
     """Span assembly is one JVM projection (higher-order functions are
     interpreted-eval but JVM-side); no Python stage, no shuffle."""

@@ -16,6 +16,8 @@ import pytest
 
 from osm2lanes_spark.session import drop_zip_finders
 
+pytestmark = pytest.mark.lane_engine
+
 _MODULES = ("zip_finders_probe_a", "zip_finders_probe_b")
 
 
