@@ -4,17 +4,18 @@ The reference parses newline-separated ``k=v`` text into an ordered map
 (`/root/reference/osm-tags/src/lib.rs:259-282`, split on the first ``=``,
 duplicate keys are an error — lib.rs:96-113). Here the tag text arrives as
 ``kind='tag'`` spans interleaved with media spans; assembly is expressed
-entirely with Catalyst higher-order functions (filter / array_sort /
-transform / map_from_entries) — JVM-side projections, no shuffle, no
-Python anywhere in this stage (HOFs are interpreted-eval, not
-whole-stage codegen, but never leave the JVM).
+entirely with Catalyst higher-order functions (filter / transform /
+map_from_entries) — JVM-side projections, no shuffle, no Python anywhere
+in this stage (HOFs are interpreted-eval, not whole-stage codegen, but
+never leave the JVM).
 
 The assembly is written as Spark SQL text built by cached pure-Python
 functions and applied with ``F.expr``: building it as Columns cost one
-py4j round trip per lambda, literal and operator on every plan. The tag
-texts (:func:`tag_texts`) and their parse error (:func:`tags_error`) are
-exported, so the lane stage keys its rows on the texts without building
-the map, under the same rejection rule.
+py4j round trip per lambda, literal and operator on every plan. One pass
+over the spans gives the tag texts (:func:`tag_texts`); their parse error
+(:func:`tags_error`) and the tag map of :func:`with_tags` are both read
+from those texts. The lane stage keys its rows on the same texts without
+building the map, under the same rejection rule.
 """
 
 from __future__ import annotations
@@ -23,23 +24,6 @@ import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def tag_entries(spans: str) -> str:
-    """SQL text: ``spans`` → sorted ``array<struct<key,value>>`` of tag pairs.
-
-    Ordering by ``offset`` preserves the document's span sequence; the
-    split on the *first* '=' mirrors Tags::from_str (osm-tags lib.rs:274).
-    """
-    # natural struct ordering (offset leads) instead of a lambda comparator:
-    # comparator lambdas defeat codegen; field-order sort stays compiled
-    tags = (f"array_sort(transform(filter({spans}, s -> s.kind = 'tag'),"
-            " s -> named_struct('offset', s.`offset`, 'text', s.text)))")
-    key = "substring_index(s.text, '=', 1)"
-    # everything after the first '=' (value may itself contain '=')
-    value = f"substr(s.text, length({key}) + 2, length(s.text))"
-    return (f"transform({tags},"
-            f" s -> named_struct('key', {key}, 'value', {value}))")
 
 
 @functools.lru_cache(maxsize=256)
@@ -67,21 +51,26 @@ def tags_error(texts: str) -> str:
             f" WHEN {dup} THEN 'duplicate_key' END")
 
 
-def with_tags(df: DataFrame, spans_col: str = "spans",
-              out_col: str = "tags") -> DataFrame:
-    """Add a ``map<string,string>`` tags column assembled from spans.
+def with_tags(df: DataFrame) -> DataFrame:
+    """Add a ``map<string,string>`` ``tags`` column assembled from ``spans``.
 
-    Malformed rows are rejected Spark-side by :func:`tags_error`, mirroring
-    the reference's parse errors: duplicate keys and tag text without an
+    The map is built from the tag texts in span order: the key is the text
+    before the first '=' and the value everything after it, which may
+    itself contain '=' (Tags::from_str, osm-tags lib.rs:274). Malformed
+    rows are rejected Spark-side by :func:`tags_error`, mirroring the
+    reference's parse errors: duplicate keys and tag text without an
     ``=`` separator (null text has none either). Offending rows get a NULL
     map plus ``tags_error`` = 'duplicate_key' | 'bad_tag'. Null ``spans``
     assemble like no spans: an empty map.
     """
-    entries = tag_entries(f"coalesce({spans_col}, array())")
-    return (df.withColumn("_tag_texts", F.expr(tag_texts(spans_col)))
+    key = "substring_index(t, '=', 1)"
+    value = f"substr(t, length({key}) + 2)"  # everything after the first '='
+    entry = f"named_struct('key', {key}, 'value', {value})"
+    return (df.withColumn("_tag_texts", F.expr(tag_texts("spans")))
             .withColumn("tags_error", F.expr(tags_error("_tag_texts")))
-            .withColumn(out_col, F.expr(
-                f"CASE WHEN tags_error IS NULL THEN map_from_entries({entries}) END"))
+            .withColumn("tags", F.expr(
+                "CASE WHEN tags_error IS NULL THEN"
+                f" map_from_entries(transform(_tag_texts, t -> {entry})) END"))
             .drop("_tag_texts"))
 
 

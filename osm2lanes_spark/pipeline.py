@@ -74,8 +74,10 @@ def lanes_pipeline(docs: DataFrame,
     (polygon content, level) by the memoised ``make_locale_resolver`` and
     shipped once per SparkContext as a broadcast, and the JVM plan is
     built from cached Spark SQL text, one py4j call per expression.
-    ``fused=False`` encodes cells JVM-side (``containment_join``) and
-    assembles no tag map either; both encoders give the same cell.
+    ``fused=False`` assembles no tag map either. With
+    ``strategy='broadcast'`` it encodes cells JVM-side (``cell_sql``); the
+    fused path and ``strategy='map'`` encode them in numpy
+    (``LocaleResolver.locate``). Both encoders give the same cell.
     """
     if polygons is not None and fused:
         return tags_to_lanes_stage(

@@ -57,11 +57,14 @@ def _morton_to_xy(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 def encode(lon: np.ndarray, lat: np.ndarray, level: int) -> np.ndarray:
     """Vectorized point → int64 cell id at ``level``.
 
-    Floor and clamp run in float before the int64 cast (whose result is
-    undefined beyond the int64 range), so every finite coordinate gets the
-    JVM encoder's cell (``joins.cell_sql``); ±inf clamps to an edge and
-    NaN to the west/south edge (the JVM encoder gives those a null cell,
-    and ``joins.LocaleResolver.locate`` masks them to ``joins.NO_CELL``).
+    The encoder of every Python-side locale lookup
+    (``joins.LocaleResolver.locate``: the ``map`` containment join and the
+    fused lane stage). Floor and clamp run in float before the int64 cast
+    (whose result is undefined beyond the int64 range), so every finite
+    coordinate gets the JVM encoder's cell (``joins.cell_sql``); ±inf
+    clamps to an edge and NaN to the west/south edge. The JVM encoder gives
+    those a null cell, so a caller masks them first: ``locate`` gives them
+    ``joins.NO_CELL``, and ``raster.zonal_join`` and the kNN join drop them.
     """
     n = 1 << level
 

@@ -15,6 +15,11 @@ the fact side is never shuffled, so a hot city cell cannot pin a reducer.
 The PIP refinement runs only on boundary cells (``full`` covering cells
 skip it) and is a vectorized numpy kernel inside Arrow batches.
 
+Every Python-side locale lookup (the ``map`` join, the fused lane stage)
+encodes its cells in numpy (:meth:`LocaleResolver.locate`); the JVM twin
+:func:`cell_sql` serves only the JVM joins (``broadcast``, the kNN
+point-site index, :func:`distance_join`, the raster binning).
+
 Every Python UDF here ends each call with :func:`session.drop_zip_finders`,
 so a reused worker's next task does not re-read ``pyspark.zip``.
 """
@@ -30,7 +35,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark import Broadcast, SparkContext
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -39,9 +44,10 @@ from . import cells as C
 from . import polygons as P
 
 DEFAULT_LEVEL = 12
-# a null cell as an int64 that no cell id (all >= 0) can take. Filling
-# nulls with it keeps a cell column int64 across Arrow: with a null it
-# would turn float64, and from level 24 up an id can need more than 53 bits
+# the cell LocaleResolver.locate gives a point with a null, NaN or infinite
+# coordinate: an int64 that no cell id (all >= 0) can take, so it has no
+# candidates, and the cell array stays int64 (a float64 id from level 24 up
+# can lose bits). No cell column crosses Arrow.
 NO_CELL = -1
 
 
@@ -87,38 +93,32 @@ def _finite_sql(lon: str, lat: str) -> str:
     return f"abs({lon}) < {_INF} AND abs({lat}) < {_INF}"
 
 
+# true for a way with at least one vertex, all finite; a null geometry or
+# vertex makes it null, so a ``where`` drops those ways too
+USABLE_GEOMETRY_SQL = ("size(geometry) > 0 AND "
+                       f"forall(geometry, p -> {_finite_sql('p.lon', 'p.lat')})")
+
+
 @functools.lru_cache(maxsize=256)
 def cell_sql(lon: str, lat: str, level: int) -> str:
     """SQL text of the int64 cell id of SQL doubles (lon, lat) at ``level``.
 
-    A null, NaN or infinite coordinate gives a null cell, so the point
-    resolves to no polygon (the clamp would put NaN on the west edge —
-    ``floor`` casts it to 0 — and ±inf on an edge).
+    ``lon``/``lat`` are any double valued SQL. Every finite point gets the
+    id of the numpy twin :func:`cells.encode` (asserted in tests). A null,
+    NaN or infinite coordinate gives a null cell, so the point resolves to
+    no polygon (the clamp would put NaN on the west edge — ``floor`` casts
+    it to 0 — and ±inf on an edge).
     """
     x = grid_sql(lon, 180.0, 360.0, level)
     y = grid_sql(lat, 90.0, 180.0, level)
     return f"CASE WHEN {_finite_sql(lon, lat)} THEN {xy_cell_sql(x, y, level)} END"
 
 
-def cell_expr(lon: str, lat: str, level: int) -> Column:
-    """int64 cell id of (lon, lat) at ``level`` — whole-stage-codegen'd.
-
-    ``lon``/``lat`` are SQL expressions (a column name, or any double
-    valued SQL). This is the encoder of the JVM-side joins
-    (``containment_join``, the kNN join). The fused lane stage already
-    runs Python on every batch, so it encodes with the numpy twin in
-    :mod:`cells` instead (:meth:`LocaleResolver.locate`); both give
-    identical ids on every finite input, and both leave a null, NaN or
-    infinite point without a cell (asserted in tests).
-    """
-    return F.expr(cell_sql(lon, lat, level))
-
-
-def with_cell(df: DataFrame, level: int = DEFAULT_LEVEL,
-              lon: str = "lon", lat: str = "lat",
-              out: str = "cell") -> DataFrame:
-    """Add the int64 index cell of (lon, lat) at ``level`` (JVM-side)."""
-    return df.withColumn(out, cell_expr(lon, lat, level))
+def with_cell(df: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
+    """Add the int64 ``cell`` of (``lon``, ``lat``) at ``level``, encoded
+    JVM-side and whole-stage-codegen'd (:func:`cell_sql`); null for a null,
+    NaN or infinite coordinate."""
+    return df.withColumn("cell", F.expr(cell_sql("lon", "lat", level)))
 
 
 # ---------------------------------------------------------------------------
@@ -151,35 +151,35 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
 
     Both strategies look points up in the one memoised, broadcast locale
     index (:func:`make_locale_resolver`) and give the same keys: a point
-    inside several polygons gets the smallest key, and a point with a null
-    or NaN coordinate (a null cell) or inside no polygon gets ``None``.
+    inside several polygons gets the smallest key, and a point with a
+    null, NaN or infinite coordinate (no cell) or inside no polygon gets
+    ``None``.
 
-    strategy='map':       zero-shuffle narrow map — the locale kernel
-    (:class:`LocaleResolver`: sorted cell array + PIP refinement) runs in
-    one Arrow stage that pipelines with the scan and downstream stages.
-    strategy='broadcast': the index's covering as a broadcast hash join
-    dim, PIP on boundary candidates, then one groupBy shuffle on a per-row
-    id to keep each row's smallest matching key; ``doc_id`` leads the
-    output columns.
+    strategy='map':       zero-shuffle narrow map — only ``lon``/``lat``
+    cross to one Arrow stage, where the locale kernel encodes the cells in
+    numpy and resolves them (:meth:`LocaleResolver.locate`: sorted cell
+    array + PIP refinement); it pipelines with the scan and downstream
+    stages.
+    strategy='broadcast': cells encoded JVM-side (:func:`with_cell`), the
+    index's covering as a broadcast hash join dim, PIP on boundary
+    candidates, then one groupBy shuffle on a per-row id to keep each
+    row's smallest matching key; ``doc_id`` leads the output columns.
     """
     if strategy not in ("map", "broadcast"):
         raise ValueError(f"unknown strategy: {strategy!r}")
     spark: SparkSession = points.sparkSession
     index = make_locale_resolver(polygons, level)
     shipped = index.broadcast(spark.sparkContext)
-    pts = with_cell(points, level)
     if strategy == "map":
         @F.pandas_udf(T.StringType())
-        def resolve_udf(cell_s: pd.Series, lon_s: pd.Series,
-                        lat_s: pd.Series) -> pd.Series:
-            keys = shipped.value(
-                cell_s.to_numpy(), lon_s.to_numpy(), lat_s.to_numpy())[0]
+        def resolve_udf(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
+            keys = shipped.value.locate(lon_s.to_numpy(), lat_s.to_numpy())[0]
             drop_zip_finders()
             return pd.Series(keys)
 
-        cell = F.expr(f"coalesce(cell, {NO_CELL}L)")
-        return pts.withColumn("key", resolve_udf(cell, "lon", "lat")).drop("cell")
+        return points.withColumn("key", resolve_udf("lon", "lat"))
 
+    pts = with_cell(points, level)
     dim = F.broadcast(spark.createDataFrame(pd.DataFrame(
         {"cell": index.cells, "key": index.keys[index.codes],
          "full": index.full})))
@@ -406,9 +406,7 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     spark = queries.sparkSession
     queries = queries.where(_finite_sql("lon", "lat"))
     # both the cell index and the brute-force remainder read the kept ways
-    ways = ways.where(
-        "size(geometry) > 0 AND "
-        f"forall(geometry, p -> {_finite_sql('p.lon', 'p.lat')})")
+    ways = ways.where(USABLE_GEOMETRY_SQL)
 
     # ways → (cell, way_id, geometry) index; a way appears once per distinct
     # vertex cell
@@ -444,9 +442,9 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
         F.sum((F.size("geometry") > 1).cast("int")).alias("nm")).first()
     n_ways, n_multi = stats["n"], stats["nm"] or 0
     single = (spread_ways.where(F.size("geometry") <= 1)
-              .withColumn("cell", cell_expr("element_at(geometry, 1).lon",
-                                            "element_at(geometry, 1).lat",
-                                            level)))
+              .withColumn("cell", F.expr(cell_sql("element_at(geometry, 1).lon",
+                                                  "element_at(geometry, 1).lat",
+                                                  level))))
     if n_multi == 0:
         way_index = single.select("cell", way_id, "geometry").persist()
     else:
@@ -653,7 +651,7 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
     right_idx = (_spread(right, lon)
                  .withColumnRenamed(lon, "__rlon")
                  .withColumnRenamed(lat, "__rlat")
-                 .withColumn("__cell", cell_expr("__rlon", "__rlat", level)))
+                 .withColumn("__cell", F.expr(cell_sql("__rlon", "__rlat", level))))
 
     # per-row lon ring width: the partner's latitude is at most r_deg
     # further poleward, so bound cos by the worst latitude in reach

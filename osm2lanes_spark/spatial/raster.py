@@ -60,11 +60,16 @@ def zonal_join(ways: DataFrame, raster: DataFrame, level: int,
 
     ``raster`` must be keyed by cells at the same ``level``. With
     ``broadcast_raster`` the tile side is broadcast (small rasters);
-    otherwise a plain shuffled equi-join (AQE handles skew).
+    otherwise a plain shuffled equi-join (AQE handles skew). A way with no
+    usable geometry (null, empty, or a null or non-finite vertex) gets no
+    row, as in the kNN join.
     """
+    from .joins import USABLE_GEOMETRY_SQL
+
     agg_fn = {"avg": F.avg, "max": F.max, "min": F.min, "sum": F.sum}[agg]
     r = F.broadcast(raster) if broadcast_raster else raster
-    wc = way_cells(ways.select(way_id, "geometry"), level)
+    wc = way_cells(ways.where(USABLE_GEOMETRY_SQL).select(way_id, "geometry"),
+                   level)
     return (wc.join(r, "cell")
             .groupBy(way_id)
             .agg(agg_fn("value").alias(f"zonal_{agg}"),

@@ -136,6 +136,13 @@ def test_malformed_spans_rejected(spark):
         # ':' sorts before '=', so the texts and the keys sort differently
         ("order_trap", _tag_spans(["highway=secondary", "lanes=2",
                                    "lanes:forward=1"])),
+        # tag spans out of offset order, a media span between them
+        ("offset_order", [
+            {"kind": "tag", "text": "lanes=2", "media_ref": None, "offset": 2},
+            {"kind": "media", "text": None, "media_ref": "m1", "offset": 1},
+            {"kind": "tag", "text": "highway=primary", "media_ref": None, "offset": 0}]),
+        ("eq_in_value", _tag_spans(["highway=trunk", "b=2=x"])),
+        ("keyless", _tag_spans(["highway=trunk", "=v"])),
     ]
     df = spark.createDataFrame(
         rows, "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>")
@@ -156,12 +163,15 @@ def test_malformed_spans_rejected(spark):
     assert roads["null_text"]["error"] == "bad_tag"
     # the stage keys rows on the tag texts, not on the map: on every row its
     # error is with_tags's tags_error, or the kernel's when the tags parse,
-    # and both agree with the reference rule run in-process
+    # and both agree with the reference rule run in-process; an accepted
+    # row's map is the in-process split of its tag texts
     for doc, spans in rows:
-        texts = None if spans is None else [s["text"] for s in spans]
+        texts = [s["text"] for s in spans or [] if s["kind"] == "tag"]
         want = _forward_in_process(texts, None, None, True)["error"]
         parse = want if want in ("bad_tag", "duplicate_key") else None
         assert (out[doc]["tags_error"], roads[doc]["error"]) == (parse, want), doc
+        if parse is None:
+            assert out[doc]["tags"] == dict(t.split("=", 1) for t in texts), doc
 
 
 def _tag_spans(texts) -> list:

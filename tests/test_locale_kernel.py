@@ -161,8 +161,9 @@ def test_fused_pipeline_null_nan_coordinates(null_docs):
     assert all(r["error"] is None for r in out)
 
 
-# The fused stage encodes cells in numpy (``LocaleResolver.locate``);
-# ``containment_join(strategy="map")`` encodes them JVM-side (``cell_sql``).
+# The fused stage and ``containment_join(strategy="map")`` encode cells in
+# numpy (``LocaleResolver.locate``); the ``broadcast`` join, the remaining
+# JVM-encoded locale path, encodes them with ``cell_sql``.
 # NZ reaches past the south-west corner and GB past the north-east one,
 # so a clamped -inf would land in NZ's full corner cell and float64 max
 # lands in GB's; FR's points sit in boundary cells.
@@ -190,7 +191,7 @@ def test_fused_numpy_cell_matches_jvm_cell(spark):
         "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>, "
         "lon double, lat double").coalesce(1)
     jvm = {r["doc_id"]: r["key"] for r in containment_join(
-        docs.drop("spans"), EDGES, level=LEVEL, strategy="map").collect()}
+        docs.drop("spans"), EDGES, level=LEVEL, strategy="broadcast").collect()}
     resolver = make_locale_resolver(EDGES, LEVEL)
     lon = np.array([np.nan if x is None else x for _, x, _ in EDGE_COORDS])
     lat = np.array([np.nan if y is None else y for _, _, y in EDGE_COORDS])
@@ -208,12 +209,12 @@ def test_fused_numpy_cell_matches_jvm_cell(spark):
     rows = {r["doc_id"]: r for r in lanes_pipeline(
         docs, EDGES, level=LEVEL, fused=True).collect()}
     want = {r["doc_id"]: r for r in lanes_pipeline(
-        docs, EDGES, level=LEVEL, fused=False, strategy="map").collect()}
+        docs, EDGES, level=LEVEL, fused=False, strategy="broadcast").collect()}
     assert rows == want
     assert rows["in_nz"]["lanes"] != rows["fr_inside"]["lanes"]
 
 
-def test_cell_expr_null_nan(spark, null_docs):
+def test_with_cell_null_nan(spark, null_docs):
     from osm2lanes_spark.spatial.joins import with_cell
 
     got = {r["doc_id"]: r["cell"] for r in with_cell(null_docs, LEVEL).collect()}

@@ -82,17 +82,30 @@ def test_pipeline_golden(spark, geo_docs, geo_cases, fused):
 
 
 def test_zonal_join(spark):
-    # raster: average of synthetic speed samples; way covers known cells
+    # raster: average of synthetic speed samples; way covers known cells,
+    # plus a tile in the world's south-west corner cell, where a NaN vertex
+    # would land if it were encoded
     pts = spark.createDataFrame(
-        [(10.0 + 0.001 * i, 20.0, float(50 + (i % 3) * 10)) for i in range(60)],
+        [(10.0 + 0.001 * i, 20.0, float(50 + (i % 3) * 10)) for i in range(60)]
+        + [(-180.0, -90.0, 99.0)],
         "lon double, lat double, speed double")
     raster = rasterize_points(pts, "speed", level=12, agg="avg")
-    assert raster.count() >= 1
+    assert raster.count() >= 2
+    nan = float("nan")
+    w1 = [{"lon": 10.0, "lat": 20.0}, {"lon": 10.05, "lat": 20.0}]
     ways = spark.createDataFrame(
-        [("w1", [{"lon": 10.0, "lat": 20.0}, {"lon": 10.05, "lat": 20.0}]),
-         ("w2", [{"lon": -10.0, "lat": -20.0}])],
+        [("w1", w1),
+         ("w2", [{"lon": -10.0, "lat": -20.0}]),
+         # no usable geometry: no row, and the job does not fail
+         ("nan_vertex", [{"lon": nan, "lat": nan}]),
+         ("nan_lat", w1 + [{"lon": -180.0, "lat": nan}]),
+         ("inf_vertex", [{"lon": float("-inf"), "lat": -90.0}]),
+         ("null_vertex", w1 + [None]),
+         ("null_lon", [{"lon": None, "lat": 20.0}]),
+         ("null_geometry", None),
+         ("empty_geometry", [])],
         "way_id string, geometry array<struct<lon:double,lat:double>>")
     out = zonal_join(ways, raster, level=12, broadcast_raster=True)
     rows = {r["way_id"]: r for r in out.collect()}
-    assert "w1" in rows and rows["w1"]["zonal_max"] >= 50.0
-    assert "w2" not in rows  # no raster coverage there
+    assert set(rows) == {"w1"}  # w2: no raster coverage there
+    assert 50.0 <= rows["w1"]["zonal_max"] < 99.0

@@ -8,6 +8,7 @@ expressions must be inside WholeStageCodegen.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
@@ -29,6 +30,7 @@ def test_filter_and_column_pushdown(spark, sf_dir):
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
 
+@pytest.mark.lane_engine
 def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
     docs = (spark.read.parquet(fixture_dir["documents"])
             .withColumn("lon", F.pmod(F.xxhash64("doc_id"), F.lit(360)) - 180.0)
@@ -40,6 +42,7 @@ def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
     assert "MapInPandas" not in plan
 
 
+@pytest.mark.lane_engine
 def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
     """The fused lane stage keys rows on the tag texts: no tag map, no JVM
     cell encode, one Python stage, no shuffle, and only the key, the
@@ -65,6 +68,7 @@ def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
         "doc_id", "key", "name", "ref", "lon", "lat"]
 
 
+@pytest.mark.lane_engine
 def test_span_assembly_jvm_side(spark, fixture_dir):
     """Span assembly is one JVM projection (higher-order functions are
     interpreted-eval but JVM-side); no Python stage, no shuffle."""

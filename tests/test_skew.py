@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -11,6 +12,7 @@ from osm2lanes_spark.plans import lineage as L
 from osm2lanes_spark.spatial.joins import containment_join
 
 
+@pytest.mark.lane_engine
 def test_map_join_under_hot_cell(spark):
     """90% of points pile into one city-sized spot (hot cell); the default
     ``map`` strategy must still resolve all of them correctly, and with no

@@ -80,6 +80,7 @@ def points_df(spark):
     return spark.createDataFrame(rows, "doc_id string, truth string, lon double, lat double")
 
 
+@pytest.mark.lane_engine
 @pytest.mark.parametrize("strategy", ["map", "broadcast"])
 def test_containment_join(spark, points_df, strategy):
     polys = G.all_country_polygons(["NL", "GB", "US", "DE", "JP", "AU", "CA", "CH", "IT", "FR"])
@@ -89,6 +90,7 @@ def test_containment_join(spark, points_df, strategy):
     assert bad == 0 and missing == 0
 
 
+@pytest.mark.lane_engine
 def test_containment_join_outside(spark):
     # a point in no polygon resolves to NULL key
     df = spark.createDataFrame([("x", 179.0, -89.0)], "doc_id string, lon double, lat double")
@@ -96,6 +98,7 @@ def test_containment_join_outside(spark):
     assert out.collect()[0]["key"] is None
 
 
+@pytest.mark.lane_engine
 def test_containment_join_unknown_strategy(spark, points_df):
     """A strategy other than map/broadcast (a typo, say) is an error, not
     a silent fallback to another shape."""
@@ -105,6 +108,7 @@ def test_containment_join_unknown_strategy(spark, points_df):
             containment_join(points_df, polys, level=8, strategy=strategy)
 
 
+@pytest.mark.lane_engine
 def test_broadcast_plan(spark, points_df):
     """broadcast strategy: the dim side broadcasts — no fact-side shuffle."""
     polys = G.all_country_polygons(["NL", "GB"])
@@ -113,12 +117,15 @@ def test_broadcast_plan(spark, points_df):
     assert "BroadcastHashJoin" in plan
 
 
+@pytest.mark.lane_engine
 def test_map_strategy_no_shuffle(spark, points_df):
     """map strategy: a pure narrow map — zero Exchange in the plan."""
     polys = G.all_country_polygons(["NL", "GB"])
     out = containment_join(points_df, polys, level=8, strategy="map")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
+    # the cells are encoded in the Arrow stage, not JVM-side
+    assert "shiftleft" not in plan
 
 
 def test_knn_join(spark):
@@ -212,7 +219,7 @@ def test_knn_join_rejects_k_below_one(spark, k):
         knn_join(queries, ways, k=k)
 
 
-# every level a cell_expr caller uses: distance_join's bounds (1, 14), the
+# every level a cell_sql caller uses: distance_join's bounds (1, 14), the
 # locale tests (8), the fused pipeline (10), the default (12)
 ENCODER_LEVELS = (1, 8, 10, 12, 14)
 INF, NAN, BIG = float("inf"), float("nan"), float(np.finfo(np.float64).max)
@@ -243,6 +250,7 @@ def _encoder_points():
     return np.array(lon), np.array(lat)
 
 
+@pytest.mark.lane_engine
 def test_with_cell_matches_numpy(spark):
     """The JVM encoder gives cells.encode's id on every finite point, and
     a null cell for ±inf and NaN."""
