@@ -7,43 +7,30 @@ Example:
 
 On a real cluster the same invocation works with ``--master yarn/k8s`` and
 ``--num-executors N``; the pipeline contains no local-mode assumptions —
-partitioning comes from the source + an optional repartition, locale
-resolution is a fused narrow map, and outputs checkpoint idempotently with
-per-partition lineage.
+partitioning comes from the source, locale resolution is a fused narrow
+map, and the output checkpoints idempotently with a manifest of
+per-partition row counts. The job body is ``cli.run_batch``; the session
+comes from ``getOrCreate`` so spark-submit's ``--master`` holds.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="documents parquet/Iceberg path")
     p.add_argument("--output", required=True, help="output path")
-    p.add_argument("--level", type=int, default=10, help="cell level for locale join")
-    p.add_argument("--repartition", type=int, default=0)
     p.add_argument("--spatial-locale", action="store_true")
     args = p.parse_args()
 
-    from osm2lanes_spark.fixtures.geography import all_country_polygons
-    from osm2lanes_spark.pipeline import lanes_pipeline
-    from osm2lanes_spark.plans.lineage import write_checkpoint
+    from osm2lanes_spark.cli import run_batch
 
     spark = SparkSession.builder.appName("osm2lanes-pipeline").getOrCreate()
-    docs = spark.read.parquet(args.input)
-    if args.repartition:
-        docs = docs.repartition(args.repartition)
-    polygons = all_country_polygons() if args.spatial_locale else None
-    result = lanes_pipeline(docs, polygons, level=args.level)
-    summary = write_checkpoint(result, args.output)
-    n_err = (spark.read.parquet(args.output)
-             .where(F.col("error").isNotNull()).count())
-    print(json.dumps({**summary, "errors": n_err}))
+    run_batch(spark, args.input, args.output, args.spatial_locale)
     spark.stop()
 
 

@@ -5,7 +5,9 @@ reference's ``Command::Convert``; the ``Way {id}`` network path is
 intentionally replaced engine-wide by the spatial containment join).
 
 ``batch``: the Spark path — read a documents parquet (interleaved spans),
-run the full pipeline, write ROAD_SCHEMA parquet with lineage metrics.
+run the full pipeline, checkpoint ROAD_SCHEMA parquet whose manifest
+holds the row count of each written partition (``run_batch``, which the
+spark-submit job ``jobs/run_pipeline.py`` calls too).
 """
 
 from __future__ import annotations
@@ -38,22 +40,32 @@ def cmd_convert(args) -> int:
     return 0
 
 
-def cmd_batch(args) -> int:
+def run_batch(spark, input: str, output: str,
+              spatial_locale: bool = False) -> dict:
+    """Documents parquet at ``input`` → ROAD_SCHEMA checkpoint at
+    ``output``. Prints and returns the checkpoint manifest plus the count
+    of error rows."""
     from pyspark.sql import functions as F
 
     from .fixtures.geography import all_country_polygons
     from .pipeline import lanes_pipeline
     from .plans.lineage import write_checkpoint
+
+    docs = spark.read.parquet(input)
+    polygons = all_country_polygons() if spatial_locale else None
+    summary = write_checkpoint(lanes_pipeline(docs, polygons), output)
+    errors = (spark.read.parquet(output)
+              .where(F.col("error").isNotNull()).count())
+    summary = {**summary, "errors": errors}
+    print(json.dumps(summary))
+    return summary
+
+
+def cmd_batch(args) -> int:
     from .session import get_spark
 
     spark = get_spark("osm2lanes-batch", cpus=args.cpus)
-    docs = spark.read.parquet(args.input)
-    polygons = all_country_polygons() if args.spatial_locale else None
-    result = lanes_pipeline(docs, polygons)
-    summary = write_checkpoint(result, args.output)
-    errors = (spark.read.parquet(args.output)
-              .where(F.col("error").isNotNull()).count())
-    print(json.dumps({**summary, "errors": errors}))
+    run_batch(spark, args.input, args.output, args.spatial_locale)
     spark.stop()
     return 0
 

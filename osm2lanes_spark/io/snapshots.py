@@ -11,8 +11,9 @@ jar, so :class:`SnapshotTable` provides the same API over plain parquet:
   latest for *overwrite* commits);
 - ``read_diff(since)`` = rows added after a snapshot id — the
   snapshot-diff incremental scan;
-- commits carry per-partition lineage (``plans.lineage``) so any stage
-  resumes idempotently.
+- a commit's ``rows`` is the sum of its part files' footer row counts
+  (``plans.lineage.part_rows``, the count ``write_checkpoint`` takes), so
+  no commit re-reads the data it wrote.
 
 When an Iceberg catalog is configured (``spark.sql.catalog.*`` + runtime
 jar), :func:`have_iceberg` flips and the same call sites can use
@@ -29,6 +30,8 @@ import time
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..plans.lineage import part_rows
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -106,7 +109,7 @@ class SnapshotTable:
                 snap_id += 1
         snap_dir = os.path.join(self.path, f"snap-{snap_id}")
         df.write.mode("overwrite").parquet(snap_dir)
-        rows = df.sparkSession.read.parquet(snap_dir).count()
+        rows = sum(part_rows(snap_dir))
         entry = {"id": snap_id, "dir": f"snap-{snap_id}", "mode": mode,
                  "rows": rows, "committed_at": time.time()}
         # manifest append under the commit lock (re-read inside: another

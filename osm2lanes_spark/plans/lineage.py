@@ -1,7 +1,9 @@
 """Per-partition lineage metrics + idempotent checkpoint/resume.
 
 North-rule operability layer: every checkpointed stage writes, next to its
-data, a lineage table of per-partition row counts (and a manifest), so
+data, a manifest of the row count of each partition it wrote, read on the
+driver from the footers of the ``part-*`` files the write produced (one
+file per partition), so no Spark job runs after the write. Thus
 
 - a resumed run can *verify* a prior stage instead of recomputing it,
 - operators can spot skew (one partition row count ≫ the median) without
@@ -19,34 +21,30 @@ import os
 import time
 from typing import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 MANIFEST = "_osm2lanes_manifest.json"
-LINEAGE_DIR = "_lineage"
 
 
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """Row count per physical partition (groupBy spark_partition_id)."""
-    return (df.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid").count()
-            .select(F.col("_pid").alias("partition_id"),
-                    F.col("count").alias("rows")))
+def part_rows(path: str) -> list[int]:
+    """Footer row count of each ``part-*`` file under ``path``, in file-name
+    order (the order of the partitions that wrote them)."""
+    return [pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in sorted(os.listdir(path)) if f.startswith("part-")]
 
 
-def write_checkpoint(df: DataFrame, path: str, mode: str = "overwrite") -> dict:
-    """Write df as parquet + lineage metrics + manifest. Returns summary."""
-    df.write.mode(mode).parquet(path)
-    written = df.sparkSession.read.parquet(path)
-    metrics = partition_metrics(written)
-    metrics.write.mode(mode).parquet(os.path.join(path, LINEAGE_DIR))
-    mrows = metrics.collect()
-    total = sum(r["rows"] for r in mrows)
+def write_checkpoint(df: DataFrame, path: str) -> dict:
+    """Overwrite ``path`` with df as parquet, then commit its manifest
+    (per-partition row counts from the part files). Returns the manifest."""
+    df.write.mode("overwrite").parquet(path)
+    rows = part_rows(path)
     summary = {
         "path": path,
-        "rows": total,
-        "partitions": len(mrows),
-        "max_partition_rows": max((r["rows"] for r in mrows), default=0),
+        "rows": sum(rows),
+        "partitions": len(rows),
+        "partition_rows": rows,
+        "max_partition_rows": max(rows, default=0),
         "written_at": time.time(),
         "complete": True,
     }
@@ -80,10 +78,11 @@ def resumable(spark: SparkSession, path: str,
     return spark.read.parquet(path)
 
 
-def skew_report(path: str, spark: SparkSession, factor: float = 4.0) -> dict:
-    """Flag partitions whose row count exceeds ``factor`` × median."""
-    lineage = spark.read.parquet(os.path.join(path, LINEAGE_DIR))
-    rows = sorted(r["rows"] for r in lineage.collect())
+def skew_report(path: str, factor: float = 4.0) -> dict:
+    """Flag partitions whose row count exceeds ``factor`` × median, read
+    from the checkpoint's manifest."""
+    with open(os.path.join(path, MANIFEST)) as f:
+        rows = sorted(json.load(f)["partition_rows"])
     if not rows:
         return {"skewed": [], "median": 0}
     median = rows[len(rows) // 2]

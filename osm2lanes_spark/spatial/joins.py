@@ -390,7 +390,7 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
 
     Shape: queries explode to k-ring candidate cells (the ring doubles each
     round, only for the *unfinished* remainder), ways are indexed by the
-    cells their vertices touch, the equi-join on cell yields candidates,
+    cells their polylines cross, the equi-join on cell yields candidates,
     a numpy point→polyline kernel computes distances, and
     ``row_number() OVER (PARTITION BY query row ORDER BY dist)`` takes k.
 
@@ -408,20 +408,11 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     # both the cell index and the brute-force remainder read the kept ways
     ways = ways.where(USABLE_GEOMETRY_SQL)
 
-    # ways → (cell, way_id, geometry) index; a way appears once per distinct
-    # vertex cell
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def way_cells_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            pts = np.array([[p["lon"], p["lat"]] for p in g], np.float64)
-            out.append(C.cover_polyline(pts, level).tolist())
-        drop_zip_finders()
-        return pd.Series(out)
-
     from ..util import spread
+    from .raster import way_cells
 
-    # cached once — every expanding-ring round joins against it, and
+    # ways → (cell, way_id, geometry) index; a way appears once per cell
+    # its polyline crosses (``raster.way_cells``), cached once — every expanding-ring round joins against it, and
     # re-running the covering UDF per round would dominate the loop.
     # persist (not localCheckpoint): the index has static lineage, so it
     # needs caching, not truncation — an eager checkpoint pays an extra
@@ -448,9 +439,7 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     if n_multi == 0:
         way_index = single.select("cell", way_id, "geometry").persist()
     else:
-        multi = (spread_ways.where(F.size("geometry") > 1)
-                 .withColumn("cell",
-                             F.explode(way_cells_udf(F.col("geometry")))))
+        multi = way_cells(spread_ways.where(F.size("geometry") > 1), level)
         way_index = (single.unionByName(multi)
                      .select("cell", way_id, "geometry")
                      .persist())

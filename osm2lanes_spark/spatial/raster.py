@@ -5,7 +5,7 @@ a raster layer (e.g. a speed-limit or population grid) is materialized as
 rows of ``(cell, value)`` at a fixed level — the relational encoding of a
 tile — and joined back to vector ways by cell equi-join, aggregating over
 each way's covered cells. All shuffle-side logic is plain Spark; only the
-cell encode is a numpy kernel.
+way covering (``cells.cover_polyline``) is a numpy kernel.
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import drop_zip_finders
 from . import cells as C
 
 
@@ -39,15 +40,16 @@ def rasterize_points(points: DataFrame, value_col: str, level: int,
 
 def way_cells(ways: DataFrame, level: int,
               geometry: str = "geometry") -> DataFrame:
-    """Explode each way into the distinct cells its vertices touch."""
+    """Explode each way into the distinct cells its polyline crosses
+    (``cells.cover_polyline``); the kNN join's way index too."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def cells_udf(geom: pd.Series) -> pd.Series:
         out = []
         for g in geom:
-            lons = np.array([p["lon"] for p in g], np.float64)
-            lats = np.array([p["lat"] for p in g], np.float64)
-            out.append(np.unique(C.encode(lons, lats, level)).tolist())
+            pts = np.array([[p["lon"], p["lat"]] for p in g], np.float64)
+            out.append(C.cover_polyline(pts, level).tolist())
+        drop_zip_finders()
         return pd.Series(out)
 
     return ways.withColumn("cell", F.explode(cells_udf(F.col(geometry))))

@@ -3,11 +3,16 @@
 from __future__ import annotations
 
 import json
+import os
+
+import pytest
 
 from osm2lanes_spark.cli import main as cli_main
+from osm2lanes_spark.cli import run_batch
 from osm2lanes_spark.core.locale import Locale
 from osm2lanes_spark.core.serialize import lane_json, road_json, speed_json
 from osm2lanes_spark.core.tags_to_lanes import tags_to_lanes
+from osm2lanes_spark.fixtures.golden import FIXTURE_DIR
 
 
 def test_speed_json_asymmetry():
@@ -53,3 +58,17 @@ def test_cli_convert_not_road(tmp_path, capsys):
     rc = cli_main(["convert", str(f)])
     assert rc == 1
     assert "error" in json.loads(capsys.readouterr().out)
+
+
+@pytest.mark.checkpoint
+def test_run_batch_golden_fixture(spark, tmp_path, capsys):
+    """The batch job body (the CLI's ``batch`` and the spark-submit job)
+    on the packaged golden documents: every case lands, none errors, and
+    the manifest's per-partition counts add up."""
+    out = str(tmp_path / "lanes")
+    summary = run_batch(spark, os.path.join(FIXTURE_DIR, "documents.parquet"),
+                        out)
+    assert json.loads(capsys.readouterr().out.splitlines()[-1]) == summary
+    assert (summary["rows"], summary["errors"]) == (46, 0)
+    assert sum(summary["partition_rows"]) == summary["rows"]
+    assert spark.read.parquet(out).count() == 46

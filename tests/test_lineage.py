@@ -1,12 +1,24 @@
-"""Checkpoint/resume + per-partition lineage metrics."""
+"""Checkpoint/resume + per-partition lineage in the checkpoint manifest."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+
+import pyarrow.parquet as pq
+import pytest
 
 from pyspark.sql import functions as F
 
 from osm2lanes_spark.plans import lineage as L
+
+pytestmark = pytest.mark.checkpoint
+
+
+def _manifest(path):
+    with open(os.path.join(path, L.MANIFEST)) as f:
+        return json.load(f)
 
 
 def test_checkpoint_and_resume(spark, tmp_path):
@@ -24,11 +36,49 @@ def test_checkpoint_and_resume(spark, tmp_path):
     df2 = L.resumable(spark, path, build)
     assert df2.count() == 1000
     assert calls["n"] == 1
-    # lineage metrics exist and sum to the row count
-    metrics = spark.read.parquet(os.path.join(path, L.LINEAGE_DIR))
-    assert sum(r["rows"] for r in metrics.collect()) == 1000
-    rep = L.skew_report(path, spark)
+    # the manifest's per-partition counts sum to the row count
+    manifest = _manifest(path)
+    assert manifest["rows"] == sum(manifest["partition_rows"]) == 1000
+    rep = L.skew_report(path)
     assert rep["median"] >= 0
+
+
+def test_manifest_counts_the_written_partitions(spark, tmp_path):
+    """The lineage is the partitions the write produced, in partition
+    order, not the split packing of a read-back; and the checkpoint runs
+    the same Spark jobs as a plain write of the frame, no more."""
+    sc = spark.sparkContext
+    df = (spark.range(200_000).withColumn("k", F.col("id") % 7)
+          .repartition(8, "k"))
+    path = str(tmp_path / "probe")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, plain_jobs = jobs("plain_write",
+                         lambda: df.write.mode("overwrite").parquet(path))
+    shutil.rmtree(path)
+    summary, ck_jobs = jobs("write_checkpoint",
+                            lambda: L.write_checkpoint(df, path))
+    assert ck_jobs == plain_jobs
+
+    parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    footers = [pq.read_metadata(os.path.join(path, f)).num_rows
+               for f in parts]
+    assert summary["partition_rows"] == footers
+    assert summary == _manifest(path)
+    assert summary["partitions"] == len(parts)
+    assert summary["rows"] == sum(footers) == 200_000
+    assert summary["max_partition_rows"] == max(footers)
+    # each part file is one non-empty partition of the frame, in order
+    by_pid = (df.groupBy(F.spark_partition_id().alias("pid")).count()
+              .orderBy("pid").collect())
+    assert footers == [r["count"] for r in by_pid]
 
 
 def test_incomplete_checkpoint_rebuilt(spark, tmp_path):

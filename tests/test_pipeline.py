@@ -84,10 +84,11 @@ def test_pipeline_golden(spark, geo_docs, geo_cases, fused):
 def test_zonal_join(spark):
     # raster: average of synthetic speed samples; way covers known cells,
     # plus a tile in the world's south-west corner cell, where a NaN vertex
-    # would land if it were encoded
+    # would land if it were encoded, and a tile that "crossing" passes
+    # between its two vertices
     pts = spark.createDataFrame(
         [(10.0 + 0.001 * i, 20.0, float(50 + (i % 3) * 10)) for i in range(60)]
-        + [(-180.0, -90.0, 99.0)],
+        + [(-180.0, -90.0, 99.0), (0.5, 0.01, 30.0)],
         "lon double, lat double, speed double")
     raster = rasterize_points(pts, "speed", level=12, agg="avg")
     assert raster.count() >= 2
@@ -96,6 +97,7 @@ def test_zonal_join(spark):
     ways = spark.createDataFrame(
         [("w1", w1),
          ("w2", [{"lon": -10.0, "lat": -20.0}]),
+         ("crossing", [{"lon": 0.0, "lat": 0.01}, {"lon": 1.0, "lat": 0.01}]),
          # no usable geometry: no row, and the job does not fail
          ("nan_vertex", [{"lon": nan, "lat": nan}]),
          ("nan_lat", w1 + [{"lon": -180.0, "lat": nan}]),
@@ -107,5 +109,6 @@ def test_zonal_join(spark):
         "way_id string, geometry array<struct<lon:double,lat:double>>")
     out = zonal_join(ways, raster, level=12, broadcast_raster=True)
     rows = {r["way_id"]: r for r in out.collect()}
-    assert set(rows) == {"w1"}  # w2: no raster coverage there
+    assert set(rows) == {"w1", "crossing"}  # w2: no raster coverage there
     assert 50.0 <= rows["w1"]["zonal_max"] < 99.0
+    assert rows["crossing"]["zonal_max"] == 30.0

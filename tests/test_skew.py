@@ -32,6 +32,7 @@ def test_map_join_under_hot_cell(spark):
     assert [(r["key"], r["count"]) for r in keys] == [("NL", 2000)]
 
 
+@pytest.mark.checkpoint
 def test_skew_report_flags_hot_partition(spark, tmp_path):
     # build a frame where one partition holds ~10x the median rows
     big = spark.range(10000).withColumn("k", F.lit(0))
@@ -39,6 +40,6 @@ def test_skew_report_flags_hot_partition(spark, tmp_path):
     skewed = big.unionByName(small).repartition(10, "k")
     path = str(tmp_path / "skewed")
     L.write_checkpoint(skewed, path)
-    rep = L.skew_report(path, spark, factor=4.0)
+    rep = L.skew_report(path, factor=4.0)
     assert rep["max"] >= 10000
     assert rep["skewed"], "hot partition must be flagged"

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import pytest
+
 from osm2lanes_spark.io.snapshots import SnapshotTable
+
+pytestmark = pytest.mark.checkpoint
 
 
 def test_append_and_diff(spark, tmp_path):

@@ -4,7 +4,7 @@ package shipped as a zip — no reliance on the driver's cwd / PYTHONPATH.
 Builds osm2lanes_spark.zip the way a cluster submission would, then runs
 ``jobs/run_pipeline.py`` in a clean subprocess via the real spark-submit
 binary against the packaged documents fixture. Verifies the job exits 0,
-prints its lineage summary JSON, and writes correct lane output.
+prints its checkpoint manifest JSON, and writes correct lane output.
 """
 
 from __future__ import annotations
@@ -17,6 +17,8 @@ import sys
 import zipfile
 
 import pytest
+
+pytestmark = pytest.mark.checkpoint
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,5 +62,6 @@ def test_spark_submit_py_files(tmp_path):
         [l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
     assert summary["rows"] > 0
     assert summary["errors"] == 0
-    assert os.path.isdir(os.path.join(out, "_lineage"))
-    assert os.path.exists(os.path.join(out, "_osm2lanes_manifest.json"))
+    with open(os.path.join(out, "_osm2lanes_manifest.json")) as f:
+        manifest = json.load(f)
+    assert sum(manifest["partition_rows"]) == manifest["rows"]
