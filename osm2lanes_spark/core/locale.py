@@ -3,8 +3,9 @@
 Mirrors `/root/reference/osm2lanes/src/locale.rs:10-118`. The reference
 resolves countries through the ``celes`` crate and regions through
 ``locale-codes``; here the same facts live in a small dimension table
-(:data:`COUNTRIES`) that is also exported as a broadcast DataFrame for the
-spatial join (see :mod:`osm2lanes_spark.spatial.joins`).
+(:data:`COUNTRIES`). The spatial locale index reads each polygon key's
+driving side from it once, when it is built, and answers it with the key
+(``LocaleResolver`` in :mod:`osm2lanes_spark.spatial.joins`).
 """
 
 from __future__ import annotations

@@ -20,37 +20,24 @@ from typing import Optional
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from .core.locale import COUNTRIES
 from .operators.lane_transform import tags_to_lanes_stage
 from .spatial.joins import containment_join, make_locale_resolver
-
-
-def locale_dim(spark: SparkSession) -> DataFrame:
-    """Country dim (alpha2, alpha3, region, driving_side) — broadcast-sized.
-
-    Mirrors the reference's celes/locale-codes lookups (locale.rs:46-59,
-    199-201) as data.
-    """
-    rows = [(a2, a3, region, side) for a2, (a3, region, side) in sorted(COUNTRIES.items())]
-    return spark.createDataFrame(rows, "alpha2 string, alpha3 string, region string, driving_side string")
 
 
 def resolve_locale(docs: DataFrame, polygons: dict[str, np.ndarray],
                    level: int = 10, strategy: str = "map") -> DataFrame:
     """Resolve (iso_3166_2, driving_side) for each document from geometry.
 
-    docs must carry ``doc_id``, ``lon``, ``lat``. Containment join →
-    country alpha2 → broadcast join to the locale dim for driving side.
+    docs must carry ``doc_id``, ``lon``, ``lat``. Any ``iso_3166_2`` or
+    ``driving_side`` they carry is replaced: both come from the locale
+    index's answer for the point (``containment_join``'s ``key`` and its
+    ``driving_side``).
     """
-    spark = docs.sparkSession
-    located = containment_join(docs, polygons, level=level, strategy=strategy)
-    dim = F.broadcast(locale_dim(spark).withColumnRenamed("alpha2", "key"))
-    return (located.join(dim, "key", "left")
-            .withColumnRenamed("key", "iso_3166_2")
-            .drop("alpha3", "region"))
+    return (containment_join(docs.drop("iso_3166_2", "driving_side"), polygons,
+                             level=level, strategy=strategy)
+            .withColumnRenamed("key", "iso_3166_2"))
 
 
 def lanes_pipeline(docs: DataFrame,
@@ -59,7 +46,9 @@ def lanes_pipeline(docs: DataFrame,
                    strategy: str = "map",
                    fused: bool = True) -> DataFrame:
     """Full pipeline. When ``polygons`` is None the documents must already
-    carry locale columns (iso_3166_2 / driving_side).
+    carry locale columns (iso_3166_2 / driving_side). When it is given,
+    both paths resolve the locale from ``lon``/``lat`` and any locale
+    columns the documents carry are replaced.
 
     ``fused`` (default): spatial locale resolution, the cell encode
     included, runs inside the lane transform's Arrow stage on the

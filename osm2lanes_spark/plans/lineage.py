@@ -27,11 +27,34 @@ from pyspark.sql import DataFrame, SparkSession
 MANIFEST = "_osm2lanes_manifest.json"
 
 
-def part_rows(path: str) -> list[int]:
-    """Footer row count of each ``part-*`` file under ``path``, in file-name
-    order (the order of the partitions that wrote them)."""
-    return [pq.read_metadata(os.path.join(path, f)).num_rows
+def part_footers(path: str) -> list[pq.FileMetaData]:
+    """Footer of each ``part-*`` file under ``path``, in file-name order
+    (the order of the partitions that wrote them)."""
+    return [pq.read_metadata(os.path.join(path, f))
             for f in sorted(os.listdir(path)) if f.startswith("part-")]
+
+
+def part_rows(path: str) -> list[int]:
+    """Footer row count of each ``part-*`` file under ``path``."""
+    return [footer.num_rows for footer in part_footers(path)]
+
+
+def non_null_rows(path: str, column: str) -> int:
+    """Rows of the ``part-*`` files under ``path`` whose top-level
+    ``column`` is not null: each row group's rows minus its column chunk's
+    footer ``null_count``. Raises ``ValueError`` for a chunk without that
+    statistic."""
+    total = 0
+    for footer in part_footers(path):
+        schema = footer.schema
+        i = [schema.column(j).path for j in range(len(schema))].index(column)
+        for g in range(footer.num_row_groups):
+            group = footer.row_group(g)
+            stats = group.column(i).statistics
+            if stats is None or not stats.has_null_count:
+                raise ValueError(f"{path}: no null_count for {column!r}")
+            total += group.num_rows - stats.null_count
+    return total
 
 
 def write_checkpoint(df: DataFrame, path: str) -> dict:

@@ -143,17 +143,18 @@ def polygon_cells_pdf(polygons: dict[str, np.ndarray], level: int) -> pd.DataFra
 def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
                      level: int = DEFAULT_LEVEL,
                      strategy: str = "map") -> DataFrame:
-    """Assign each point the key of the polygon containing it.
+    """Assign each point the key of the polygon containing it and that
+    key's driving side.
 
-    points: DataFrame with ``doc_id``, ``lon``, ``lat``; ids need not be
-    unique or non-null. Returns every input row, with its columns and
-    ``key`` (nullable — no containing polygon).
+    points: DataFrame with ``doc_id``, ``lon``, ``lat``, and no ``key`` or
+    ``driving_side``; ids need not be unique or non-null. Returns every
+    input row, with its columns, ``key`` and ``driving_side`` (nullable).
 
     Both strategies look points up in the one memoised, broadcast locale
-    index (:func:`make_locale_resolver`) and give the same keys: a point
+    index (:func:`make_locale_resolver`) and give the same answer: a point
     inside several polygons gets the smallest key, and a point with a
     null, NaN or infinite coordinate (no cell) or inside no polygon gets
-    ``None``.
+    ``None`` for both.
 
     strategy='map':       zero-shuffle narrow map — only ``lon``/``lat``
     cross to one Arrow stage, where the locale kernel encodes the cells in
@@ -161,9 +162,10 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
     array + PIP refinement); it pipelines with the scan and downstream
     stages.
     strategy='broadcast': cells encoded JVM-side (:func:`with_cell`), the
-    index's covering as a broadcast hash join dim, PIP on boundary
-    candidates, then one groupBy shuffle on a per-row id to keep each
-    row's smallest matching key; ``doc_id`` leads the output columns.
+    index's covering (with each key's side) as a broadcast hash join dim,
+    PIP on boundary candidates, then one groupBy shuffle on a per-row id
+    to keep each row's smallest matching key and its side; ``doc_id``
+    leads the output columns.
     """
     if strategy not in ("map", "broadcast"):
         raise ValueError(f"unknown strategy: {strategy!r}")
@@ -171,18 +173,19 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
     index = make_locale_resolver(polygons, level)
     shipped = index.broadcast(spark.sparkContext)
     if strategy == "map":
-        @F.pandas_udf(T.StringType())
-        def resolve_udf(lon_s: pd.Series, lat_s: pd.Series) -> pd.Series:
-            keys = shipped.value.locate(lon_s.to_numpy(), lat_s.to_numpy())[0]
+        @F.pandas_udf("key string, driving_side string")
+        def resolve_udf(lon_s: pd.Series, lat_s: pd.Series) -> pd.DataFrame:
+            keys, sides = shipped.value.locate(lon_s.to_numpy(), lat_s.to_numpy())
             drop_zip_finders()
-            return pd.Series(keys)
+            return pd.DataFrame({"key": keys, "driving_side": sides})
 
-        return points.withColumn("key", resolve_udf("lon", "lat"))
+        return (points.withColumn("_loc", resolve_udf("lon", "lat"))
+                .select("*", "_loc.*").drop("_loc"))
 
     pts = with_cell(points, level)
     dim = F.broadcast(spark.createDataFrame(pd.DataFrame(
         {"cell": index.cells, "key": index.keys[index.codes],
-         "full": index.full})))
+         "side": index.sides[index.codes], "full": index.full})))
 
     # PIP refinement only for boundary cells (full=false)
     @F.pandas_udf(T.BooleanType())
@@ -204,17 +207,18 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
         F.col("key"))
 
     # Single-shuffle finalize on a per-row id taken before the join (ids in
-    # ``doc_id`` may repeat or be null): per row the min matching key
-    # (border points in two coverings get a deterministic winner), the
-    # original columns carried along — no join-back to the fact table.
+    # ``doc_id`` may repeat or be null): per row the min matching key and
+    # its side (border points in two coverings get a deterministic winner),
+    # the original columns carried along — no join-back to the fact table.
     other_cols = [c for c in points.columns if c != "doc_id"]
     return (pts.withColumn("_row", F.monotonically_increasing_id())
             .join(dim, "cell", "left")
             .withColumn("_mkey", matched_key)
             .groupBy("_row")
             .agg(F.min("_mkey").alias("key"),
+                 F.min_by("side", "_mkey").alias("driving_side"),
                  *[F.first(c).alias(c) for c in points.columns])
-            .select("doc_id", *other_cols, "key"))
+            .select("doc_id", *other_cols, "key", "driving_side"))
 
 
 def repartition_by_cell_range(df: DataFrame, num_partitions: int,
@@ -403,7 +407,6 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     """
     if k < 1:
         raise ValueError(f"k must be at least 1: {k!r}")
-    spark = queries.sparkSession
     queries = queries.where(_finite_sql("lon", "lat"))
     # both the cell index and the brute-force remainder read the kept ways
     ways = ways.where(USABLE_GEOMETRY_SQL)
@@ -501,6 +504,8 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     while (ring_k * 2 <= max_ring and ring_k * 2 < world
            and density * (2 * ring_k + 1) ** 2 < 2 * k):
         ring_k *= 2
+    # the loop's answer; with no ring round, every query is left
+    unfinished = True
     while ring_k <= max_ring and ring_k < world:
         cand = (query_cells(remaining, ring_k)
                 .join(way_index, "cell")
@@ -518,10 +523,11 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
                 .select("_row"))
         finished_parts.append(topk.join(done, "_row", "left_semi"))
         remaining = remaining.join(done, "_row", "left_anti")
-        if remaining.isEmpty():
+        unfinished = not remaining.isEmpty()
+        if not unfinished:
             break
         ring_k *= 2
-    if not remaining.isEmpty():
+    if unfinished:
         # sparse remainder: exact brute force (small side crossJoin)
         brute = (F.broadcast(remaining).crossJoin(
                     ways.select(way_id, "geometry"))
@@ -533,14 +539,6 @@ def knn_join(queries: DataFrame, ways: DataFrame, k: int = 1,
     # every surviving part sits on checkpointed topk blocks (or on `ways`
     # directly, for the brute remainder) — the cached index can go
     way_index.unpersist()
-    if not finished_parts:
-        # a fresh field list: ``queries.schema`` is cached on the frame,
-        # and ``StructType.add`` would grow it in place
-        return spark.createDataFrame([], T.StructType(
-            queries.schema.fields
-            + [T.StructField(way_id, T.StringType()),
-               T.StructField("dist", T.DoubleType()),
-               T.StructField("rank", T.IntegerType())]))
     out = finished_parts[0]
     for part in finished_parts[1:]:
         out = out.unionByName(part)

@@ -63,12 +63,21 @@ def test_cli_convert_not_road(tmp_path, capsys):
 @pytest.mark.checkpoint
 def test_run_batch_golden_fixture(spark, tmp_path, capsys):
     """The batch job body (the CLI's ``batch`` and the spark-submit job)
-    on the packaged golden documents: every case lands, none errors, and
-    the manifest's per-partition counts add up."""
-    out = str(tmp_path / "lanes")
-    summary = run_batch(spark, os.path.join(FIXTURE_DIR, "documents.parquet"),
-                        out)
+    on the packaged golden documents plus one with a duplicate tag key:
+    every document lands, only that one errors (counted from the footers,
+    checked against a read-back), and the manifest's per-partition counts
+    add up."""
+    docs = spark.read.parquet(os.path.join(FIXTURE_DIR, "documents.parquet"))
+    spans = [{"kind": "tag", "text": text, "media_ref": None, "offset": i}
+             for i, text in enumerate(["highway=primary", "highway=residential"])]
+    dup = spark.createDataFrame([("dup_key", "dup_key", "right", None, spans)],
+                                docs.schema)
+    inp, out = str(tmp_path / "docs"), str(tmp_path / "lanes")
+    docs.unionByName(dup).write.parquet(inp)
+    summary = run_batch(spark, inp, out)
     assert json.loads(capsys.readouterr().out.splitlines()[-1]) == summary
-    assert (summary["rows"], summary["errors"]) == (46, 0)
+    assert (summary["rows"], summary["errors"]) == (47, 1)
     assert sum(summary["partition_rows"]) == summary["rows"]
-    assert spark.read.parquet(out).count() == 46
+    lanes = spark.read.parquet(out)
+    assert lanes.count() == 47
+    assert lanes.where("error IS NOT NULL").count() == summary["errors"]

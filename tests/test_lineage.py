@@ -43,6 +43,24 @@ def test_checkpoint_and_resume(spark, tmp_path):
     assert rep["median"] >= 0
 
 
+def test_non_null_rows_from_footers(tmp_path):
+    """Non-null rows come from the footers' column-chunk null counts, over
+    every part file and row group, with nested leaves ahead of the column;
+    a chunk without the statistic raises instead of guessing."""
+    import pyarrow as pa
+
+    table = pa.table({"lanes": [[{"a": 1, "b": 2}], None, []],
+                      "error": ["bad_tag", None, None]})
+    pq.write_table(table, tmp_path / "part-00000.parquet")
+    pq.write_table(table, tmp_path / "part-00001.parquet", row_group_size=1)
+    pq.write_table(table, tmp_path / "other.parquet", write_statistics=False)
+    assert L.non_null_rows(str(tmp_path), "error") == 2
+    pq.write_table(table, tmp_path / "part-00002.parquet",
+                   write_statistics=False)
+    with pytest.raises(ValueError, match="null_count"):
+        L.non_null_rows(str(tmp_path), "error")
+
+
 def test_manifest_counts_the_written_partitions(spark, tmp_path):
     """The lineage is the partitions the write produced, in partition
     order, not the split packing of a read-back; and the checkpoint runs

@@ -87,7 +87,8 @@ def _point_id(i):
 @pytest.mark.parametrize("strategy", STRATEGIES)
 def test_containment_join_matches_brute_force(spark, overlap_points, strategy):
     """Every row comes back once, with its own columns and the brute-force
-    key, whatever its id."""
+    key and driving side, whatever its id. Left-driving GB shares FR's edge
+    and vertex, so the side must follow the winning key."""
     lon, lat = overlap_points
     rows = [(_point_id(i), i, float(x), float(y))
             for i, (x, y) in enumerate(zip(lon, lat))]
@@ -95,10 +96,13 @@ def test_containment_join_matches_brute_force(spark, overlap_points, strategy):
                                "doc_id string, i int, lon double, lat double")
     out = containment_join(df, OVERLAP, level=LEVEL, strategy=strategy).collect()
     assert len(out) == len(rows)
-    got = {r["i"]: (r["doc_id"], r["lon"], r["lat"], r["key"]) for r in out}
-    want, _ = _brute(lon, lat, OVERLAP)
+    got = {r["i"]: (r["doc_id"], r["lon"], r["lat"], r["key"], r["driving_side"])
+           for r in out}
+    want, want_side = _brute(lon, lat, OVERLAP)
+    assert "left" in want_side
     assert [got[i] for i in range(len(rows))] == [
-        (d, x, y, k) for (d, _, x, y), k in zip(rows, want)]
+        (d, x, y, k, side)
+        for (d, _, x, y), k, side in zip(rows, want, want_side)]
 
 
 # --- null / NaN coordinates ------------------------------------------------

@@ -81,6 +81,29 @@ def test_pipeline_golden(spark, geo_docs, geo_cases, fused):
             f"{c['case_id']} {c['description']}\n{diff_road(actual, expected)}"
 
 
+def _rows(df):
+    return sorted((r.asDict(recursive=True) for r in df.collect()),
+                  key=lambda r: r["doc_id"])
+
+
+@pytest.mark.parametrize("strategy", ["map", "broadcast"])
+def test_unfused_replaces_given_locale(geo_docs, geo_cases, strategy):
+    """With polygons, both paths take the locale from the point: documents
+    that carry a wrong ``iso_3166_2``/``driving_side`` give exactly the
+    rows of the fused path on the same documents without them."""
+    polys = G.all_country_polygons()
+    flipped = {"left": "right", "right": "left"}
+    wrong_side = F.create_map(*[F.lit(v) for c in geo_cases for v in
+                                (c["case_id"], flipped[c["driving_side"]])])
+    wrong = (geo_docs.withColumn("iso_3166_2", F.lit("ZZ"))
+             .withColumn("driving_side", wrong_side[F.col("doc_id")]))
+    want = _rows(lanes_pipeline(geo_docs, polys, level=10))
+    assert _rows(lanes_pipeline(wrong, polys, level=10)) == want
+    for docs in (geo_docs, wrong):
+        assert _rows(lanes_pipeline(docs, polys, level=10, fused=False,
+                                    strategy=strategy)) == want
+
+
 def test_zonal_join(spark):
     # raster: average of synthetic speed samples; way covers known cells,
     # plus a tile in the world's south-west corner cell, where a NaN vertex

@@ -30,11 +30,16 @@ def test_filter_and_column_pushdown(spark, sf_dir):
     assert "ReadSchema: struct<l_orderkey:bigint,l_quantity:double>" in plan
 
 
-@pytest.mark.lane_engine
-def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
-    docs = (spark.read.parquet(fixture_dir["documents"])
+def _located_docs(spark, fixture_dir):
+    """The golden documents (which carry locale columns) with a point each."""
+    return (spark.read.parquet(fixture_dir["documents"])
             .withColumn("lon", F.pmod(F.xxhash64("doc_id"), F.lit(360)) - 180.0)
             .withColumn("lat", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(170)) - 85.0))
+
+
+@pytest.mark.lane_engine
+def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
+    docs = _located_docs(spark, fixture_dir)
     result = lanes_pipeline(docs, G.all_country_polygons(), level=8)
     plan = _plan(result)
     assert "Exchange" not in plan, plan  # pure narrow map end-to-end
@@ -50,9 +55,7 @@ def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
     from osm2lanes_spark.operators.lane_transform import tags_to_lanes_stage
     from osm2lanes_spark.spatial.joins import make_locale_resolver
 
-    docs = (spark.read.parquet(fixture_dir["documents"])
-            .withColumn("lon", F.pmod(F.xxhash64("doc_id"), F.lit(360)) - 180.0)
-            .withColumn("lat", F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(170)) - 85.0))
+    docs = _located_docs(spark, fixture_dir)
     stage = tags_to_lanes_stage(docs, locale_resolver=make_locale_resolver(
         G.all_country_polygons(), 8))
     qe = stage._jdf.queryExecution()
@@ -66,6 +69,22 @@ def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
     crossing = optimized.child().output()
     assert [crossing.apply(i).name() for i in range(crossing.size())] == [
         "doc_id", "key", "name", "ref", "lon", "lat"]
+
+
+@pytest.mark.lane_engine
+@pytest.mark.parametrize("strategy", ["map", "broadcast"])
+def test_unfused_pipeline_plan(spark, fixture_dir, strategy):
+    """The unfused locale is the containment join's own answer: no lookup
+    table is joined on after it. ``map`` is one Arrow eval and no broadcast;
+    ``broadcast`` broadcasts only the index's covering."""
+    plan = _plan(lanes_pipeline(_located_docs(spark, fixture_dir),
+                                G.all_country_polygons(), level=8,
+                                fused=False, strategy=strategy))
+    if strategy == "map":
+        assert plan.count("ArrowEvalPython") == 1, plan
+        assert "BroadcastExchange" not in plan, plan
+    else:
+        assert plan.count("BroadcastExchange") == 1, plan
 
 
 @pytest.mark.lane_engine

@@ -145,8 +145,9 @@ def test_knn_join(spark):
 
 
 def test_knn_join_empty_result_leaves_queries_schema(spark):
-    """With no ring round and no query left, knn_join builds its empty
-    result schema without growing the caller's (cached) queries schema."""
+    """With no ring round and no query, knn_join returns an empty result
+    with the full output schema, without growing the caller's (cached)
+    queries schema."""
     ways_df = spark.createDataFrame(
         [("A", [{"lon": 0.0, "lat": 0.0}])],
         "way_id string, geometry array<struct<lon:double,lat:double>>")
