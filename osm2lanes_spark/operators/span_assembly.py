@@ -14,8 +14,9 @@ functions and applied with ``F.expr``: building it as Columns cost one
 py4j round trip per lambda, literal and operator on every plan. One pass
 over the spans gives the tag texts (:func:`tag_texts`); their parse error
 (:func:`tags_error`) and the tag map of :func:`with_tags` are both read
-from those texts. The lane stage keys its rows on the same texts without
-building the map, under the same rejection rule.
+from those texts. The lane stage does not use this SQL: it receives the
+spans' kind and text arrays and applies the same rejection rule in Arrow
+(``lane_transform.lane_keys``).
 """
 
 from __future__ import annotations
@@ -41,8 +42,11 @@ def tags_error(texts: str) -> str:
 
     'bad_tag' when a text is null or has no '=' (lib.rs:274
     ``split_once`` returns Err), else 'duplicate_key' when two texts share
-    the key before their first '=' (lib.rs:96-113). The one rule for every
-    consumer of tag spans: :func:`with_tags` and the lane stage both use it.
+    the key before their first '=' (lib.rs:96-113). :func:`with_tags`
+    applies it; the lane stage applies its Arrow twin,
+    ``lane_transform.lane_keys``. ``test_malformed_spans_rejected`` and
+    ``test_parse_rule_sql_arrow_differential`` (tests/test_golden_spark.py)
+    hold the two to the same answer on every row.
     """
     bad = f"exists({texts}, t -> t IS NULL OR NOT contains(t, '='))"
     keys = f"transform({texts}, t -> substring_index(t, '=', 1))"

@@ -1,7 +1,9 @@
 """The flagship end-to-end pipeline.
 
 documents (Iceberg/parquet, interleaved spans, way geometry)
-  → tag texts → lane key, name, ref (Catalyst HOFs, JVM-side)
+  → the spans' kind and text arrays (one plain JVM projection)
+  → lane key, parse error, name, ref (vectorised pyarrow, in the lane
+    stage)
   → spatial locale resolution (one broadcast locale index: morton cell
     lookup + PIP refinement)                   [replaces Overpass is_in]
   → tags_to_lanes Arrow stage (ROAD_SCHEMA)
@@ -61,9 +63,9 @@ def lanes_pipeline(docs: DataFrame,
 
     The per-call floor is kept small: the locale index is built once per
     (polygon content, level) by the memoised ``make_locale_resolver`` and
-    shipped once per SparkContext as a broadcast, and the JVM plan is
-    built from cached Spark SQL text, one py4j call per expression.
-    ``fused=False`` assembles no tag map either. With
+    shipped once per SparkContext as a broadcast, and the lane stage's
+    JVM side is one projection with no lambda (the lane key is built in
+    the Arrow stage). ``fused=False`` assembles no tag map either. With
     ``strategy='broadcast'`` it encodes cells JVM-side (``cell_sql``); the
     fused path and ``strategy='map'`` encode them in numpy
     (``LocaleResolver.locate``). Both encoders give the same cell.

@@ -1,13 +1,15 @@
 """End-to-end golden parity through the Spark pipeline.
 
-documents(parquet, interleaved spans) → span assembly (Catalyst HOFs) →
-tags_to_lanes mapInArrow stage → compare against expected lanes, plus the
+documents(parquet, interleaved spans) → span assembly (Catalyst HOFs) or
+the tags_to_lanes mapInArrow stage (which parses the span arrays in
+Arrow) → compare against expected lanes and against each other, plus the
 span-sequence equality invariant across the stage.
 """
 
 from __future__ import annotations
 
 import json
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,8 +21,8 @@ from osm2lanes_spark.core.model import RoadError
 from osm2lanes_spark.core.tags_to_lanes import tags_to_lanes
 from osm2lanes_spark.fixtures.golden import (expected_has_separators,
                                              filter_enabled_lanes, load_cases)
-from osm2lanes_spark.operators.lane_transform import (_lane_inputs,
-                                                      arrow_lanes_to_internal,
+from osm2lanes_spark.operators.lane_transform import (arrow_lanes_to_internal,
+                                                      lane_keys,
                                                       lanes_to_tags_stage,
                                                       tags_to_lanes_stage)
 from osm2lanes_spark.operators.span_assembly import span_fingerprint, with_tags
@@ -217,7 +219,7 @@ def test_tags_key_exact(spark):
                        "cycleway=lane"], "DE", "right", True),
         ("odd", base + odd, "DE", "right", True),
         ("odd_reordered", odd[::-1] + base, "DE", "right", True),
-        # a naive "k=v" join of these two would collide; JSON cannot
+        # a naive "k=v" join of these two would collide; text codes cannot
         ("joined", base + ['name=x","ref":"y'], "DE", "right", True),
         ("split", base + ["name=x", "ref=y"], "DE", "right", True),
         ("no_separators", base, "DE", "right", False),
@@ -295,18 +297,94 @@ def test_tags_key_exact(spark):
     assert out["empty_name"]["name"] == "" and out["name_like"]["name"] is None
     assert same_lanes("base", "empty_name") and same("base", "name_like")
 
-    # the key itself: two accepted rows share one exactly when their tags
-    # other than name and ref are equal; a rejected row's key is its error
-    keys = {r["doc_id"]: r["key"] for r in _lane_inputs(df, []).collect()}
+    # the key itself, from the arrays the stage receives, as one batch:
+    # two accepted rows share one exactly when their tags other than name
+    # and ref are equal; a rejected row carries its error and no key
+    keys = _stage_keys(df)
     lane_tags = {}
     for doc_id, texts, iso, side, inc in docs:
         error = _forward_in_process(texts, iso, side, inc)["error"]
         if error in ("bad_tag", "duplicate_key"):
-            assert keys[doc_id] == "!" + error, doc_id
+            assert keys[doc_id][:2] == (None, error), doc_id
         else:
+            assert keys[doc_id][1] is None, doc_id
             lane_tags[doc_id] = {k: v for k, v in (t.split("=", 1) for t in texts or ())
                                  if k not in ("name", "ref")}
     for a in lane_tags:
         for b in lane_tags:
-            assert (keys[a] == keys[b]) == (lane_tags[a] == lane_tags[b]), (a, b)
-    assert keys["name_en"] != keys["base"]
+            same = keys[a][0] == keys[b][0]
+            assert same == (lane_tags[a] == lane_tags[b]), (a, b)
+    assert keys["name_en"][0] != keys["base"][0]
+
+
+def _stage_keys(df) -> dict:
+    """doc_id → (key, error, name, ref) of ``lane_keys`` over the spans'
+    kind and text arrays, the columns the lane stage receives."""
+    table = df.selectExpr("doc_id", "spans.kind AS kinds",
+                          "spans.text AS texts").toArrow().combine_chunks()
+    keys = lane_keys(table.column("kinds").chunk(0),
+                     table.column("texts").chunk(0))
+    return dict(zip(table.column("doc_id").to_pylist(),
+                    zip(*(c.to_pylist() for c in keys[:4]))))
+
+
+def _random_spans(rng: random.Random):
+    """A span list drawn to hit every branch of the tag parse rule."""
+    if rng.random() < 0.03:
+        return None
+    keys = ["highway", "lanes", "oneway", "name", "ref", "name:en", "Name",
+            "ref:x", "", "é"]
+    values = ["primary", "2", "yes", "", "a=b", "\"q\"", "\\", "ü"]
+    spans = []
+    if rng.random() < 0.7:
+        spans.append(("tag", "highway=" + rng.choice(["primary", "residential"])))
+    for _ in range(rng.randrange(5)):
+        kind = rng.choices(["tag", "media", None], [8, 1, 1])[0]
+        shape = rng.random()
+        if shape < 0.05:
+            text = None
+        elif shape < 0.12:
+            text = rng.choice(keys) + rng.choice(values).replace("=", "")
+        else:
+            text = rng.choice(keys) + "=" + rng.choice(values)
+        spans.append((kind, text))
+    if spans and rng.random() < 0.1:
+        spans.append(rng.choice(spans))  # a repeated key
+    if rng.random() < 0.05:
+        spans.insert(rng.randrange(len(spans) + 1), None)
+    rng.shuffle(spans)
+    return [None if s is None else
+            {"kind": s[0], "text": s[1], "media_ref": None, "offset": i}
+            for i, s in enumerate(spans)]
+
+
+def test_parse_rule_sql_arrow_differential(spark):
+    """``with_tags`` (the SQL rule) and the lane stage (its Arrow twin)
+    give every generated row the same parse error, and the stage's
+    name/ref and kernel error equal the in-process values."""
+    rng = random.Random(20261020)
+    rows = [(f"r{i}", _random_spans(rng)) for i in range(2000)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, spans array<struct<kind:string,text:string,"
+              "media_ref:string,offset:int>>").coalesce(2)
+    sql = {r["doc_id"]: r["tags_error"]
+           for r in with_tags(df).select("doc_id", "tags_error").collect()}
+    roads = {r["doc_id"]: r for r in tags_to_lanes_stage(df).select(
+        "doc_id", "error", "name", "ref").collect()}
+    errors, passed = set(), set()
+    for doc, spans in rows:
+        texts = [s["text"] for s in spans or () if s is not None
+                 and s["kind"] == "tag"]
+        want = _forward_in_process(texts, None, None, True)
+        parse = want["error"] if want["error"] in ("bad_tag", "duplicate_key") else None
+        got = roads[doc]
+        assert sql[doc] == parse, doc
+        if sql[doc] is not None:
+            assert got["error"] == sql[doc], doc
+        assert got["error"] == want["error"], doc
+        assert (got["name"], got["ref"]) == (want.get("name"), want.get("ref")), doc
+        errors.add(got["error"])
+        passed |= {f for f in ("name", "ref") if got[f] is not None}
+    # every outcome occurs: accepted rows, both parse errors, name and ref
+    assert {None, "bad_tag", "duplicate_key"} <= errors
+    assert passed == {"name", "ref"}

@@ -49,9 +49,10 @@ def test_flagship_pipeline_no_shuffle(spark, fixture_dir):
 
 @pytest.mark.lane_engine
 def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
-    """The fused lane stage keys rows on the tag texts: no tag map, no JVM
-    cell encode, one Python stage, no shuffle, and only the key, the
-    passthrough tags and the point cross to Python."""
+    """The fused lane stage keys rows in Arrow: its JVM side is one plain
+    projection (no lambda, no JSON, no sort, no tag map, no JVM cell
+    encode), one Python stage, no shuffle, and only the spans' kind and
+    text arrays and the point cross to Python."""
     from osm2lanes_spark.operators.lane_transform import tags_to_lanes_stage
     from osm2lanes_spark.spatial.joins import make_locale_resolver
 
@@ -61,14 +62,15 @@ def test_lane_stage_plan_from_tag_texts(spark, fixture_dir):
     qe = stage._jdf.queryExecution()
     optimized = qe.optimizedPlan()
     text = optimized.toString()
-    for fn in ("map_from_entries", "map_filter", "shiftleft"):
+    for fn in ("lambdafunction", "to_json", "array_sort", "map_from_entries",
+               "map_filter", "shiftleft"):
         assert fn not in text, fn
     executed = qe.executedPlan().toString()
     assert executed.count("MapInArrow") == 1 and "Exchange" not in executed
     assert optimized.nodeName() == "MapInArrow"
     crossing = optimized.child().output()
     assert [crossing.apply(i).name() for i in range(crossing.size())] == [
-        "doc_id", "key", "name", "ref", "lon", "lat"]
+        "doc_id", "kinds", "texts", "lon", "lat"]
 
 
 @pytest.mark.lane_engine
