@@ -343,8 +343,7 @@ def _q_trajectories(spark, sf_dir):
     traces = ev.select(F.col("user_id"), F.col("ts"), F.col("event_id"),
                        F.expr(_ELON).alias("lon"),
                        F.expr(_ELAT).alias("lat"))
-    return trajectory_summary(traces, entity="user_id", order="ts",
-                              tiebreak="event_id")
+    return trajectory_summary(traces, entity="user_id", tiebreak="event_id")
 
 
 def _q_zonal(spark, sf_dir):
@@ -769,8 +768,7 @@ def _q_ngram_jaccard(spark, sf_dir):
     from osm2lanes_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", "text", shingle_n=3,
-                               threshold=0.5)
+    return ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5)
 
 
 def _q_jaccard_prefix(spark, sf_dir):
@@ -783,8 +781,7 @@ def _q_jaccard_prefix(spark, sf_dir):
     from osm2lanes_spark.operators.dedup import jaccard_prefix_pairs
 
     docs = _read(spark, sf_dir, "documents")
-    return jaccard_prefix_pairs(docs, "doc_id", "text", shingle_n=3,
-                                threshold=0.5)
+    return jaccard_prefix_pairs(docs, "doc_id", "text", threshold=0.5)
 
 
 
@@ -831,7 +828,7 @@ def _q_mixture(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     mixed = mixture_sample(
         docs, {"src0": 2.25, "src1": 0.5, "src2": 0.0, "src3": 1.75},
-        source_col="source", id_col="doc_id", seed=7, default_rate=1.0)
+        id_col="doc_id", seed=7, default_rate=1.0)
     return (mixed.groupBy("source")
             .agg(F.count(F.lit(1)).alias("rows_out"),
                  F.countDistinct("doc_id").alias("docs_kept"),
@@ -1038,7 +1035,7 @@ def _q_curation_pipeline(spark, sf_dir):
     en = with_langid(gated).where(F.col("lang_pred") == "en")
     mixed = mixture_sample(
         en, {"src0": 2.0, "src1": 0.75, "src3": 1.5},
-        source_col="source", id_col="doc_id", seed=11, default_rate=1.0)
+        id_col="doc_id", seed=11, default_rate=1.0)
     train = (hash_split(mixed, "doc_id").where(F.col("split") == "train")
              .withColumn("item_id",
                          F.concat_ws("#", F.col("doc_id").cast("string"),
@@ -1139,7 +1136,7 @@ def _q_strip_spans(spark, sf_dir):
     from osm2lanes_spark.operators.dedup import strip_duplicate_spans
 
     docs = _read(spark, sf_dir, "documents")
-    out = strip_duplicate_spans(docs, k=8, min_docs=2)
+    out = strip_duplicate_spans(docs, k=8)
     return out.select("doc_id",
                       F.col("n_tokens").cast("bigint").alias("n_tokens"),
                       F.col("n_removed_tokens").cast("bigint")
@@ -1212,8 +1209,7 @@ def _q_domain_cap(spark, sf_dir):
     from osm2lanes_spark.operators.sampling import cap_per_key
 
     docs = _read(spark, sf_dir, "documents")
-    out = cap_per_key(docs, "source", cap=10, order_col="doc_id",
-                      scale_safe=True)
+    out = cap_per_key(docs, "source", cap=10, scale_safe=True)
     return out.select("doc_id", "source", "kept")
 
 
@@ -1232,7 +1228,7 @@ def _q_dsir_select(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     target = docs.where(F.col("doc_id") % 97 == 0)
     out = dsir_resample(docs, target, k=50, ns=(1, 2),
-                        n_buckets=65536, seed=0, alpha=1.0)
+                        n_buckets=65536, alpha=1.0)
     return out.select("doc_id",
                       F.round(F.col("dsir_logw"), 6).alias("logw"),
                       F.round(F.col("dsir_key"), 6).alias("key"),
@@ -1256,7 +1252,7 @@ def _q_ann_pq(spark, sf_dir):
     emb = (_read(spark, sf_dir, "embeddings")
            .withColumn("embedding",
                        F.col("embedding").cast("array<double>")))
-    cb = pseudo_codebooks(spark, m=4, k=8, dsub=16, seed=0)
+    cb = pseudo_codebooks(spark, m=4, k=8, dsub=16)
     coded = pq_encode(emb, cb)
     queries = (emb.where(F.col("vec_id") < 5)
                .select(F.col("vec_id").alias("query_id"), "embedding"))
@@ -1604,8 +1600,7 @@ def _q_rolling_stats(spark, sf_dir):
     from osm2lanes_spark.operators.temporal import rolling_stats
 
     ev = _read(spark, sf_dir, "events")
-    out = rolling_stats(ev, key="user_id", ts="ts", value_col="value",
-                        window_seconds=3600)
+    out = rolling_stats(ev, window_seconds=3600)
     return out.select("event_id", "user_id", "n_win", "sum_win")
 
 
@@ -1827,7 +1822,7 @@ def _q_sssp_costs(spark, sf_dir):
              .unionByName(base.select(F.col("s").alias("src"),
                                       F.col("c").alias("dst"), "w")))
     sources = cust.agg((F.min("c_custkey") * 2).alias("node"))
-    return weighted_sssp(edges, sources, weight="w", max_hops=4)
+    return weighted_sssp(edges, sources, max_hops=4)
 
 
 def _q_triangles(spark, sf_dir):
@@ -2493,8 +2488,7 @@ def _q_trips(spark, sf_dir):
                        F.expr(_ELON).alias("lon"),
                        F.expr(_ELAT).alias("lat"))
     return trip_segments(traces, gap_minutes=1440.0, jump_km=25000.0,
-                         entity="user_id", order="ts",
-                         tiebreak="event_id")
+                         entity="user_id", tiebreak="event_id")
 
 
 def _q_revenue_cube(spark, sf_dir):

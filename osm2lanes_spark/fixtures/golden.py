@@ -109,34 +109,24 @@ def tags_to_spans(doc_id: str, tags: dict[str, str]) -> list[dict]:
     return spans
 
 
-def cases_to_documents(cases: list[dict], replicate: int = 1) -> list[dict]:
-    """One interleaved document per case (replicated for throughput runs).
-
-    Replicas get distinct doc_ids but identical tag content, so expected
-    outputs are shared with the base case.
-    """
-    docs = []
-    for case in cases:
-        for r in range(replicate):
-            doc_id = case["case_id"] if r == 0 else f"{case['case_id']}#r{r}"
-            docs.append({
-                "doc_id": doc_id,
-                "case_id": case["case_id"],
-                "driving_side": case["driving_side"],
-                "iso_3166_2": case["iso_3166_2"],
-                "spans": tags_to_spans(doc_id, case["tags"]),
-            })
-    return docs
+def cases_to_documents(cases: list[dict]) -> list[dict]:
+    """One interleaved document per case, keyed by its case id."""
+    return [{"doc_id": case["case_id"],
+             "case_id": case["case_id"],
+             "driving_side": case["driving_side"],
+             "iso_3166_2": case["iso_3166_2"],
+             "spans": tags_to_spans(case["case_id"], case["tags"])}
+            for case in cases]
 
 
-def write_fixture_parquet(out_dir: str, replicate: int = 1) -> dict[str, str]:
+def write_fixture_parquet(out_dir: str) -> dict[str, str]:
     """Write documents + golden parquet fixtures with pyarrow. Returns paths."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     os.makedirs(out_dir, exist_ok=True)
     cases = load_cases()
-    docs = cases_to_documents(cases, replicate=replicate)
+    docs = cases_to_documents(cases)
 
     span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
                         ("media_ref", pa.string()), ("offset", pa.int32())])

@@ -76,13 +76,12 @@ def merge_upsert(target: DataFrame, source: DataFrame,
 
 def compact_cdc_log(log: DataFrame,
                     keys: "list[str] | tuple[str, ...]",
-                    order_col: str, op_col: str = "op",
-                    delete_op: str = "D") -> DataFrame:
+                    order_col: str) -> DataFrame:
     """Latest-wins compaction of an insert/update/delete change log:
     keep each key's highest-``order_col`` row, drop keys whose final
-    operation is ``delete_op``. Ties on ``order_col`` break by
+    ``op`` is the delete ``"D"``. Ties on ``order_col`` break by
     preferring the delete (the conservative read of an ambiguous log)
-    then by ``op_col`` descending for determinism.
+    then by ``op`` descending for determinism.
 
     One window over the (high-cardinality) key shuffle of the LOG —
     the base table is never touched; apply the survivors with
@@ -93,9 +92,9 @@ def compact_cdc_log(log: DataFrame,
         raise ValueError("keys must be non-empty")
     w = Window.partitionBy(*keys).orderBy(
         F.col(order_col).desc(),
-        (F.col(op_col) == delete_op).cast("int").desc(),
-        F.col(op_col).desc())
+        (F.col("op") == "D").cast("int").desc(),
+        F.col("op").desc())
     return (log.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
-            .where(F.col(op_col) != delete_op)
+            .where(F.col("op") != "D")
             .drop("__rn"))

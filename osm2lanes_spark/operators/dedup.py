@@ -86,14 +86,22 @@ def dedup_exact(df: DataFrame, id_col: str = "doc_id",
 # Shingles + MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of the normalized text (JVM-side).
+# Word 3-grams: the shingle of every MinHash and Jaccard operator here.
+SHINGLE_N = 3
+
+# MinHash signature: 32 salted hashes, banded 8 × 4 for the LSH join.
+MINHASH_HASHES, MINHASH_BANDS = 32, 8
+
+
+def word_shingles(text: Column) -> Column:
+    """Distinct word ``SHINGLE_N``-grams of the normalized text (JVM-side).
 
     Built by ``zip_with`` over shifted token arrays instead of
     ``transform(sequence, i -> concat_ws(slice(toks, i, n)))``: the
     per-index ``slice`` allocates an array per gram under interpreted HOF
     eval — the zip_with chain measures ~4x faster on the bench corpus with
     byte-identical output (round-2 profiling)."""
+    n = SHINGLE_N
     toks = F.split(normalized(text), " ")
     grams = toks
     for k in range(1, n):
@@ -118,11 +126,11 @@ def jaccard(a: Column, b: Column) -> Column:
 
 
 def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text", shingle_n: int = 3,
-                            num_hashes: int = 32, bands: int = 8,
+                            text_col: str = "text",
                             threshold: float = 0.6, verify: str = "auto",
                             min_rescan_bytes: int = 4 << 30) -> DataFrame:
-    """Near-duplicate pairs via MinHash banding, verified by exact Jaccard.
+    """Near-duplicate pairs via MinHash banding (``MINHASH_HASHES``
+    hashes in ``MINHASH_BANDS`` bands), verified by exact Jaccard.
 
     Returns (left_id, right_id, jaccard) with left < right, jaccard ≥
     threshold. Only band-colliding pairs are ever joined.
@@ -155,7 +163,7 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     if verify not in ("auto", "rescan", "candidate_first"):
         raise ValueError(f"unknown verify mode: {verify!r}")
-    rows = num_hashes // bands
+    rows = MINHASH_HASHES // MINHASH_BANDS
     # 'auto' on a small or derived input always resolves to 'rescan'
     # (the candidate_first probe below only runs for big bare scans) —
     # resolve it NOW so the rescan path can materialize the shingle
@@ -170,13 +178,13 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
             verify = "rescan"
     sh = _spread(df, id_col).select(
         F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_n).alias("shingles"))
+        word_shingles(F.col(text_col)).alias("shingles"))
     if verify == "rescan":
         sh = sh.localCheckpoint(eager=True)
     sig = (sh.select("id", F.explode("shingles").alias("shingle"))
            .groupBy("id")
            .agg(*[F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-                  for i in range(num_hashes)]))
+                  for i in range(MINHASH_HASHES)]))
     banded = sig.select(
         "id",
         F.explode(F.array(*[
@@ -184,7 +192,7 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
                 F.lit(b).alias("band"),
                 F.xxhash64(*[F.col(f"h{b * rows + r}") for r in range(rows)])
                 .alias("band_hash"))
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ])).alias("bb")).select("id", "bb.band", "bb.band_hash")
     left = banded.select(F.col("id").alias("left_id"), "band", "band_hash")
     right = banded.select(F.col("id").alias("right_id"), "band", "band_hash")
@@ -216,8 +224,7 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
         sh_v = (_spread(df.join(F.broadcast(ids), id_col, "left_semi"),
                         id_col)
                 .select(F.col(id_col).alias("id"),
-                        word_shingles(F.col(text_col), shingle_n)
-                        .alias("shingles")))
+                        word_shingles(F.col(text_col)).alias("shingles")))
     else:
         sh_v = sh
     # exact-Jaccard verification only on candidates
@@ -232,12 +239,12 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
 
 
 def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text", shingle_n: int = 3,
+                        text_col: str = "text",
                         threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard over *all* pairs (the small-data oracle path;
     LSH above is the scale path with identical verification semantics)."""
     s = df.select(F.col(id_col).alias("id"),
-                  word_shingles(F.col(text_col), shingle_n).alias("sh"))
+                  word_shingles(F.col(text_col)).alias("sh"))
     l = s.select(F.col("id").alias("left_id"), F.col("sh").alias("lsh"))
     r = s.select(F.col("id").alias("right_id"), F.col("sh").alias("rsh"))
     return (l.crossJoin(r).where(F.col("left_id") < F.col("right_id"))
@@ -361,11 +368,10 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
 # Embedding-cosine near-dup (random-hyperplane LSH)
 # ---------------------------------------------------------------------------
 
-def embedding_near_dup(df: DataFrame, id_col: str = "vec_id",
-                       vec_col: str = "embedding", dim: int = 16,
-                       planes: int = 16, bands: int = 4,
-                       threshold: float = 0.95) -> DataFrame:
-    """Near-duplicate vectors by cosine ≥ threshold.
+def embedding_near_dup(df: DataFrame, dim: int = 16, planes: int = 16,
+                       bands: int = 4, threshold: float = 0.95) -> DataFrame:
+    """Near-duplicate ``embedding`` vectors (keyed by ``vec_id``) by
+    cosine ≥ threshold.
 
     Deterministic hyperplanes (fixed-seed), sign-bit sketch banded into
     ``bands`` buckets; candidates verified with exact cosine — the same
@@ -391,7 +397,6 @@ def embedding_near_dup(df: DataFrame, id_col: str = "vec_id",
                         for b in range(bands)])
         return pd.Series(out)
 
-    vec = F.col(vec_col)
     # zero-norm guard matching the numpy sketch kernel: all-zero embeddings
     # become the zero vector (cosine 0 — excluded by threshold) instead of
     # null/NaN silently vanishing from results. The norm is hoisted into
@@ -399,9 +404,10 @@ def embedding_near_dup(df: DataFrame, id_col: str = "vec_id",
     # re-evaluated per element (O(d^2)/vector under interpreted HOF eval).
     from .similarity import with_unit
 
-    sig = (with_unit(_spread(df, id_col), vec_col, "unit")
-           .select(F.col(id_col).alias("id"), "unit",
-                   F.posexplode(sketch_udf(vec)).alias("band", "band_val"))
+    sig = (with_unit(_spread(df, "vec_id"), "embedding", "unit")
+           .select(F.col("vec_id").alias("id"), "unit",
+                   F.posexplode(sketch_udf(F.col("embedding")))
+                   .alias("band", "band_val"))
            .select("id", "unit", "band", "band_val"))
     l = sig.select(F.col("id").alias("left_id"), F.col("unit").alias("lu"),
                    "band", "band_val")
@@ -423,7 +429,7 @@ def embedding_near_dup(df: DataFrame, id_col: str = "vec_id",
 
 def connected_components(pairs: DataFrame, left: str = "left_id",
                          right: str = "right_id",
-                         max_iter: int = 50, jumps: int = 5,
+                         max_iter: int = 50,
                          symmetric: bool = False) -> DataFrame:
     """Group near-duplicate pairs into clusters: (id, component) for every
     id appearing in ``pairs``, where ``component`` is the minimum member
@@ -500,19 +506,19 @@ def connected_components(pairs: DataFrame, left: str = "left_id",
             labels.unionByName(nbr)
             .groupBy("id").agg(F.min("comp").alias("comp")))
         # pointer jumping: follow the label's own label (comp is always a
-        # node id, so the lookup is the same labels relation). ``jumps``
+        # node id, so the lookup is the same labels relation). Five
         # compressions per round: each halves remaining label-chain
         # length, so path-shaped graphs (geographic chains — the dbscan
         # ε-graph) converge in ~log_{2^jumps} rounds instead of ~log₂;
-        # measured on a 2048-node path: 12 rounds → 5 at jumps=3, and
-        # the r07 A/B at both bench sizes prefers jumps=5 (each ROUND
+        # measured on a 2048-node path: 12 rounds → 5 at 3 jumps, and
+        # the r07 A/B at both bench sizes prefers 5 jumps (each ROUND
         # costs fixed driver-sequential jobs — checkpoint + change-join
         # — that dominate the in-plan jump joins on label tables). Each
         # extra jump is one node-keyed self-join of the (small) labels
         # relation per round; halving the round count halves the count
         # of edge-relation joins — the expensive side at scale.
         cur = prop
-        for _ in range(max(1, jumps)):
+        for _ in range(5):
             lookup = cur.select(F.col("id").alias("_cid"),
                                 F.col("comp").alias("_ccomp"))
             cur = (cur.join(_bc_if_small(lookup, n_nodes),
@@ -556,10 +562,10 @@ def connected_components(pairs: DataFrame, left: str = "left_id",
 
 
 def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-                   left: str = "left_id", right: str = "right_id",
                    keep: "str | Column" = "min_id",
                    text_col: str = "text") -> DataFrame:
-    """Full-corpus cluster assignment: every row of ``df`` gets a
+    """Full-corpus cluster assignment over the ``(left_id, right_id)``
+    near-duplicate ``pairs``: every row of ``df`` gets a
     ``component`` (its near-dup cluster's min id; singletons map to
     themselves) and ``is_duplicate`` (member of a cluster, not its
     survivor). The standard keep-one-per-cluster filter is then
@@ -591,7 +597,7 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
             "in the input — rename them before calling")
     # rename the component table's key so an id_col literally named "id"
     # can't collide (drop("id") would remove BOTH columns)
-    comp = (connected_components(pairs, left, right)
+    comp = (connected_components(pairs)
             .withColumnRenamed("id", "__cc_id"))
     joined = (df.join(comp, df[id_col] == comp.__cc_id, "left")
               .drop("__cc_id"))
@@ -619,10 +625,8 @@ def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
 # Cross-document line/paragraph dedup (C4 / RefinedWeb boilerplate removal)
 # ---------------------------------------------------------------------------
 
-def line_dedup(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id", min_docs: int = 2,
+def line_dedup(df: DataFrame, min_docs: int = 2,
                min_line_chars: int = 1, sep: str = "\n",
-               out: str = "clean_text",
                broadcast_fingerprints: bool = True) -> DataFrame:
     """Remove lines (or paragraphs — ``sep="\\n\\n"``) whose normalized
     form occurs in at least ``min_docs`` DISTINCT documents: the
@@ -634,10 +638,10 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     A line is a removal *candidate* only when its normalized form
     (:func:`~osm2lanes_spark.operators.text.normalized` — lowercase,
     collapsed whitespace) has at least ``min_line_chars`` characters, so
-    blank separator lines survive by default. ``id_col`` must be unique
-    (document granularity). NULL text passes through as NULL.
+    blank separator lines survive by default. ``doc_id`` must be unique
+    (document granularity). NULL ``text`` passes through as NULL.
 
-    Returns df.* + ``out`` (text rebuilt from surviving lines in
+    Returns df.* + ``clean_text`` (text rebuilt from surviving lines in
     original order, ``""`` when everything was boilerplate) +
     ``n_lines`` + ``n_removed_lines``.
 
@@ -661,22 +665,22 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     if min_line_chars < 1:
         raise ValueError(
             f"min_line_chars must be >= 1, got {min_line_chars}")
-    reserved = {out, "n_lines", "n_removed_lines"}
+    reserved = {"clean_text", "n_lines", "n_removed_lines"}
     clash = sorted(reserved.intersection(df.columns))
     if clash:
         raise ValueError(f"output column(s) {clash} already exist in the "
-                         "input — rename them or pass a different out=")
+                         "input — rename them")
     split_pat = _re.escape(sep)
 
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), split_pat))
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), split_pat))
         .alias("__pos", "__line"))
     lines = lines.withColumn("__norm", normalized(F.col("__line")))
 
     common = (lines
               .where(F.length("__norm") >= min_line_chars)
-              .select(id_col, "__norm").distinct()
+              .select("doc_id", "__norm").distinct()
               .groupBy("__norm")
               .agg(F.count(F.lit(1)).alias("__docs"))
               .where(F.col("__docs") >= min_docs)
@@ -689,7 +693,7 @@ def line_dedup(df: DataFrame, text_col: str = "text",
     kept = lines.join(common, "__norm", "left_anti")
 
     rebuilt = (kept
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("__n_kept"),
                     F.concat_ws(
                         sep,
@@ -697,18 +701,18 @@ def line_dedup(df: DataFrame, text_col: str = "text",
                             F.array_sort(F.collect_list(
                                 F.struct(F.col("__pos"), F.col("__line")))),
                             lambda s: s["__line"])).alias("__rebuilt"))
-               .select(F.col(id_col).alias("__ld_id"),
+               .select(F.col("doc_id").alias("__ld_id"),
                        "__n_kept", "__rebuilt"))
 
-    n_lines = F.when(F.col(text_col).isNotNull(),
-                     F.size(F.split(F.col(text_col), split_pat)))
-    return (df.join(rebuilt, df[id_col] == F.col("__ld_id"), "left")
+    n_lines = F.when(F.col("text").isNotNull(),
+                     F.size(F.split(F.col("text"), split_pat)))
+    return (df.join(rebuilt, df["doc_id"] == F.col("__ld_id"), "left")
             .withColumn("n_lines", n_lines)
             .withColumn("n_removed_lines",
                         n_lines - F.coalesce(F.col("__n_kept"), F.lit(0)))
-            .withColumn(out, F.when(F.col(text_col).isNotNull(),
-                                    F.coalesce(F.col("__rebuilt"),
-                                               F.lit(""))))
+            .withColumn("clean_text",
+                        F.when(F.col("text").isNotNull(),
+                               F.coalesce(F.col("__rebuilt"), F.lit(""))))
             .drop("__ld_id", "__n_kept", "__rebuilt"))
 
 
@@ -716,16 +720,14 @@ def line_dedup(df: DataFrame, text_col: str = "text",
 # Exact duplicated-substring spans (Lee et al. 2022 style)
 # ---------------------------------------------------------------------------
 
-def duplicate_spans(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", k: int = 8,
-                    min_docs: int = 2,
+def duplicate_spans(df: DataFrame, k: int = 8, min_docs: int = 2,
                     broadcast_fingerprints: bool = True) -> DataFrame:
-    """Find maximal token spans whose every ``k``-token window occurs in
-    at least ``min_docs`` DISTINCT documents — the exact-substring dedup
-    of Lee et al. 2022 ("Deduplicating Training Data Makes Language
-    Models Better"), at whitespace-token granularity instead of the
-    paper's byte-level suffix array (no reference counterpart —
-    engine-side operator).
+    """Find maximal ``text`` token spans whose every ``k``-token window
+    occurs in at least ``min_docs`` DISTINCT documents — the
+    exact-substring dedup of Lee et al. 2022 ("Deduplicating Training
+    Data Makes Language Models Better"), at whitespace-token granularity
+    instead of the paper's byte-level suffix array (no reference
+    counterpart — engine-side operator).
 
     Every document contributes one rolling window per token position
     (``n_tokens - k + 1`` windows); a window is *flagged* when its
@@ -736,7 +738,7 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     ``[q, q+k-1]`` overlap or touch — a span is exactly one connected
     run of duplicated-window coverage).
 
-    Returns one row per span: (``id_col``, ``span_start``, ``span_end``
+    Returns one row per span: (``doc_id``, ``span_start``, ``span_end``
     — 0-based inclusive token positions — ``n_windows``), all counts as
     BIGINT. Documents with fewer than ``k`` tokens contribute nothing.
 
@@ -760,18 +762,18 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     if min_docs < 1:
         raise ValueError(f"min_docs must be >= 1, got {min_docs}")
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     # spread before the O(n_tokens · k) rolling-window build: fused into
     # a single-task scan it runs single-threaded (guide §2.5); no-op at
     # real scale
-    base = (_spread(df, id_col, barrier=True)
-            .select(F.col(id_col), toks.alias("__toks"))
+    base = (_spread(df, "doc_id", barrier=True)
+            .select(F.col("doc_id"), toks.alias("__toks"))
             .withColumn("__n", F.size("__toks"))
             .where(F.col("__n") >= k))
     # window starts are 0-based; slice() is 1-based, so window i covers
     # tokens [i, i+k-1] 0-based == slice(toks, i+1, k)
     wins = base.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(1), F.col("__n") - k + 1),
@@ -780,16 +782,16 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
         .alias("__pos", "__fp"))
 
     flagged = (wins
-               .select(id_col, "__fp").distinct()
+               .select("doc_id", "__fp").distinct()
                .groupBy("__fp")
                .agg(F.count(F.lit(1)).alias("__docs"))
                .where(F.col("__docs") >= min_docs)
                .select("__fp"))
     if broadcast_fingerprints:
         flagged = F.broadcast(flagged)
-    hits = wins.join(flagged, "__fp").select(id_col, "__pos")
+    hits = wins.join(flagged, "__fp").select("doc_id", "__pos")
 
-    w = Window.partitionBy(id_col).orderBy("__pos")
+    w = Window.partitionBy("doc_id").orderBy("__pos")
     brk = F.when(
         F.col("__pos") - F.lag("__pos").over(w) > F.lit(k),
         F.lit(1)).otherwise(F.lit(0))
@@ -799,80 +801,76 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
                    w.rowsBetween(Window.unboundedPreceding,
                                  Window.currentRow))))
     return (grouped
-            .groupBy(id_col, "__grp")
+            .groupBy("doc_id", "__grp")
             .agg(F.min("__pos").cast("bigint").alias("span_start"),
                  (F.max("__pos") + k - 1).cast("bigint").alias("span_end"),
                  F.count(F.lit(1)).alias("n_windows"))
             .drop("__grp"))
 
 
-def strip_duplicate_spans(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", k: int = 8,
-                          min_docs: int = 2, out: str = "clean_text",
-                          broadcast_fingerprints: bool = True) -> DataFrame:
-    """Remove every :func:`duplicate_spans` span from the text,
+def strip_duplicate_spans(df: DataFrame, k: int = 8) -> DataFrame:
+    """Remove every :func:`duplicate_spans` span (``k``-token windows in
+    at least 2 documents) from each ``doc_id``'s ``text``,
     rebuilding each document from its surviving tokens (single-space
     joined — span removal is defined at token granularity, so original
     inter-token whitespace inside a document is normalized; documents
     with no flagged span pass through verbatim).
 
-    Returns df.* + ``out`` + ``n_tokens`` + ``n_removed_tokens``.
+    Returns df.* + ``clean_text`` + ``n_tokens`` + ``n_removed_tokens``.
 
     Scale shape: :func:`duplicate_spans`'s passes plus one explode of
     covered positions (bounded by span length <= document length) and
     one (id, pos) anti-join + per-document rebuild aggregate — the
     line_dedup reconstruction pattern.
     """
-    reserved = {out, "n_tokens", "n_removed_tokens"}
+    reserved = {"clean_text", "n_tokens", "n_removed_tokens"}
     clash = sorted(reserved.intersection(df.columns))
     if clash:
         raise ValueError(f"output column(s) {clash} already exist in the "
-                         "input — rename them or pass a different out=")
+                         "input — rename them")
 
-    spans = duplicate_spans(
-        df, text_col=text_col, id_col=id_col, k=k, min_docs=min_docs,
-        broadcast_fingerprints=broadcast_fingerprints)
+    spans = duplicate_spans(df, k=k)
     # only flagged documents are rebuilt; everything else passes
     # through verbatim (original whitespace intact)
     flagged_docs = (spans
-                    .groupBy(id_col)
+                    .groupBy("doc_id")
                     .agg(F.sum(F.col("span_end") - F.col("span_start") + 1)
                          .alias("__n_covered"))
-                    .select(F.col(id_col).alias("__ds_id"), "__n_covered"))
+                    .select(F.col("doc_id").alias("__ds_id"), "__n_covered"))
     covered = spans.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(F.sequence("span_start", "span_end")).alias("__pos"))
 
     toks = (df
-            .join(flagged_docs, df[id_col] == F.col("__ds_id"), "left_semi")
+            .join(flagged_docs, df["doc_id"] == F.col("__ds_id"), "left_semi")
             .select(
-                F.col(id_col),
-                F.posexplode(tokens(F.col(text_col)))
+                F.col("doc_id"),
+                F.posexplode(tokens(F.col("text")))
                 .alias("__pos", "__tok"))
             .withColumn("__pos", F.col("__pos").cast("bigint")))
-    kept = toks.join(covered, [id_col, "__pos"], "left_anti")
+    kept = toks.join(covered, ["doc_id", "__pos"], "left_anti")
     rebuilt = (kept
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.concat_ws(
                     " ",
                     F.transform(
                         F.array_sort(F.collect_list(
                             F.struct(F.col("__pos"), F.col("__tok")))),
                         lambda s: s["__tok"])).alias("__rebuilt"))
-               .select(F.col(id_col).alias("__rb_id"), "__rebuilt"))
+               .select(F.col("doc_id").alias("__rb_id"), "__rebuilt"))
 
-    n_tokens = F.when(F.col(text_col).isNotNull(),
-                      F.size(tokens(F.col(text_col))))
-    return (df.join(flagged_docs, df[id_col] == F.col("__ds_id"), "left")
-            .join(rebuilt, df[id_col] == F.col("__rb_id"), "left")
+    n_tokens = F.when(F.col("text").isNotNull(),
+                      F.size(tokens(F.col("text"))))
+    return (df.join(flagged_docs, df["doc_id"] == F.col("__ds_id"), "left")
+            .join(rebuilt, df["doc_id"] == F.col("__rb_id"), "left")
             .withColumn("n_tokens", n_tokens)
             .withColumn("n_removed_tokens",
                         F.when(n_tokens.isNull(), F.lit(None))
                         .otherwise(F.coalesce(F.col("__n_covered"),
                                               F.lit(0))))
-            .withColumn(out, F.when(F.col(text_col).isNull(), F.lit(None))
-                        .when(F.col("__n_covered").isNull(),
-                              F.col(text_col))
+            .withColumn("clean_text",
+                        F.when(F.col("text").isNull(), F.lit(None))
+                        .when(F.col("__n_covered").isNull(), F.col("text"))
                         .otherwise(F.coalesce(F.col("__rebuilt"),
                                               F.lit(""))))
             .drop("__ds_id", "__rb_id", "__n_covered", "__rebuilt"))
@@ -883,14 +881,13 @@ def strip_duplicate_spans(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 
 def semantic_dedup(df: DataFrame, centroids: DataFrame,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   centroid_id: str = "centroid_id",
-                   centroid_vec: str = "centroid",
                    threshold: float = 0.95) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup by
-    clustering embeddings, then pruning near-duplicates WITHIN each
-    cluster only — the trick that turns the O(n^2) all-pairs cosine scan
-    into O(sum c_i^2), bounded by the cluster sizes.
+    clustering the ``(vec_id, embedding)`` rows against the
+    ``(centroid_id, centroid)`` rows, then pruning near-duplicates
+    WITHIN each cluster only — the trick that turns the O(n^2)
+    all-pairs cosine scan into O(sum c_i^2), bounded by the cluster
+    sizes.
 
     Stages (all narrow or single-key shuffles):
 
@@ -916,7 +913,7 @@ def semantic_dedup(df: DataFrame, centroids: DataFrame,
     shuffles each cluster to one task — a hot cluster (skew) is bounded
     by raising k (more, smaller clusters), the knob the paper itself
     turns. ``centroids`` normally comes from ``similarity.kmeans_fit``;
-    any deterministic (centroid_id, vector) relation works.
+    any deterministic (centroid_id, centroid) relation works.
     """
     norm = lambda v: F.sqrt(F.aggregate(  # noqa: E731 — local expr builder
         F.zip_with(v, v, lambda a, b: a * b), F.lit(0.0),
@@ -925,28 +922,28 @@ def semantic_dedup(df: DataFrame, centroids: DataFrame,
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
         lambda acc, x: acc + x)
 
-    rows = (_spread(df, id_col)
-            .select(F.col(id_col), F.col(vec_col).alias("_v"))
+    rows = (_spread(df, "vec_id")
+            .select(F.col("vec_id"), F.col("embedding").alias("_v"))
             .withColumn("_nv", norm(F.col("_v"))))
     cent = F.broadcast(
-        centroids.select(F.col(centroid_id).alias("_cid"),
-                         F.col(centroid_vec).alias("_cv"))
+        centroids.select(F.col("centroid_id").alias("_cid"),
+                         F.col("centroid").alias("_cv"))
         .withColumn("_nc", norm(F.col("_cv"))))
 
     cos_c = F.round(dot(F.col("_v"), F.col("_cv"))
                     / (F.col("_nv") * F.col("_nc")), 9)
-    w = Window.partitionBy(id_col).orderBy(F.col("_cos").desc(),
+    w = Window.partitionBy("vec_id").orderBy(F.col("_cos").desc(),
                                            F.col("_cid").asc())
     assigned = (rows.crossJoin(cent)
                 .withColumn("_cos", cos_c)
                 .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1)
-                .select(id_col, F.col("_cid").alias("cluster_id"),
+                .select("vec_id", F.col("_cid").alias("cluster_id"),
                         "_v", "_nv"))
 
-    l = assigned.select(F.col(id_col).alias("_lid"), "cluster_id",
+    l = assigned.select(F.col("vec_id").alias("_lid"), "cluster_id",
                         F.col("_v").alias("_lv"), F.col("_nv").alias("_ln"))
-    r = assigned.select(F.col(id_col).alias("_rid"), "cluster_id",
+    r = assigned.select(F.col("vec_id").alias("_rid"), "cluster_id",
                         F.col("_v").alias("_rv"), F.col("_nv").alias("_rn2"))
     pair_cos = F.round(dot(F.col("_lv"), F.col("_rv"))
                        / (F.col("_ln") * F.col("_rn2")), 6)
@@ -957,9 +954,9 @@ def semantic_dedup(df: DataFrame, centroids: DataFrame,
             .distinct())
 
     return (assigned
-            .join(dups, assigned[id_col] == F.col("_dup_id"), "left")
+            .join(dups, assigned["vec_id"] == F.col("_dup_id"), "left")
             .withColumn("keep", F.col("_dup_id").isNull())
-            .select(id_col, "cluster_id", "keep"))
+            .select("vec_id", "cluster_id", "keep"))
 
 
 # ---------------------------------------------------------------------------
@@ -982,7 +979,6 @@ def edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text",
                         block_by: "tuple[str, ...]" = (),
                         threshold: int = 2,
-                        length_band: bool = True,
                         method: str = "segment") -> DataFrame:
     """Blocked Levenshtein similarity self-join (record linkage).
 
@@ -1007,11 +1003,10 @@ def edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
       within-block cost scales with true matches, not block².
       Strings shorter than ``2t + 1`` fall back to a tiny all-pairs
       pool per block (any partner of such a string is itself short).
-    - ``"band"``: plain within-block pairing with the
-      ``length_band`` prune (edit distance is lower-bounded by the
-      length gap) — the quadratic baseline the segment path is
-      verified against; also the all-pairs oracle flavor when
-      ``block_by=()``.
+    - ``"band"``: plain within-block pairing with the length-band
+      prune (edit distance is lower-bounded by the length gap) — the
+      quadratic baseline the segment path is verified against; also
+      the all-pairs oracle flavor when ``block_by=()``.
 
     All codegen (JVM ``levenshtein`` verifies candidates only), no
     Python, no cross product outside the declared short-string pool.
@@ -1036,12 +1031,10 @@ def edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
                       F.col(text_col).alias("__text_a"))
         b = sp.select(*blocks, F.col(id_col).alias("id_b"),
                       F.col(text_col).alias("__text_b"))
-        joined = (a.join(b, on=blocks) if blocks
-                  else a.crossJoin(b)).where(F.col("id_a") < F.col("id_b"))
-        if length_band:
-            joined = joined.where(
-                F.abs(F.length("__text_a") - F.length("__text_b"))
-                <= F.lit(threshold))
+        joined = ((a.join(b, on=blocks) if blocks else a.crossJoin(b))
+                  .where(F.col("id_a") < F.col("id_b"))
+                  .where(F.abs(F.length("__text_a") - F.length("__text_b"))
+                         <= F.lit(threshold)))
         # Banded levenshtein (guide §4.1 — prefer the cheaper builtin):
         # the threshold form early-abandons at O(t·n) per pair instead
         # of the full O(n²) DP and returns -1 past the bound — for
@@ -1133,7 +1126,7 @@ def edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
 
 
 def jaccard_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", shingle_n: int = 3,
+                         text_col: str = "text",
                          threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard similarity self-join via PREFIX FILTERING — the
     scale path for :func:`ngram_jaccard_pairs` (which is the declared
@@ -1177,7 +1170,7 @@ def jaccard_prefix_pairs(df: DataFrame, id_col: str = "doc_id",
     s = _spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.array_sort(F.transform(
-            word_shingles(F.col(text_col), shingle_n),
+            word_shingles(F.col(text_col)),
             lambda t: F.xxhash64(t))).alias("sh"))
     # materialize once: s feeds the frequency pass AND both verify
     # sides; prefix (below) feeds both candidate sides — without the

@@ -14,8 +14,8 @@ truncated per iteration for deep runs.
 Determinism / oracle story: the textbook formulation sums doubles,
 whose partition-order noise compounds across iterations and breaks
 cross-engine value-hash parity (see the repo's dsir lesson). Instead
-ranks are kept as **scaled BIGINTs** (``scale`` = 1e12) and every
-step — the initial ``scale div N``, the per-edge ``rank div outdeg``
+ranks are kept as **scaled BIGINTs** (``PAGERANK_SCALE`` = 1e12) and
+every step — the initial ``scale div N``, the per-edge ``rank div outdeg``
 contribution, the damping ``num*(in + dangling_share) div den`` — is
 exact integer arithmetic, identical in any engine with 64-bit integer
 division (non-negative operands, so trunc-vs-floor division semantics
@@ -27,7 +27,8 @@ per iteration the plan is one equi-join on ``src`` (ranks and
 out-degrees pre-joined once, outside the loop) plus one partial-
 aggregated ``groupBy(dst)``; the dangling-mass total is a 1-row
 aggregate broadcast back — no driver-side loop over rows, no global
-sort, no per-key window. ``truncate_lineage`` localCheckpoints the
+sort, no per-key window. Every ``src``/``dst`` edge relation is read
+by those column names. ``truncate_lineage`` localCheckpoints the
 (node, rank) pair each round so a deep run does not grow an unbounded
 plan; it defaults on past 6 iterations, where Catalyst planning time
 on the self-referencing tree otherwise dominates the job.
@@ -61,12 +62,18 @@ def _bc_if_small(df: DataFrame, n_rows: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= _BROADCAST_NODE_ROWS else df
 
 
+# PageRank's fixed point: ranks scaled by 1e12, damping 17/20 = 0.85.
+PAGERANK_SCALE = 10 ** 12
+DAMPING_NUM, DAMPING_DEN = 17, 20
+
+
 def _idiv(a: Column, b: Column) -> Column:
-    """Exact integer division for non-negative longs.
+    """Exact integer division for non-negative longs (also the quantile
+    sketch's, ``operators/sketches.py``).
 
     ``(a - a % b) / b`` divides two exactly-representable integers with
     an integer quotient, so the double division is exact and the cast
-    back to long is lossless (operands stay < 2^53 by construction:
+    back to long is lossless while operands stay < 2^53 (PageRank's:
     scale 1e12 × damping numerator 17 ≈ 1.7e13).
     """
     a = a.cast("long")
@@ -76,20 +83,14 @@ def _idiv(a: Column, b: Column) -> Column:
 
 def pagerank(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iterations: int = 5,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = 10 ** 12,
     truncate_lineage: bool | None = None,
-    cache_edges: bool = True,
 ) -> DataFrame:
-    """PageRank over ``edges`` in scaled-integer arithmetic.
+    """PageRank over ``(src, dst)`` ``edges`` in scaled-integer arithmetic.
 
     Returns a DataFrame ``(node, rank)`` where ``rank`` is the scaled
-    BIGINT score (divide by ``scale`` for the probability). Damping is
-    the rational ``damping_num/damping_den`` (default 17/20 = 0.85).
+    BIGINT score (divide by ``PAGERANK_SCALE`` for the probability).
+    Damping is the rational ``DAMPING_NUM/DAMPING_DEN`` (17/20 = 0.85).
     Mass from dangling nodes (no out-edges) is redistributed uniformly
     each iteration, as in the original formulation.
 
@@ -109,33 +110,30 @@ def pagerank(
         # per-round materialization cost (measured at sf0.1: 5
         # iterations run ~25% faster truncated even with cached edges)
         truncate_lineage = iterations > 4
-    edges = edges.select(src, dst)
-    if cache_edges:
-        # the edge relation (and everything derived from it) is read
-        # EVERY round — without this, an upstream edge build (e.g. a
-        # fact-fact join + distinct) re-executes per iteration. On a
-        # real cluster this is `.persist()` of the adjacency table.
-        edges = edges.localCheckpoint(eager=True)
-    nodes = (edges.select(F.col(src).alias("node"))
-             .unionByName(edges.select(F.col(dst).alias("node")))
+    # the edge relation (and everything derived from it) is read EVERY
+    # round — without the checkpoints, an upstream edge build (e.g. a
+    # fact-fact join + distinct) re-executes per iteration. On a real
+    # cluster this is `.persist()` of the adjacency table.
+    edges = edges.select("src", "dst").localCheckpoint(eager=True)
+    nodes = (edges.select(F.col("src").alias("node"))
+             .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct())
-    deg = (edges.groupBy(F.col(src).alias("node"))
+    deg = (edges.groupBy(F.col("src").alias("node"))
            .agg(F.count(F.lit(1)).alias("outdeg")))
     n_row = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
 
     # Pre-join the static out-degree onto the edge list once; every
     # iteration then needs only the rank join + the dst-sum shuffle.
-    edged = edges.join(deg.withColumnRenamed("node", src), src)
-    if cache_edges:
-        nodes = nodes.localCheckpoint(eager=True)
-        deg = deg.localCheckpoint(eager=True)
-        edged = edged.localCheckpoint(eager=True)
+    edged = edges.join(deg.withColumnRenamed("node", "src"), "src")
+    nodes = nodes.localCheckpoint(eager=True)
+    deg = deg.localCheckpoint(eager=True)
+    edged = edged.localCheckpoint(eager=True)
 
     ranks = (nodes.crossJoin(F.broadcast(n_row))
-             .select("node",
-                     _idiv(F.lit(scale), F.col("n_nodes")).alias("rank")))
-    base = _idiv(_idiv(F.lit(scale * (damping_den - damping_num)),
-                       F.lit(damping_den)), F.col("n_nodes"))
+             .select("node", _idiv(F.lit(PAGERANK_SCALE), F.col("n_nodes"))
+                     .alias("rank")))
+    base = _idiv(_idiv(F.lit(PAGERANK_SCALE * (DAMPING_DEN - DAMPING_NUM)),
+                       F.lit(DAMPING_DEN)), F.col("n_nodes"))
 
     # NOTE (examined, deliberately unchanged — guide §1.2): an explicit
     # per-round broadcast of the rank/degree tables was A/B'd at sf1.0
@@ -144,8 +142,8 @@ def pagerank(
     # fits; forcing it only added per-round count/broadcast-build jobs.
     for _ in range(iterations):
         incoming = (edged
-                    .join(ranks.withColumnRenamed("node", src), src)
-                    .groupBy(F.col(dst).alias("node"))
+                    .join(ranks.withColumnRenamed("node", "src"), "src")
+                    .groupBy(F.col("dst").alias("node"))
                     .agg(F.sum(_idiv(F.col("rank"), F.col("outdeg")))
                          .alias("inc")))
         dangling = (ranks.join(deg, "node", "left_anti")
@@ -158,11 +156,11 @@ def pagerank(
                  .select(
                      "node",
                      (base + _idiv(
-                         F.lit(damping_num)
+                         F.lit(DAMPING_NUM)
                          * (F.coalesce(F.col("inc"), F.lit(0))
                             + _idiv(F.col("dangling_mass"),
                                     F.col("n_nodes"))),
-                         F.lit(damping_den))).alias("rank")))
+                         F.lit(DAMPING_DEN))).alias("rank")))
         if truncate_lineage:
             # _cap_leaf_stats: each round's plan multiplies the previous
             # leaf's stored sizeInBytes into itself twice (rank join +
@@ -173,13 +171,11 @@ def pagerank(
 
 
 def bfs_distances(edges: DataFrame, sources: DataFrame,
-                  src: str = "src", dst: str = "dst",
-                  node: str = "node", max_hops: int = 3,
-                  directed: bool = True,
-                  truncate_lineage: bool = True) -> DataFrame:
-    """Bounded-hop BFS: minimum hop distance (0..``max_hops``) from any
-    seed in ``sources`` (a one-column DataFrame of ``node``) to every
-    reachable node. Unreached nodes are absent from the result.
+                  max_hops: int = 3, directed: bool = True) -> DataFrame:
+    """Bounded-hop BFS over ``(src, dst)`` ``edges``: minimum hop
+    distance (0..``max_hops``) from any seed in ``sources`` (a
+    one-column DataFrame of ``node``) to every reachable node.
+    Unreached nodes are absent from the result.
 
     The k-hop-neighbourhood primitive (entity expansion, blast-radius
     queries, feature generation over link graphs). Each round is one
@@ -197,12 +193,12 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
     if not directed:
-        e = e.unionByName(edges.select(F.col(dst).alias("__s"),
-                                       F.col(src).alias("__d")))
+        e = e.unionByName(edges.select(F.col("dst").alias("__s"),
+                                       F.col("src").alias("__d")))
     e = e.distinct().localCheckpoint(eager=True)
-    reached = (sources.select(F.col(node).alias(node)).distinct()
+    reached = (sources.select("node").distinct()
                .withColumn("dist", F.lit(0))
                .localCheckpoint(eager=True))
     frontier = reached
@@ -211,28 +207,25 @@ def bfs_distances(edges: DataFrame, sources: DataFrame,
         # broadcasts was A/B'd at sf1.0 and measured slightly WORSE
         # (extra count + broadcast-build jobs per hop; the planner
         # already broadcasts the small frontier from its leaf stats)
-        nxt = (frontier.join(e, frontier[node] == e["__s"])
-               .select(F.col("__d").alias(node))
+        nxt = (frontier.join(e, frontier["node"] == e["__s"])
+               .select(F.col("__d").alias("node"))
                .distinct()
-               .join(reached.select(node), node, "left_anti")
+               .join(reached.select("node"), "node", "left_anti")
                .withColumn("dist", F.lit(hop)))
-        if truncate_lineage:
-            nxt = _cap_leaf_stats(nxt.localCheckpoint(eager=True))
+        nxt = _cap_leaf_stats(nxt.localCheckpoint(eager=True))
         frontier = nxt
-        reached = reached.unionByName(nxt)
-        if truncate_lineage:
-            # same compounding shape as pagerank's rank loop — capped
-            reached = _cap_leaf_stats(reached.localCheckpoint(eager=True))
+        # same compounding shape as pagerank's rank loop — capped
+        reached = _cap_leaf_stats(
+            reached.unionByName(nxt).localCheckpoint(eager=True))
     return reached
 
 
 def weighted_sssp(edges: DataFrame, sources: DataFrame,
-                  src: str = "src", dst: str = "dst", weight: str = "w",
-                  max_hops: int = 4, node: str = "node",
-                  truncate_lineage: bool = True) -> DataFrame:
-    """Bounded-hop single-source shortest paths (Bellman-Ford rounds):
-    minimum path weight over ≤``max_hops`` edges from any seed in
-    ``sources`` (one ``node`` column) to every reachable node.
+                  max_hops: int = 4) -> DataFrame:
+    """Bounded-hop single-source shortest paths (Bellman-Ford rounds)
+    over ``(src, dst, w)`` ``edges``: minimum path weight over
+    ≤``max_hops`` edges from any seed in ``sources`` (one ``node``
+    column) to every reachable node.
 
     Weights must be non-negative INTEGERS (cents, scaled costs) — sums
     stay exact 64-bit arithmetic, so the result is bit-identical in any
@@ -249,33 +242,31 @@ def weighted_sssp(edges: DataFrame, sources: DataFrame,
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"),
-                     F.col(weight).cast("long").alias("__w"))
+    e = edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"),
+                     F.col("w").cast("long").alias("__w"))
     e = e.groupBy("__s", "__d").agg(F.min("__w").alias("__w"))
     e = _cap_leaf_stats(e.localCheckpoint(eager=True))
-    dist = (sources.select(F.col(node).alias(node)).distinct()
+    dist = (sources.select("node").distinct()
             .withColumn("dist", F.lit(0).cast("long")))
     dist = _cap_leaf_stats(dist.localCheckpoint(eager=True))
     for _ in range(max_hops):
         # examined, deliberately unchanged: a forced broadcast of the
         # distance table was A/B'd at sf1.0 and is a wash — the
         # checkpointed leaf's stats already let the planner broadcast it
-        relaxed = (dist.join(e, dist[node] == e["__s"])
-                   .select(F.col("__d").alias(node),
+        relaxed = (dist.join(e, dist["node"] == e["__s"])
+                   .select(F.col("__d").alias("node"),
                            (F.col("dist") + F.col("__w")).alias("dist")))
         dist = (dist.unionByName(relaxed)
-                .groupBy(node).agg(F.min("dist").alias("dist")))
-        if truncate_lineage:
-            dist = _cap_leaf_stats(dist.localCheckpoint(eager=True))
+                .groupBy("node").agg(F.min("dist").alias("dist")))
+        dist = _cap_leaf_stats(dist.localCheckpoint(eager=True))
     return dist
 
 
-def triangle_counts(edges: DataFrame, src: str = "src",
-                    dst: str = "dst") -> DataFrame:
-    """Triangles per lowest-id vertex: edges canonicalize to a < b
-    (direction and duplicates collapse), and each triangle {a<b<c} is
-    found exactly once by joining its two wedge edges (a,b)-(b,c) with
-    the closing edge (a,c).
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Triangles per lowest-id vertex: ``(src, dst)`` edges canonicalize
+    to a < b (direction and duplicates collapse), and each triangle
+    {a<b<c} is found exactly once by joining its two wedge edges
+    (a,b)-(b,c) with the closing edge (a,c).
 
     The a<b<c orientation is the classic enumeration-dedup trick: every
     triangle has exactly one vertex ordering, so no post-hoc /6 division
@@ -286,8 +277,8 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     orientation keeps the oracle replay trivial and is exact either
     way.)
     """
-    canon = (edges.select(F.least(src, dst).alias("a"),
-                          F.greatest(src, dst).alias("b"))
+    canon = (edges.select(F.least("src", "dst").alias("a"),
+                          F.greatest("src", "dst").alias("b"))
              .where(F.col("a") < F.col("b"))
              .distinct())
     canon = _cap_leaf_stats(canon.localCheckpoint(eager=True))

@@ -45,8 +45,9 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def synth_media(spark, refs: list[str], kind: str = "image") -> DataFrame:
-    """Deterministic fake payloads (sha-keyed bytes) with typed metadata."""
+def synth_media(spark, refs: list[str]) -> DataFrame:
+    """Deterministic fake image payloads (sha-keyed bytes) with typed
+    metadata."""
     rows = []
     for ref in refs:
         seed = hashlib.sha256(ref.encode()).digest()
@@ -54,13 +55,13 @@ def synth_media(spark, refs: list[str], kind: str = "image") -> DataFrame:
         h = seed[0]
         meta = {"width": 16 + h % 16, "height": 16 + (h // 16) % 16,
                 "sample_rate": 16000, "n_frames": 1 + h % 4, "codec": "fake"}
-        rows.append((ref, kind, bytearray(payload), meta))
+        rows.append((ref, "image", bytearray(payload), meta))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def synth_media_stage(refs: DataFrame, kind: str = "image",
-                      ref_col: str = "media_ref") -> DataFrame:
-    """Executor-side synthetic media: refs DataFrame → MEDIA_SCHEMA rows.
+def synth_media_stage(refs: DataFrame) -> DataFrame:
+    """Executor-side synthetic images: ``media_ref`` DataFrame →
+    MEDIA_SCHEMA rows.
 
     Unlike :func:`synth_media` (driver-side list, test convenience), this
     derives payload + metadata inside an Arrow batch from the ref column —
@@ -70,11 +71,11 @@ def synth_media_stage(refs: DataFrame, kind: str = "image",
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for ref in pdf[ref_col]:
+            for ref in pdf["media_ref"]:
                 seed = hashlib.sha256(ref.encode()).digest()
                 h = seed[0]
                 rows.append({
-                    "media_ref": ref, "kind": kind,
+                    "media_ref": ref, "kind": "image",
                     "payload": bytearray((seed * 8)[:192]),
                     "meta": {"width": 16 + h % 16, "height": 16 + (h // 16) % 16,
                              "sample_rate": 16000, "n_frames": 1 + h % 4,
@@ -82,7 +83,7 @@ def synth_media_stage(refs: DataFrame, kind: str = "image",
                 })
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
 
-    return refs.select(F.col(ref_col)).mapInPandas(run, schema=MEDIA_SCHEMA)
+    return refs.select("media_ref").mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
 def decode_media(payload: bytes, kind: str, dim: int = 8) -> np.ndarray:

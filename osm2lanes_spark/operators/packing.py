@@ -63,7 +63,6 @@ _INTERNAL = ("__pid", "__local", "__prefix", "__pre", "__succ", "__flag",
 def contiguous_packs(df: DataFrame, token_col: str, budget: int,
                      order_col: str = "doc_id",
                      part_col: str | None = None,
-                     out: str = "pack_id",
                      exact: bool = False,
                      num_partitions: int | None = None) -> DataFrame:
     """Add ``pack_id``: fixed-budget contiguous packing, deterministic
@@ -80,12 +79,12 @@ def contiguous_packs(df: DataFrame, token_col: str, budget: int,
     """
     if budget < 1:
         raise ValueError(f"budget must be >= 1, got {budget}")
-    reserved = {out, *_INTERNAL}
+    reserved = {"pack_id", *_INTERNAL}
     clash = reserved.intersection(df.columns)
     if clash:
         raise ValueError(
             f"column(s) {sorted(clash)} already exist in the input — "
-            "rename them (out= and the __-prefixed internals are "
+            "rename them (pack_id and the __-prefixed internals are "
             "reserved)")
     part_keys = [part_col] if part_col else []
     # Slim projection only (VERDICT r04 #4): the checkpoint exists
@@ -106,13 +105,14 @@ def contiguous_packs(df: DataFrame, token_col: str, budget: int,
         ranged, ranged_ids = tracked_checkpoint(
             _ranged(slim, "__ord", part_keys, num_partitions))
         packed = _parallel_greedy_packs(ranged, ranged_ids, budget,
-                                        part_keys, out)
+                                        part_keys, "pack_id")
     else:
         ranged = _ranged(slim, "__ord", part_keys, num_partitions) \
             .localCheckpoint(eager=False)
         pre = _two_pass_prefix(ranged, "__tok", "__ord", part_keys)
-        packed = pre.withColumn(out, F.floor(F.col("__pre") / F.lit(budget)))
-    return _join_back(df, packed, order_col, part_keys, out)
+        packed = pre.withColumn("pack_id",
+                                F.floor(F.col("__pre") / F.lit(budget)))
+    return _join_back(df, packed, order_col, part_keys, "pack_id")
 
 
 def _ranged(df: DataFrame, order_col: str, part_keys: list,
@@ -546,9 +546,8 @@ def _sequential_greedy_reference(df: DataFrame, token_col: str, budget: int,
 
 
 def chunk_documents(df: DataFrame, text_col: str = "text",
-                    chunk_tokens: int = 512, overlap_tokens: int = 0,
-                    id_col: str = "doc_id",
-                    lowercase: bool = False) -> DataFrame:
+                    chunk_tokens: int = 512,
+                    overlap_tokens: int = 0) -> DataFrame:
     """Split each document into overlapping fixed-token chunks — the
     context shaping step before embedding or training on long docs.
 
@@ -556,7 +555,7 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
     with ``stride = chunk_tokens - overlap_tokens``; the last chunk may
     be shorter; a doc of ≤ ``chunk_tokens`` tokens yields exactly one
     chunk; empty/whitespace docs yield none. Returns
-    ``(id_col, chunk_idx, chunk_text, n_chunk_tokens)``.
+    ``(doc_id, chunk_idx, chunk_text, n_chunk_tokens)``.
 
     Pure narrow Catalyst: tokenize once, ``transform(sequence)`` +
     ``slice`` + ``posexplode`` — zero shuffles, zero Python; at 100 TB
@@ -572,14 +571,12 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
             f"overlap_tokens must be in [0, chunk_tokens), got "
             f"{overlap_tokens}")
     stride = chunk_tokens - overlap_tokens
-    text = F.col(text_col)
     # materialize the token array as a column FIRST: a transform lambda
     # that captures the tokenize subtree re-evaluates the regexp split
     # once per chunk on the interpreted HOF path (the ngrams() lesson);
     # a bound column reference is read once per row
-    toked = df.select(
-        F.col(id_col),
-        tokens(F.lower(text) if lowercase else text).alias("__toks"))
+    toked = df.select(F.col("doc_id"),
+                      tokens(F.col(text_col)).alias("__toks"))
     toks = F.col("__toks")
     n_tok = F.size(toks)
     # number of stride-starts needed to cover every token once
@@ -595,26 +592,24 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
                                      F.lit(chunk_tokens))))
     ).otherwise(F.array().cast("array<string>"))
     exploded = toked.select(
-        F.col(id_col), n_tok.alias("__n_tok"),
+        F.col("doc_id"), n_tok.alias("__n_tok"),
         F.posexplode(chunks).alias("chunk_idx", "chunk_text"))
     # chunk length is arithmetic, not a re-split of the joined string:
     # full chunks carry chunk_tokens tokens, the tail carries what's left
     return exploded.select(
-        id_col, "chunk_idx", "chunk_text",
+        "doc_id", "chunk_idx", "chunk_text",
         F.least(F.lit(chunk_tokens),
                 F.col("__n_tok") - F.col("chunk_idx") * F.lit(stride))
         .alias("n_chunk_tokens"))
 
 
-def pack_texts(packed: DataFrame, text_col: str = "text",
-               order_col: str = "doc_id", pack_col: str = "pack_id",
-               part_col: str | None = None,
-               sep: str = " ") -> DataFrame:
+def pack_texts(packed: DataFrame, part_col: str | None = None) -> DataFrame:
     """Materialize each pack as ONE training sequence: concatenate the
-    member documents' ``text_col`` in ``order_col`` order, separated by
-    ``sep`` — the emit step after :func:`contiguous_packs` assigns ids.
+    member documents' ``text`` in ``doc_id`` order, separated by one
+    space — the emit step after :func:`contiguous_packs` assigns
+    ``pack_id``.
 
-    Returns ``(part_col?, pack_col, n_docs, pack_text)``.
+    Returns ``(part_col?, pack_id, n_docs, pack_text)``.
 
     Scale shape: one map-side-combined hash shuffle keyed by
     (part, pack); per-pack state is ``collect_list`` of (order, text)
@@ -623,23 +618,22 @@ def pack_texts(packed: DataFrame, text_col: str = "text",
     key size — then sorted and joined in-row by ``array_sort`` +
     ``array_join`` (JVM-side, no Python, no window).
 
-    Ordering contract (ADVICE r05): ``order_col`` should be unique
+    Ordering contract (ADVICE r05): ``doc_id`` should be unique
     within each (part, pack) — it already must be for
     :func:`contiguous_packs` — and any external replay must order by
     BOTH (order, text): duplicated order keys tie-break by the text
     itself here (the struct sort's second field), whereas a plain
     ``string_agg(text ORDER BY order)`` leaves tie order unspecified
     and would diverge engine-to-engine."""
-    keys = ([part_col] if part_col else []) + [pack_col]
-    pair = F.struct(F.col(order_col).alias("o"),
-                    F.col(text_col).alias("t"))
+    keys = ([part_col] if part_col else []) + ["pack_id"]
+    pair = F.struct(F.col("doc_id").alias("o"), F.col("text").alias("t"))
     return (packed
             .groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.array_join(
                      F.transform(F.array_sort(F.collect_list(pair)),
                                  lambda s: s["t"]),
-                     sep).alias("pack_text")))
+                     " ").alias("pack_text")))
 
 
 # ---------------------------------------------------------------------------
@@ -648,9 +642,7 @@ def pack_texts(packed: DataFrame, text_col: str = "text",
 
 def select_to_budget(df: DataFrame, token_col: str, budget: int,
                      order_col: str = "doc_id",
-                     part_col: str | None = None,
-                     out: str = "selected",
-                     num_partitions: int | None = None) -> DataFrame:
+                     part_col: str | None = None) -> DataFrame:
     """Greedy prefix selection to a token budget: walking documents in
     (``part_col``, ``order_col``) order, mark each row ``True`` while
     the running token total stays <= ``budget`` — the "take the best N
@@ -666,7 +658,7 @@ def select_to_budget(df: DataFrame, token_col: str, budget: int,
     :func:`contiguous_packs`: ``order_col`` non-null and unique within
     each key.
 
-    Returns df.* + boolean ``out``.
+    Returns df.* + boolean ``selected``.
 
     Scale shape at 100 TB: the same range-partitioned two-pass prefix
     sum as :func:`contiguous_packs` — a slim (key, order, token)
@@ -678,19 +670,19 @@ def select_to_budget(df: DataFrame, token_col: str, budget: int,
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
-    reserved = {out, *_INTERNAL}
+    reserved = {"selected", *_INTERNAL}
     clash = reserved.intersection(df.columns)
     if clash:
         raise ValueError(
             f"column(s) {sorted(clash)} already exist in the input — "
-            "rename them (out= and the __-prefixed internals are "
+            "rename them (selected and the __-prefixed internals are "
             "reserved)")
     part_keys = [part_col] if part_col else []
     slim = df.select(*part_keys, F.col(order_col).alias("__ord"),
                      F.col(token_col).cast("long").alias("__tok"))
-    ranged = _ranged(slim, "__ord", part_keys, num_partitions) \
+    ranged = _ranged(slim, "__ord", part_keys, None) \
         .localCheckpoint(eager=False)
     pre = _two_pass_prefix(ranged, "__tok", "__ord", part_keys)
     flagged = pre.withColumn(
-        out, (F.col("__pre") + F.col("__tok")) <= F.lit(budget))
-    return _join_back(df, flagged, order_col, part_keys, out)
+        "selected", (F.col("__pre") + F.col("__tok")) <= F.lit(budget))
+    return _join_back(df, flagged, order_col, part_keys, "selected")

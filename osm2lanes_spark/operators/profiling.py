@@ -75,40 +75,37 @@ def ngrams(text: Column, n: int, lowercase: bool = True) -> Column:
             .otherwise(F.array().cast("array<string>")))
 
 
-def ngram_counts(df: DataFrame, n: int = 2, text_col: str = "text",
-                 lowercase: bool = True) -> DataFrame:
-    """Exact corpus-wide n-gram counts: ``(ngram, count)``. One explode +
-    one hash aggregate (map-side partial combine — the shuffle carries
-    per-task distinct n-grams, so hot n-grams are combined hardest)."""
-    grams = _spread(df, text_col).select(
-        F.explode(ngrams(F.col(text_col), n, lowercase)).alias("ngram"))
+def ngram_counts(df: DataFrame, n: int = 2) -> DataFrame:
+    """Exact corpus-wide counts of lowercased ``text`` n-grams:
+    ``(ngram, count)``. One explode + one hash aggregate (map-side
+    partial combine — the shuffle carries per-task distinct n-grams, so
+    hot n-grams are combined hardest)."""
+    grams = _spread(df, "text").select(
+        F.explode(ngrams(F.col("text"), n)).alias("ngram"))
     return grams.groupBy("ngram").agg(F.count(F.lit(1)).alias("count"))
 
 
-def ngram_top_k(df: DataFrame, n: int = 2, k: int = 20,
-                text_col: str = "text", lowercase: bool = True) -> DataFrame:
+def ngram_top_k(df: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     """Exact top-k n-grams by count, ties broken by n-gram ascending (a
     total order, so the cut is deterministic). The plan is
     ``TakeOrderedAndProject`` over the partial-combined aggregate — no
     full sort, no full materialization."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    return (ngram_counts(df, n, text_col, lowercase)
+    return (ngram_counts(df, n)
             .orderBy(F.col("count").desc(), F.col("ngram").asc())
             .limit(k))
 
 
 def ngram_overlap(corpus: DataFrame, reference: DataFrame, n: int = 8,
-                  id_col: str = "doc_id", text_col: str = "text",
-                  ref_text_col: str | None = None,
-                  lowercase: bool = True,
                   broadcast_reference: bool = True) -> DataFrame:
     """Eval-set decontamination screen: per corpus document, how many of
-    its distinct word ``n``-grams appear anywhere in ``reference`` (the
-    eval/benchmark set). The standard pre-training hygiene step — docs
-    with high overlap are dropped or flagged before training.
+    its distinct lowercased word ``n``-grams of ``text`` appear anywhere
+    in ``reference``'s ``text`` (the eval/benchmark set). The standard
+    pre-training hygiene step — docs with high overlap are dropped or
+    flagged before training.
 
-    Returns ``(id_col, n_ngrams, n_contaminated, contamination_ratio)``
+    Returns ``(doc_id, n_ngrams, n_contaminated, contamination_ratio)``
     for EVERY corpus row (docs with fewer than ``n`` tokens get 0/0/NULL).
 
     Scale shape: with ``broadcast_reference=True`` (default — an eval
@@ -127,22 +124,20 @@ def ngram_overlap(corpus: DataFrame, reference: DataFrame, n: int = 8,
     """
     from pyspark.sql.functions import broadcast
 
-    ref_col = ref_text_col or text_col
     ref_grams = (reference
-                 .select(F.explode(ngrams(F.col(ref_col), n, lowercase))
+                 .select(F.explode(ngrams(F.col("text"), n))
                          .alias("__gram"))
                  .distinct()
                  .withColumn("__hit", F.lit(1)))
     if broadcast_reference:
         ref_grams = broadcast(ref_grams)
-    doc_grams = _spread(corpus, id_col).select(
-        F.col(id_col),
-        F.explode_outer(
-            F.array_distinct(ngrams(F.col(text_col), n, lowercase)))
+    doc_grams = _spread(corpus, "doc_id").select(
+        F.col("doc_id"),
+        F.explode_outer(F.array_distinct(ngrams(F.col("text"), n)))
         .alias("__gram"))
     return (doc_grams
             .join(ref_grams, "__gram", "left")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("__gram").alias("n_ngrams"),
                  F.coalesce(F.sum("__hit"), F.lit(0)).cast("long")
                  .alias("n_contaminated"))
@@ -262,13 +257,11 @@ def grouped_quantiles(df: DataFrame, value_col: str,
             .orderBy(*group_cols, "q"))
 
 
-def tfidf_top_terms(df: DataFrame, k: int = 1, id_col: str = "doc_id",
-                    text_col: str = "text",
-                    lowercase: bool = True) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document (smooth idf,
-    ``ln((N+1)/(df+1)) + 1`` — the sklearn formulation), deterministic
-    tie-break (score desc, term asc). Returns
-    ``(id_col, term, tf, term_df, score)``.
+def tfidf_top_terms(df: DataFrame, k: int = 1) -> DataFrame:
+    """Top-``k`` TF-IDF terms of each document's lowercased ``text``
+    (smooth idf, ``ln((N+1)/(df+1)) + 1`` — the sklearn formulation),
+    deterministic tie-break (score desc, term asc). Returns
+    ``(doc_id, term, tf, term_df, score)``.
 
     Scale shape (as actually planned — Catalyst does NOT share the
     unmaterialized ``tf`` subtree): term frequencies are one map-side-
@@ -290,10 +283,9 @@ def tfidf_top_terms(df: DataFrame, k: int = 1, id_col: str = "doc_id",
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    text = F.col(text_col)
-    toks = tokens(F.lower(text) if lowercase else text)
-    pairs = df.select(F.col(id_col), F.explode(toks).alias("term"))
-    tf = pairs.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = tokens(F.lower(F.col("text")))
+    pairs = df.select(F.col("doc_id"), F.explode(toks).alias("term"))
+    tf = pairs.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("term_df"))
     n_docs = df.select(F.count(F.lit(1)).alias("__N"))
     from pyspark.sql.functions import broadcast
@@ -305,37 +297,35 @@ def tfidf_top_terms(df: DataFrame, k: int = 1, id_col: str = "doc_id",
                           * (F.log((F.col("__N") + F.lit(1)).cast("double")
                                    / (F.col("term_df") + F.lit(1)))
                              + F.lit(1.0)), 6)))
-    w = (Window.partitionBy(id_col)
+    w = (Window.partitionBy("doc_id")
          .orderBy(F.col("score").desc(), F.col("term").asc()))
     return (scored
             .withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= k)
-            .select(id_col, "term", "tf", "term_df", "score"))
+            .select("doc_id", "term", "tf", "term_df", "score"))
 
 
 # ---------------------------------------------------------------------------
 # Unigram LM perplexity (CCNet-style quality signal)
 # ---------------------------------------------------------------------------
 
-def with_unigram_logprob(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         train: DataFrame | None = None,
+def with_unigram_logprob(df: DataFrame, train: DataFrame | None = None,
                          alpha: float = 1.0,
-                         out: str = "nll",
                          broadcast_vocab: bool = False) -> DataFrame:
-    """Score every document by its mean negative log-probability under
-    an add-``alpha``-smoothed unigram language model — the
-    perplexity-style quality filter of CCNet (Wenzek et al. 2020 §4.3;
-    boilerplate and natural prose score low, gibberish and rare-token
-    spam score high; no reference counterpart — engine-side operator).
+    """Score every document's ``text`` by its mean negative
+    log-probability under an add-``alpha``-smoothed unigram language
+    model — the perplexity-style quality filter of CCNet (Wenzek et al.
+    2020 §4.3; boilerplate and natural prose score low, gibberish and
+    rare-token spam score high; no reference counterpart — engine-side
+    operator).
 
     The model is fit on ``train`` (default: ``df`` itself — the usual
     self-scored corpus profile): ``p(t) = (count(t) + alpha) /
     (total + alpha * (V + 1))``, with unseen tokens (possible only when
     ``train`` is a different corpus) falling back to the
-    ``count = 0`` mass of the same formula. Returns df.* + ``out``
+    ``count = 0`` mass of the same formula. Returns df.* + ``nll``
     (mean −ln p per token, NULL for NULL text, 0.0 for token-less
-    text) + ``ppl`` (exp(out)).
+    text) + ``ppl`` (exp(nll)); documents are keyed by ``doc_id``.
 
     Scale shape at 100 TB: the vocabulary fit is ONE map-side-combined
     count shuffle over tokens (hot tokens combine hardest); totals ride
@@ -348,24 +338,23 @@ def with_unigram_logprob(df: DataFrame, text_col: str = "text",
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
-    reserved = {out, "ppl"}
-    clash = sorted(reserved.intersection(df.columns))
+    clash = sorted({"nll", "ppl"}.intersection(df.columns))
     if clash:
         raise ValueError(f"output column(s) {clash} already exist in the "
-                         "input — rename them or pass a different out=")
+                         "input — rename them")
 
     fit_on = df if train is None else train
-    tok_train = _spread(fit_on, text_col, min_bytes=4 << 20).select(
-        F.explode(tokens(F.col(text_col))).alias("__tok"))
+    tok_train = _spread(fit_on, "text", min_bytes=4 << 20).select(
+        F.explode(tokens(F.col("text"))).alias("__tok"))
     vocab = tok_train.groupBy("__tok").agg(
         F.count(F.lit(1)).alias("__cnt"))
     totals = F.broadcast(vocab.agg(
         F.sum("__cnt").alias("__total"),
         F.count(F.lit(1)).alias("__v")))
 
-    scored_toks = _spread(df, id_col, min_bytes=4 << 20).select(
-        F.col(id_col),
-        F.explode(tokens(F.col(text_col))).alias("__tok"))
+    scored_toks = _spread(df, "doc_id", min_bytes=4 << 20).select(
+        F.col("doc_id"),
+        F.explode(tokens(F.col("text"))).alias("__tok"))
     v = F.broadcast(vocab) if broadcast_vocab else vocab
     # log p = ln(cnt + alpha) - ln(total + alpha*(V+1)); unseen → cnt 0
     joined = (scored_toks
@@ -377,13 +366,13 @@ def with_unigram_logprob(df: DataFrame, text_col: str = "text",
                   - F.log(F.col("__total")
                           + F.lit(alpha) * (F.col("__v") + 1))))
     per_doc = (joined
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg((-F.avg("__lp")).alias("__nll"))
-               .select(F.col(id_col).alias("__lm_id"), "__nll"))
-    nll = F.when(F.col(text_col).isNotNull(),
+               .select(F.col("doc_id").alias("__lm_id"), "__nll"))
+    nll = F.when(F.col("text").isNotNull(),
                  F.coalesce(F.col("__nll"), F.lit(0.0)))
-    return (df.join(per_doc, df[id_col] == F.col("__lm_id"), "left")
-            .withColumn(out, nll)
+    return (df.join(per_doc, df["doc_id"] == F.col("__lm_id"), "left")
+            .withColumn("nll", nll)
             .withColumn("ppl", F.exp(nll))
             .drop("__lm_id", "__nll"))
 
@@ -392,8 +381,7 @@ def with_quantile_buckets(df: DataFrame, value_col: str,
                           qs: Sequence[float] = (1 / 3, 2 / 3),
                           labels: Sequence[str] = ("head", "middle",
                                                    "tail"),
-                          out: str = "bucket",
-                          decimals: int = 6) -> DataFrame:
+                          out: str = "bucket") -> DataFrame:
     """Label every row by which global quantile band of ``value_col``
     it falls in — the CCNet head/middle/tail split (Wenzek et al. 2020
     §4.3: terciles of the perplexity score partition the corpus into
@@ -405,7 +393,7 @@ def with_quantile_buckets(df: DataFrame, value_col: str,
     match), ``labels[-1]`` above all thresholds, NULL value → NULL
     label. Thresholds are the exact selection-rule quantiles of
     :func:`grouped_quantiles`. Both sides of each comparison are
-    rounded to ``decimals`` so engine-level float-sum jitter (~1e-13)
+    rounded to 6 decimals so engine-level float-sum jitter (~1e-13)
     cannot flip a band assignment at a threshold boundary (the
     dsir_resample quantization lesson).
 
@@ -428,11 +416,11 @@ def with_quantile_buckets(df: DataFrame, value_col: str,
     one = F.broadcast(th.agg(*[
         F.min(F.when(F.col("q") == F.lit(float(q)), F.col("value")))
         .alias(f"__t{i}") for i, q in enumerate(qs)]))
-    v = F.round(F.col(value_col), decimals)
+    v = F.round(F.col(value_col), 6)
     label = F.when(F.col(value_col).isNull(),
                    F.lit(None).cast("string"))
     for i in range(len(qs)):
-        label = label.when(v <= F.round(F.col(f"__t{i}"), decimals),
+        label = label.when(v <= F.round(F.col(f"__t{i}"), 6),
                            F.lit(labels[i]))
     label = label.otherwise(F.lit(labels[-1]))
     return (df.crossJoin(one)
@@ -444,13 +432,15 @@ def with_quantile_buckets(df: DataFrame, value_col: str,
 # BM25 retrieval scoring
 # ---------------------------------------------------------------------------
 
-def bm25_topk(df: DataFrame, terms: list[str], k: int = 10,
-              k1: float = 1.2, b: float = 0.75, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """Okapi BM25 top-``k`` retrieval (Robertson & Zaragoza 2009) for a
-    fixed query-term set — the lexical-search complement of the
-    embedding ANN operators. Returns ``(id_col, bm25)``, the ``k``
-    best-scoring documents.
+# Okapi BM25's customary term-saturation and length-normalisation weights.
+BM25_K1, BM25_B = 1.2, 0.75
+
+
+def bm25_topk(df: DataFrame, terms: list[str], k: int = 10) -> DataFrame:
+    """Okapi BM25 top-``k`` retrieval (Robertson & Zaragoza 2009) over
+    ``text`` for a fixed query-term set — the lexical-search complement
+    of the embedding ANN operators. Returns ``(doc_id, bm25)``, the
+    ``k`` best-scoring documents.
 
     idf = ln(1 + (N - df_t + 0.5)/(df_t + 0.5)) (the standard
     non-negative formulation); per-term contribution
@@ -474,10 +464,10 @@ def bm25_topk(df: DataFrame, terms: list[str], k: int = 10,
         raise ValueError("terms must be non-empty")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    text = F.col(text_col)
-    base = (_spread(df, id_col, barrier=True)
-            .select(F.col(id_col),
-                    F.transform(tokens(text), F.lower).alias("_toks"))
+    base = (_spread(df, "doc_id", barrier=True)
+            .select(F.col("doc_id"),
+                    F.transform(tokens(F.col("text")), F.lower)
+                    .alias("_toks"))
             .withColumn("_dl", F.size(F.col("_toks")))
             .where(F.col("_dl") > 0))
     stats = F.broadcast(base.agg(
@@ -486,7 +476,7 @@ def bm25_topk(df: DataFrame, terms: list[str], k: int = 10,
 
     term_lits = F.array(*[F.lit(t) for t in sorted(set(terms))])
     tf_rows = (base.select(
-        F.col(id_col), "_dl",
+        F.col("doc_id"), "_dl",
         F.explode(term_lits).alias("_term"), F.col("_toks"))
         .withColumn("_tf", F.size(F.filter(
             F.col("_toks"), lambda x: x == F.col("_term"))))
@@ -496,13 +486,14 @@ def bm25_topk(df: DataFrame, terms: list[str], k: int = 10,
 
     idf = F.log(F.lit(1.0) + (F.col("_n") - F.col("_dft") + F.lit(0.5))
                 / (F.col("_dft") + F.lit(0.5)))
-    denom = (F.col("_tf") + F.lit(k1)
-             * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.col("_avgdl")))
-    contrib = idf * (F.col("_tf") * F.lit(k1 + 1.0)) / denom
+    denom = (F.col("_tf") + F.lit(BM25_K1)
+             * (F.lit(1.0 - BM25_B)
+                + F.lit(BM25_B) * F.col("_dl") / F.col("_avgdl")))
+    contrib = idf * (F.col("_tf") * F.lit(BM25_K1 + 1.0)) / denom
     scored = (tf_rows.join(F.broadcast(dfreq), "_term")
               .crossJoin(stats)
               .withColumn("_c", contrib))
-    per_doc = (scored.groupBy(id_col)
+    per_doc = (scored.groupBy("doc_id")
                .agg(F.aggregate(
                    F.array_sort(F.collect_list(
                        F.struct(F.col("_term"), F.col("_c")))),
@@ -510,9 +501,9 @@ def bm25_topk(df: DataFrame, terms: list[str], k: int = 10,
                    .alias("_score")))
     return (per_doc
             .withColumn("bm25", F.round(F.col("_score"), 6))
-            .orderBy(F.col("bm25").desc(), F.col(id_col).asc())
+            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
             .limit(k)
-            .select(id_col, "bm25"))
+            .select("doc_id", "bm25"))
 
 
 # ---------------------------------------------------------------------------
@@ -525,15 +516,19 @@ def _bloom_hex32(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def bloom_build(reference: DataFrame, n: int = 8, m_bits: int = 1 << 20,
-                k: int = 3, text_col: str = "text", lowercase: bool = True,
-                seed: int = 0) -> DataFrame:
-    """Build a distributed Bloom filter over the reference set's distinct
-    word n-grams: ``(word, bits)`` where word ``w`` packs filter
-    positions ``[63w, 63w+62]`` into one BIGINT (63 bits per word — the
-    sign bit stays clear, so shifts behave identically in every engine).
+# Salt of the Bloom filter's hashes: a build and its probes must agree.
+BLOOM_SEED = 0
 
-    Position ``j`` of a gram is ``md5("bf:<seed>:<j>:" + gram) mod
+
+def bloom_build(reference: DataFrame, n: int = 8, m_bits: int = 1 << 20,
+                k: int = 3) -> DataFrame:
+    """Build a distributed Bloom filter over the reference set's distinct
+    lowercased word n-grams of ``text``: ``(word, bits)`` where word
+    ``w`` packs filter positions ``[63w, 63w+62]`` into one BIGINT (63
+    bits per word — the sign bit stays clear, so shifts behave
+    identically in every engine).
+
+    Position ``j`` of a gram is ``md5("bf:0:<j>:" + gram) mod
     m_bits`` — k independent deterministic hashes, bit-replayable in any
     engine with md5 (no xxhash in the oracle engine).
 
@@ -549,11 +544,11 @@ def bloom_build(reference: DataFrame, n: int = 8, m_bits: int = 1 << 20,
     to broadcast as gram strings: the bloom compresses any reference to
     ``m_bits`` bits at a false-positive rate you pick via m/k.
     """
-    grams = _spread(reference, text_col).select(
-        F.explode(F.array_distinct(ngrams(F.col(text_col), n, lowercase)))
+    grams = _spread(reference, "text").select(
+        F.explode(F.array_distinct(ngrams(F.col("text"), n)))
         .alias("__gram"))
     js = F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("__j")
-    pos = (_bloom_hex32(F.concat(F.lit(f"bf:{seed}:"),
+    pos = (_bloom_hex32(F.concat(F.lit(f"bf:{BLOOM_SEED}:"),
                                  F.col("__j").cast("string"),
                                  F.lit(":"), F.col("__gram")))
            % F.lit(m_bits))
@@ -572,14 +567,13 @@ def bloom_build(reference: DataFrame, n: int = 8, m_bits: int = 1 << 20,
 
 def bloom_contamination(corpus: DataFrame, bloom: DataFrame,
                         n: int = 8, m_bits: int = 1 << 20, k: int = 3,
-                        id_col: str = "doc_id", text_col: str = "text",
-                        lowercase: bool = True, seed: int = 0,
                         broadcast_bloom: bool = True) -> DataFrame:
-    """Probe every corpus document's distinct n-grams against a
-    ``bloom_build`` filter: ``(id, n_ngrams, n_flagged, flag_ratio)``
-    where a gram is flagged iff ALL k of its filter bits are set
-    (Bloom semantics — no false negatives; false-positive rate set by
-    m/k, ~0.1% at m=2^20/k=3 for a few thousand reference grams).
+    """Probe every corpus document's distinct lowercased ``text``
+    n-grams against a ``bloom_build`` filter: ``(doc_id, n_ngrams,
+    n_flagged, flag_ratio)`` where a gram is flagged iff ALL k of its
+    filter bits are set (Bloom semantics — no false negatives;
+    false-positive rate set by m/k, ~0.1% at m=2^20/k=3 for a few
+    thousand reference grams).
 
     Scale shape: the corpus explodes distinct grams ONCE (explode_outer
     — zero-gram docs ride the same pass); each of the k probes is a
@@ -593,15 +587,14 @@ def bloom_contamination(corpus: DataFrame, bloom: DataFrame,
     """
     from pyspark.sql.functions import broadcast
 
-    doc_grams = _spread(corpus, id_col).select(
-        F.col(id_col),
-        F.explode_outer(
-            F.array_distinct(ngrams(F.col(text_col), n, lowercase)))
+    doc_grams = _spread(corpus, "doc_id").select(
+        F.col("doc_id"),
+        F.explode_outer(F.array_distinct(ngrams(F.col("text"), n)))
         .alias("__gram"))
     probed = doc_grams
     hit = F.col("__gram").isNotNull()
     for j in range(k):
-        pos = (_bloom_hex32(F.concat(F.lit(f"bf:{seed}:{j}:"),
+        pos = (_bloom_hex32(F.concat(F.lit(f"bf:{BLOOM_SEED}:{j}:"),
                                      F.col("__gram")))
                % F.lit(m_bits))
         mask = F.pow(F.lit(2.0), (pos % 63).cast("int")).cast("long")
@@ -619,7 +612,7 @@ def bloom_contamination(corpus: DataFrame, bloom: DataFrame,
                      & (F.col(f"__b{j}").bitwiseAND(F.col(f"__mask{j}"))
                         == F.col(f"__mask{j}")))
     return (probed
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.count("__gram").alias("n_ngrams"),
                  F.sum(F.when(hit, 1).otherwise(0)).alias("n_flagged"))
             .withColumn("flag_ratio",
@@ -657,12 +650,11 @@ def dq_report(df: DataFrame, metrics: dict[str, Column],
             .select("metric", F.round("value", 6).alias("value")))
 
 
-def vocab_coverage(df: DataFrame, text_col: str = "text",
-                   top_n: int = 100, lowercase: bool = True) -> DataFrame:
+def vocab_coverage(df: DataFrame, top_n: int = 100) -> DataFrame:
     """Tokenizer-vocabulary coverage curve: the ``top_n`` most frequent
-    tokens with their cumulative corpus-coverage share — the standard
-    diagnostic for sizing a vocabulary (what fraction of all token
-    occurrences the first N entries absorb).
+    lowercased ``text`` tokens with their cumulative corpus-coverage
+    share — the standard diagnostic for sizing a vocabulary (what
+    fraction of all token occurrences the first N entries absorb).
 
     Returns ``(rank, token, cnt, cum_share)`` ordered by count
     descending, token ascending (deterministic tie-break);
@@ -677,10 +669,8 @@ def vocab_coverage(df: DataFrame, text_col: str = "text",
     """
     if top_n < 1:
         raise ValueError(f"top_n must be >= 1, got {top_n}")
-    col = F.col(text_col)
-    toks = _spread(df, text_col, min_bytes=4 << 20).select(
-        F.explode(tokens(F.lower(col) if lowercase else col))
-        .alias("token"))
+    toks = _spread(df, "text", min_bytes=4 << 20).select(
+        F.explode(tokens(F.lower(F.col("text")))).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     total = toks.agg(F.count(F.lit(1)).alias("__total"))
     top = counts.orderBy(F.col("cnt").desc(), F.col("token").asc()) \
@@ -694,13 +684,13 @@ def vocab_coverage(df: DataFrame, text_col: str = "text",
                     .alias("cum_share")))
 
 
-def key_ngram_overlap(df: DataFrame, key_col: str, text_col: str = "text",
-                      n: int = 3, lowercase: bool = True) -> DataFrame:
+def key_ngram_overlap(df: DataFrame, key_col: str, n: int = 3) -> DataFrame:
     """Pairwise n-gram overlap matrix between key groups (e.g. corpus
     sources): for every pair ``key_a < key_b``, the number of distinct
-    word n-grams both groups contain. The cross-source screening step
-    before mixing corpora — high overlap means shared boilerplate or
-    scraped-twice content that exact per-document dedup misses.
+    lowercased word n-grams of ``text`` both groups contain. The
+    cross-source screening step before mixing corpora — high overlap
+    means shared boilerplate or scraped-twice content that exact
+    per-document dedup misses.
 
     100 TB shape: the only full-data pass is the explode into the
     distinct ``(key, gram)`` aggregate (map-side partial combine — a
@@ -710,10 +700,9 @@ def key_ngram_overlap(df: DataFrame, key_col: str, text_col: str = "text",
     count shuffles at most |keys|² partial rows. No all-pairs product
     anywhere.
     """
-    grams = (_spread(df, text_col)
+    grams = (_spread(df, "text")
              .select(F.col(key_col).alias("key_a"),
-                     F.explode(ngrams(F.col(text_col), n, lowercase))
-                     .alias("gram"))
+                     F.explode(ngrams(F.col("text"), n)).alias("gram"))
              .distinct())
     other = grams.select(F.col("key_a").alias("key_b"), "gram")
     return (grams.join(other, "gram")
@@ -767,8 +756,7 @@ def numeric_histogram(df: DataFrame, value_col: str, bins: int = 20,
                     "n"))
 
 
-def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str,
-                       num_partitions: "int | None" = None) -> DataFrame:
+def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     """2-D Pareto frontier (skyline), minimizing both columns: rows for
     which no other row is ≤ in both dimensions and strictly < in at
     least one. Identical duplicates are NOT dominated by each other
@@ -794,10 +782,8 @@ def pareto_frontier_2d(df: DataFrame, x_col: str, y_col: str,
     x, y = F.col(x_col), F.col(y_col)
     data = df.where(x.isNotNull() & y.isNotNull())
     red = data.groupBy(x_col).agg(F.min(y).alias("__ymin"))
-    ranged = (red.repartitionByRange(num_partitions, x.asc())
-              if num_partitions
-              else red.repartitionByRange(x.asc()))
-    ranged = (ranged.withColumn("__pid", F.spark_partition_id())
+    ranged = (red.repartitionByRange(x.asc())
+              .withColumn("__pid", F.spark_partition_id())
               .localCheckpoint(eager=False))
     w_loc = (Window.partitionBy("__pid").orderBy(x.asc())
              .rowsBetween(Window.unboundedPreceding, -1))

@@ -25,9 +25,8 @@ def hash_uniform(id_col: Column) -> Column:
 
 
 def hash_split(df: DataFrame, id_col: str = "doc_id",
-               splits: dict[str, float] | None = None,
-               out: str = "split") -> DataFrame:
-    """Assign every row a split label by deterministic id hash.
+               splits: dict[str, float] | None = None) -> DataFrame:
+    """Assign every row a ``split`` label by deterministic id hash.
 
     ``splits`` maps label → weight (normalized internally); iteration
     order fixes the threshold order, so pass an explicit dict. Default
@@ -45,14 +44,14 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     expr = (F.lit(labels[-1]) if expr is None
             else expr.otherwise(labels[-1]))
-    return df.withColumn(out, expr)
+    return df.withColumn("split", expr)
 
 
 def mixture_sample(df: DataFrame, rates: dict[str, float],
-                   source_col: str = "source", id_col: str = "doc_id",
-                   seed: int = 0, default_rate: float = 1.0,
-                   copy_col: str = "mix_copy") -> DataFrame:
-    """Deterministic per-source mixture sampling with fractional repeats.
+                   id_col: str = "doc_id", seed: int = 0,
+                   default_rate: float = 1.0) -> DataFrame:
+    """Deterministic per-``source`` mixture sampling with fractional
+    repeats.
 
     The standard step between curation and packing in an LLM training
     pipeline: each source gets a target rate — ``0.5`` keeps half its
@@ -62,7 +61,7 @@ def mixture_sample(df: DataFrame, rates: dict[str, float],
     the md5-uniform of ``(id, seed)`` — the same pure-function-of-id
     property as :func:`hash_split` (re-runs and late shards agree with
     no coordination), but *seeded*, so mixture decisions are independent
-    of split assignment. ``copy_col`` is the 0-based copy index
+    of split assignment. ``mix_copy`` is the 0-based copy index
     (distinguishes repeats downstream, e.g. for pack shuffling).
 
     Entirely JVM-side: a literal CASE for the rate, one md5, one
@@ -75,11 +74,11 @@ def mixture_sample(df: DataFrame, rates: dict[str, float],
             raise ValueError(f"negative rate {r} for source {s!r}")
     if default_rate < 0:
         raise ValueError(f"negative default_rate {default_rate}")
-    if copy_col in df.columns:
-        raise ValueError(f"column {copy_col!r} already exists in the input")
+    if "mix_copy" in df.columns:
+        raise ValueError("column 'mix_copy' already exists in the input")
     rate = None
     for s in rates:  # insertion order — deterministic CASE chain
-        cond = F.col(source_col) == F.lit(s)
+        cond = F.col("source") == F.lit(s)
         r = F.lit(float(rates[s]))
         rate = F.when(cond, r) if rate is None else rate.when(cond, r)
     rate = (F.lit(float(default_rate)) if rate is None
@@ -91,7 +90,7 @@ def mixture_sample(df: DataFrame, rates: dict[str, float],
     seq = (F.when(copies > F.lit(0),
                   F.sequence(F.lit(0).cast("long"), copies - F.lit(1)))
            .otherwise(F.array().cast("array<long>")))
-    return df.withColumn(copy_col, F.explode(seq))
+    return df.withColumn("mix_copy", F.explode(seq))
 
 
 def stratified_sample(df: DataFrame, n: int, strata_col: str = "source",
@@ -180,15 +179,13 @@ def stratified_sample(df: DataFrame, n: int, strata_col: str = "source",
 # ---------------------------------------------------------------------------
 
 def cap_per_key(df: DataFrame, key_col: str, cap: int,
-                order_col: str = "doc_id", out: str = "kept",
                 scale_safe: bool = False) -> DataFrame:
     """Keep at most ``cap`` rows per ``key_col`` group, deterministic
-    under ``order_col`` (the RefinedWeb/Gopher "at most N documents per
-    domain" curation cap; order by a quality key to keep the best N; no
-    reference counterpart — engine-side operator). ``order_col`` must
-    be non-null and unique within each key.
+    under ``doc_id`` order (the RefinedWeb/Gopher "at most N documents
+    per domain" curation cap; no reference counterpart — engine-side
+    operator). ``doc_id`` must be non-null and unique within each key.
 
-    Returns df.* + boolean ``out`` (rank within key < ``cap``).
+    Returns df.* + boolean ``kept`` (rank within key < ``cap``).
 
     Scale shape: the default is one per-key window (rank = row_number)
     — per-key task footprint, the right plan while no key exceeds ~1M
@@ -200,21 +197,21 @@ def cap_per_key(df: DataFrame, key_col: str, cap: int,
     """
     if cap < 0:
         raise ValueError(f"cap must be >= 0, got {cap}")
-    if out in df.columns:
-        raise ValueError(f"output column {out!r} already exists in the "
-                         "input — pass a different out=")
+    if "kept" in df.columns:
+        raise ValueError("output column 'kept' already exists in the "
+                         "input")
     if not scale_safe:
-        w = Window.partitionBy(key_col).orderBy(F.col(order_col).asc())
-        return df.withColumn(out, F.row_number().over(w) <= F.lit(cap))
+        w = Window.partitionBy(key_col).orderBy(F.col("doc_id").asc())
+        return df.withColumn("kept", F.row_number().over(w) <= F.lit(cap))
 
     from .packing import _join_back, _ranged, _two_pass_prefix
-    slim = (df.select(key_col, F.col(order_col).alias("__ord"))
+    slim = (df.select(key_col, F.col("doc_id").alias("__ord"))
             .withColumn("__one", F.lit(1).cast("long")))
     ranged = _ranged(slim, "__ord", [key_col], None) \
         .localCheckpoint(eager=False)
     pre = _two_pass_prefix(ranged, "__one", "__ord", [key_col])
-    flagged = pre.withColumn(out, F.col("__pre") < F.lit(cap))
-    return _join_back(df, flagged, order_col, [key_col], out)
+    flagged = pre.withColumn("kept", F.col("__pre") < F.lit(cap))
+    return _join_back(df, flagged, "doc_id", [key_col], "kept")
 
 
 # ---------------------------------------------------------------------------
@@ -233,40 +230,39 @@ def _grams(text: Column, ns: tuple[int, ...]) -> Column:
     return F.concat(*arrs) if len(arrs) > 1 else arrs[0]
 
 
-def _gram_bucket_rows(df: DataFrame, text_col: str, ns: tuple[int, ...],
-                      n_buckets: int, seed: int, *ids) -> DataFrame:
-    """One (``*ids``, ``__bkt``) row per gram instance: explode the gram
-    strings, then md5-bucket the flat column
-    (:func:`~osm2lanes_spark.operators.text.token_bucket` — any engine
-    with md5 replays the features bit-for-bit)."""
+def _gram_bucket_rows(df: DataFrame, ns: tuple[int, ...], n_buckets: int,
+                      *ids) -> DataFrame:
+    """One (``*ids``, ``__bkt``) row per gram instance of ``text``:
+    explode the gram strings, then md5-bucket the flat column
+    (:func:`~osm2lanes_spark.operators.text.token_bucket` with seed 0 —
+    any engine with md5 replays the features bit-for-bit)."""
     from .text import token_bucket
     from ..util import spread as _sp
 
     # spread first: the gram explode + md5 bucketing otherwise runs
     # inside the (often single-task) scan stage — guide §2.5; no-op at
     # real scale where input partitions exceed the session parallelism
-    return (_sp(df, text_col)
-            .select(*ids, F.explode(_grams(F.col(text_col), ns))
+    return (_sp(df, "text")
+            .select(*ids, F.explode(_grams(F.col("text"), ns))
                     .alias("__gram"))
-            .select(*ids, token_bucket(F.col("__gram"), n_buckets, seed)
+            .select(*ids, token_bucket(F.col("__gram"), n_buckets, 0)
                     .alias("__bkt")))
 
 
-def _bucket_counts(df: DataFrame, text_col: str, ns: tuple[int, ...],
-                   n_buckets: int, seed: int, cnt: str) -> DataFrame:
+def _bucket_counts(df: DataFrame, ns: tuple[int, ...], n_buckets: int,
+                   cnt: str) -> DataFrame:
     """(``__bkt``, ``cnt``) hashed-gram bucket counts of a corpus — one
     map-side-combined shuffle whose output is bounded by ``n_buckets``
     rows regardless of corpus size."""
-    return (_gram_bucket_rows(df, text_col, ns, n_buckets, seed)
+    return (_gram_bucket_rows(df, ns, n_buckets)
             .groupBy("__bkt").agg(F.count(F.lit(1)).alias(cnt)))
 
 
-def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
-                    id_col: str, ns: tuple[int, ...], n_buckets: int,
-                    seed: int, alpha: float) -> DataFrame:
-    """One (``__ds_id``, ``__ds_logw``) row per ``df`` row: its DSIR log
-    importance weight against the ``target`` corpus (Data Selection via
-    Importance Resampling, Xie et al. 2023, NeurIPS)::
+def _dsir_logw_slim(df: DataFrame, target: DataFrame, ns: tuple[int, ...],
+                    n_buckets: int, alpha: float) -> DataFrame:
+    """One (``__ds_id``, ``__ds_logw``) row per ``df`` ``doc_id``: its
+    DSIR log importance weight against the ``target`` corpus (Data
+    Selection via Importance Resampling, Xie et al. 2023, NeurIPS)::
 
         logw(doc) = sum over hashed-gram instances g of
                     ln p_target(bucket(g)) - ln q_raw(bucket(g))
@@ -284,7 +280,7 @@ def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
     broadcast to the scoring join, so the per-row work is the gram
     explode, a broadcast hash join and one map-side-combined per-doc sum.
     The relation is slim (no wide join back), so :func:`dsir_resample`
-    checkpoints it once for both its threshold and its flag. ``id_col``
+    checkpoints it once for both its threshold and its flag. ``doc_id``
     must be unique and non-null."""
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0, got {alpha}")
@@ -293,8 +289,8 @@ def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
     if not ns or any(n < 1 for n in ns):
         raise ValueError(f"ns must be non-empty positive ints, got {ns}")
 
-    qcnt = _bucket_counts(df, text_col, ns, n_buckets, seed, "__cq")
-    pcnt = _bucket_counts(target, text_col, ns, n_buckets, seed, "__cp")
+    qcnt = _bucket_counts(df, ns, n_buckets, "__cq")
+    pcnt = _bucket_counts(target, ns, n_buckets, "__cp")
     totals = F.broadcast(
         qcnt.agg(F.sum("__cq").alias("__tq")).crossJoin(
             pcnt.agg(F.sum("__cp").alias("__tp"))))
@@ -311,14 +307,13 @@ def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
                   + F.log(F.coalesce(F.col("__tq"), F.lit(0))
                           + F.lit(alpha * b))).alias("__lr")))
 
-    grams = _gram_bucket_rows(df, text_col, ns, n_buckets, seed,
-                              F.col(id_col))
+    grams = _gram_bucket_rows(df, ns, n_buckets, F.col("doc_id"))
     per_doc = (grams.join(F.broadcast(ratio), "__bkt", "left")
-               .groupBy(id_col)
+               .groupBy("doc_id")
                .agg(F.sum("__lr").alias("__logw"))
-               .select(F.col(id_col).alias("__pd_id"), "__logw"))
-    ids = df.select(F.col(id_col).alias("__ds_id"),
-                    F.col(text_col).isNotNull().alias("__has_text"))
+               .select(F.col("doc_id").alias("__pd_id"), "__logw"))
+    ids = df.select(F.col("doc_id").alias("__ds_id"),
+                    F.col("text").isNotNull().alias("__has_text"))
     return (ids.join(per_doc, ids["__ds_id"] == F.col("__pd_id"), "left")
             .select("__ds_id",
                     F.when(F.col("__has_text"),
@@ -327,21 +322,20 @@ def _dsir_logw_slim(df: DataFrame, target: DataFrame, text_col: str,
 
 
 def dsir_resample(df: DataFrame, target: DataFrame, k: int,
-                  text_col: str = "text", id_col: str = "doc_id",
                   ns: tuple[int, ...] = (1, 2),
-                  n_buckets: int = 1 << 16, seed: int = 0,
-                  alpha: float = 1.0, key_decimals: int = 6,
-                  out: str = "selected") -> DataFrame:
+                  n_buckets: int = 1 << 16,
+                  alpha: float = 1.0) -> DataFrame:
     """Gumbel-top-k importance resampling: flag the ``k`` documents of
-    ``df`` DSIR would select for the ``target`` domain. Sampling
+    ``df`` (``doc_id``, ``text``) DSIR would select for the ``target``
+    domain. Sampling
     without replacement proportional-to-weight is exactly "add
     independent Gumbel noise to each log weight and take the top k"
     (the Gumbel-top-k trick; public result), and the Gumbel here is a
     pure function of the doc id — ``g = -ln(-ln(u))`` with ``u`` the
-    md5 uniform of ``'g:<seed>:<id>'`` shifted to the open interval —
+    md5 uniform of ``'g:0:<id>'`` shifted to the open interval —
     so re-runs, backfills and external engines reproduce the exact
     selection. Returns df.* + ``dsir_logw`` + ``dsir_key`` + boolean
-    ``out``; NULL-text rows carry NULL key and are never selected.
+    ``selected``; NULL-text rows carry NULL key and are never selected.
 
     Scale shape: the score pipeline runs ONCE — the slim (id, logw, key)
     relation is localCheckpointed (3 narrow columns, the
@@ -352,8 +346,8 @@ def dsir_resample(df: DataFrame, target: DataFrame, k: int,
     driver merges k·tasks rows) aggregated to ONE row and broadcast
     back; no global sort, no single-partition window.
 
-    Selection ranks on the key QUANTIZED to ``key_decimals`` (default
-    6) with ``id_col`` as the tie-break: the raw key is a float sum
+    Selection ranks on the key QUANTIZED to 6 decimals with ``doc_id``
+    as the tie-break: the raw key is a float sum
     whose partition-order jitter (~1e-13) could flip the rank-k
     boundary between otherwise-identical runs or engines; quantizing
     makes the chosen set a pure function of the data while the
@@ -362,21 +356,19 @@ def dsir_resample(df: DataFrame, target: DataFrame, k: int,
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    reserved = {"dsir_logw", "dsir_key", out}
+    reserved = {"dsir_logw", "dsir_key", "selected"}
     clash = sorted(reserved.intersection(df.columns))
     if clash:
         raise ValueError(f"output column(s) {clash} already exist in "
-                         "the input — rename them or pass a different "
-                         "out=")
+                         "the input — rename them")
     u = ((F.conv(F.substring(
-            F.md5(F.concat(F.lit(f"g:{seed}:"),
+            F.md5(F.concat(F.lit("g:0:"),
                            F.col("__ds_id").cast("string"))), 1, 8),
             16, 10).cast("double") + F.lit(0.5))
          / F.lit(float(1 << 32)))
-    keyed = (_dsir_logw_slim(df, target, text_col, id_col, ns,
-                             n_buckets, seed, alpha)
+    keyed = (_dsir_logw_slim(df, target, ns, n_buckets, alpha)
              .withColumn("__ds_key", F.col("__ds_logw") - F.log(-F.log(u)))
-             .withColumn("__k6", F.round(F.col("__ds_key"), key_decimals))
+             .withColumn("__k6", F.round(F.col("__ds_key"), 6))
              .localCheckpoint(eager=False))
     # the k-th row of the (key6 desc, id asc) ranking == the lexicographic
     # max of (-key6, id) over the top-k — one struct agg, always 1 row
@@ -396,52 +388,51 @@ def dsir_resample(df: DataFrame, target: DataFrame, k: int,
                            (F.col("__k6") > F.col("__kth6"))
                            | ((F.col("__k6") == F.col("__kth6"))
                               & (F.col("__ds_id") <= F.col("__kid"))),
-                           F.lit(False)).alias(out)))
-    return (df.join(flagged, df[id_col] == F.col("__ds_id"), "left")
+                           F.lit(False)).alias("selected")))
+    return (df.join(flagged, df["doc_id"] == F.col("__ds_id"), "left")
             .drop("__ds_id"))
 
 
 def weighted_sample(df: DataFrame, k: int, weight_col: str,
-                    id_col: str = "doc_id", seed: int = 0,
-                    key_decimals: int = 6,
-                    out: str = "selected") -> DataFrame:
+                    seed: int = 0) -> DataFrame:
     """Deterministic weight-proportional sampling WITHOUT replacement:
-    flag the ``k`` rows a Gumbel-top-k draw selects with probability
+    flag the ``k`` ``doc_id`` rows a Gumbel-top-k draw selects with
+    probability
     proportional to ``weight_col`` (Efraimidis & Spirakis 2006 /
     Gumbel-top-k — public results). The noise is a pure function of
     the id (``g = -ln(-ln(u))``, ``u`` the md5 uniform of
     ``'w:<seed>:<id>'`` shifted into the open interval), so re-runs,
     backfills and other engines reproduce the exact selection. Rows
     with NULL or non-positive weight are never selected (their key is
-    NULL). Returns df.* + ``sample_key`` + boolean ``out``.
+    NULL). Returns df.* + ``sample_key`` + boolean ``selected``.
 
     Scale shape (the dsir_resample discipline): the k-th key is found
     by TakeOrderedAndProject — per-task top-k, driver merge of k·tasks
     rows, never a global sort or single-partition window — aggregated
     to one row and broadcast back. Selection ranks on the key
-    QUANTIZED to ``key_decimals`` with the id as tie-break, so the
+    QUANTIZED to 6 decimals with the id as tie-break, so the
     chosen set is a pure function of the data (float-boundary
     discipline; raw keys differing at the last ulp cannot flip the
     boundary).
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    reserved = {"sample_key", out}
+    reserved = {"sample_key", "selected"}
     clash = sorted(reserved.intersection(df.columns))
     if clash:
         raise ValueError(f"output column(s) {clash} already exist in "
-                         "the input — rename them or pass a different "
-                         "out=")
+                         "the input — rename them")
     u = ((F.conv(F.substring(
             F.md5(F.concat(F.lit(f"w:{seed}:"),
-                           F.col(id_col).cast("string"))), 1, 8),
+                           F.col("doc_id").cast("string"))), 1, 8),
             16, 10).cast("double") + F.lit(0.5))
          / F.lit(float(1 << 32)))
     key = F.when(F.col(weight_col) > 0,
                  F.log(F.col(weight_col).cast("double"))
                  - F.log(-F.log(u)))
-    keyed = (df.select(F.col(id_col).alias("__ws_id"), key.alias("__ws_key"))
-             .withColumn("__k6", F.round(F.col("__ws_key"), key_decimals))
+    keyed = (df.select(F.col("doc_id").alias("__ws_id"),
+                       key.alias("__ws_key"))
+             .withColumn("__k6", F.round(F.col("__ws_key"), 6))
              .localCheckpoint(eager=False))
     thresh = F.broadcast(
         keyed.where(F.col("__k6").isNotNull())
@@ -457,6 +448,6 @@ def weighted_sample(df: DataFrame, k: int, weight_col: str,
                            (F.col("__k6") > F.col("__kth6"))
                            | ((F.col("__k6") == F.col("__kth6"))
                               & (F.col("__ws_id") <= F.col("__kid"))),
-                           F.lit(False)).alias(out)))
-    return df.join(flagged, df[id_col] == F.col("__ws_id"), "left") \
+                           F.lit(False)).alias("selected")))
+    return df.join(flagged, df["doc_id"] == F.col("__ws_id"), "left") \
              .drop("__ws_id")

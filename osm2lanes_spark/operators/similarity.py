@@ -51,33 +51,35 @@ def with_unit(df: DataFrame, vec_col: str, out: str) -> DataFrame:
             .drop("_vnorm"))
 
 
-def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
-                query_id: str = "query_id", corpus_id: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
-    """Exact cosine top-k: (query_id, vec_id, cosine, rank).
+def cosine_topk(queries: DataFrame, corpus: DataFrame,
+                k: int = 10) -> DataFrame:
+    """Exact cosine top-k of ``embedding`` rows: (query_id, vec_id,
+    cosine, rank).
 
     Excludes self-matches when ids collide. Queries are broadcast (they are
     few); the corpus is scanned once, no shuffle besides the per-query
     window ranking.
     """
-    q = F.broadcast(with_unit(queries, vec_col, "_qv")
-                    .select(F.col(query_id), "_qv"))
-    c = with_unit(_spread(corpus, corpus_id), vec_col, "_cv").select(
-        F.col(corpus_id), "_cv")
+    q = F.broadcast(with_unit(queries, "embedding", "_qv")
+                    .select(F.col("query_id"), "_qv"))
+    c = with_unit(_spread(corpus, "vec_id"), "embedding", "_cv").select(
+        F.col("vec_id"), "_cv")
     scored = (q.crossJoin(c)
-              .where(F.col(query_id).cast("string") != F.col(corpus_id).cast("string"))
+              .where(F.col("query_id").cast("string")
+                     != F.col("vec_id").cast("string"))
               .withColumn("_cos", _dot(F.col("_qv"), F.col("_cv"))))
-    w = Window.partitionBy(query_id).orderBy(F.col("_cos").desc(),
-                                             F.col(corpus_id).asc())
+    w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(),
+                                               F.col("vec_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .withColumn("cosine", F.round(F.col("_cos"), 6))
-            .select(query_id, corpus_id, "cosine", "rank"))
+            .select("query_id", "vec_id", "cosine", "rank"))
 
 
 def select_centroids(corpus_unit: DataFrame, corpus_id: str,
-                     n_centroids: int, vec_alias: str = "_cv") -> DataFrame:
-    """Deterministic pseudo-random centroid sample in ONE partial aggregate.
+                     n_centroids: int) -> DataFrame:
+    """Deterministic pseudo-random centroid sample of the unit vectors
+    ``_cv`` in ONE partial aggregate.
 
     Bucket every row by ``pmod(xxhash64(id), K)`` and take the min-hash
     row of each bucket. Two narrow passes, both the shape you want at
@@ -100,7 +102,7 @@ def select_centroids(corpus_unit: DataFrame, corpus_id: str,
     """
     h = F.xxhash64(F.col(corpus_id).cast("string"))
     hashed = corpus_unit.select(
-        F.col(corpus_id).cast("string").alias("_cid"), F.col(vec_alias),
+        F.col(corpus_id).cast("string").alias("_cid"), F.col("_cv"),
         h.alias("_h"), F.pmod(h, F.lit(n_centroids)).alias("_bucket"))
     mins = hashed.groupBy("_bucket").agg(F.min("_h").alias("_h"))
     cand = hashed.join(F.broadcast(mins), ["_bucket", "_h"])
@@ -108,15 +110,14 @@ def select_centroids(corpus_unit: DataFrame, corpus_id: str,
     return (cand.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .select((F.col("_bucket") + 1).cast("int").alias("centroid_id"),
-                    F.col(vec_alias).alias("_centroid")))
+                    F.col("_cv").alias("_centroid")))
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
              n_centroids: int = 16, nprobe: int = 4,
-             query_id: str = "query_id", corpus_id: str = "vec_id",
-             vec_col: str = "embedding",
              centroids: DataFrame | None = None) -> DataFrame:
-    """IVF-bucketed approximate top-k with deterministic centroids.
+    """IVF-bucketed approximate top-k with deterministic centroids, in
+    :func:`cosine_topk`'s columns.
 
     Centroids: a deterministic bucketed-argmin sample — one partial
     aggregate, no full-corpus sort, no count jobs (see
@@ -126,15 +127,15 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
     and probing are broadcast joins; only probed clusters shuffle into
     the ranking window.
     """
-    c_unit = with_unit(_spread(corpus, corpus_id), vec_col, "_cv").select(
-        F.col(corpus_id), "_cv")
+    c_unit = with_unit(_spread(corpus, "vec_id"), "embedding",
+                       "_cv").select(F.col("vec_id"), "_cv")
     if centroids is not None:
         cb = F.broadcast(
             with_unit(centroids, "centroid", "_centroid")
             .select(F.col("centroid_id").cast("int").alias("centroid_id"),
                     "_centroid"))
     else:
-        cb = F.broadcast(select_centroids(c_unit, corpus_id, n_centroids))
+        cb = F.broadcast(select_centroids(c_unit, "vec_id", n_centroids))
 
     # corpus → nearest centroid. A max(struct) partial aggregate, NOT a
     # window: the argmax combines map-side (one shuffle of one row per
@@ -145,37 +146,38 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int = 10,
         F.col("_sim"), (-F.col("centroid_id")).alias("_negc"))).alias("_b")
     assigned = (c_unit.crossJoin(cb)
                 .withColumn("_sim", _dot(F.col("_cv"), F.col("_centroid")))
-                .groupBy(corpus_id)
+                .groupBy("vec_id")
                 .agg(best, F.first("_cv").alias("_cv"))
-                .select(corpus_id, "_cv",
+                .select("vec_id", "_cv",
                         (-F.col("_b._negc")).cast("int").alias("centroid_id")))
 
     # queries → nprobe nearest centroids
-    q_unit = with_unit(queries, vec_col, "_qv").select(F.col(query_id), "_qv")
-    probe_w = Window.partitionBy(query_id).orderBy(
+    q_unit = with_unit(queries, "embedding", "_qv").select(
+        F.col("query_id"), "_qv")
+    probe_w = Window.partitionBy("query_id").orderBy(
         F.col("_sim").desc(), F.col("centroid_id").asc())
     probes = (q_unit.crossJoin(cb)
               .withColumn("_sim", _dot(F.col("_qv"), F.col("_centroid")))
               .withColumn("_rn", F.row_number().over(probe_w))
               .where(F.col("_rn") <= nprobe)
-              .select(query_id, "_qv", "centroid_id"))
+              .select("query_id", "_qv", "centroid_id"))
 
     scored = (F.broadcast(probes).join(assigned, "centroid_id")
-              .where(F.col(query_id).cast("string") != F.col(corpus_id).cast("string"))
+              .where(F.col("query_id").cast("string")
+                     != F.col("vec_id").cast("string"))
               .withColumn("_cos", _dot(F.col("_qv"), F.col("_cv")))
-              .dropDuplicates([query_id, corpus_id]))
-    w = Window.partitionBy(query_id).orderBy(F.col("_cos").desc(),
-                                             F.col(corpus_id).asc())
+              .dropDuplicates(["query_id", "vec_id"]))
+    w = Window.partitionBy("query_id").orderBy(F.col("_cos").desc(),
+                                               F.col("vec_id").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .withColumn("cosine", F.round(F.col("_cos"), 6))
-            .select(query_id, corpus_id, "cosine", "rank"))
+            .select("query_id", "vec_id", "cosine", "rank"))
 
 
-def label_centroids(df: DataFrame, label_col: str = "label",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Per-label mean vector (class prototype), as (label, pos, mean, n)
-    rows.
+def label_centroids(df: DataFrame) -> DataFrame:
+    """Per-``label`` mean ``embedding`` (class prototype), as (label,
+    pos, mean, n) rows.
 
     Shape: ``posexplode`` then ``groupBy(label, pos).avg`` — the sums
     partial-aggregate map-side and exactly ONE shuffle moves (label, pos)
@@ -185,8 +187,7 @@ def label_centroids(df: DataFrame, label_col: str = "label",
     (round-2 lesson) — and downstream consumers re-pivot only the tiny
     result.
     """
-    ex = df.select(F.col(label_col).alias("label"),
-                   F.posexplode(vec_col).alias("pos", "v"))
+    ex = df.select("label", F.posexplode("embedding").alias("pos", "v"))
     return (ex.groupBy("label", "pos")
             .agg(F.avg("v").alias("mean"), F.count(F.lit(1)).alias("n")))
 
@@ -195,11 +196,11 @@ def label_centroids(df: DataFrame, label_col: str = "label",
 # Distributed spherical k-means (Lloyd's) — IVF centroid training
 # ---------------------------------------------------------------------------
 
-def kmeans_fit(df: DataFrame, vec_col: str = "embedding",
-               id_col: str = "vec_id", k: int = 16,
+def kmeans_fit(df: DataFrame, k: int = 16,
                iterations: int = 5, init: DataFrame | None = None,
                tol: float = 0.0) -> DataFrame:
-    """Train ``k`` spherical k-means centroids with Lloyd's iterations —
+    """Train ``k`` spherical k-means centroids of the ``(vec_id,
+    embedding)`` rows with Lloyd's iterations —
     the IVF coarse quantizer trained on the data instead of sampled from
     it (no reference counterpart — engine-side operator; the standard
     recipe of IVF indexes, cf. Jégou et al. 2011 §III).
@@ -233,12 +234,12 @@ def kmeans_fit(df: DataFrame, vec_col: str = "embedding",
         raise ValueError(f"iterations must be >= 0, got {iterations}")
 
     spark = df.sparkSession
-    c_unit = with_unit(_spread(df, id_col), vec_col, "_cv").select(
-        F.col(id_col), "_cv")
+    c_unit = with_unit(_spread(df, "vec_id"), "embedding", "_cv").select(
+        F.col("vec_id"), "_cv")
 
     if init is None:
         cur = [(int(r["centroid_id"]), list(r["_centroid"]))
-               for r in select_centroids(c_unit, id_col, k).collect()]
+               for r in select_centroids(c_unit, "vec_id", k).collect()]
     else:
         cur = [(int(r["centroid_id"]), list(r["centroid"]))
                for r in init.collect()]
@@ -258,9 +259,9 @@ def kmeans_fit(df: DataFrame, vec_col: str = "embedding",
             (-F.col("centroid_id")).alias("_negc"))).alias("_b")
         return (c_unit.crossJoin(F.broadcast(cent_df))
                 .withColumn("_sim", _dot(F.col("_cv"), F.col("_centroid")))
-                .groupBy(id_col)
+                .groupBy("vec_id")
                 .agg(best, F.first("_cv").alias("_cv"))
-                .select(id_col, "_cv",
+                .select("vec_id", "_cv",
                         (-F.col("_b._negc")).cast("int")
                         .alias("centroid_id")))
 
@@ -331,11 +332,11 @@ def _sub_rows(df: DataFrame, vec_col: str, id_col: str, m: int,
                               F.lit(dsub)))).alias("sub", "_sv"))
 
 
-def pseudo_codebooks(spark, m: int = 4, k: int = 8, dsub: int = 16,
-                     seed: int = 0) -> DataFrame:
+def pseudo_codebooks(spark, m: int = 4, k: int = 8,
+                     dsub: int = 16) -> DataFrame:
     """Deterministic md5-derived PQ codebooks — ``(sub, code_id,
     centroid)`` with every component the md5 uniform of
-    ``'c:<seed>:<sub>:<code>:<dim>'`` stretched to [-1, 1). Bounded
+    ``'c:0:<sub>:<code>:<dim>'`` stretched to [-1, 1). Bounded
     driver-side generation (m·k·dsub floats — codebooks must broadcast
     anyway); any engine with md5 replays the exact values, which is
     what makes the ``ann_pq`` driver query hard-oracle-able."""
@@ -344,7 +345,7 @@ def pseudo_codebooks(spark, m: int = 4, k: int = 8, dsub: int = 16,
     rows = []
     for s in range(m):
         for c in range(k):
-            vec = [int(hashlib.md5(f"c:{seed}:{s}:{c}:{d}".encode())
+            vec = [int(hashlib.md5(f"c:0:{s}:{c}:{d}".encode())
                        .hexdigest()[:8], 16) / float(1 << 32) * 2 - 1
                    for d in range(dsub)]
             rows.append((s, c, vec))
@@ -366,12 +367,10 @@ def _codebook_shape(codebooks: DataFrame) -> tuple[int, int]:
     return m, dsubs.pop()
 
 
-def pq_encode(df: DataFrame, codebooks: DataFrame,
-              vec_col: str = "embedding", id_col: str = "vec_id",
-              out: str = "pq_code") -> DataFrame:
-    """df.* + ``out``: the PQ code array — per subspace, the id of the
-    L2-nearest codebook centroid. The input vector dim must equal
-    m·dsub of the codebooks.
+def pq_encode(df: DataFrame, codebooks: DataFrame) -> DataFrame:
+    """df.* + ``pq_code``: the PQ code array of each ``vec_id``'s
+    ``embedding`` — per subspace, the id of the L2-nearest codebook
+    centroid. The input vector dim must equal m·dsub of the codebooks.
 
     Argmin ranks on the distance ROUNDED to 9 decimals with code_id as
     the tie-break (the dsir quantization discipline — float-sum jitter
@@ -384,37 +383,35 @@ def pq_encode(df: DataFrame, codebooks: DataFrame,
     the untouched input by id. Corpus moves through exactly one hash
     shuffle of (id, m structs).
     """
-    if out in df.columns:
-        raise ValueError(f"output column {out!r} already exists in the "
-                         "input — pass a different out=")
+    if "pq_code" in df.columns:
+        raise ValueError("output column 'pq_code' already exists in the "
+                         "input")
     m, dsub = _codebook_shape(codebooks)
-    scored = (_sub_rows(df, vec_col, id_col, m, dsub)
+    scored = (_sub_rows(df, "embedding", "vec_id", m, dsub)
               .join(F.broadcast(codebooks), "sub")
               .withColumn("_d9", F.round(_l2sq(F.col("_sv"),
                                                F.col("centroid")), 9)))
     pivots = [F.min(F.when(F.col("sub") == s,
                            F.struct(F.col("_d9"), F.col("code_id"))))
               .alias(f"_c{s}") for s in range(m)]
-    codes = (scored.groupBy(id_col).agg(*pivots)
-             .select(F.col(id_col).alias("__pq_id"),
+    codes = (scored.groupBy("vec_id").agg(*pivots)
+             .select(F.col("vec_id").alias("__pq_id"),
                      F.array(*[F.col(f"_c{s}.code_id") for s in range(m)])
-                     .alias(out)))
-    return (df.join(codes, df[id_col] == F.col("__pq_id"), "left")
+                     .alias("pq_code")))
+    return (df.join(codes, df["vec_id"] == F.col("__pq_id"), "left")
             .drop("__pq_id"))
 
 
 def pq_adc_topk(queries: DataFrame, codes: DataFrame,
-                codebooks: DataFrame, k: int = 10,
-                query_id: str = "query_id", corpus_id: str = "vec_id",
-                vec_col: str = "embedding",
-                code_col: str = "pq_code") -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: ``(query_id, vec_id,
-    adc, rank)``. ADC = for each query, a (m·k)-entry lookup table of
-    exact query-subvector-to-centroid L2 distances; a corpus vector's
+                codebooks: DataFrame, k: int = 10) -> DataFrame:
+    """Asymmetric-distance top-k of the ``embedding`` queries over
+    ``pq_code`` codes: ``(query_id, vec_id, adc, rank)``. ADC = for
+    each query, a (m·k)-entry lookup table of exact
+    query-subvector-to-centroid L2 distances; a corpus vector's
     approximate distance is the sum of its m code lookups (Jégou et
     al. 2011 §IV.A) — the corpus is never decoded.
 
-    Ranks on the ADC sum rounded to 6 decimals with ``corpus_id`` as
+    Ranks on the ADC sum rounded to 6 decimals with ``vec_id`` as
     the tie-break (quantized, engine-stable rank-k boundary).
 
     Scale shape at 100 TB: the LUT is queries x codebooks — n_q·m·k
@@ -426,19 +423,19 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame,
     window) then scales with nprobe/n_cells, not the corpus.
     """
     m, dsub = _codebook_shape(codebooks)
-    lut = (_sub_rows(queries, vec_col, query_id, m, dsub)
+    lut = (_sub_rows(queries, "embedding", "query_id", m, dsub)
            .join(F.broadcast(codebooks), "sub")
-           .select(query_id, "sub", "code_id",
+           .select("query_id", "sub", "code_id",
                    _l2sq(F.col("_sv"), F.col("centroid")).alias("_pd")))
     cand = (codes
-            .select(F.col(corpus_id),
-                    F.posexplode(F.col(code_col)).alias("sub", "code_id"))
+            .select(F.col("vec_id"),
+                    F.posexplode(F.col("pq_code")).alias("sub", "code_id"))
             .join(F.broadcast(lut), ["sub", "code_id"])
-            .groupBy(query_id, corpus_id)
+            .groupBy("query_id", "vec_id")
             .agg(F.sum("_pd").alias("_adc")))
-    w = Window.partitionBy(query_id).orderBy(
-        F.round(F.col("_adc"), 6).asc(), F.col(corpus_id).asc())
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(F.col("_adc"), 6).asc(), F.col("vec_id").asc())
     return (cand.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .withColumn("adc", F.round(F.col("_adc"), 6))
-            .select(query_id, corpus_id, "adc", "rank"))
+            .select("query_id", "vec_id", "adc", "rank"))

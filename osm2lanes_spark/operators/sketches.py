@@ -22,7 +22,7 @@ Why it matters at 100 TB: the sketch is a first-class TABLE of at most
 * **shuffle-capped** — the register groupBy partial-combines map-side,
   so the exchange carries at most ``2^p × partitions`` rows no matter
   how many billions of input rows;
-* **replayable** — every hash is ``md5("hll:<seed>:" + value)``; the
+* **replayable** — every hash is ``md5("hll:0:" + value)``; the
   DuckDB oracle reproduces registers, ranks, harmonic sum and estimate
   bit-for-bit (the harmonic sum is a sum of dyadic rationals spanning
   2^-33..2^0 over ≤2^p terms — exactly representable in a double at
@@ -41,6 +41,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .graph import _idiv
+
+# Hash salts, one per sketch family: a sketch and every read of it must
+# hash the same way, so neither side takes its own.
+HLL_SEED = 0
+CMS_SEED = 0
 
 
 def _hex32(s: Column) -> Column:
@@ -66,7 +73,7 @@ def _rank_from_hex(whex: Column) -> Column:
 
 
 def hll_sketch(df: DataFrame, value_col: str, by: list[str] | None = None,
-               p: int = 12, seed: int = 0) -> DataFrame:
+               p: int = 12) -> DataFrame:
     """Build per-group HLL registers: ``by… , register:int, rank:int``
     with ``rank = max`` over the group's values hashing to that
     register. At most ``2^p`` register rows per group regardless of
@@ -75,7 +82,7 @@ def hll_sketch(df: DataFrame, value_col: str, by: list[str] | None = None,
     semantics)."""
     by = list(by or [])
     m = 1 << p
-    h = F.md5(F.concat(F.lit(f"hll:{seed}:"),
+    h = F.md5(F.concat(F.lit(f"hll:{HLL_SEED}:"),
                        F.col(value_col).cast("string")))
     return (df.where(F.col(value_col).isNotNull())
             .select(*by,
@@ -86,7 +93,7 @@ def hll_sketch(df: DataFrame, value_col: str, by: list[str] | None = None,
 
 
 def hll_estimate(sketch: DataFrame, by: list[str] | None = None,
-                 p: int = 12, decimals: int = 3) -> DataFrame:
+                 p: int = 12) -> DataFrame:
     """Finish a sketch into ``by… , n_registers:int, est_distinct``.
 
     raw = alpha·m² / (Σ 2^-rank + (m − n_set)·2⁰); the small-range
@@ -94,8 +101,8 @@ def hll_estimate(sketch: DataFrame, by: list[str] | None = None,
     zero registers remain (the standard HLL regime switch). All inputs
     to the division are bit-exact across engines (dyadic sums); the
     single ln() is libm-dependent at the last ulp, hence the rounded
-    output (a boundary flip needs the true value within 1 ulp of a
-    0.5·10^-decimals edge)."""
+    output, to 3 decimals (a boundary flip needs the true value within
+    1 ulp of a 0.5·10^-3 edge)."""
     by = list(by or [])
     m = 1 << p
     # literal arithmetic, never a Python-precomputed float, so the
@@ -110,56 +117,52 @@ def hll_estimate(sketch: DataFrame, by: list[str] | None = None,
     est = F.when((raw <= 2.5 * m) & (v > 0),
                  m * F.log(m / v)).otherwise(raw)
     return (agg.select(*by, "n_registers",
-                       F.round(est, decimals).alias("est_distinct")))
+                       F.round(est, 3).alias("est_distinct")))
 
 
 def hll_distinct(df: DataFrame, value_col: str,
-                 by: list[str] | None = None, p: int = 12,
-                 seed: int = 0, decimals: int = 3) -> DataFrame:
+                 by: list[str] | None = None, p: int = 12) -> DataFrame:
     """One-shot approximate COUNT(DISTINCT value) per group:
-    sketch → estimate. Standard error ≈ 1.04/√(2^p) (~1.6% at p=12)
-    in the HLL regime; near-exact in the linear-counting regime."""
-    return hll_estimate(hll_sketch(df, value_col, by, p, seed),
-                        by, p, decimals)
+    sketch → estimate (rounded to 3 decimals). Standard error ≈
+    1.04/√(2^p) (~1.6% at p=12) in the HLL regime; near-exact in the
+    linear-counting regime."""
+    return hll_estimate(hll_sketch(df, value_col, by, p), by, p)
 
 
 # ---------------------------------------------------------------------------
 # Count-Min frequency sketch
 # ---------------------------------------------------------------------------
 
-def cms_build(df: DataFrame, value_col: str, by: list[str] | None = None,
-              width: int = 2048, depth: int = 4,
-              seed: int = 0) -> DataFrame:
-    """Count-Min sketch [Cormode & Muthukrishnan 2005] per group:
-    ``by… , row:int, bucket:int, cnt:long`` — the frequency complement
+def cms_build(df: DataFrame, value_col: str, width: int = 2048,
+              depth: int = 4) -> DataFrame:
+    """Count-Min sketch [Cormode & Muthukrishnan 2005]:
+    ``row:int, bucket:int, cnt:long`` — the frequency complement
     of the HLL cardinality sketch and the Bloom membership filter.
-    Row ``j``'s bucket for a value is ``md5("cms:<seed>:<j>:" + value)
+    Row ``j``'s bucket for a value is ``md5("cms:0:<j>:" + value)
     mod width`` — pure integer arithmetic end to end, so the sketch
     (and every estimate read from it) is bit-exact in any engine.
 
     Scale shape: explode ``depth`` rows per input value, ONE
     map-side-combined sum groupBy — the exchange carries at most
     ``depth × width`` rows per input partition regardless of input
-    size, and the finished sketch is ≤ depth×width rows per group
-    (4×2048 ≈ 8k at the defaults). NULL values are ignored.
+    size, and the finished sketch is ≤ depth×width rows (4×2048 ≈ 8k at
+    the defaults). NULL values are ignored.
     """
-    by = list(by or [])
     js = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
-    h = F.md5(F.concat(F.lit(f"cms:{seed}:"), F.col("row").cast("string"),
+    h = F.md5(F.concat(F.lit(f"cms:{CMS_SEED}:"),
+                       F.col("row").cast("string"),
                        F.lit(":"), F.col(value_col).cast("string")))
     return (df.where(F.col(value_col).isNotNull())
-            .select(*by, F.col(value_col), js)
-            .select(*by, "row",
-                    (_hex32(h) % width).cast("int").alias("bucket"))
-            .groupBy(*by, "row", "bucket")
+            .select(F.col(value_col), js)
+            .select("row", (_hex32(h) % width).cast("int").alias("bucket"))
+            .groupBy("row", "bucket")
             .agg(F.count(F.lit(1)).alias("cnt")))
 
 
 def cms_lookup(cms: DataFrame, probes: DataFrame, value_col: str,
-               by: list[str] | None = None, width: int = 2048,
-               depth: int = 4, seed: int = 0) -> DataFrame:
+               width: int = 2048, depth: int = 4) -> DataFrame:
     """Point-query a ``cms_build`` sketch for each probe value:
-    ``by… , value_col, est_count`` where ``est_count = min over rows``
+    ``value_col, est_count`` where ``est_count = min over rows``
     of the value's counter (0 when a counter row is absent). The CMS
     guarantee: ``est_count ≥ true count`` always, with overshoot
     bounded by e·N/width at probability 1−e^−depth.
@@ -170,16 +173,15 @@ def cms_lookup(cms: DataFrame, probes: DataFrame, value_col: str,
     per probe)."""
     from pyspark.sql.functions import broadcast
 
-    by = list(by or [])
     js = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row")
-    h = F.md5(F.concat(F.lit(f"cms:{seed}:"), F.col("row").cast("string"),
+    h = F.md5(F.concat(F.lit(f"cms:{CMS_SEED}:"),
+                       F.col("row").cast("string"),
                        F.lit(":"), F.col(value_col).cast("string")))
-    pr = (probes.select(*by, F.col(value_col), js)
-          .select(*by, F.col(value_col), "row",
+    pr = (probes.select(F.col(value_col), js)
+          .select(F.col(value_col), "row",
                   (_hex32(h) % width).cast("int").alias("bucket")))
-    keys = by + ["row", "bucket"]
-    joined = pr.join(broadcast(cms), keys, "left")
-    return (joined.groupBy(*by, value_col)
+    joined = pr.join(broadcast(cms), ["row", "bucket"], "left")
+    return (joined.groupBy(value_col)
             .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0)))
                  .alias("est_count")))
 
@@ -187,15 +189,6 @@ def cms_lookup(cms: DataFrame, probes: DataFrame, value_col: str,
 # ---------------------------------------------------------------------------
 # Dyadic quantile sketch
 # ---------------------------------------------------------------------------
-
-def _idiv(a: Column, b: Column) -> Column:
-    """Exact integer division for non-negative longs (same construction
-    as operators/graph.py): ``(a - a % b) / b`` has an integer quotient,
-    so the double division is exact below 2^53."""
-    a = a.cast("long")
-    b = b.cast("long")
-    return ((a - a % b) / b).cast("long")
-
 
 def _dyadic_bin(v: Column) -> Column:
     """Dyadic bin id of a long: 0 for v <= 0, else the bit length —

@@ -318,16 +318,15 @@ def _carry_rows(l_tagged: DataFrame, r_tagged: DataFrame, left: DataFrame,
 def sessionize(df: DataFrame, key: str = "user_id", ts: str = "ts",
                gap_seconds: float = 1800.0,
                tiebreak: str | None = None,
-               out: str = "session_id",
                scale_safe: bool | str = False,
                num_partitions: int | None = None,
                auto_threshold_rows: int = AUTO_HOT_KEY_CROSSOVER,
                auto_probe_fraction: float = 0.01) -> DataFrame:
-    """Assign gap-based session ids per key.
+    """Assign gap-based ``session_id``s per key.
 
     A new session starts at the first event of a key and whenever the
     gap to the previous event exceeds ``gap_seconds`` (strictly).
-    ``out`` is a 1-based BIGINT dense within each key. Integer-
+    ``session_id`` is a 1-based BIGINT dense within each key. Integer-
     microsecond arithmetic so external systems (and the DuckDB oracle)
     reproduce boundaries exactly.
 
@@ -361,7 +360,7 @@ def sessionize(df: DataFrame, key: str = "user_id", ts: str = "ts",
         order.append(F.col(tiebreak).asc())
     if scale_safe:
         return _sessionize_distributed(df, key, ts, gap_us, tiebreak,
-                                       out, num_partitions)
+                                       "session_id", num_partitions)
     w = Window.partitionBy(key).orderBy(*order)
     prev_us = F.lag(_micros(F.col(ts))).over(w)
     new_sess = F.when(
@@ -370,7 +369,8 @@ def sessionize(df: DataFrame, key: str = "user_id", ts: str = "ts",
         F.lit(1)).otherwise(F.lit(0))
     running = (Window.partitionBy(key).orderBy(*order)
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return df.withColumn(out, F.sum(new_sess).over(running).cast("long"))
+    return df.withColumn("session_id",
+                         F.sum(new_sess).over(running).cast("long"))
 
 
 def _sessionize_distributed(df: DataFrame, key: str, ts: str, gap_us: int,
@@ -490,13 +490,12 @@ def _sessionize_distributed(df: DataFrame, key: str, ts: str, gap_us: int,
 # Rolling time-range window aggregates
 # ---------------------------------------------------------------------------
 
-def rolling_stats(df: DataFrame, key: str = "user_id", ts: str = "ts",
-                  value_col: str = "value",
-                  window_seconds: int = 3600) -> DataFrame:
+def rolling_stats(df: DataFrame, window_seconds: int = 3600) -> DataFrame:
     """Per-row trailing time-range aggregates: for every event, the count
-    and sum of ``value_col`` over the key's events in the last
-    ``window_seconds`` (inclusive of the current row and of timestamp
-    peers — RANGE frame semantics, identical in Spark and ANSI SQL).
+    and sum of ``value`` over the ``user_id``'s events (by ``ts``) in
+    the last ``window_seconds`` (inclusive of the current row and of
+    timestamp peers — RANGE frame semantics, identical in Spark and ANSI
+    SQL).
 
     The moving-average / rate-limiter shape of event analytics: one hash
     shuffle on the key, then a per-key sort with an O(1)-per-row sliding
@@ -513,10 +512,10 @@ def rolling_stats(df: DataFrame, key: str = "user_id", ts: str = "ts",
     decomposition, which applies unchanged here if a production key is
     hot enough to need it (the events corpus is uniform).
     """
-    us = _micros(F.col(ts))
-    w = (Window.partitionBy(key).orderBy(us)
+    us = _micros(F.col("ts"))
+    w = (Window.partitionBy("user_id").orderBy(us)
          .rangeBetween(-window_seconds * 1_000_000, 0))
-    dec = F.col(value_col).cast("decimal(18,6)")
+    dec = F.col("value").cast("decimal(18,6)")
     return (df.withColumn("n_win", F.count(F.lit(1)).over(w))
             .withColumn("sum_win",
                         F.round(F.sum(dec).over(w).cast("double"), 6)))
@@ -526,18 +525,18 @@ def rolling_stats(df: DataFrame, key: str = "user_id", ts: str = "ts",
 # Ordered-step conversion funnel
 # ---------------------------------------------------------------------------
 
-def window_funnel(df: DataFrame, steps: list[str], key: str = "user_id",
-                  ts: str = "ts", type_col: str = "event_type",
+def window_funnel(df: DataFrame, steps: list[str],
                   horizon_seconds: int | None = None) -> DataFrame:
-    """Conversion-funnel depth per key: how far each key progresses
-    through ``steps`` in order, under GREEDY EARLIEST-CHAIN semantics —
-    t1 = the key's earliest step-1 event; t_{i+1} = the earliest
-    step-(i+1) event at or after t_i; the chain counts while every
-    matched step lies within ``horizon_seconds`` of t1 (None = no
-    horizon). Deterministic by construction (minima only — no
-    ClickHouse-style sliding restarts, which are order-dependent and not
-    SQL-replayable). Returns ``(key, funnel_depth, t_first)`` with depth
-    0 for keys that never reach step 1 but appear in the input.
+    """Conversion-funnel depth per ``user_id``: how far each key
+    progresses through the ``event_type`` ``steps`` in ``ts`` order,
+    under GREEDY EARLIEST-CHAIN semantics — t1 = the key's earliest
+    step-1 event; t_{i+1} = the earliest step-(i+1) event at or after
+    t_i; the chain counts while every matched step lies within
+    ``horizon_seconds`` of t1 (None = no horizon). Deterministic by
+    construction (minima only — no ClickHouse-style sliding restarts,
+    which are order-dependent and not SQL-replayable). Returns
+    ``(user_id, funnel_depth, t_first)`` with depth 0 for keys that
+    never reach step 1 but appear in the input.
 
     Scale shape: one conditional-aggregation groupBy per step over a
     filtered column-pruned pass — k tiny shuffles on the key (k = number
@@ -547,19 +546,20 @@ def window_funnel(df: DataFrame, steps: list[str], key: str = "user_id",
     """
     if not steps:
         raise ValueError("steps must be non-empty")
-    us = _micros(F.col(ts))
-    ev = (df.where(F.col(type_col).isin(list(steps)))
-          .select(F.col(key), F.col(type_col).alias("_t"), us.alias("_us")))
+    us = _micros(F.col("ts"))
+    ev = (df.where(F.col("event_type").isin(list(steps)))
+          .select(F.col("user_id"), F.col("event_type").alias("_t"),
+                  us.alias("_us")))
     # earliest step-1 per key
     cur = (ev.where(F.col("_t") == steps[0])
-           .groupBy(key).agg(F.min("_us").alias("_ts1"))
+           .groupBy("user_id").agg(F.min("_us").alias("_ts1"))
            .withColumn("_prev", F.col("_ts1")))
     for i, step in enumerate(steps[1:], start=2):
         nxt = (ev.where(F.col("_t") == step)
-               .join(cur.select(key, "_ts1", "_prev"), key)
+               .join(cur.select("user_id", "_ts1", "_prev"), "user_id")
                .where(F.col("_us") >= F.col("_prev"))
-               .groupBy(key).agg(F.min("_us").alias("_nxt")))
-        cur = (cur.join(nxt, key, "left")
+               .groupBy("user_id").agg(F.min("_us").alias("_nxt")))
+        cur = (cur.join(nxt, "user_id", "left")
                .withColumn(f"_ts{i}", F.col("_nxt")).drop("_nxt")
                .withColumn("_prev", F.coalesce(F.col(f"_ts{i}"),
                                                F.col("_prev"))))
@@ -571,23 +571,23 @@ def window_funnel(df: DataFrame, steps: list[str], key: str = "user_id",
                          <= F.col("_ts1") + horizon_seconds * 1_000_000)
         # depth = longest PREFIX of in-horizon hits
         depth = F.when(hit & (depth >= i - 1), F.lit(i)).otherwise(depth)
-    keys = df.select(key).distinct()
-    return (keys.join(cur, key, "left")
+    keys = df.select("user_id").distinct()
+    return (keys.join(cur, "user_id", "left")
             .withColumn("funnel_depth", depth.cast("int"))
             .withColumn("t_first", F.col("_ts1"))
-            .select(key, "funnel_depth", "t_first"))
+            .select("user_id", "funnel_depth", "t_first"))
 
 
 # ---------------------------------------------------------------------------
 # Retention cohorts
 # ---------------------------------------------------------------------------
 
-def retention_cohorts(df: DataFrame, key: str = "user_id", ts: str = "ts",
+def retention_cohorts(df: DataFrame,
                       bucket_seconds: int = 7 * 86400) -> DataFrame:
-    """Cohort retention triangle: assign every key to the time bucket of
-    its FIRST event (the cohort), then count distinct keys active at
-    each bucket offset — ``(cohort, offset, n_active)`` where offset 0
-    is the cohort bucket itself. Buckets are
+    """Cohort retention triangle: assign every ``user_id`` to the
+    ``ts`` bucket of its FIRST event (the cohort), then count distinct
+    keys active at each bucket offset — ``(cohort, offset, n_active)``
+    where offset 0 is the cohort bucket itself. Buckets are
     ``floor(epoch_us / (bucket_seconds * 1e6))`` — fixed epoch-aligned
     integer arithmetic, bit-identical in any engine.
 
@@ -597,11 +597,11 @@ def retention_cohorts(df: DataFrame, key: str = "user_id", ts: str = "ts",
     distinct collapses each key's events map-side first); the triangle
     is a count on (cohort, offset). No windows, no per-key ordering.
     """
-    us = _micros(F.col(ts))
+    us = _micros(F.col("ts"))
     bucket = F.floor(us / F.lit(bucket_seconds * 1_000_000)).cast("long")
-    act = df.select(F.col(key), bucket.alias("_b")).distinct()
-    first = act.groupBy(key).agg(F.min("_b").alias("cohort"))
-    return (act.join(first, key)
+    act = df.select(F.col("user_id"), bucket.alias("_b")).distinct()
+    first = act.groupBy("user_id").agg(F.min("_b").alias("cohort"))
+    return (act.join(first, "user_id")
             .groupBy("cohort", (F.col("_b") - F.col("cohort")).alias("offset"))
             .agg(F.count(F.lit(1)).alias("n_active")))
 
@@ -613,8 +613,7 @@ def retention_cohorts(df: DataFrame, key: str = "user_id", ts: str = "ts",
 def interval_join(left: DataFrame, right: DataFrame,
                   l_start: str, l_end: str, r_start: str, r_end: str,
                   by: list[str] | None = None,
-                  bucket: int | None = None,
-                  suffix: str = "_r") -> DataFrame:
+                  bucket: int | None = None) -> DataFrame:
     """Inner join on closed-interval overlap: emit every (left, right)
     pair with ``l_start <= r_end AND r_start <= l_end`` (plus equality
     on the optional ``by`` keys). Start/end columns must be numeric
@@ -641,7 +640,7 @@ def interval_join(left: DataFrame, right: DataFrame,
     shape, not the 100 TB shape).
 
     Output: all left columns, then right columns (``by`` keys emitted
-    once; right column names colliding with left ones get ``suffix``).
+    once; right column names colliding with left ones get ``_r``).
     """
     by = list(by or [])
 
@@ -655,7 +654,7 @@ def interval_join(left: DataFrame, right: DataFrame,
     for c in rf.columns:
         if c in by:
             continue
-        rmap[c + suffix if c in lf.columns else c] = c
+        rmap[c + "_r" if c in lf.columns else c] = c
     if bucket is None:
         la, ra = lf.alias("__l"), rf.alias("__r")
         cond = ((F.col(f"__l.{l_start}") <= F.col(f"__r.{r_end}"))

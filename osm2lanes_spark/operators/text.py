@@ -52,21 +52,23 @@ def normalized(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), rf"{WS_CLASS}+", " "))
 
 
-def with_langid(df: DataFrame, text_col: str = "text",
-                out: str = "lang_pred") -> DataFrame:
-    """Marker-word language ID; deterministic argmax with code tie-break.
+def with_langid(df: DataFrame) -> DataFrame:
+    """Marker-word language ID of ``text`` into ``lang_pred`` (and its
+    score into ``lang_pred_score``); deterministic argmax with code
+    tie-break.
 
     Scores = count of tokens in each language's function-word profile
     (zh additionally matches by contains since it is unsegmented).
     """
-    toks = F.transform(tokens(F.col(text_col)), F.lower)
+    toks = F.transform(tokens(F.col("text")), F.lower)
     scores = []
     for lang in sorted(LANG_MARKERS):
         markers = LANG_MARKERS[lang]
         if lang == "zh":
             score = F.aggregate(
                 F.array(*[F.lit(m) for m in markers]), F.lit(0),
-                lambda acc, m: acc + F.when(F.contains(F.col(text_col), m), 1).otherwise(0))
+                lambda acc, m: acc + F.when(
+                    F.contains(F.col("text"), m), 1).otherwise(0))
         else:
             arr = F.array(*[F.lit(m) for m in markers])
             score = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
@@ -79,7 +81,8 @@ def with_langid(df: DataFrame, text_col: str = "text",
         .when(a["score"] < b["score"], F.lit(1))
         .when(a["lang"] < b["lang"], F.lit(-1))
         .when(a["lang"] > b["lang"], F.lit(1)).otherwise(F.lit(0)))[0]
-    return df.withColumn(out, best["lang"]).withColumn(out + "_score", best["score"])
+    return (df.withColumn("lang_pred", best["lang"])
+            .withColumn("lang_pred_score", best["score"]))
 
 
 # Deterministic PII-shaped patterns, applied in dict order (URLs first so
@@ -93,11 +96,10 @@ REDACTION_PATTERNS: dict[str, tuple[str, str]] = {
 }
 
 
-def with_redactions(df: DataFrame, text_col: str = "text",
-                    out: str = "redacted",
-                    patterns: dict[str, tuple[str, str]] | None = None,
-                    count_prefix: str = "n_") -> DataFrame:
-    """Scrub PII-shaped spans from ``text_col``: each pattern is counted
+def with_redactions(df: DataFrame, out: str = "redacted",
+                    patterns: dict[str, tuple[str, str]] | None = None
+                    ) -> DataFrame:
+    """Scrub PII-shaped spans from ``text``: each pattern is counted
     on the CURRENT text (i.e. after earlier patterns already replaced
     their spans — so an email inside a URL counts once, as a URL) and
     then globally replaced by its placeholder. Adds one ``n_<name>``
@@ -109,19 +111,19 @@ def with_redactions(df: DataFrame, text_col: str = "text",
     replayable by the oracle).
     """
     patterns = REDACTION_PATTERNS if patterns is None else patterns
-    taken = [out] + [count_prefix + name for name in patterns]
+    taken = [out] + ["n_" + name for name in patterns]
     dupes = sorted({c for c in taken if taken.count(c) > 1})
     if dupes:
         raise ValueError(f"output column name(s) {dupes} collide among "
-                         f"out=/count_prefix= outputs themselves")
+                         f"the outputs themselves")
     clashes = [c for c in taken if c in df.columns]
     if clashes:
         raise ValueError(f"output column(s) {clashes} already exist in "
-                         f"the input; pass a different out=/count_prefix=")
-    cur = F.col(text_col)
+                         f"the input; pass a different out=/patterns=")
+    cur = F.col("text")
     counts: list[tuple[str, Column]] = []
     for name, (pat, repl) in patterns.items():
-        counts.append((count_prefix + name,
+        counts.append(("n_" + name,
                        F.size(F.regexp_extract_all(cur, F.lit(pat), F.lit(0)))))
         cur = F.regexp_replace(cur, pat, repl)
     res = df
@@ -157,15 +159,11 @@ def _hashed_weight(bucket: Column, seed: int) -> Column:
     return u * 2.0 - 1.0
 
 
-def with_classifier_score(df: DataFrame, text_col: str = "text",
-                          out: str = "clf_score",
-                          n_buckets: int = 1 << 16, seed: int = 0,
-                          weights: DataFrame | None = None,
-                          id_col: str = "doc_id",
-                          bucket_col: str = "bucket",
-                          weight_col: str = "weight",
+def with_classifier_score(df: DataFrame, n_buckets: int = 1 << 16,
+                          seed: int = 0, weights: DataFrame | None = None,
                           broadcast_weights: bool = True) -> DataFrame:
-    """Score every document with a linear model over hashing-trick
+    """Score every document's ``text`` into ``clf_score`` with a linear
+    model over hashing-trick
     bag-of-words features — the fastText-style quality-classifier
     filter of LLM curation pipelines (GPT-3 §2.2 / CCNet-style; no
     reference counterpart — engine-side operator):
@@ -175,8 +173,8 @@ def with_classifier_score(df: DataFrame, text_col: str = "text",
     With ``weights=None`` the weight vector is the deterministic
     md5-derived pseudo-random projection of :func:`_hashed_weight` —
     a reproducible placeholder (plumbing, tests, oracles). Pass a
-    trained model as a ``weights`` DataFrame (``bucket_col``,
-    ``weight_col``); missing buckets weigh 0.
+    trained model as a ``weights`` DataFrame (``bucket``, ``weight``);
+    missing buckets weigh 0.
 
     Empty or whitespace-only text has no tokens: mean := 0 → score 0.5.
     NULL text → NULL score.
@@ -187,16 +185,16 @@ def with_classifier_score(df: DataFrame, text_col: str = "text",
     The trained path explodes tokens and joins the weight vector —
     broadcast by default (a 2^16..2^21-bucket model is a few MB);
     ``broadcast_weights=False`` for a hash join — then re-aggregates
-    one mean per document keyed by ``id_col``: one shuffle of (id,
+    one mean per document keyed by ``doc_id``: one shuffle of (id,
     weight-sum) partials, map-side combined, plus the join back.
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if out in df.columns:
-        raise ValueError(f"output column {out!r} already exists in the "
-                         "input — pass a different out=")
+    if "clf_score" in df.columns:
+        raise ValueError("output column 'clf_score' already exists in "
+                         "the input")
 
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     if weights is None:
         wts = F.transform(
             toks, lambda t: _hashed_weight(
@@ -206,29 +204,30 @@ def with_classifier_score(df: DataFrame, text_col: str = "text",
             F.aggregate(wts, F.lit(0.0), lambda a, x: a + x)
             / F.size(toks)).otherwise(
                 F.when(F.size(toks) == 0, F.lit(0.0)))
-        return df.withColumn(out, F.lit(1.0)
+        return df.withColumn("clf_score", F.lit(1.0)
                              / (F.lit(1.0) + F.exp(-logit)))
 
-    wdf = weights.select(F.col(bucket_col).cast("long").alias("__bkt"),
-                         F.col(weight_col).cast("double").alias("__wt"))
+    wdf = weights.select(F.col("bucket").cast("long").alias("__bkt"),
+                         F.col("weight").cast("double").alias("__wt"))
     if broadcast_weights:
         wdf = F.broadcast(wdf)
     tok_rows = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(toks).alias("__tok")).withColumn(
             "__bkt", token_bucket(F.col("__tok"), n_buckets, seed))
     scored = (tok_rows
               .join(wdf, "__bkt", "left")
-              .groupBy(id_col)
+              .groupBy("doc_id")
               .agg((F.sum(F.coalesce(F.col("__wt"), F.lit(0.0)))
                     / F.count(F.lit(1))).alias("__logit"))
-              .select(F.col(id_col).alias("__cs_id"), "__logit"))
+              .select(F.col("doc_id").alias("__cs_id"), "__logit"))
     # empty-token docs never explode a row: logit 0 via coalesce;
     # NULL text also never explodes — distinguished by text NULLness
-    logit = F.when(F.col(text_col).isNotNull(),
+    logit = F.when(F.col("text").isNotNull(),
                    F.coalesce(F.col("__logit"), F.lit(0.0)))
-    return (df.join(scored, df[id_col] == F.col("__cs_id"), "left")
-            .withColumn(out, F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)))
+    return (df.join(scored, df["doc_id"] == F.col("__cs_id"), "left")
+            .withColumn("clf_score",
+                        F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)))
             .drop("__cs_id", "__logit"))
 
 
@@ -237,27 +236,20 @@ GOPHER_STOPWORDS: tuple[str, ...] = (
     "the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def with_gopher_rules(df: DataFrame, text_col: str = "text",
-                      min_words: int = 50, max_words: int = 100_000,
-                      min_mean_len: float = 3.0, max_mean_len: float = 10.0,
-                      max_symbol_ratio: float = 0.1,
-                      max_bullet_frac: float = 0.9,
-                      max_ellipsis_frac: float = 0.3,
-                      min_alpha_frac: float = 0.8,
-                      min_stop_hits: int = 2) -> DataFrame:
+def with_gopher_rules(df: DataFrame) -> DataFrame:
     """Gopher quality-rule filter (Rae et al. 2021, arXiv:2112.11446
-    Appendix A1.1): the rule-based pre-filter every large text pipeline
-    runs before model-based scoring. Flags, never drops — callers filter
-    on ``gopher_keep``.
+    Appendix A1.1) over ``text``: the rule-based pre-filter every large
+    text pipeline runs before model-based scoring. Flags, never drops —
+    callers filter on ``gopher_keep``.
 
     Rules (each surfaced as its own signal column):
-    - word count in [min_words, max_words];
-    - mean word length in [min_mean_len, max_mean_len];
-    - symbol-to-word ratio ('#'/'...'/ellipsis per word) <= max_symbol_ratio;
-    - fraction of lines starting with a bullet <= max_bullet_frac and
-      ending with an ellipsis <= max_ellipsis_frac;
-    - fraction of words containing an alphabetic char >= min_alpha_frac;
-    - >= min_stop_hits DISTINCT function words from GOPHER_STOPWORDS.
+    - word count in [50, 100 000];
+    - mean word length in [3, 10];
+    - symbol-to-word ratio ('#'/'...'/ellipsis per word) <= 0.1;
+    - fraction of lines starting with a bullet <= 0.9 and ending with
+      an ellipsis <= 0.3;
+    - fraction of words containing an alphabetic char >= 0.8;
+    - >= 2 DISTINCT function words from GOPHER_STOPWORDS.
 
     Everything is built-in JVM expressions over one tokenization and one
     line split — a single narrow projection, zero shuffles, fully
@@ -266,7 +258,7 @@ def with_gopher_rules(df: DataFrame, text_col: str = "text",
     only the SURFACED ratios are rounded to 6 decimals, so the DuckDB
     oracle replays every boundary bit-for-bit.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     toks = tokens(text)
     n_words = F.size(toks)
     sum_len = F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t))
@@ -289,13 +281,14 @@ def with_gopher_rules(df: DataFrame, text_col: str = "text",
     stop = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
     stop_hits = F.size(F.array_intersect(F.transform(toks, F.lower), stop))
 
-    keep = ((n_words >= min_words) & (n_words <= max_words)
-            & (mean_len >= min_mean_len) & (mean_len <= max_mean_len)
-            & (sym_ratio <= max_symbol_ratio)
-            & (bullet_frac <= max_bullet_frac)
-            & (ellip_frac <= max_ellipsis_frac)
-            & (alpha_frac >= min_alpha_frac)
-            & (stop_hits >= min_stop_hits))
+    # The thresholds of Rae et al. 2021, Appendix A1.1.
+    keep = ((n_words >= 50) & (n_words <= 100_000)
+            & (mean_len >= 3.0) & (mean_len <= 10.0)
+            & (sym_ratio <= 0.1)
+            & (bullet_frac <= 0.9)
+            & (ellip_frac <= 0.3)
+            & (alpha_frac >= 0.8)
+            & (stop_hits >= 2))
     return (df.withColumn("n_words", n_words)
             .withColumn("mean_word_len", F.round(mean_len, 6))
             .withColumn("symbol_ratio", F.round(sym_ratio, 6))

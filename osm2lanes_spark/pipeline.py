@@ -69,7 +69,15 @@ def lanes_pipeline(docs: DataFrame,
     ``strategy='broadcast'`` it encodes cells JVM-side (``cell_sql``); the
     fused path and ``strategy='map'`` encode them in numpy
     (``LocaleResolver.locate``). Both encoders give the same cell.
+
+    An unknown ``strategy``, or any but ``'map'`` with ``fused``, raises
+    ``ValueError``: the fused stage has only the map lookup.
     """
+    if strategy not in ("map", "broadcast"):
+        raise ValueError(f"unknown strategy: {strategy!r}")
+    if fused and strategy != "map":
+        raise ValueError(f"strategy={strategy!r} needs fused=False: the "
+                         "fused stage resolves the locale by map lookup")
     if polygons is not None and fused:
         return tags_to_lanes_stage(
             docs, locale_resolver=make_locale_resolver(polygons, level))

@@ -33,10 +33,9 @@ from .joins import distance_join
 
 
 def dbscan(points: DataFrame, eps_km: float, min_pts: int,
-           id_col: str = "id", lon: str = "lon",
-           lat: str = "lat") -> DataFrame:
+           id_col: str = "id") -> DataFrame:
     """DBSCAN labels: ``(id_col, cluster_id, is_core)`` for every
-    non-noise point.
+    non-noise ``(lon, lat)`` point.
 
     ``min_pts`` counts the point itself (scikit-learn semantics): a core
     point has ≥ ``min_pts`` points within ``eps_km`` including itself.
@@ -47,8 +46,7 @@ def dbscan(points: DataFrame, eps_km: float, min_pts: int,
         raise ValueError(f"min_pts must be >= 1: {min_pts!r}")
     from ..util import tracked_checkpoint, unpersist_blocks
 
-    pts = points.select(F.col(id_col), F.col(lon).alias("lon"),
-                        F.col(lat).alias("lat"))
+    pts = points.select(F.col(id_col), "lon", "lat")
     left = pts.select(F.col(id_col).alias("__a"), "lon", "lat")
     right = pts.select(F.col(id_col).alias("__b"), "lon", "lat")
     # ordered neighbor pairs (a ≠ b), both directions — one grid join.

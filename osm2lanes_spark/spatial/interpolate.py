@@ -34,21 +34,19 @@ D_FLOOR_KM = 1.0             # distance clamp (collocated sample)
 
 
 def idw_interpolate(points: DataFrame, samples: DataFrame,
-                    radius_km: float, *, id_col: str = "id",
-                    value_col: str = "value",
-                    out_col: str = "idw_value") -> DataFrame:
-    """IDW estimate of ``samples[value_col]`` at every point of
+                    radius_km: float, *, id_col: str = "id") -> DataFrame:
+    """IDW estimate of ``samples["value"]`` at every point of
     ``points`` that has ≥1 sample within ``radius_km``.
 
-    ``points``: (id_col, lon, lat); ``samples``: (lon, lat, value_col).
-    Output: (id_col, n_samples, out_col) with out_col rounded to 6
+    ``points``: (id_col, lon, lat); ``samples``: (lon, lat, value).
+    Output: (id_col, n_samples, idw_value) with idw_value rounded to 6
     decimals — bit-stable across engines and partitionings because both
     sums are integer sums.
     """
     pts = points.select(F.col(id_col), "lon", "lat")
     smp = samples.select(F.col("lon").alias("__slon"),
                          F.col("lat").alias("__slat"),
-                         F.col(value_col).alias("__sval"))
+                         F.col("value").alias("__sval"))
     # distance_join requires equal coordinate names on both sides
     smp = smp.select(F.col("__slon").alias("lon"),
                      F.col("__slat").alias("lat"), "__sval")
@@ -66,12 +64,11 @@ def idw_interpolate(points: DataFrame, samples: DataFrame,
             .select(F.col(id_col), "n_samples",
                     F.round(F.col("__num").cast("double")
                             / F.col("__den").cast("double")
-                            / F.lit(float(V_SCALE)), 6).alias(out_col)))
+                            / F.lit(float(V_SCALE)), 6).alias("idw_value")))
 
 
 def idw_oracle_sql(points_cte: str, samples_cte: str, radius_km: float,
-                   hav_sql: str, id_col: str = "id",
-                   out_col: str = "idw_value") -> str:
+                   hav_sql: str, id_col: str = "id") -> str:
     """DuckDB replay: brute-force the radius predicate with the identical
     fixed-op-order haversine (``hav_sql`` interpolated over p./s. lon
     lat), then the same quantized integer sums. ``points_cte`` /
@@ -91,6 +88,6 @@ def idw_oracle_sql(points_cte: str, samples_cte: str, radius_km: float,
         SELECT {id_col}, count(*) AS n_samples,
                round(CAST(sum(wq * vq) AS DOUBLE)
                      / CAST(sum(wq) AS DOUBLE)
-                     / {float(V_SCALE)!r}, 6) AS {out_col}
+                     / {float(V_SCALE)!r}, 6) AS idw_value
         FROM q GROUP BY {id_col}
     """

@@ -6,7 +6,8 @@ Replaces the reference's Overpass client queries:
   covering of the polygons as sorted arrays) plus a ray-casting
   refinement on boundary cells;
 - nearest-way kNN (``get_nearby`` — overpass.rs:193-242) becomes an
-  expanding k-ring candidate join + ``row_number() == 1``.
+  expanding k-ring candidate join whose per-query-row ``row_number()``
+  keeps the ``k`` nearest ways.
 
 Scale design (100 TB / 10^12 docs): the polygon dim (countries/admin
 areas) is small, so the index is built once on the driver, shipped once
@@ -29,7 +30,6 @@ from __future__ import annotations
 import functools
 import hashlib
 import threading
-from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -221,9 +221,10 @@ def containment_join(points: DataFrame, polygons: dict[str, np.ndarray],
             .select("doc_id", *other_cols, "key", "driving_side"))
 
 
-def repartition_by_cell_range(df: DataFrame, num_partitions: int,
-                              cell_col: str = "cell") -> DataFrame:
-    """Range-partition facts by raw cell id = spatial co-location.
+def repartition_by_cell_range(df: DataFrame,
+                              num_partitions: int) -> DataFrame:
+    """Range-partition facts by their raw ``cell`` id = spatial
+    co-location.
 
     Because descendants of a coarser cell form one contiguous morton range
     (``cells.prefix_range``), range partitioning on the int64 id puts
@@ -232,7 +233,7 @@ def repartition_by_cell_range(df: DataFrame, num_partitions: int,
     read/shuffle locally, and Iceberg-style min/max file pruning on the
     cell column becomes effective for spatial predicates.
     """
-    return df.repartitionByRange(num_partitions, F.col(cell_col))
+    return df.repartitionByRange(num_partitions, F.col("cell"))
 
 
 def refine(codes: np.ndarray, lon: np.ndarray, lat: np.ndarray,
@@ -583,10 +584,8 @@ def haversine_km(lon1, lat1, lon2, lat2):
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
-                  *, lon: str = "lon", lat: str = "lat",
-                  level: Optional[int] = None,
-                  dist_col: str = "dist_km") -> DataFrame:
+def distance_join(left: DataFrame, right: DataFrame,
+                  radius_km: float) -> DataFrame:
     """All (left, right) pairs within ``radius_km`` great-circle distance.
 
     The scale shape (the reference resolves near-way lookups one Overpass
@@ -606,24 +605,22 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
 
     Everything is whole-stage-codegen'd Catalyst (bit-spread cell encode,
     HOF ring build, haversine) — no Python in the path. Both coordinate
-    columns must be named ``lon``/``lat``-as-passed on BOTH inputs; other
-    column collisions are the caller's to alias. Output = left columns +
-    right columns (minus the right's coordinates) + ``dist_col``.
+    columns must be named ``lon``/``lat`` on BOTH inputs; other column
+    collisions are the caller's to alias. Output = left columns + right
+    columns (minus the right's coordinates) + ``dist_km``.
 
-    ``level`` defaults to a grid whose cell height ≈ radius/4: the ring
-    then hugs the disc (candidate overshoot ≈ 2× the true-bounding-box
+    The grid level follows the radius: a cell height ≈ radius/4, so the
+    ring hugs the disc (candidate overshoot ≈ 2× the true-bounding-box
     instead of the up-to-14× a radius-sized cell costs — measured on the
     800 km self-join: ring 2278 deg² vs 163 deg² disc at the coarse
     default). The explode fan-out grows to ~45-120 cells/row, but those
     are narrow pre-join rows; the candidate rows they prune are wide
-    post-join rows (guide §2.3 — shuffle fewer bytes). Pass a coarser
-    level to trade back when samples are sparse.
+    post-join rows (guide §2.3 — shuffle fewer bytes).
     """
     if radius_km <= 0:
         raise ValueError(f"radius_km must be positive: {radius_km!r}")
     r_deg = radius_km / EARTH_RADIUS_KM * (180.0 / np.pi)
-    if level is None:
-        level = max(1, min(14, int(np.floor(np.log2(180.0 / r_deg))) + 2))
+    level = max(1, min(14, int(np.floor(np.log2(180.0 / r_deg))) + 2))
     n = 1 << level
     cell_h = 180.0 / n
     cell_w = 360.0 / n
@@ -635,14 +632,14 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
     # side is the streamed one, and a single-row-group scan would run
     # the whole probe+haversine pass on one task (37 s of 54 s at
     # sf1.0). No-op once the input has real parallelism.
-    right_idx = (_spread(right, lon)
-                 .withColumnRenamed(lon, "__rlon")
-                 .withColumnRenamed(lat, "__rlat")
+    right_idx = (_spread(right, "lon")
+                 .withColumnRenamed("lon", "__rlon")
+                 .withColumnRenamed("lat", "__rlat")
                  .withColumn("__cell", F.expr(cell_sql("__rlon", "__rlat", level))))
 
     # per-row lon ring width: the partner's latitude is at most r_deg
     # further poleward, so bound cos by the worst latitude in reach
-    phi_w = F.least(F.abs(F.col(lat)) + F.lit(r_deg), F.lit(89.9))
+    phi_w = F.least(F.abs(F.col("lat")) + F.lit(r_deg), F.lit(89.9))
     dx = F.least(
         F.floor(F.lit(r_deg) / (F.cos(phi_w * F.lit(_DEG2RAD))
                                 * F.lit(cell_w))).cast("int") + F.lit(1),
@@ -652,9 +649,9 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
     # the cell join and haversine filter inherits that parallelism
     # (guide §2.5/§6.1). No-op once input partitions ≥ the session's
     # default parallelism (the 100 TB case).
-    base = (_spread(left, lon)
-            .withColumn("__x", F.expr(grid_sql(lon, 180.0, 360.0, level)))
-            .withColumn("__y", F.expr(grid_sql(lat, 90.0, 180.0, level)))
+    base = (_spread(left, "lon")
+            .withColumn("__x", F.expr(grid_sql("lon", 180.0, 360.0, level)))
+            .withColumn("__y", F.expr(grid_sql("lat", 90.0, 180.0, level)))
             .withColumn("__dx", dx))
     # x wraps (antimeridian), y clamps (poles); array_distinct collapses
     # the duplicates both produce at the caps
@@ -667,8 +664,8 @@ def distance_join(left: DataFrame, right: DataFrame, radius_km: float,
             .drop("__x", "__y", "__dx")
             .join(right_idx, "__cell")
             .drop("__cell"))
-    d = haversine_km(F.col(lon), F.col(lat),
+    d = haversine_km(F.col("lon"), F.col("lat"),
                      F.col("__rlon"), F.col("__rlat"))
-    return (cand.withColumn(dist_col, d)
-            .where(F.col(dist_col) <= F.lit(float(radius_km)))
+    return (cand.withColumn("dist_km", d)
+            .where(F.col("dist_km") <= F.lit(float(radius_km)))
             .drop("__rlon", "__rlat"))

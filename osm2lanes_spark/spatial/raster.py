@@ -38,10 +38,10 @@ def rasterize_points(points: DataFrame, value_col: str, level: int,
                  F.count(F.lit(1)).alias("n_points")))
 
 
-def way_cells(ways: DataFrame, level: int,
-              geometry: str = "geometry") -> DataFrame:
-    """Explode each way into the distinct cells its polyline crosses
-    (``cells.cover_polyline``); the kNN join's way index too."""
+def way_cells(ways: DataFrame, level: int) -> DataFrame:
+    """Explode each way into the distinct cells its ``geometry``
+    polyline crosses (``cells.cover_polyline``); the kNN join's way
+    index too."""
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def cells_udf(geom: pd.Series) -> pd.Series:
@@ -52,13 +52,13 @@ def way_cells(ways: DataFrame, level: int,
         drop_zip_finders()
         return pd.Series(out)
 
-    return ways.withColumn("cell", F.explode(cells_udf(F.col(geometry))))
+    return ways.withColumn("cell", F.explode(cells_udf(F.col("geometry"))))
 
 
 def zonal_join(ways: DataFrame, raster: DataFrame, level: int,
-               way_id: str = "way_id", agg: str = "max",
                broadcast_raster: bool = False) -> DataFrame:
-    """Zonal statistics: per way, aggregate raster values over its cells.
+    """Zonal statistics: per ``way_id``, the max raster ``value`` over
+    its cells (``zonal_max``) and their count.
 
     ``raster`` must be keyed by cells at the same ``level``. With
     ``broadcast_raster`` the tile side is broadcast (small rasters);
@@ -68,23 +68,21 @@ def zonal_join(ways: DataFrame, raster: DataFrame, level: int,
     """
     from .joins import USABLE_GEOMETRY_SQL
 
-    agg_fn = {"avg": F.avg, "max": F.max, "min": F.min, "sum": F.sum}[agg]
     r = F.broadcast(raster) if broadcast_raster else raster
-    wc = way_cells(ways.where(USABLE_GEOMETRY_SQL).select(way_id, "geometry"),
-                   level)
+    wc = way_cells(
+        ways.where(USABLE_GEOMETRY_SQL).select("way_id", "geometry"), level)
     return (wc.join(r, "cell")
-            .groupBy(way_id)
-            .agg(agg_fn("value").alias(f"zonal_{agg}"),
+            .groupBy("way_id")
+            .agg(F.max("value").alias("zonal_max"),
                  F.count(F.lit(1)).alias("n_cells")))
 
 
 def focal_sum(raster: DataFrame, width: int, height: int,
-              k: int = 1, x: str = "x", y: str = "y",
-              value: str = "value") -> DataFrame:
-    """Focal (moving-window) sum: for every populated cell, the sum of
-    values over its (2k+1)² neighborhood — the relational form of a
-    raster convolution with a box kernel (smoothed heat maps, density
-    surfaces before thresholding).
+              k: int = 1) -> DataFrame:
+    """Focal (moving-window) sum: for every populated ``(x, y)`` cell,
+    the sum of ``value`` over its (2k+1)² neighborhood — the relational
+    form of a raster convolution with a box kernel (smoothed heat maps,
+    density surfaces before thresholding).
 
     Scatter formulation: each source cell explodes to the ≤(2k+1)²
     target cells its value contributes to (clipped at the raster edge —
@@ -104,25 +102,24 @@ def focal_sum(raster: DataFrame, width: int, height: int,
         F.flatten(F.transform(
             offs, lambda dx: F.transform(
                 offs, lambda dy: F.struct(
-                    (F.col(x) + dx).alias("tx"),
-                    (F.col(y) + dy).alias("ty"))))),
+                    (F.col("x") + dx).alias("tx"),
+                    (F.col("y") + dy).alias("ty"))))),
         lambda t: (t["tx"] >= 0) & (t["tx"] < width)
         & (t["ty"] >= 0) & (t["ty"] < height))
     return (raster
-            .select(F.explode(targets).alias("__t"), F.col(value))
-            .groupBy(F.col("__t")["tx"].alias(x),
-                     F.col("__t")["ty"].alias(y))
-            .agg(F.sum(value).alias("focal"),
+            .select(F.explode(targets).alias("__t"), F.col("value"))
+            .groupBy(F.col("__t")["tx"].alias("x"),
+                     F.col("__t")["ty"].alias("y"))
+            .agg(F.sum("value").alias("focal"),
                  F.count(F.lit(1)).alias("n_nbrs")))
 
 
 def raster_peaks(raster: DataFrame, width: int, height: int,
-                 k: int = 1, x: str = "x", y: str = "y",
-                 value: str = "value") -> DataFrame:
-    """Local maxima: populated cells strictly greater than every
-    populated neighbor in their (2k+1)²−1 ring — non-maximum
-    suppression, the peak-extraction step after focal smoothing
-    (hotspot detection over density surfaces).
+                 k: int = 1) -> DataFrame:
+    """Local maxima: populated ``(x, y)`` cells whose ``value`` is
+    strictly greater than every populated neighbor in their (2k+1)²−1
+    ring — non-maximum suppression, the peak-extraction step after focal
+    smoothing (hotspot detection over density surfaces).
 
     Same scatter shape as :func:`focal_sum` but excluding the center
     offset and aggregating max: each cell scatters its value to its
@@ -139,17 +136,17 @@ def raster_peaks(raster: DataFrame, width: int, height: int,
         F.flatten(F.transform(
             offs, lambda dx: F.transform(
                 offs, lambda dy: F.struct(
-                    (F.col(x) + dx).alias("tx"),
-                    (F.col(y) + dy).alias("ty"))))),
+                    (F.col("x") + dx).alias("tx"),
+                    (F.col("y") + dy).alias("ty"))))),
         lambda t: (t["tx"] >= 0) & (t["tx"] < width)
         & (t["ty"] >= 0) & (t["ty"] < height)
-        & ~((t["tx"] == F.col(x)) & (t["ty"] == F.col(y))))
+        & ~((t["tx"] == F.col("x")) & (t["ty"] == F.col("y"))))
     nbr_max = (raster
-               .select(F.explode(targets).alias("__t"), F.col(value))
-               .groupBy(F.col("__t")["tx"].alias(x),
-                        F.col("__t")["ty"].alias(y))
-               .agg(F.max(value).alias("__nbr_max")))
-    return (raster.join(nbr_max, [x, y], "left")
+               .select(F.explode(targets).alias("__t"), F.col("value"))
+               .groupBy(F.col("__t")["tx"].alias("x"),
+                        F.col("__t")["ty"].alias("y"))
+               .agg(F.max("value").alias("__nbr_max")))
+    return (raster.join(nbr_max, ["x", "y"], "left")
             .where(F.col("__nbr_max").isNull()
-                   | (F.col(value) > F.col("__nbr_max")))
-            .select(x, y, value))
+                   | (F.col("value") > F.col("__nbr_max")))
+            .select("x", "y", "value"))

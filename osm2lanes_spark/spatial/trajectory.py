@@ -31,10 +31,10 @@ D_SCALE = 1_000_000           # km quantum for order-exact path sums
 
 
 def trajectory_summary(traces: DataFrame, *, entity: str = "entity",
-                       order: str = "ts",
                        tiebreak: str | None = None) -> DataFrame:
-    """Per-entity roll-up: n_points, path_km (sum of steps), net_km
-    (first→last point), straightness = net/path (1.0 for ≤1 step).
+    """Per-entity roll-up of the ``ts``-ordered trace: n_points, path_km
+    (sum of steps), net_km (first→last point), straightness = net/path
+    (1.0 for ≤1 step).
 
     One entity-keyed shuffle: the lag window computes steps AND marks the
     first/last coordinates (first_value/last_value over the same window
@@ -42,7 +42,7 @@ def trajectory_summary(traces: DataFrame, *, entity: str = "entity",
     whole summary is a single exchange. Path sums quantize to integers
     (`D_SCALE`) — engine- and partitioning-order exact.
     """
-    keys = [order] + ([tiebreak] if tiebreak else [])
+    keys = ["ts"] + ([tiebreak] if tiebreak else [])
     w = Window.partitionBy(entity).orderBy(*[F.col(k) for k in keys])
     wfull = (Window.partitionBy(entity)
              .orderBy(*[F.col(k) for k in keys])
@@ -80,7 +80,6 @@ def trajectory_summary(traces: DataFrame, *, entity: str = "entity",
 
 def trip_segments(traces: DataFrame, *, gap_minutes: float = 30.0,
                   jump_km: float = 500.0, entity: str = "entity",
-                  order: str = "ts",
                   tiebreak: str | None = None) -> DataFrame:
     """Trip segmentation: split each entity's trace into trips wherever
     the time gap exceeds ``gap_minutes`` OR the step length exceeds
@@ -90,20 +89,20 @@ def trip_segments(traces: DataFrame, *, gap_minutes: float = 30.0,
     on time alone).
 
     trip_id = running count of break flags (first point breaks), so ids
-    are 1..n_trips per entity, deterministic under the (order, tiebreak)
+    are 1..n_trips per entity, deterministic under the (ts, tiebreak)
     sort. One entity-keyed exchange: the lag window, the running count,
     and the per-(entity, trip) aggregate all share the partitioning.
     Output: entity, trip_id, n_points, path_km (integer-quantized sum),
-    start/end order values.
+    start_ts, end_ts.
     """
-    keys = [order] + ([tiebreak] if tiebreak else [])
+    keys = ["ts"] + ([tiebreak] if tiebreak else [])
     w = Window.partitionBy(entity).orderBy(*[F.col(k) for k in keys])
     step = haversine_km(F.lag("lon").over(w), F.lag("lat").over(w),
                         F.col("lon"), F.col("lat"))
-    prev_ts = F.lag(order).over(w)
+    prev_ts = F.lag("ts").over(w)
     # NTZ timestamps refuse a direct long cast; the timestamp hop pins
     # epoch seconds in the session zone (UTC), matching DuckDB's epoch()
-    secs = F.col(order).cast("timestamp").cast("long")
+    secs = F.col("ts").cast("timestamp").cast("long")
     prev_secs = prev_ts.cast("timestamp").cast("long")
     gap_break = secs - prev_secs > F.lit(int(gap_minutes * 60))
     is_break = F.when(prev_ts.isNull(), F.lit(1)).otherwise(
@@ -125,5 +124,5 @@ def trip_segments(traces: DataFrame, *, gap_minutes: float = 30.0,
             .agg(F.count(F.lit(1)).alias("n_points"),
                  F.round(F.sum("__stepq").cast("double")
                          / F.lit(float(D_SCALE)), 6).alias("path_km"),
-                 F.min(order).alias("start_" + order),
-                 F.max(order).alias("end_" + order)))
+                 F.min("ts").alias("start_ts"),
+                 F.max("ts").alias("end_ts")))

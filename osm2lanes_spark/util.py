@@ -125,14 +125,14 @@ def _cap_leaf_stats(out: DataFrame) -> DataFrame:
         return out
 
 
-def unpersist_blocks(spark, ids, blocking: bool = False) -> None:
-    """Release the block storage behind RDD ids captured by
-    :func:`tracked_checkpoint`. Ids already gone are skipped."""
+def unpersist_blocks(spark, ids) -> None:
+    """Release, without waiting, the block storage behind RDD ids captured
+    by :func:`tracked_checkpoint`. Ids already gone are skipped."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for i in ids:
         r = jmap.get(i)
         if r is not None:
-            r.unpersist(blocking)
+            r.unpersist(False)
 
 
 def _is_bare_scan(df: DataFrame) -> bool:

@@ -104,6 +104,20 @@ def test_unfused_replaces_given_locale(geo_docs, geo_cases, strategy):
                                     strategy=strategy)) == want
 
 
+@pytest.mark.parametrize("with_polygons, strategy, match", [
+    (True, "brodcast", "unknown strategy"),
+    (True, "broadcast", "needs fused=False"),
+    (False, "brodcast", "unknown strategy"),
+])
+def test_pipeline_rejects_strategy_it_cannot_run(geo_docs, with_polygons,
+                                                 strategy, match):
+    """The fused stage has only the map lookup, so a typo or ``broadcast``
+    with ``fused=True`` raises instead of silently running ``map``."""
+    polys = G.all_country_polygons() if with_polygons else None
+    with pytest.raises(ValueError, match=match):
+        lanes_pipeline(geo_docs, polys, level=10, strategy=strategy)
+
+
 def test_zonal_join(spark):
     # raster: average of synthetic speed samples; way covers known cells,
     # plus a tile in the world's south-west corner cell, where a NaN vertex
